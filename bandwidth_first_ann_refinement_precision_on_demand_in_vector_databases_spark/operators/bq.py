@@ -204,8 +204,8 @@ def cascade_candidates(
     """Stages 1+2 of the cascade as a reusable per-query candidate
     stream (query_id, neighbor_id) of r1·k ids — the shape every
     phase-2 consumer takes (``exact_cosine_rerank`` for the plain
-    cascade, ``refine.cascade_cushion_topk`` for the cushioned
-    composition)."""
+    cascade, the ``cascade`` entry of ``refine.CANDIDATE_SOURCES`` for
+    the cushioned composition via ``refine.cushion_topk``)."""
     from .sq import sq_reconstruct
 
     cand2 = bq_topk(queries, corpus, r2 * k, dim=dim).select(

@@ -64,6 +64,7 @@ join of the tiny seed/survivor sets back to the full-precision column
 from __future__ import annotations
 
 import math
+from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
@@ -424,6 +425,14 @@ def _exact_score_expr(cos: bool) -> Column:
     )
 
 
+def vector_bytes(keep_m: int, dim: int, keep_e: int = FP16_EXP_BITS) -> tuple[float, float]:
+    """``(b_red, b_full)``: bytes per vector of the cheap pass (sign +
+    ``keep_e`` exponent + ``keep_m`` mantissa bits per coordinate) and
+    of a full fp16 fetch — the byte model of ``ANNCode.py:316-319``
+    shared by every metrics row, its oracle and the sweeps."""
+    return (1 + keep_e + keep_m) * dim / 8.0, 16.0 * dim / 8.0
+
+
 def refine_metrics(
     queries: DataFrame,
     corpus: DataFrame,
@@ -598,8 +607,9 @@ def _refine_metrics_with_frames(
         )
     )
 
-    b_full = 16.0 * dim / 8.0
-    b_red = red_bytes_override if red_bytes_override is not None else (1 + keep_e + keep_m) * dim / 8.0
+    b_red, b_full = vector_bytes(keep_m, dim, keep_e)
+    if red_bytes_override is not None:
+        b_red = red_bytes_override
 
     # one counting pass over the fetch set + one over the pair frame
     per_fetch = (
@@ -638,293 +648,146 @@ def _refine_metrics_with_frames(
     return row, ([] if key is not None else [scored, fetched])
 
 
-def ivf_cushion_topk(
+# ---------------------------------------------------------------------------
+# Index × cushion compositions
+# ---------------------------------------------------------------------------
+
+@dataclass(frozen=True)
+class CandidateSource:
+    """One index family behind the cushioned re-scorer.
+
+    ``candidates(queries, corpus, k, keep_m, mode, cache_key)`` returns
+    the index's DISTINCT ``(query_id, vec_id)`` pairs. ``metric`` is the
+    space the index pre-ranks in (``"cos"``, ``"l2"``, or ``None`` when
+    the stream does not depend on a metric): a cushion of the other
+    family would silently re-rank a differently-ordered admit set, so
+    :func:`cushion_topk` refuses the crossed mode."""
+
+    name: str
+    metric: str | None
+    candidates: Callable[..., DataFrame]
+
+
+def cushion_topk(
     queries: DataFrame,
     corpus: DataFrame,
+    source: CandidateSource,
     mode: str,
     k: int,
     keep_m: int,
-    delta: float | None = None,
-    nprobe: int | None = None,
     cache_key: str | None = None,
 ) -> RefineResult:
-    """The engine's flagship composition: IVF candidate generation ×
-    cushioned precision-on-demand refinement. The coarse quantizer
-    prunes the corpus to the probed cells (the classic IVF bandwidth
-    win); the cushioned two-phase refinement then prices the
-    re-scoring of those candidates — scanning their reduced
-    representation and fetching full precision only for seeds and
-    cushion-admitted survivors (the reference's contribution,
-    ``ANNCode.py:560-575``, applied to an index's candidate stream
-    instead of the whole corpus; README.md:11 declares the method
-    "orthogonal to index choice" — this operator is that claim,
+    """Index candidate generation × cushioned precision-on-demand
+    refinement: the index prunes the corpus to its candidate stream,
+    and the two-phase refinement prices the re-scoring of that stream —
+    scanning the reduced representation and fetching full precision
+    only for seeds and cushion-admitted survivors (the reference's
+    contribution, ``ANNCode.py:560-575``, applied to an index's
+    candidates instead of the whole corpus; README.md:11 declares the
+    method "orthogonal to index choice" — this operator is that claim,
     composed).
 
-    Zero-miss composition law (test- and oracle-checked): the result
-    equals the exact re-rank of the same IVF candidates, so recall
-    vs. the full-corpus exact top-K is EXACTLY ``ann_ivf_recall`` —
-    the cushion loses nothing on top of the cell pruning."""
-    from .simsearch import IVF_NPROBE, ivf_assign, ivf_centroids, ivf_probes
+    Zero-miss composition law (test- and oracle-checked for every
+    entry of ``CANDIDATE_SOURCES``): the result equals the exact (fp16)
+    re-rank of the source's candidates, so recall vs the full-corpus
+    exact top-K is exactly the index's own candidate recall — the
+    cushion loses nothing on top of the pruning."""
+    if source.metric is not None and source.metric != ("cos" if is_cosine(mode) else "l2"):
+        want = "a cos-*" if source.metric == "cos" else "an l2-*"
+        raise ValueError(
+            f"the {source.name} candidate source pre-ranks in {source.metric} "
+            f"space; use {want} mode (a crossed cushion would silently "
+            "re-rank the other family's candidates)"
+        )
+    return refine_topk(
+        queries,
+        corpus,
+        mode,
+        k,
+        keep_m,
+        cache_key=cache_key,
+        candidate_ids=source.candidates(queries, corpus, k, keep_m, mode, cache_key),
+    )
 
-    nprobe = IVF_NPROBE if nprobe is None else nprobe
+
+def _as_vec_ids(neighbors: DataFrame) -> DataFrame:
+    return neighbors.select("query_id", F.col("neighbor_id").alias("vec_id"))
+
+
+def _ivf_candidates(queries, corpus, k, keep_m, mode, cache_key) -> DataFrame:
+    """The vectors of each query's ``IVF_NPROBE`` probed cells."""
+    from .simsearch import ivf_assign, ivf_centroids, ivf_probes
+
     cents = ivf_centroids(corpus)
-    assigned = ivf_assign(corpus, cents)
-    probes = ivf_probes(queries, cents, nprobe)
-    cand_ids = F.broadcast(probes.select("query_id", "cell")).join(
-        assigned.select("vec_id", "cell"), "cell"
-    ).select("query_id", "vec_id")
-    return refine_topk(
-        queries,
-        corpus,
-        mode,
-        k,
-        keep_m,
-        delta,
-        cache_key=cache_key,
-        candidate_ids=cand_ids,
+    return (
+        F.broadcast(ivf_probes(queries, cents).select("query_id", "cell"))
+        .join(ivf_assign(corpus, cents).select("vec_id", "cell"), "cell")
+        .select("query_id", "vec_id")
     )
 
 
-def ivfadc_cushion_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    mode: str,
-    k: int,
-    keep_m: int,
-    delta: float | None = None,
-    cache_key: str | None = None,
-) -> RefineResult:
-    """IVFADC ADC pre-rank × cushioned refinement — the round's
-    flagship index behind the reference's precision-on-demand
-    re-scorer (the same "orthogonal to index choice" composition as
-    ``ivf_cushion_topk``, applied to a COMPRESSED index: the candidate
-    stream comes from 8-byte residual codes, never from raw vectors,
-    so the composed pipeline touches full precision only for seeds
-    and cushion-admitted survivors of an R·K-deep code scan).
+def _band_candidates(query_bands: DataFrame, corpus: DataFrame, dim: int) -> DataFrame:
+    from .simsearch import lsh_corpus_bands
 
-    Zero-miss composition law: the result equals the exact (fp16)
-    re-rank of the same ADC candidates, so recall vs the raw exact
-    top-K is bounded by ``ann_ivfpq_res_recall``'s candidate quality;
-    the cushion itself loses nothing over the stream."""
-    if is_cosine(mode):
-        raise ValueError(
-            "ivfadc_cushion_topk pre-ranks by L2-family ADC over residual "
-            "codes; use an l2-* mode (a cosine cushion would silently "
-            "re-rank an L2 pre-rank)"
-        )
-    from .pq import PQ_REFINE_R, ivfadc_candidates
-
-    cand_ids = ivfadc_candidates(queries, corpus, PQ_REFINE_R * k).select(
-        "query_id", F.col("neighbor_id").alias("vec_id")
-    )
-    return refine_topk(
-        queries,
-        corpus,
-        mode,
-        k,
-        keep_m,
-        delta,
-        cache_key=cache_key,
-        candidate_ids=cand_ids,
+    return (
+        query_bands.alias("q")
+        .join(lsh_corpus_bands(corpus, dim=dim).alias("c"), ["band", "bkey"])
+        .select(F.col("q.id").alias("query_id"), F.col("c.id").alias("vec_id"))
+        .distinct()
     )
 
 
-def rabitq_cushion_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    mode: str,
-    k: int,
-    keep_m: int,
-    delta: float | None = None,
-    cache_key: str | None = None,
-) -> RefineResult:
-    """RaBitQ estimator pre-rank × cushioned refinement — the cosine
-    counterpart of ``ivfadc_cushion_topk``'s compressed-index
-    composition: candidates come from the 12-byte rotated 1-bit code
-    table (never from raw vectors), and the cushioned re-scorer
-    prices their full-precision fetches. Zero-miss over the stream:
-    equals the exact (fp16) re-rank of the same R·K estimator
-    candidates."""
-    if not is_cosine(mode):
-        raise ValueError(
-            "rabitq_cushion_topk pre-ranks by a cosine estimator; use a "
-            "cos-* mode (an l2 cushion would silently re-rank a cosine "
-            "pre-rank)"
-        )
-    from .rabitq import RABITQ_REFINE_R, rabitq_candidates
-
-    cand_ids = rabitq_candidates(queries, corpus, RABITQ_REFINE_R * k).select(
-        "query_id", F.col("neighbor_id").alias("vec_id")
-    )
-    return refine_topk(
-        queries,
-        corpus,
-        mode,
-        k,
-        keep_m,
-        delta,
-        cache_key=cache_key,
-        candidate_ids=cand_ids,
-    )
-
-
-def lsh_cushion_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    mode: str,
-    k: int,
-    keep_m: int,
-    delta: float | None = None,
-    cache_key: str | None = None,
-) -> RefineResult:
-    """Hyperplane-LSH candidate generation × cushioned refinement —
-    the second instantiation of the "orthogonal to index choice"
-    composition (see ``ivf_cushion_topk``). LSH band candidates are
-    several times larger per query than IVF's probed cells at the
-    fixture operating point, which is exactly the regime where
-    precision-on-demand pays: the K seeds are a small fraction of the
-    stream, so the cushion prunes most of the full-precision
-    fetches."""
-    from .simsearch import embedding_dim, lsh_corpus_bands, lsh_signature_bands
+def _lsh_candidates(queries, corpus, k, keep_m, mode, cache_key) -> DataFrame:
+    """Hyperplane-LSH band collisions — several times IVF's stream at
+    the fixture operating point, the regime where the cushion prunes
+    most full-precision fetches."""
+    from .simsearch import embedding_dim, lsh_signature_bands
 
     dim = embedding_dim(corpus)
     qb = lsh_signature_bands(
         queries.select("query_id", "embedding"), "embedding", "query_id", dim=dim
     )
-    cb = lsh_corpus_bands(corpus, dim=dim)
-    cand_ids = (
-        qb.alias("q")
-        .join(cb.alias("c"), ["band", "bkey"])
-        .select(F.col("q.id").alias("query_id"), F.col("c.id").alias("vec_id"))
-        .distinct()
-    )
-    return refine_topk(
-        queries,
-        corpus,
-        mode,
-        k,
-        keep_m,
-        delta,
-        cache_key=cache_key,
-        candidate_ids=cand_ids,
-    )
+    return _band_candidates(qb, corpus, dim)
 
 
-def lsh_multiprobe_cushion_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    mode: str,
-    k: int,
-    keep_m: int,
-    delta: float | None = None,
-    t: int | None = None,
-    cache_key: str | None = None,
-) -> RefineResult:
-    """Multi-probe LSH candidate generation × cushioned refinement —
-    the r08 recall lever (flipped lowest-margin buckets, recall@20
-    0.484 → 0.841 at the stored 4×4 layout) composed with the
-    reference's precision-on-demand re-scorer. The wider candidate
-    stream (~2.3× plain LSH) is exactly the regime where the cushion
-    pays most: seeds are a smaller mandatory fraction, so the
-    per-candidate byte saving EXCEEDS the plain-LSH composition's
-    while recall rises. Zero-miss over the stream (composition law):
-    final recall ≡ ``ann_lsh_multiprobe_recall``."""
-    from .simsearch import (
-        LSH_MULTIPROBE_T,
-        embedding_dim,
-        lsh_corpus_bands,
-        lsh_multiprobe_bands,
-    )
+def _lsh_multiprobe_candidates(queries, corpus, k, keep_m, mode, cache_key) -> DataFrame:
+    """Multi-probe LSH: each query also probes the ``LSH_MULTIPROBE_T``
+    buckets reached by flipping its lowest-margin bits (~2.3× plain
+    LSH's stream, so the K seeds are a smaller mandatory fraction)."""
+    from .simsearch import embedding_dim, lsh_multiprobe_bands
 
-    t = LSH_MULTIPROBE_T if t is None else t
     dim = embedding_dim(corpus)
     qb = lsh_multiprobe_bands(
-        queries.select("query_id", "embedding"), "embedding", "query_id",
-        t=t, dim=dim,
+        queries.select("query_id", "embedding"), "embedding", "query_id", dim=dim
     )
-    cb = lsh_corpus_bands(corpus, dim=dim)
-    cand_ids = (
-        qb.alias("q")
-        .join(cb.alias("c"), ["band", "bkey"])
-        .select(F.col("q.id").alias("query_id"), F.col("c.id").alias("vec_id"))
-        .distinct()
-    )
-    return refine_topk(
-        queries,
-        corpus,
-        mode,
-        k,
-        keep_m,
-        delta,
-        cache_key=cache_key,
-        candidate_ids=cand_ids,
-    )
+    return _band_candidates(qb, corpus, dim)
 
 
-def graph_cushion_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    mode: str,
-    k: int,
-    keep_m: int,
-    delta: float | None = None,
-    graph_k: int | None = None,
-    beam: int | None = None,
-    rounds: int | None = None,
-    entry_stride: int | None = None,
-    cache_key: str | None = None,
-    edges: DataFrame | None = None,
-) -> RefineResult:
-    """Quantization-guided graph walk × cushioned refinement — the
-    third index family behind the same re-scorer, and the one
-    production graph stores actually ship: the beam search ranks its
-    frontier on the REDUCED representation (the walk never touches
-    full precision — in HNSW-with-PQ deployments the graph adjacency
-    and the codes are the only hot data), and the cushioned
-    refinement then prices the exact re-scoring of everything the
-    walk visited. Zero-miss over the visited stream, so the final
-    top-K equals the exact (fp16) re-rank of the walk's candidates.
-
-    Only cosine modes are meaningful here (the walk maximizes
-    reduced dot product; an l2 walk would need the lower-bound form
-    per hop — same composition, omitted).
-
-    ``edges`` overrides the banded edge set with an explicit (src,
-    dst) frame — the α-pruned Vamana graph for the
-    ``ann_vamana_cushion_*`` composition (same walk, better graph)."""
-    from .simsearch import (
-        BEAM_ENTRY_STRIDE,
-        BEAM_ROUNDS,
-        BEAM_WIDTH,
-        GRAPH_DEGREE,
-        symmetric_knn_edges,
-    )
+def _graph_walk(queries, corpus, keep_m, mode, cache_key, edges) -> DataFrame:
+    """Every vector a quantization-guided beam search over ``edges``
+    visits: the walk ranks its frontier on the REDUCED representation
+    only (in HNSW-with-PQ deployments the adjacency and the codes are
+    the only hot data), with the ``BEAM_*`` operating point of
+    ``ann_graph_topk``."""
     from pyspark.sql.window import Window
 
-    if not is_cosine(mode):
-        raise ValueError("graph_cushion_topk walks by reduced dot product; use a cos-* mode")
-    graph_k = GRAPH_DEGREE if graph_k is None else graph_k
-    beam = BEAM_WIDTH if beam is None else beam
-    rounds = BEAM_ROUNDS if rounds is None else rounds
-    entry_stride = BEAM_ENTRY_STRIDE if entry_stride is None else entry_stride
+    from .simsearch import BEAM_ENTRY_STRIDE, BEAM_ROUNDS, BEAM_WIDTH
 
     corp = prepare_corpus_cached(corpus, keep_m, mode, cache_key)
     qs = F.broadcast(prepare_queries(queries, mode))
-    if edges is None:
-        edges = symmetric_knn_edges(corpus, graph_k)
     red_side = corp.select("vec_id", "redv")
-    seeds = F.broadcast(red_side.where(F.col("vec_id") % entry_stride == 0))
+    seeds = F.broadcast(red_side.where(F.col("vec_id") % BEAM_ENTRY_STRIDE == 0))
     cand = (
         qs.crossJoin(seeds)
         .select("query_id", "vec_id", dot("redv", "q").alias("red_score"))
     ).localCheckpoint(eager=False)
-    for _ in range(rounds):
+    for _ in range(BEAM_ROUNDS):
         w = Window.partitionBy("query_id").orderBy(
             F.col("red_score").desc(), F.col("vec_id").asc()
         )
         frontier = (
             cand.withColumn("__r", F.row_number().over(w))
-            .where(F.col("__r") <= beam)
+            .where(F.col("__r") <= BEAM_WIDTH)
             .select("query_id", "vec_id")
         )
         new_ids = (
@@ -946,102 +809,74 @@ def graph_cushion_topk(
             .agg(F.max("red_score").alias("red_score"))
             .localCheckpoint(eager=False)
         )
-    visited = cand.select("query_id", "vec_id")
-    return refine_topk(
-        queries,
-        corpus,
-        mode,
-        k,
-        keep_m,
-        delta,
-        cache_key=cache_key,
-        candidate_ids=visited,
+    return cand.select("query_id", "vec_id")
+
+
+def _graph_candidates(queries, corpus, k, keep_m, mode, cache_key) -> DataFrame:
+    """The reduced-page walk over the banded KNN graph."""
+    from .simsearch import GRAPH_DEGREE, symmetric_knn_edges
+
+    edges = symmetric_knn_edges(corpus, GRAPH_DEGREE)
+    return _graph_walk(queries, corpus, keep_m, mode, cache_key, edges)
+
+
+def _vamana_candidates(queries, corpus, k, keep_m, mode, cache_key) -> DataFrame:
+    """The same walk over the α-pruned Vamana graph (better edges). A
+    keyed build shares the ``fixture:``-keyed graph memo of the
+    registry's ``ann_vamana_*`` queries."""
+    from .vamana import vamana_edges
+
+    edges = vamana_edges(
+        corpus, cache_key=None if cache_key is None else f"fixture:{cache_key}"
     )
+    return _graph_walk(queries, corpus, keep_m, mode, cache_key, edges)
 
 
-def cascade_cushion_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    mode: str,
-    k: int,
-    keep_m: int,
-    delta: float | None = None,
-    r1: int | None = None,
-    r2: int | None = None,
-    cache_key: str | None = None,
-) -> RefineResult:
-    """Cascade candidates × cushioned refinement — the fifth index
-    family behind the shared re-scorer, and the cheapest candidate
-    generator of them all: stage 1 reads 1 bit/coordinate, stage 2
-    int8, and the cushioned re-scoring then reads mantissa-truncated
-    pages plus only the surviving full-precision fetches. Zero-miss
-    within the candidate stream, as for every composition.
+def _ivfadc_candidates(queries, corpus, k, keep_m, mode, cache_key) -> DataFrame:
+    """The R·K-deep ADC pre-rank over 8-byte residual codes — a
+    COMPRESSED index: the stream never touches raw vectors."""
+    from .pq import PQ_REFINE_R, ivfadc_candidates
 
-    Cosine modes only — the cascade's stage-2 narrows by recon
-    cosine, so an l2 cushion would re-rank a differently-ordered
-    admit set."""
-    from .bq import CASCADE_R1, CASCADE_R2, cascade_candidates
-
-    if not is_cosine(mode):
-        raise ValueError(
-            "cascade_cushion_topk pre-ranks by recon cosine; use a cos-* mode"
-        )
-    r1 = CASCADE_R1 if r1 is None else r1
-    r2 = CASCADE_R2 if r2 is None else r2
-    cand = cascade_candidates(queries, corpus, k, r1=r1, r2=r2).select(
-        "query_id", F.col("neighbor_id").alias("vec_id")
-    )
-    return refine_topk(
-        queries,
-        corpus,
-        mode,
-        k,
-        keep_m,
-        delta,
-        cache_key=cache_key,
-        candidate_ids=cand,
-    )
+    return _as_vec_ids(ivfadc_candidates(queries, corpus, PQ_REFINE_R * k))
 
 
-def mrl_cushion_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    mode: str,
-    k: int,
-    keep_m: int,
-    delta: float | None = None,
-    r: int | None = None,
-    d_keep: int | None = None,
-    cache_key: str | None = None,
-) -> RefineResult:
-    """Matryoshka prefix candidates × cushioned refinement — the
-    fourth index family behind the same re-scorer, and the one that
-    composes the engine's TWO bandwidth axes: the candidate pass reads
-    d'/D of the coordinates (dimension truncation), and the cushioned
-    re-scoring then reads mantissa-truncated pages plus only the
-    surviving full-precision fetches (per-coordinate truncation).
-    Zero-miss within the candidate stream, as for every composition:
-    the result equals the exact (fp16) re-rank of the prefix pre-
-    rank's R·K admits.
+def _rabitq_candidates(queries, corpus, k, keep_m, mode, cache_key) -> DataFrame:
+    """The R·K-deep RaBitQ estimator pre-rank over the 12-byte rotated
+    1-bit code table — the cosine counterpart of IVFADC's stream."""
+    from .rabitq import RABITQ_REFINE_R, rabitq_candidates
 
-    Cosine modes only — the prefix pre-rank maximizes prefix cosine,
-    the l2 analog would pre-rank by prefix distance lower bound (same
-    composition, omitted)."""
+    return _as_vec_ids(rabitq_candidates(queries, corpus, RABITQ_REFINE_R * k))
+
+
+def _cascade_candidates(queries, corpus, k, keep_m, mode, cache_key) -> DataFrame:
+    """The cascade's R1·K admits: 1-bit Hamming admit, int8
+    recon-cosine narrow — the cheapest candidate pass of them all."""
+    from .bq import cascade_candidates
+
+    return _as_vec_ids(cascade_candidates(queries, corpus, k))
+
+
+def _mrl_candidates(queries, corpus, k, keep_m, mode, cache_key) -> DataFrame:
+    """The Matryoshka prefix pre-rank's R·K admits: the candidate pass
+    reads d'/D of the coordinates, so the composition stacks the
+    engine's two bandwidth axes (dimension and mantissa truncation)."""
     from .mrl import MRL_REFINE_R, mrl_topk
 
-    if not is_cosine(mode):
-        raise ValueError("mrl_cushion_topk pre-ranks by prefix cosine; use a cos-* mode")
-    r = MRL_REFINE_R if r is None else r
-    cand = mrl_topk(queries, corpus, r * k, d_keep=d_keep).select(
-        "query_id", F.col("neighbor_id").alias("vec_id")
+    return _as_vec_ids(mrl_topk(queries, corpus, MRL_REFINE_R * k))
+
+
+#: every index family behind the cushioned re-scorer, by name
+CANDIDATE_SOURCES: dict[str, CandidateSource] = {
+    s.name: s
+    for s in (
+        CandidateSource("ivf", None, _ivf_candidates),
+        CandidateSource("lsh", None, _lsh_candidates),
+        CandidateSource("lsh_multiprobe", None, _lsh_multiprobe_candidates),
+        CandidateSource("graph", "cos", _graph_candidates),
+        CandidateSource("vamana", "cos", _vamana_candidates),
+        CandidateSource("ivfadc", "l2", _ivfadc_candidates),
+        CandidateSource("rabitq", "cos", _rabitq_candidates),
+        CandidateSource("cascade", "cos", _cascade_candidates),
+        CandidateSource("mrl", "cos", _mrl_candidates),
     )
-    return refine_topk(
-        queries,
-        corpus,
-        mode,
-        k,
-        keep_m,
-        delta,
-        cache_key=cache_key,
-        candidate_ids=cand,
-    )
+}

@@ -22,11 +22,12 @@ weaker rows-only check, as SURVEY §2 prescribes.
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .functions.fp16 import FP16_EXP_BITS, with_reduced_precision
+from .functions.fp16 import with_reduced_precision
 from .functions.vector import delta_from_exp_col, l2_norm, unit
 from .operators.metrics import recall_at_k
 from .operators.refine import MODES, refine_metrics, refine_topk
@@ -595,146 +596,6 @@ def q_refine_l2_tz_exact_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 QUERIES["refine_l2_tz_exact_metrics"] = q_refine_l2_tz_exact_metrics
 
-
-def _ivf_cushion_frames(spark: SparkSession, sf_dir: str):
-    """(composed topk, full-corpus refine topk), persisted + memoized
-    per (session, fixture): the topk and recall queries share one
-    build — the served-index pattern every other ANN family follows.
-    Released by ``session.clear_caches``."""
-    from .operators.refine import ivf_cushion_topk, refine_topk
-    from .session import session_cache
-
-    cache = session_cache(spark, "ivf_cushion")
-    if sf_dir not in cache:
-        queries = queries_view(spark, sf_dir)
-        corpus = load_table(spark, sf_dir, "embeddings")
-        res = ivf_cushion_topk(
-            queries, corpus, "l2-tz", K_DEFAULT, KEEP_M_DEFAULT, cache_key=sf_dir
-        )
-        res.topk.persist()
-        full = refine_topk(
-            queries, corpus, "l2-tz", K_DEFAULT, KEEP_M_DEFAULT, cache_key=sf_dir
-        ).topk.persist()
-        cache[sf_dir] = (res, full)
-    return cache[sf_dir]
-
-
-def q_ann_ivf_cushion_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Byte accounting of the IVF×cushion composition (the A2 model
-    over the candidate stream): how many candidate pairs the probed
-    cells produce, how many survive to a full-precision fetch, and
-    the two savings that fall out — vs an exact re-rank of the same
-    candidates (the cushion's contribution) and vs the full-corpus
-    exact scan (pruning × cushion composed, the end-to-end story).
-
-    Measured honestly: at the fixture operating point the K=20 seeds
-    are ~29% of an IVF candidate stream (~69/query), so
-    ``save_vs_exact_rerank`` is slightly NEGATIVE — reduced pages for
-    every pair plus full fetches exceed a plain full re-rank when
-    K/|candidates| is this large. The composed end-to-end save (~0.85)
-    is the IVF story; the per-candidate cushion pays where streams
-    are larger (see ``ann_lsh_cushion_metrics``, +0.064 at sf0.01,
-    and the corpus-wide ``refine_*_metrics``, +0.45)."""
-    res, _ = _ivf_cushion_frames(spark, sf_dir)
-    corpus_n = load_table(spark, sf_dir, "embeddings").count()
-    return _cushion_metrics_row(res, corpus_n, KEEP_M_DEFAULT)
-
-
-def q_ann_ivf_cushion_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The flagship composition: IVF cell pruning × cushioned
-    precision-on-demand refinement (``operators/refine.
-    ivf_cushion_topk``) — the reference's bandwidth-first re-scoring
-    applied to an index's candidate stream (README.md:11 "orthogonal
-    to index choice"). Zero-miss within the candidates: the result
-    equals the exact (fp16) re-rank of the probed cells at a fraction
-    of the fetched bytes (measured ~28% of candidate vectors fetched
-    at sf0.001)."""
-    res, _ = _ivf_cushion_frames(spark, sf_dir)
-    return _rounded_topk(res.topk)
-
-
-def q_ann_ivf_cushion_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall of the IVF×cushion composition against the full-corpus
-    zero-miss refinement in the SAME metric (fp16 l2) — i.e. exactly
-    the recall cost of the cell pruning; the cushion itself loses
-    nothing (its zero-miss guarantee is per candidate stream)."""
-    from .operators.simsearch import ann_recall
-
-    res, full = _ivf_cushion_frames(spark, sf_dir)
-    return ann_recall(res.topk, full, K_DEFAULT)
-
-
-def _lsh_cushion_res(spark: SparkSession, sf_dir: str):
-    """Memoized LSH×cushion build shared by the topk and metrics
-    queries (cos-l1, keep_m=6 — the measured best per-candidate save:
-    0.064 at sf0.01 vs 0.002 at m=2; LSH streams are ~2× IVF's, so
-    the cushion prunes 81% of the full fetches)."""
-    from .operators.refine import lsh_cushion_topk
-    from .session import session_cache
-
-    cache = session_cache(spark, "lsh_cushion")
-    if sf_dir not in cache:
-        res = lsh_cushion_topk(
-            queries_view(spark, sf_dir),
-            load_table(spark, sf_dir, "embeddings"),
-            "cos-l1",
-            K_DEFAULT,
-            KEEP_M_DEFAULT,
-            cache_key=sf_dir,
-        )
-        res.topk.persist()
-        cache[sf_dir] = res
-    return cache[sf_dir]
-
-
-def q_ann_lsh_cushion_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hyperplane-LSH candidates × cushioned refinement (cos-l1) —
-    the second index family behind the same precision-on-demand
-    re-scorer, demonstrating the reference's "orthogonal to index
-    choice" claim across index types."""
-    return _rounded_topk(_lsh_cushion_res(spark, sf_dir).topk)
-
-
-def _cushion_metrics_row(res, corpus_n: int, keep_m: int) -> DataFrame:
-    dim = 64
-    b_full = 16.0 * dim / 8.0
-    b_red = (1 + FP16_EXP_BITS + keep_m) * dim / 8.0
-    counts = res.scored.agg(
-        F.count("*").alias("n_pairs"),
-        F.count_distinct("query_id").alias("n_q"),
-    ).crossJoin(res.fetched.agg(F.count("*").alias("n_fetched")))
-    cost = F.lit(b_red) * F.col("n_pairs") + F.lit(b_full) * F.col("n_fetched")
-    return counts.select(
-        "n_pairs",
-        "n_fetched",
-        F.round(F.col("n_fetched") / F.col("n_pairs"), 6).alias("fetch_frac"),
-        F.round(
-            F.lit(1.0) - cost / (F.lit(b_full) * F.col("n_pairs")), 6
-        ).alias("save_vs_exact_rerank"),
-        F.round(
-            F.lit(1.0)
-            - cost / (F.lit(b_full) * F.col("n_q") * F.lit(float(corpus_n))),
-            6,
-        ).alias("save_vs_full_scan"),
-    )
-
-
-def q_ann_lsh_cushion_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Byte accounting of the LSH×cushion composition — the regime
-    where per-candidate precision-on-demand pays (candidate streams
-    ~2× IVF's probed cells, so the K seeds are a smaller mandatory
-    fraction and the cushion prunes most full fetches)."""
-    res = _lsh_cushion_res(spark, sf_dir)
-    corpus_n = load_table(spark, sf_dir, "embeddings").count()
-    return _cushion_metrics_row(res, corpus_n, KEEP_M_DEFAULT)
-
-
-QUERIES["ann_ivf_cushion_topk"] = q_ann_ivf_cushion_topk
-QUERIES["ann_ivf_cushion_recall"] = q_ann_ivf_cushion_recall
-QUERIES["ann_ivf_cushion_metrics"] = q_ann_ivf_cushion_metrics
-QUERIES["ann_lsh_cushion_topk"] = q_ann_lsh_cushion_topk
-QUERIES["ann_lsh_cushion_metrics"] = q_ann_lsh_cushion_metrics
-
 from .registry_dedup import DEDUP_ORACLES, DEDUP_QUERIES  # noqa: E402
 from .registry_curation import CURATION_ORACLES, CURATION_QUERIES  # noqa: E402
 from .registry_multimodal import MULTIMODAL_ORACLES, MULTIMODAL_QUERIES  # noqa: E402
@@ -914,307 +775,6 @@ ORACLES.update(STREAMING_ORACLES)
 ORACLES.update(MULTIMODAL_ORACLES)
 ORACLES.update(CURATION_ORACLES)
 ORACLES.update(VECTORDB_ORACLES)
-
-# IVF × cushion composition: the IVF CTE chain (quantizer, assignment,
-# probes — shared verbatim with the ann_ivf_* oracles) feeds a
-# candidate-restricted refine_body; the refinement CTEs replay the
-# identical fp16 reduction, cushions, seeds and fixed τ₀.
-from .registry_simsearch import SQL_IVF_BODY as _SQL_IVF_BODY  # noqa: E402
-
-_IVF_CUSHION_EXTRA = f"""{_SQL_IVF_BODY},
-cand_ids AS (
-  SELECT p.query_id, a.vec_id
-  FROM probes p JOIN assigned a ON a.cell = p.cell
-),
-"""
-
-_IVF_CUSHION_BODY = duck_oracle.refine_body(
-    "l2-tz", K_DEFAULT, KEEP_M_DEFAULT, None, QUERY_STRIDE,
-    extra_ctes=_IVF_CUSHION_EXTRA, candidate_cte="cand_ids",
-)
-
-ORACLES["ann_ivf_cushion_topk"] = f"""
-WITH {duck_oracle.fp16_cte(KEEP_M_DEFAULT)},
-{_IVF_CUSHION_BODY}
-SELECT query_id, rank, neighbor_id, round(score, 6) AS score
-FROM final WHERE rank <= {K_DEFAULT}
-"""
-
-#: byte model constants interpolated from the SAME sources the Spark
-#: side uses (functions/fp16.FP16_EXP_BITS + the fixture dim) — a
-#: change to either can no longer silently diverge the metrics
-#: oracles from the engine (r04 advisor note)
-_B_FULL = 16.0 * FIXTURE_EMBED_DIM / 8.0
-_B_RED = (1 + FP16_EXP_BITS + KEEP_M_DEFAULT) * FIXTURE_EMBED_DIM / 8.0
-
-ORACLES["ann_ivf_cushion_metrics"] = f"""
-WITH {duck_oracle.fp16_cte(KEEP_M_DEFAULT)},
-{_IVF_CUSHION_BODY},
-pair_n AS (SELECT count(*) AS n_pairs, count(DISTINCT query_id) AS n_q FROM pairs),
-fetch_n AS (
-  SELECT (SELECT count(*) FROM seed) + (SELECT count(*) FROM surv) AS n_fetched
-),
-corp_n AS (SELECT count(*) AS n_corpus FROM embeddings)
-SELECT p.n_pairs, f.n_fetched,
-  round(CAST(f.n_fetched AS DOUBLE) / p.n_pairs, 6) AS fetch_frac,
-  round(1.0 - ({_B_RED!r} * p.n_pairs + {_B_FULL!r} * f.n_fetched)
-            / ({_B_FULL!r} * p.n_pairs), 6) AS save_vs_exact_rerank,
-  round(1.0 - ({_B_RED!r} * p.n_pairs + {_B_FULL!r} * f.n_fetched)
-            / ({_B_FULL!r} * p.n_q * c.n_corpus), 6) AS save_vs_full_scan
-FROM pair_n p CROSS JOIN fetch_n f CROSS JOIN corp_n c
-"""
-
-# LSH × cushion: hyperplane band CTEs (shared shapes with the
-# ann_lsh_* oracles) feed the candidate-restricted refine_body in
-# cos-l1 mode.
-from .registry_simsearch import _sql_bands as _sql_lsh_bands  # noqa: E402
-
-_LSH_CUSHION_EXTRA = f"""qb AS ({_sql_lsh_bands("q", "query_id", "qe")}),
-cb AS ({_sql_lsh_bands("embeddings", "vec_id", "embedding")}),
-cand_ids AS (
-  SELECT DISTINCT q2.id AS query_id, c2.id AS vec_id
-  FROM qb q2 JOIN cb c2 ON q2.band = c2.band AND q2.bkey = c2.bkey
-),
-"""
-
-_LSH_CUSHION_BODY = duck_oracle.refine_body(
-    "cos-l1", K_DEFAULT, KEEP_M_DEFAULT, None, QUERY_STRIDE,
-    extra_ctes=_LSH_CUSHION_EXTRA, candidate_cte="cand_ids",
-)
-
-ORACLES["ann_lsh_cushion_topk"] = f"""
-WITH {duck_oracle.fp16_cte(KEEP_M_DEFAULT)},
-{_LSH_CUSHION_BODY}
-SELECT query_id, rank, neighbor_id, round(score, 6) AS score
-FROM final WHERE rank <= {K_DEFAULT}
-"""
-
-ORACLES["ann_lsh_cushion_metrics"] = f"""
-WITH {duck_oracle.fp16_cte(KEEP_M_DEFAULT)},
-{_LSH_CUSHION_BODY},
-pair_n AS (SELECT count(*) AS n_pairs, count(DISTINCT query_id) AS n_q FROM pairs),
-fetch_n AS (
-  SELECT (SELECT count(*) FROM seed) + (SELECT count(*) FROM surv) AS n_fetched
-),
-corp_n AS (SELECT count(*) AS n_corpus FROM embeddings)
-SELECT p.n_pairs, f.n_fetched,
-  round(CAST(f.n_fetched AS DOUBLE) / p.n_pairs, 6) AS fetch_frac,
-  round(1.0 - ({_B_RED!r} * p.n_pairs + {_B_FULL!r} * f.n_fetched)
-            / ({_B_FULL!r} * p.n_pairs), 6) AS save_vs_exact_rerank,
-  round(1.0 - ({_B_RED!r} * p.n_pairs + {_B_FULL!r} * f.n_fetched)
-            / ({_B_FULL!r} * p.n_q * c.n_corpus), 6) AS save_vs_full_scan
-FROM pair_n p CROSS JOIN fetch_n f CROSS JOIN corp_n c
-"""
-
-ORACLES["ann_ivf_cushion_recall"] = f"""
-WITH {duck_oracle.fp16_cte(KEEP_M_DEFAULT)},
-{_IVF_CUSHION_BODY},
-ann AS (SELECT query_id, neighbor_id FROM final WHERE rank <= {K_DEFAULT}),
-hits AS (
-  SELECT gt.query_id, count(*) AS n_hit
-  FROM gt JOIN ann USING (query_id, neighbor_id) GROUP BY gt.query_id
-),
-per_q AS (
-  SELECT q2.query_id, CAST(coalesce(h.n_hit, 0) AS DOUBLE) / {K_DEFAULT} AS recall
-  FROM (SELECT DISTINCT query_id FROM gt) q2 LEFT JOIN hits h USING (query_id)
-)
-SELECT round(avg(recall), 6) AS recall_at_k, count(*) AS n_queries FROM per_q
-"""
-
-# graph × cushion: the quantization-guided walk. Graph construction
-# CTEs are shared shapes with the ann_graph_* oracles; the walk ranks
-# on corp.redv (the reduced representation refine_body already
-# defines), and the visited set feeds the candidate-restricted
-# refinement. Every per-round CTE is MATERIALIZED — the round chain
-# references its predecessor three times per level (frontier, union,
-# dedup), which is exponential under DuckDB's default inlining.
-
-
-def _sql_graph_cushion_extra() -> str:
-    from .operators import simsearch as _S
-    from .registry_simsearch import GRAPH_BEAM_K, _sql_cos
-
-    parts = [
-        f"""gcb AS ({_sql_lsh_bands("embeddings", "vec_id", "embedding")}),
-ggraph AS (
-  SELECT node_id, neighbor_id FROM (
-    SELECT node_id, neighbor_id,
-      row_number() OVER (PARTITION BY node_id
-        ORDER BY score DESC, neighbor_id) AS rank
-    FROM (
-      SELECT node_id, neighbor_id, {_sql_cos("qvec", "cvec")} AS score FROM (
-        SELECT DISTINCT a.id AS node_id, b.id AS neighbor_id,
-               a.vec AS qvec, b.vec AS cvec
-        FROM gcb a JOIN gcb b
-          ON a.band = b.band AND a.bkey = b.bkey AND a.id != b.id
-      )
-    )
-  ) WHERE rank <= {GRAPH_BEAM_K}
-),
-gedges AS MATERIALIZED (
-  SELECT node_id AS src, neighbor_id AS dst FROM ggraph
-  UNION
-  SELECT neighbor_id AS src, node_id AS dst FROM ggraph
-),
-w0 AS MATERIALIZED (
-  SELECT q.query_id, s.vec_id, {duck_oracle.sql_dot("s.redv", "q.qn")} AS red_score
-  FROM q CROSS JOIN
-    (SELECT vec_id, redv FROM corp WHERE vec_id % {_S.BEAM_ENTRY_STRIDE} = 0) s
-)"""
-    ]
-    for i in range(1, _S.BEAM_ROUNDS + 1):
-        prev, cur = f"w{i - 1}", f"w{i}"
-        parts.append(f"""wf{i} AS (
-  SELECT query_id, vec_id FROM (
-    SELECT query_id, vec_id,
-      row_number() OVER (PARTITION BY query_id
-        ORDER BY red_score DESC, vec_id ASC) AS r
-    FROM {prev}
-  ) WHERE r <= {_S.BEAM_WIDTH}
-)""")
-        parts.append(f"""wn{i} AS (
-  SELECT DISTINCT f.query_id, e.dst AS vec_id
-  FROM wf{i} f JOIN gedges e ON e.src = f.vec_id
-)""")
-        parts.append(f"""ws{i} AS (
-  SELECT n.query_id, n.vec_id, {duck_oracle.sql_dot("c.redv", "q.qn")} AS red_score
-  FROM wn{i} n
-  JOIN corp c ON c.vec_id = n.vec_id
-  JOIN q ON q.query_id = n.query_id
-)""")
-        parts.append(f"""{cur} AS MATERIALIZED (
-  SELECT query_id, vec_id, max(red_score) AS red_score FROM (
-    SELECT * FROM {prev} UNION ALL SELECT * FROM ws{i}
-  ) GROUP BY query_id, vec_id
-)""")
-    parts.append(
-        f"cand_ids AS (SELECT query_id, vec_id FROM w{_S.BEAM_ROUNDS})"
-    )
-    return ",\n".join(parts) + ",\n"
-
-
-_GRAPH_CUSHION_BODY = duck_oracle.refine_body(
-    "cos-l1", K_DEFAULT, KEEP_M_DEFAULT, None, QUERY_STRIDE,
-    extra_ctes=_sql_graph_cushion_extra(), candidate_cte="cand_ids",
-)
-
-ORACLES["ann_graph_cushion_topk"] = f"""
-WITH {duck_oracle.fp16_cte(KEEP_M_DEFAULT)},
-{_GRAPH_CUSHION_BODY}
-SELECT query_id, rank, neighbor_id, round(score, 6) AS score
-FROM final WHERE rank <= {K_DEFAULT}
-"""
-
-ORACLES["ann_graph_cushion_metrics"] = f"""
-WITH {duck_oracle.fp16_cte(KEEP_M_DEFAULT)},
-{_GRAPH_CUSHION_BODY},
-pair_n AS (SELECT count(*) AS n_pairs, count(DISTINCT query_id) AS n_q FROM pairs),
-fetch_n AS (
-  SELECT (SELECT count(*) FROM seed) + (SELECT count(*) FROM surv) AS n_fetched
-),
-corp_n AS (SELECT count(*) AS n_corpus FROM embeddings)
-SELECT p.n_pairs, f.n_fetched,
-  round(CAST(f.n_fetched AS DOUBLE) / p.n_pairs, 6) AS fetch_frac,
-  round(1.0 - ({_B_RED!r} * p.n_pairs + {_B_FULL!r} * f.n_fetched)
-            / ({_B_FULL!r} * p.n_pairs), 6) AS save_vs_exact_rerank,
-  round(1.0 - ({_B_RED!r} * p.n_pairs + {_B_FULL!r} * f.n_fetched)
-            / ({_B_FULL!r} * p.n_q * c.n_corpus), 6) AS save_vs_full_scan
-FROM pair_n p CROSS JOIN fetch_n f CROSS JOIN corp_n c
-"""
-
-
-def _graph_cushion_res(spark: SparkSession, sf_dir: str):
-    """Memoized quantized-walk build shared by its topk and metrics
-    queries (cos-l1, keep_m=6; walk parameters shared with
-    ann_graph_topk)."""
-    from .operators.refine import graph_cushion_topk
-    from .session import session_cache
-
-    cache = session_cache(spark, "graph_cushion")
-    if sf_dir not in cache:
-        res = graph_cushion_topk(
-            queries_view(spark, sf_dir),
-            load_table(spark, sf_dir, "embeddings"),
-            "cos-l1",
-            K_DEFAULT,
-            KEEP_M_DEFAULT,
-            cache_key=sf_dir,
-        )
-        res.topk.persist()
-        cache[sf_dir] = res
-    return cache[sf_dir]
-
-
-def q_ann_graph_cushion_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quantization-guided graph walk × cushioned refinement — the
-    walk ranks its frontier on the reduced representation only (the
-    HNSW-with-codes deployment shape) and the cushion prices the
-    exact re-scoring of the visited set."""
-    return _rounded_topk(_graph_cushion_res(spark, sf_dir).topk)
-
-
-def q_ann_graph_cushion_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Byte accounting of the quantized-walk composition."""
-    res = _graph_cushion_res(spark, sf_dir)
-    corpus_n = load_table(spark, sf_dir, "embeddings").count()
-    return _cushion_metrics_row(res, corpus_n, KEEP_M_DEFAULT)
-
-
-QUERIES["ann_graph_cushion_topk"] = q_ann_graph_cushion_topk
-QUERIES["ann_graph_cushion_metrics"] = q_ann_graph_cushion_metrics
-
-
-# tuned composition operating point: the sweep
-# (reports/cushion_composition_sweep.csv) finds the interior keep_m
-# optimum for per-candidate save at m=3 for every family; register the
-# LSH point (the largest candidate streams, hence the headline).
-CUSHION_M_TUNED = 3
-
-
-def q_ann_lsh_cushion_tuned_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH×cushion byte accounting at the swept keep_m optimum
-    (m=3): per-candidate save +0.327 at sf0.1 vs +0.202 at the m=6
-    default — the fetch-fraction × page-width trade has an interior
-    optimum, exactly as the corpus-wide refine family's KEEP_M_TUNED
-    does."""
-    from .operators.refine import lsh_cushion_topk
-
-    res = lsh_cushion_topk(
-        queries_view(spark, sf_dir),
-        load_table(spark, sf_dir, "embeddings"),
-        "cos-l1",
-        K_DEFAULT,
-        CUSHION_M_TUNED,
-        cache_key=sf_dir,
-    )
-    corpus_n = load_table(spark, sf_dir, "embeddings").count()
-    return _cushion_metrics_row(res, corpus_n, CUSHION_M_TUNED)
-
-
-QUERIES["ann_lsh_cushion_tuned_metrics"] = q_ann_lsh_cushion_tuned_metrics
-
-_B_RED_T = (1 + FP16_EXP_BITS + CUSHION_M_TUNED) * FIXTURE_EMBED_DIM / 8.0
-_LSH_CUSHION_TUNED_BODY = duck_oracle.refine_body(
-    "cos-l1", K_DEFAULT, CUSHION_M_TUNED, None, QUERY_STRIDE,
-    extra_ctes=_LSH_CUSHION_EXTRA, candidate_cte="cand_ids",
-)
-
-ORACLES["ann_lsh_cushion_tuned_metrics"] = f"""
-WITH {duck_oracle.fp16_cte(CUSHION_M_TUNED)},
-{_LSH_CUSHION_TUNED_BODY},
-pair_n AS (SELECT count(*) AS n_pairs, count(DISTINCT query_id) AS n_q FROM pairs),
-fetch_n AS (
-  SELECT (SELECT count(*) FROM seed) + (SELECT count(*) FROM surv) AS n_fetched
-),
-corp_n AS (SELECT count(*) AS n_corpus FROM embeddings)
-SELECT p.n_pairs, f.n_fetched,
-  round(CAST(f.n_fetched AS DOUBLE) / p.n_pairs, 6) AS fetch_frac,
-  round(1.0 - ({_B_RED_T!r} * p.n_pairs + {_B_FULL!r} * f.n_fetched)
-            / ({_B_FULL!r} * p.n_pairs), 6) AS save_vs_exact_rerank,
-  round(1.0 - ({_B_RED_T!r} * p.n_pairs + {_B_FULL!r} * f.n_fetched)
-            / ({_B_FULL!r} * p.n_q * c.n_corpus), 6) AS save_vs_full_scan
-FROM pair_n p CROSS JOIN fetch_n f CROSS JOIN corp_n c
-"""
 
 # Embedding covariance: the d×d second-moment diagnostic feeding
 # whitening / OPQ-style rotation decisions and embedding-drift
@@ -1458,61 +1018,183 @@ GROUP BY e.vec_id
 """
 
 
-# MRL × cushion: the fourth index family behind the candidate-
-# restricted refinement, composing the engine's two bandwidth axes —
-# the prefix pre-rank reads d'/D of the coordinates, the cushioned
-# re-scoring then reads mantissa-truncated pages + surviving full
-# fetches only. Candidate CTE replays operators/mrl.mrl_topk (prefix
-# cosine, top R·K, ties → vec_id).
-from .registry_vectordb import _sql_mrl_cos as _SQL_MRL_COS  # noqa: E402
+# ---------------------------------------------------------------------------
+# Index × cushion compositions: every ``refine.CANDIDATE_SOURCES`` entry
+# behind the reference's precision-on-demand re-scorer, registered at
+# one operating point. Each source's DuckDB candidate CTEs replay its
+# Spark candidate logic and end in ``cand_ids``, which feeds the
+# candidate-restricted ``refine_body`` — the same fp16 reduction,
+# cushions, seeds and fixed τ₀ as the corpus-wide refine oracles.
+# ---------------------------------------------------------------------------
 from .operators.mrl import MRL_REFINE_R as _MRL_R  # noqa: E402
+from .operators.pq import (  # noqa: E402
+    IVFADC_KMEANS_ITERS as _ADC_ITERS,
+    PQ_REFINE_R as _ADC_R,
+)
+from .operators.rabitq import RABITQ_REFINE_R as _RBT_R  # noqa: E402
+from .operators.refine import CANDIDATE_SOURCES, cushion_topk, vector_bytes  # noqa: E402
+from .operators.simsearch import LSH_MULTIPROBE_T as _LSH_MP_T  # noqa: E402
+from .registry_simsearch import (  # noqa: E402
+    SQL_IVF_BODY as _SQL_IVF_BODY,
+    _SQL_RES_EMB as _SQL_ADC_RES_EMB,
+    _sql_band_dots as _sql_lsh_band_dots,
+    _sql_bands as _sql_lsh_bands,
+    _sql_dist2 as _sql_adc_dist2,
+    sql_ivf_body as _sql_adc_ivf_body,
+    sql_pq_body as _sql_adc_pq_body,
+)
+from .registry_vectordb import (  # noqa: E402
+    _CASC_POOL1,
+    _CASC_POOL2,
+    _SQL_RBT_EST,
+    _SQL_SQ_RECON as _SQL_SQ_RECON_FRAG,
+    _rbt_base_ctes,
+    _sql_bq_words,
+    _sql_mrl_cos as _SQL_MRL_COS,
+)
+from .session import session_cache  # noqa: E402
+
+# IVF: the IVF CTE chain (quantizer, assignment, probes — shared
+# verbatim with the ann_ivf_* oracles) probed per query.
+_IVF_CUSHION_EXTRA = f"""{_SQL_IVF_BODY},
+cand_ids AS (
+  SELECT p.query_id, a.vec_id
+  FROM probes p JOIN assigned a ON a.cell = p.cell
+),
+"""
+
+# LSH: hyperplane band CTEs (shared shapes with the ann_lsh_* oracles).
+_LSH_CUSHION_EXTRA = f"""qb AS ({_sql_lsh_bands("q", "query_id", "qe")}),
+cb AS ({_sql_lsh_bands("embeddings", "vec_id", "embedding")}),
+cand_ids AS (
+  SELECT DISTINCT q2.id AS query_id, c2.id AS vec_id
+  FROM qb q2 JOIN cb c2 ON q2.band = c2.band AND q2.bkey = c2.bkey
+),
+"""
+
+# Multi-probe LSH: each query's own bucket plus the buckets reached by
+# flipping its LSH_MULTIPROBE_T lowest-margin bits.
+_LSH_MP_CUSHION_EXTRA = f"""qb AS ({_sql_lsh_bands("q", "query_id", "qe")}),
+cb AS ({_sql_lsh_bands("embeddings", "vec_id", "embedding")}),
+q_dots AS ({_sql_lsh_band_dots("q", "query_id", "qe")}),
+q_flip AS (
+  SELECT id, band, j FROM (
+    SELECT id, band, j,
+      row_number() OVER (PARTITION BY id, band ORDER BY abs(dot) ASC, j ASC) AS r
+    FROM q_dots
+  ) WHERE r <= {_LSH_MP_T}
+),
+qmb AS (
+  SELECT id, band, bkey FROM qb
+  UNION ALL
+  SELECT qb.id, qb.band, xor(qb.bkey, 1 << f.j) AS bkey
+  FROM q_flip f JOIN qb ON qb.id = f.id AND qb.band = f.band
+),
+cand_ids AS (
+  SELECT DISTINCT q2.id AS query_id, c2.id AS vec_id
+  FROM qmb q2 JOIN cb c2 ON q2.band = c2.band AND q2.bkey = c2.bkey
+),
+"""
+
+# Graph: the quantization-guided walk. Graph construction
+# CTEs are shared shapes with the ann_graph_* oracles; the walk ranks
+# on corp.redv (the reduced representation refine_body already
+# defines), and the visited set feeds the candidate-restricted
+# refinement. Every per-round CTE is MATERIALIZED — the round chain
+# references its predecessor three times per level (frontier, union,
+# dedup), which is exponential under DuckDB's default inlining.
 
 
-def _mrl_cushion_res(spark: SparkSession, sf_dir: str):
-    """Memoized MRL×cushion build shared by topk and metrics
-    (cos-l1, keep_m=6 — the corpus-wide default; candidate streams
-    are exactly R·K = 60/query, seed-dominated like IVF's)."""
-    from .operators.refine import mrl_cushion_topk
-    from .session import session_cache
+def _sql_graph_cushion_extra() -> str:
+    from .operators import simsearch as _S
+    from .registry_simsearch import GRAPH_BEAM_K, _sql_cos
 
-    cache = session_cache(spark, "mrl_cushion")
-    if sf_dir not in cache:
-        res = mrl_cushion_topk(
-            queries_view(spark, sf_dir),
-            load_table(spark, sf_dir, "embeddings"),
-            "cos-l1",
-            K_DEFAULT,
-            KEEP_M_DEFAULT,
-            cache_key=sf_dir,
-        )
-        res.topk.persist()
-        cache[sf_dir] = res
-    return cache[sf_dir]
+    parts = [
+        f"""gcb AS ({_sql_lsh_bands("embeddings", "vec_id", "embedding")}),
+ggraph AS (
+  SELECT node_id, neighbor_id FROM (
+    SELECT node_id, neighbor_id,
+      row_number() OVER (PARTITION BY node_id
+        ORDER BY score DESC, neighbor_id) AS rank
+    FROM (
+      SELECT node_id, neighbor_id, {_sql_cos("qvec", "cvec")} AS score FROM (
+        SELECT DISTINCT a.id AS node_id, b.id AS neighbor_id,
+               a.vec AS qvec, b.vec AS cvec
+        FROM gcb a JOIN gcb b
+          ON a.band = b.band AND a.bkey = b.bkey AND a.id != b.id
+      )
+    )
+  ) WHERE rank <= {GRAPH_BEAM_K}
+),
+gedges AS MATERIALIZED (
+  SELECT node_id AS src, neighbor_id AS dst FROM ggraph
+  UNION
+  SELECT neighbor_id AS src, node_id AS dst FROM ggraph
+),
+w0 AS MATERIALIZED (
+  SELECT q.query_id, s.vec_id, {duck_oracle.sql_dot("s.redv", "q.qn")} AS red_score
+  FROM q CROSS JOIN
+    (SELECT vec_id, redv FROM corp WHERE vec_id % {_S.BEAM_ENTRY_STRIDE} = 0) s
+)"""
+    ]
+    for i in range(1, _S.BEAM_ROUNDS + 1):
+        prev, cur = f"w{i - 1}", f"w{i}"
+        parts.append(f"""wf{i} AS (
+  SELECT query_id, vec_id FROM (
+    SELECT query_id, vec_id,
+      row_number() OVER (PARTITION BY query_id
+        ORDER BY red_score DESC, vec_id ASC) AS r
+    FROM {prev}
+  ) WHERE r <= {_S.BEAM_WIDTH}
+)""")
+        parts.append(f"""wn{i} AS (
+  SELECT DISTINCT f.query_id, e.dst AS vec_id
+  FROM wf{i} f JOIN gedges e ON e.src = f.vec_id
+)""")
+        parts.append(f"""ws{i} AS (
+  SELECT n.query_id, n.vec_id, {duck_oracle.sql_dot("c.redv", "q.qn")} AS red_score
+  FROM wn{i} n
+  JOIN corp c ON c.vec_id = n.vec_id
+  JOIN q ON q.query_id = n.query_id
+)""")
+        parts.append(f"""{cur} AS MATERIALIZED (
+  SELECT query_id, vec_id, max(red_score) AS red_score FROM (
+    SELECT * FROM {prev} UNION ALL SELECT * FROM ws{i}
+  ) GROUP BY query_id, vec_id
+)""")
+    parts.append(
+        f"cand_ids AS (SELECT query_id, vec_id FROM w{_S.BEAM_ROUNDS})"
+    )
+    return ",\n".join(parts) + ",\n"
 
 
-def q_ann_mrl_cushion_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Matryoshka prefix candidates × cushioned refinement (cos-l1):
-    dimension truncation generates the candidate stream, mantissa
-    truncation prices its exact re-scoring — both bandwidth axes in
-    one query. Zero-miss within candidates, as for every
-    composition."""
-    return _rounded_topk(_mrl_cushion_res(spark, sf_dir).topk)
+def _sql_vamana_cushion_extra() -> str:
+    """The graph-cushion walk chain with the α-prune inserted between
+    the banded ``gedges`` and the walk rounds: vamana CTEs come from
+    ``registry_simsearch._sql_vamana_ctes`` parameterized on the
+    in-body edge name, and the rounds walk ``vedges``."""
+    from .registry_simsearch import _sql_vamana_ctes
+
+    base = _sql_graph_cushion_extra()
+    vam = ",\n".join(_sql_vamana_ctes(edges_src="gedges")) + ",\n"
+    # inject the prune chain right after gedges, and point every walk
+    # round's expansion at the pruned vedges. The anchors are literal
+    # text from _sql_graph_cushion_extra — assert they matched so a
+    # drift there fails loudly at import instead of surfacing later
+    # as a SQL error or a silent oracle mismatch (r10 ADVICE).
+    w0_anchor = "w0 AS MATERIALIZED ("
+    walk_anchor = "JOIN gedges e ON e.src = f.vec_id"
+    assert w0_anchor in base and walk_anchor in base, (
+        "graph-cushion SQL anchors drifted; update _sql_vamana_cushion_extra"
+    )
+    out = base.replace(w0_anchor, vam + w0_anchor, 1)
+    out = out.replace(walk_anchor, "JOIN vedges e ON e.src = f.vec_id")
+    assert "vedges" in out and out != base
+    return out
 
 
-def q_ann_mrl_cushion_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Byte accounting of the MRL×cushion composition. The stream is
-    R·K = 60 candidates/query — K seeds are a third of it, so like
-    IVF this is the seed-dominated regime (per-candidate save near
-    zero, documented honestly); the end-to-end save composes the
-    prefix scan's d'/D with the cushion."""
-    res = _mrl_cushion_res(spark, sf_dir)
-    corpus_n = load_table(spark, sf_dir, "embeddings").count()
-    return _cushion_metrics_row(res, corpus_n, KEEP_M_DEFAULT)
-
-
-QUERIES["ann_mrl_cushion_topk"] = q_ann_mrl_cushion_topk
-QUERIES["ann_mrl_cushion_metrics"] = q_ann_mrl_cushion_metrics
-
+# MRL: replays operators/mrl.mrl_topk (prefix cosine, top R·K, ties →
+# vec_id).
 _MRL_CUSHION_EXTRA = f"""mrl_ps AS (
   SELECT q.query_id, e.vec_id, {_SQL_MRL_COS("q.qe", "e.embedding")} AS ps
   FROM q CROSS JOIN embeddings e
@@ -1526,95 +1208,8 @@ cand_ids AS (
 ),
 """
 
-_MRL_CUSHION_BODY = duck_oracle.refine_body(
-    "cos-l1", K_DEFAULT, KEEP_M_DEFAULT, None, QUERY_STRIDE,
-    extra_ctes=_MRL_CUSHION_EXTRA, candidate_cte="cand_ids",
-)
-
-ORACLES["ann_mrl_cushion_topk"] = f"""
-WITH {duck_oracle.fp16_cte(KEEP_M_DEFAULT)},
-{_MRL_CUSHION_BODY}
-SELECT query_id, rank, neighbor_id, round(score, 6) AS score
-FROM final WHERE rank <= {K_DEFAULT}
-"""
-
-ORACLES["ann_mrl_cushion_metrics"] = f"""
-WITH {duck_oracle.fp16_cte(KEEP_M_DEFAULT)},
-{_MRL_CUSHION_BODY},
-pair_n AS (SELECT count(*) AS n_pairs, count(DISTINCT query_id) AS n_q FROM pairs),
-fetch_n AS (
-  SELECT (SELECT count(*) FROM seed) + (SELECT count(*) FROM surv) AS n_fetched
-),
-corp_n AS (SELECT count(*) AS n_corpus FROM embeddings)
-SELECT p.n_pairs, f.n_fetched,
-  round(CAST(f.n_fetched AS DOUBLE) / p.n_pairs, 6) AS fetch_frac,
-  round(1.0 - ({_B_RED!r} * p.n_pairs + {_B_FULL!r} * f.n_fetched)
-            / ({_B_FULL!r} * p.n_pairs), 6) AS save_vs_exact_rerank,
-  round(1.0 - ({_B_RED!r} * p.n_pairs + {_B_FULL!r} * f.n_fetched)
-            / ({_B_FULL!r} * p.n_q * c.n_corpus), 6) AS save_vs_full_scan
-FROM pair_n p CROSS JOIN fetch_n f CROSS JOIN corp_n c
-"""
-
-
-# --- cascade × cushion: the fifth index family behind the shared
-# cushioned re-scorer; the candidate pass costs 1 bit/coord (stage 1)
-# + int8 (stage 2), the cushioned re-scoring then reads mantissa-
-# truncated pages + surviving full fetches only. Candidate CTEs
-# replay operators/bq.cascade_candidates exactly (Hamming admit,
-# recon-cosine narrow, same tie-breaks).
-from .registry_vectordb import (  # noqa: E402
-    _CASC_POOL1,
-    _CASC_POOL2,
-    _SQL_SQ_RECON as _SQL_SQ_RECON_FRAG,
-    _sql_bq_words,
-)
-
-
-def _cascade_cushion_res(spark: SparkSession, sf_dir: str):
-    """Memoized cascade×cushion build shared by topk and metrics
-    (cos-l1, keep_m=6 — the corpus-wide default; candidate streams
-    are exactly R1·K = 40/query, seed-dominated like IVF's and
-    MRL's)."""
-    from .operators.refine import cascade_cushion_topk
-    from .session import session_cache
-
-    cache = session_cache(spark, "cascade_cushion")
-    if sf_dir not in cache:
-        res = cascade_cushion_topk(
-            queries_view(spark, sf_dir),
-            load_table(spark, sf_dir, "embeddings"),
-            "cos-l1",
-            K_DEFAULT,
-            KEEP_M_DEFAULT,
-            cache_key=sf_dir,
-        )
-        res.topk.persist()
-        cache[sf_dir] = res
-    return cache[sf_dir]
-
-
-def q_ann_cascade_cushion_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Three-stage-cascade candidates × cushioned refinement
-    (cos-l1): sign bits admit, int8 narrows, the cushion prices the
-    exact re-scoring — every precision rung of the engine in one
-    query. Zero-miss within candidates, as for every composition."""
-    return _rounded_topk(_cascade_cushion_res(spark, sf_dir).topk)
-
-
-def q_ann_cascade_cushion_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Byte accounting of the cascade×cushion composition. The stream
-    is R1·K = 40 candidates/query — K seeds are half of it, so the
-    per-candidate save is the seed-dominated regime (documented
-    honestly, like IVF/MRL); the end-to-end save composes the 1-bit
-    scan with the cushion."""
-    res = _cascade_cushion_res(spark, sf_dir)
-    corpus_n = load_table(spark, sf_dir, "embeddings").count()
-    return _cushion_metrics_row(res, corpus_n, KEEP_M_DEFAULT)
-
-
-QUERIES["ann_cascade_cushion_topk"] = q_ann_cascade_cushion_topk
-QUERIES["ann_cascade_cushion_metrics"] = q_ann_cascade_cushion_metrics
-
+# Cascade: replays operators/bq.cascade_candidates exactly (Hamming
+# admit, recon-cosine narrow, same tie-breaks).
 _CASCADE_CUSHION_EXTRA = f"""{_sql_bq_words("q", "query_id", "qe", "bq_qw")},
 {_sql_bq_words("embeddings", "vec_id", "embedding", "bq_cw")},
 bq_cand AS (
@@ -1643,203 +1238,6 @@ cand_ids AS MATERIALIZED (
   ) WHERE r <= {_CASC_POOL1}
 ),
 """
-
-_CASCADE_CUSHION_BODY = duck_oracle.refine_body(
-    "cos-l1", K_DEFAULT, KEEP_M_DEFAULT, None, QUERY_STRIDE,
-    extra_ctes=_CASCADE_CUSHION_EXTRA, candidate_cte="cand_ids",
-)
-
-ORACLES["ann_cascade_cushion_topk"] = f"""
-WITH {duck_oracle.fp16_cte(KEEP_M_DEFAULT)},
-{_CASCADE_CUSHION_BODY}
-SELECT query_id, rank, neighbor_id, round(score, 6) AS score
-FROM final WHERE rank <= {K_DEFAULT}
-"""
-
-ORACLES["ann_cascade_cushion_metrics"] = f"""
-WITH {duck_oracle.fp16_cte(KEEP_M_DEFAULT)},
-{_CASCADE_CUSHION_BODY},
-pair_n AS (SELECT count(*) AS n_pairs, count(DISTINCT query_id) AS n_q FROM pairs),
-fetch_n AS (
-  SELECT (SELECT count(*) FROM seed) + (SELECT count(*) FROM surv) AS n_fetched
-),
-corp_n AS (SELECT count(*) AS n_corpus FROM embeddings)
-SELECT p.n_pairs, f.n_fetched,
-  round(CAST(f.n_fetched AS DOUBLE) / p.n_pairs, 6) AS fetch_frac,
-  round(1.0 - ({_B_RED!r} * p.n_pairs + {_B_FULL!r} * f.n_fetched)
-            / ({_B_FULL!r} * p.n_pairs), 6) AS save_vs_exact_rerank,
-  round(1.0 - ({_B_RED!r} * p.n_pairs + {_B_FULL!r} * f.n_fetched)
-            / ({_B_FULL!r} * p.n_q * c.n_corpus), 6) AS save_vs_full_scan
-FROM pair_n p CROSS JOIN fetch_n f CROSS JOIN corp_n c
-"""
-
-
-# ---------------------------------------------------------------------------
-# Multi-probe LSH × cushion (r08): the flipped-margin recall lever
-# composed with the reference's precision-on-demand re-scorer
-# ---------------------------------------------------------------------------
-
-def _lsh_mp_cushion_res(spark: SparkSession, sf_dir: str):
-    """Memoized multiprobe-LSH×cushion build shared by the topk and
-    metrics queries (cos-l1, keep_m=6 — the LSH-composition operating
-    point; the ~2.3× wider stream only increases the cushion's edge)."""
-    from .operators.refine import lsh_multiprobe_cushion_topk
-    from .session import session_cache
-
-    cache = session_cache(spark, "lsh_mp_cushion")
-    if sf_dir not in cache:
-        res = lsh_multiprobe_cushion_topk(
-            queries_view(spark, sf_dir),
-            load_table(spark, sf_dir, "embeddings"),
-            "cos-l1",
-            K_DEFAULT,
-            KEEP_M_DEFAULT,
-            cache_key=sf_dir,
-        )
-        res.topk.persist()
-        cache[sf_dir] = res
-    return cache[sf_dir]
-
-
-def q_ann_lsh_multiprobe_cushion_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-probe LSH candidates × cushioned refinement — the r08
-    recall lever behind the same re-scorer (composition law: zero-miss
-    over the stream, recall ≡ ann_lsh_multiprobe_recall)."""
-    return _rounded_topk(_lsh_mp_cushion_res(spark, sf_dir).topk)
-
-
-def q_ann_lsh_multiprobe_cushion_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Byte accounting of the multiprobe×cushion composition — the
-    widest candidate stream of the index families, i.e. the regime
-    where per-candidate precision-on-demand saves the most."""
-    res = _lsh_mp_cushion_res(spark, sf_dir)
-    corpus_n = load_table(spark, sf_dir, "embeddings").count()
-    return _cushion_metrics_row(res, corpus_n, KEEP_M_DEFAULT)
-
-
-QUERIES["ann_lsh_multiprobe_cushion_topk"] = q_ann_lsh_multiprobe_cushion_topk
-QUERIES["ann_lsh_multiprobe_cushion_metrics"] = q_ann_lsh_multiprobe_cushion_metrics
-
-from .registry_simsearch import _sql_band_dots as _sql_lsh_band_dots  # noqa: E402
-from .operators.simsearch import LSH_MULTIPROBE_T as _LSH_MP_T  # noqa: E402
-
-_LSH_MP_CUSHION_EXTRA = f"""qb AS ({_sql_lsh_bands("q", "query_id", "qe")}),
-cb AS ({_sql_lsh_bands("embeddings", "vec_id", "embedding")}),
-q_dots AS ({_sql_lsh_band_dots("q", "query_id", "qe")}),
-q_flip AS (
-  SELECT id, band, j FROM (
-    SELECT id, band, j,
-      row_number() OVER (PARTITION BY id, band ORDER BY abs(dot) ASC, j ASC) AS r
-    FROM q_dots
-  ) WHERE r <= {_LSH_MP_T}
-),
-qmb AS (
-  SELECT id, band, bkey FROM qb
-  UNION ALL
-  SELECT qb.id, qb.band, xor(qb.bkey, 1 << f.j) AS bkey
-  FROM q_flip f JOIN qb ON qb.id = f.id AND qb.band = f.band
-),
-cand_ids AS (
-  SELECT DISTINCT q2.id AS query_id, c2.id AS vec_id
-  FROM qmb q2 JOIN cb c2 ON q2.band = c2.band AND q2.bkey = c2.bkey
-),
-"""
-
-_LSH_MP_CUSHION_BODY = duck_oracle.refine_body(
-    "cos-l1", K_DEFAULT, KEEP_M_DEFAULT, None, QUERY_STRIDE,
-    extra_ctes=_LSH_MP_CUSHION_EXTRA, candidate_cte="cand_ids",
-)
-
-ORACLES["ann_lsh_multiprobe_cushion_topk"] = f"""
-WITH {duck_oracle.fp16_cte(KEEP_M_DEFAULT)},
-{_LSH_MP_CUSHION_BODY}
-SELECT query_id, rank, neighbor_id, round(score, 6) AS score
-FROM final WHERE rank <= {K_DEFAULT}
-"""
-
-ORACLES["ann_lsh_multiprobe_cushion_metrics"] = f"""
-WITH {duck_oracle.fp16_cte(KEEP_M_DEFAULT)},
-{_LSH_MP_CUSHION_BODY},
-pair_n AS (SELECT count(*) AS n_pairs, count(DISTINCT query_id) AS n_q FROM pairs),
-fetch_n AS (
-  SELECT (SELECT count(*) FROM seed) + (SELECT count(*) FROM surv) AS n_fetched
-),
-corp_n AS (SELECT count(*) AS n_corpus FROM embeddings)
-SELECT p.n_pairs, f.n_fetched,
-  round(CAST(f.n_fetched AS DOUBLE) / p.n_pairs, 6) AS fetch_frac,
-  round(1.0 - ({_B_RED!r} * p.n_pairs + {_B_FULL!r} * f.n_fetched)
-            / ({_B_FULL!r} * p.n_pairs), 6) AS save_vs_exact_rerank,
-  round(1.0 - ({_B_RED!r} * p.n_pairs + {_B_FULL!r} * f.n_fetched)
-            / ({_B_FULL!r} * p.n_q * c.n_corpus), 6) AS save_vs_full_scan
-FROM pair_n p CROSS JOIN fetch_n f CROSS JOIN corp_n c
-"""
-
-
-# ---------------------------------------------------------------------------
-# IVFADC × cushion (r09): the round's flagship index — residual-coded
-# IVF-PQ — behind the reference's precision-on-demand re-scorer. The
-# candidate stream comes entirely from 8-byte codes (an R·K-deep ADC
-# pre-rank over the probed trained cells); full precision is touched
-# only for seeds and cushion-admitted survivors.
-# ---------------------------------------------------------------------------
-
-def _ivfadc_cushion_res(spark: SparkSession, sf_dir: str):
-    """Memoized IVFADC×cushion build shared by the topk and metrics
-    queries (l2-tz — the L2 index family's flagship cushion; the
-    R·K=60 stream makes K=20 seeds a third of it, the seed-dominated
-    regime like plain IVF's, documented honestly in the metrics)."""
-    from .operators.refine import ivfadc_cushion_topk
-    from .session import session_cache
-
-    cache = session_cache(spark, "ivfadc_cushion")
-    if sf_dir not in cache:
-        res = ivfadc_cushion_topk(
-            queries_view(spark, sf_dir),
-            load_table(spark, sf_dir, "embeddings"),
-            "l2-tz",
-            K_DEFAULT,
-            KEEP_M_DEFAULT,
-            cache_key=sf_dir,
-        )
-        res.topk.persist()
-        cache[sf_dir] = res
-    return cache[sf_dir]
-
-
-def q_ann_ivfadc_cushion_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVFADC candidates × cushioned refinement — a compressed index
-    (residual PQ codes) feeding the reference's re-scorer: the whole
-    pre-rank runs on 8-byte codes, and the refine phase prices the
-    full-precision fetches over just R·K ids/query. Zero-miss over
-    the stream: equals the exact fp16 re-rank of the same ADC
-    candidates."""
-    return _rounded_topk(_ivfadc_cushion_res(spark, sf_dir).topk)
-
-
-def q_ann_ivfadc_cushion_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Byte accounting of the IVFADC×cushion composition. The ADC
-    stream is the NARROWEST of the cushion compositions (R·K = 60 vs
-    LSH's hundreds), so seeds dominate and save_vs_exact_rerank is
-    expectedly small/negative — the end-to-end story is
-    save_vs_full_scan: code-priced pruning × cushion composed."""
-    res = _ivfadc_cushion_res(spark, sf_dir)
-    corpus_n = load_table(spark, sf_dir, "embeddings").count()
-    return _cushion_metrics_row(res, corpus_n, KEEP_M_DEFAULT)
-
-
-QUERIES["ann_ivfadc_cushion_topk"] = q_ann_ivfadc_cushion_topk
-QUERIES["ann_ivfadc_cushion_metrics"] = q_ann_ivfadc_cushion_metrics
-
-from .registry_simsearch import (  # noqa: E402
-    _SQL_RES_EMB as _SQL_ADC_RES_EMB,
-    _sql_dist2 as _sql_adc_dist2,
-    sql_ivf_body as _sql_adc_ivf_body,
-    sql_pq_body as _sql_adc_pq_body,
-)
-from .operators.pq import (  # noqa: E402
-    IVFADC_KMEANS_ITERS as _ADC_ITERS,
-    PQ_REFINE_R as _ADC_R,
-)
 
 #: the IVFADC candidate chain re-expressed over refine_body's ``q``
 #: CTE (which exposes raw ``qe``): trained coarse quantizer (adckm
@@ -1870,89 +1268,7 @@ cand_ids AS (
 ),
 """
 
-_IVFADC_CUSHION_BODY = duck_oracle.refine_body(
-    "l2-tz", K_DEFAULT, KEEP_M_DEFAULT, None, QUERY_STRIDE,
-    extra_ctes=_IVFADC_CUSHION_EXTRA, candidate_cte="cand_ids",
-)
-
-ORACLES["ann_ivfadc_cushion_topk"] = f"""
-WITH {duck_oracle.fp16_cte(KEEP_M_DEFAULT)},
-{_IVFADC_CUSHION_BODY}
-SELECT query_id, rank, neighbor_id, round(score, 6) AS score
-FROM final WHERE rank <= {K_DEFAULT}
-"""
-
-ORACLES["ann_ivfadc_cushion_metrics"] = f"""
-WITH {duck_oracle.fp16_cte(KEEP_M_DEFAULT)},
-{_IVFADC_CUSHION_BODY},
-pair_n AS (SELECT count(*) AS n_pairs, count(DISTINCT query_id) AS n_q FROM pairs),
-fetch_n AS (
-  SELECT (SELECT count(*) FROM seed) + (SELECT count(*) FROM surv) AS n_fetched
-),
-corp_n AS (SELECT count(*) AS n_corpus FROM embeddings)
-SELECT p.n_pairs, f.n_fetched,
-  round(CAST(f.n_fetched AS DOUBLE) / p.n_pairs, 6) AS fetch_frac,
-  round(1.0 - ({_B_RED!r} * p.n_pairs + {_B_FULL!r} * f.n_fetched)
-            / ({_B_FULL!r} * p.n_pairs), 6) AS save_vs_exact_rerank,
-  round(1.0 - ({_B_RED!r} * p.n_pairs + {_B_FULL!r} * f.n_fetched)
-            / ({_B_FULL!r} * p.n_q * c.n_corpus), 6) AS save_vs_full_scan
-FROM pair_n p CROSS JOIN fetch_n f CROSS JOIN corp_n c
-"""
-
-
-# ---------------------------------------------------------------------------
-# RaBitQ × cushion (r09 second session): the cosine counterpart of the
-# IVFADC composition — a compressed 1-bit index feeds the
-# precision-on-demand re-scorer.
-# ---------------------------------------------------------------------------
-
-def _rabitq_cushion_res(spark: SparkSession, sf_dir: str):
-    """Memoized RaBitQ×cushion build shared by the topk and metrics
-    queries (cos-l1 — the cosine-family cushion; candidates are the
-    R·K = 60 estimator pre-rank, the seed-dominated regime like
-    IVFADC's, documented honestly in the metrics)."""
-    from .operators.refine import rabitq_cushion_topk
-    from .session import session_cache
-
-    cache = session_cache(spark, "rabitq_cushion")
-    if sf_dir not in cache:
-        res = rabitq_cushion_topk(
-            queries_view(spark, sf_dir),
-            load_table(spark, sf_dir, "embeddings"),
-            "cos-l1",
-            K_DEFAULT,
-            KEEP_M_DEFAULT,
-            cache_key=sf_dir,
-        )
-        res.topk.persist()
-        cache[sf_dir] = res
-    return cache[sf_dir]
-
-
-def q_ann_rabitq_cushion_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RaBitQ candidates × cushioned refinement: the whole pre-rank
-    runs on 12-byte rotated sign codes, the refine phase prices the
-    full-precision fetches over R·K ids/query. Zero-miss over the
-    stream (equals the exact fp16 re-rank of the same candidates)."""
-    return _rounded_topk(_rabitq_cushion_res(spark, sf_dir).topk)
-
-
-def q_ann_rabitq_cushion_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Byte accounting of the RaBitQ×cushion composition — like the
-    IVFADC stream, R·K = 60 candidates/query makes the K seeds a
-    third of the stream (seed-dominated save_vs_exact_rerank); the
-    end-to-end story is save_vs_full_scan over the 1-bit pricing."""
-    res = _rabitq_cushion_res(spark, sf_dir)
-    corpus_n = load_table(spark, sf_dir, "embeddings").count()
-    return _cushion_metrics_row(res, corpus_n, KEEP_M_DEFAULT)
-
-
-QUERIES["ann_rabitq_cushion_topk"] = q_ann_rabitq_cushion_topk
-QUERIES["ann_rabitq_cushion_metrics"] = q_ann_rabitq_cushion_metrics
-
-from .registry_vectordb import _SQL_RBT_EST, _rbt_base_ctes  # noqa: E402
-from .operators.rabitq import RABITQ_REFINE_R as _RBT_R  # noqa: E402
-
+# RaBitQ: the R·K-deep estimator pre-rank over the rotated sign codes.
 _RBT_CUSHION_EXTRA = f"""{_rbt_base_ctes().lstrip()},
 rbt_est AS (
   SELECT q2.query_id, c.vec_id AS neighbor_id, {_SQL_RBT_EST} AS score
@@ -1968,127 +1284,139 @@ cand_ids AS (
 ),
 """
 
-_RBT_CUSHION_BODY = duck_oracle.refine_body(
-    "cos-l1", K_DEFAULT, KEEP_M_DEFAULT, None, QUERY_STRIDE,
-    extra_ctes=_RBT_CUSHION_EXTRA, candidate_cte="cand_ids",
-)
+#: source name → (registered mode, SQL candidate CTEs). The two
+#: l2-family streams (IVF cells, the IVFADC pre-rank) run l2-tz; the
+#: cosine ones cos-l1 at the corpus-wide keep_m default.
+CUSHION_COMPOSITIONS: dict[str, tuple[str, str]] = {
+    "ivf": ("l2-tz", _IVF_CUSHION_EXTRA),
+    "lsh": ("cos-l1", _LSH_CUSHION_EXTRA),
+    "graph": ("cos-l1", _sql_graph_cushion_extra()),
+    "mrl": ("cos-l1", _MRL_CUSHION_EXTRA),
+    "cascade": ("cos-l1", _CASCADE_CUSHION_EXTRA),
+    "lsh_multiprobe": ("cos-l1", _LSH_MP_CUSHION_EXTRA),
+    "ivfadc": ("l2-tz", _IVFADC_CUSHION_EXTRA),
+    "rabitq": ("cos-l1", _RBT_CUSHION_EXTRA),
+    "vamana": ("cos-l1", _sql_vamana_cushion_extra()),
+}
 
-ORACLES["ann_rabitq_cushion_topk"] = f"""
-WITH {duck_oracle.fp16_cte(KEEP_M_DEFAULT)},
-{_RBT_CUSHION_BODY}
-SELECT query_id, rank, neighbor_id, round(score, 6) AS score
-FROM final WHERE rank <= {K_DEFAULT}
-"""
-
-ORACLES["ann_rabitq_cushion_metrics"] = f"""
-WITH {duck_oracle.fp16_cte(KEEP_M_DEFAULT)},
-{_RBT_CUSHION_BODY},
-pair_n AS (SELECT count(*) AS n_pairs, count(DISTINCT query_id) AS n_q FROM pairs),
-fetch_n AS (
-  SELECT (SELECT count(*) FROM seed) + (SELECT count(*) FROM surv) AS n_fetched
-),
-corp_n AS (SELECT count(*) AS n_corpus FROM embeddings)
-SELECT p.n_pairs, f.n_fetched,
-  round(CAST(f.n_fetched AS DOUBLE) / p.n_pairs, 6) AS fetch_frac,
-  round(1.0 - ({_B_RED!r} * p.n_pairs + {_B_FULL!r} * f.n_fetched)
-            / ({_B_FULL!r} * p.n_pairs), 6) AS save_vs_exact_rerank,
-  round(1.0 - ({_B_RED!r} * p.n_pairs + {_B_FULL!r} * f.n_fetched)
-            / ({_B_FULL!r} * p.n_q * c.n_corpus), 6) AS save_vs_full_scan
-FROM pair_n p CROSS JOIN fetch_n f CROSS JOIN corp_n c
-"""
+# tuned composition operating point: the sweep
+# (reports/cushion_composition_sweep.csv) finds the interior keep_m
+# optimum for per-candidate save at m=3 for every family; register the
+# LSH point (the largest candidate streams, hence the headline).
+CUSHION_M_TUNED = 3
 
 
-# vamana × cushion: the α-pruned walk feeding the same re-scorer —
-# the graph-cushion composition on the r10 construction-quality graph
-# (same walk parameters, better edges; zero-miss over the visited
-# stream by the cushion bound).
-
-
-def _vamana_cushion_res(spark: SparkSession, sf_dir: str):
-    """Memoized α-pruned quantized-walk build shared by its topk and
-    metrics queries (cos-l1, keep_m=6 — the graph-cushion operating
-    point on the Vamana edge set)."""
-    from .operators.refine import graph_cushion_topk
-    from .operators.vamana import vamana_edges
-    from .session import session_cache
-
-    cache = session_cache(spark, "vamana_cushion")
-    if sf_dir not in cache:
-        corpus = load_table(spark, sf_dir, "embeddings")
-        res = graph_cushion_topk(
+def _composition_res(spark: SparkSession, sf_dir: str, name: str, keep_m: int):
+    """One composition build, persisted + memoized per (session,
+    fixture, source, keep_m): a source's topk, metrics and recall
+    queries share it — the served-index pattern every other ANN family
+    follows. Released by ``session.clear_caches``."""
+    cache = session_cache(spark, "cushion")
+    key = (sf_dir, name, keep_m)
+    if key not in cache:
+        res = cushion_topk(
             queries_view(spark, sf_dir),
-            corpus,
-            "cos-l1",
+            load_table(spark, sf_dir, "embeddings"),
+            CANDIDATE_SOURCES[name],
+            CUSHION_COMPOSITIONS[name][0],
             K_DEFAULT,
-            KEEP_M_DEFAULT,
+            keep_m,
             cache_key=sf_dir,
-            edges=vamana_edges(corpus, cache_key=f"fixture:{sf_dir}"),
         )
         res.topk.persist()
-        cache[sf_dir] = res
-    return cache[sf_dir]
+        cache[key] = res
+    return cache[key]
 
 
-def q_ann_vamana_cushion_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """α-pruned Vamana walk × cushioned refinement (r10): the walk
-    ranks its frontier on the reduced representation over the
-    RobustPruned graph, and the cushion prices the exact re-scoring
-    of the visited set — the highest-recall candidate stream behind
-    the reference's precision-on-demand re-scorer."""
-    return _rounded_topk(_vamana_cushion_res(spark, sf_dir).topk)
+def _composition_topk(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Index candidates × cushioned refinement: zero-miss within the
+    candidates, the result equals the exact (fp16) re-rank of the
+    stream at a fraction of its fetched bytes."""
+    return _rounded_topk(_composition_res(spark, sf_dir, name, KEEP_M_DEFAULT).topk)
 
 
-def q_ann_vamana_cushion_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Byte accounting of the Vamana-walk composition."""
-    res = _vamana_cushion_res(spark, sf_dir)
+def _composition_metrics(
+    spark: SparkSession, sf_dir: str, name: str, keep_m: int = KEEP_M_DEFAULT
+) -> DataFrame:
+    """Byte accounting of a composition (the A2 model over the
+    candidate stream): how many candidate pairs the index produces,
+    how many survive to a full-precision fetch, and the two savings
+    that fall out — vs an exact re-rank of the same candidates (the
+    cushion's contribution) and vs the full-corpus exact scan (pruning
+    × cushion composed, the end-to-end story).
+
+    Measured honestly: where the K=20 seeds are a large share of a
+    narrow stream (IVF cells, the R·K pre-ranks of IVFADC, RaBitQ, MRL
+    and the cascade), ``save_vs_exact_rerank`` is near zero or slightly
+    negative — reduced pages for every pair plus full fetches exceed a
+    plain full re-rank when K/|candidates| is this large. The
+    per-candidate cushion pays on the wide LSH, multi-probe and walk
+    streams."""
+    res = _composition_res(spark, sf_dir, name, keep_m)
     corpus_n = load_table(spark, sf_dir, "embeddings").count()
-    return _cushion_metrics_row(res, corpus_n, KEEP_M_DEFAULT)
-
-
-QUERIES["ann_vamana_cushion_topk"] = q_ann_vamana_cushion_topk
-QUERIES["ann_vamana_cushion_metrics"] = q_ann_vamana_cushion_metrics
-
-
-def _sql_vamana_cushion_extra() -> str:
-    """The graph-cushion walk chain with the α-prune inserted between
-    the banded ``gedges`` and the walk rounds: vamana CTEs come from
-    ``registry_simsearch._sql_vamana_ctes`` parameterized on the
-    in-body edge name, and the rounds walk ``vedges``."""
-    from .registry_simsearch import _sql_vamana_ctes
-
-    base = _sql_graph_cushion_extra()
-    vam = ",\n".join(_sql_vamana_ctes(edges_src="gedges")) + ",\n"
-    # inject the prune chain right after gedges, and point every walk
-    # round's expansion at the pruned vedges. The anchors are literal
-    # text from _sql_graph_cushion_extra — assert they matched so a
-    # drift there fails loudly at import instead of surfacing later
-    # as a SQL error or a silent oracle mismatch (r10 ADVICE).
-    w0_anchor = "w0 AS MATERIALIZED ("
-    walk_anchor = "JOIN gedges e ON e.src = f.vec_id"
-    assert w0_anchor in base and walk_anchor in base, (
-        "graph-cushion SQL anchors drifted; update _sql_vamana_cushion_extra"
+    b_red, b_full = vector_bytes(keep_m, FIXTURE_EMBED_DIM)
+    counts = res.scored.agg(
+        F.count("*").alias("n_pairs"),
+        F.count_distinct("query_id").alias("n_q"),
+    ).crossJoin(res.fetched.agg(F.count("*").alias("n_fetched")))
+    cost = F.lit(b_red) * F.col("n_pairs") + F.lit(b_full) * F.col("n_fetched")
+    return counts.select(
+        "n_pairs",
+        "n_fetched",
+        F.round(F.col("n_fetched") / F.col("n_pairs"), 6).alias("fetch_frac"),
+        F.round(
+            F.lit(1.0) - cost / (F.lit(b_full) * F.col("n_pairs")), 6
+        ).alias("save_vs_exact_rerank"),
+        F.round(
+            F.lit(1.0)
+            - cost / (F.lit(b_full) * F.col("n_q") * F.lit(float(corpus_n))),
+            6,
+        ).alias("save_vs_full_scan"),
     )
-    out = base.replace(w0_anchor, vam + w0_anchor, 1)
-    out = out.replace(walk_anchor, "JOIN vedges e ON e.src = f.vec_id")
-    assert "vedges" in out and out != base
-    return out
 
 
-_VAMANA_CUSHION_BODY = duck_oracle.refine_body(
-    "cos-l1", K_DEFAULT, KEEP_M_DEFAULT, None, QUERY_STRIDE,
-    extra_ctes=_sql_vamana_cushion_extra(), candidate_cte="cand_ids",
-)
+def q_ann_ivf_cushion_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Recall of the IVF×cushion composition against the full-corpus
+    zero-miss refinement in the SAME metric (fp16 l2) — i.e. exactly
+    the recall cost of the cell pruning; the cushion itself loses
+    nothing (its zero-miss guarantee is per candidate stream)."""
+    from .operators.simsearch import ann_recall
 
-ORACLES["ann_vamana_cushion_topk"] = f"""
-WITH {duck_oracle.fp16_cte(KEEP_M_DEFAULT)},
-{_VAMANA_CUSHION_BODY}
+    full = refine_topk(
+        queries_view(spark, sf_dir),
+        load_table(spark, sf_dir, "embeddings"),
+        "l2-tz",
+        K_DEFAULT,
+        KEEP_M_DEFAULT,
+        cache_key=sf_dir,
+    ).topk
+    res = _composition_res(spark, sf_dir, "ivf", KEEP_M_DEFAULT)
+    return ann_recall(res.topk, full, K_DEFAULT)
+
+
+def _sql_cushion(name: str, keep_m: int, tail: str) -> str:
+    """A composition oracle: the source's candidate CTEs feeding the
+    candidate-restricted ``refine_body``, then ``tail``."""
+    mode, extra = CUSHION_COMPOSITIONS[name]
+    body = duck_oracle.refine_body(
+        mode, K_DEFAULT, keep_m, None, QUERY_STRIDE,
+        extra_ctes=extra, candidate_cte="cand_ids",
+    )
+    return f"\nWITH {duck_oracle.fp16_cte(keep_m)},\n{body}{tail}"
+
+
+_SQL_CUSHION_TOPK = f"""
 SELECT query_id, rank, neighbor_id, round(score, 6) AS score
 FROM final WHERE rank <= {K_DEFAULT}
 """
 
-ORACLES["ann_vamana_cushion_metrics"] = f"""
-WITH {duck_oracle.fp16_cte(KEEP_M_DEFAULT)},
-{_VAMANA_CUSHION_BODY},
+
+def _sql_cushion_metrics(keep_m: int) -> str:
+    """``_composition_metrics`` over the oracle's CTEs; the byte constants
+    are interpolated from the same ``vector_bytes`` model the Spark
+    side uses."""
+    b_red, b_full = vector_bytes(keep_m, FIXTURE_EMBED_DIM)
+    return f""",
 pair_n AS (SELECT count(*) AS n_pairs, count(DISTINCT query_id) AS n_q FROM pairs),
 fetch_n AS (
   SELECT (SELECT count(*) FROM seed) + (SELECT count(*) FROM surv) AS n_fetched
@@ -2096,12 +1424,43 @@ fetch_n AS (
 corp_n AS (SELECT count(*) AS n_corpus FROM embeddings)
 SELECT p.n_pairs, f.n_fetched,
   round(CAST(f.n_fetched AS DOUBLE) / p.n_pairs, 6) AS fetch_frac,
-  round(1.0 - ({_B_RED!r} * p.n_pairs + {_B_FULL!r} * f.n_fetched)
-            / ({_B_FULL!r} * p.n_pairs), 6) AS save_vs_exact_rerank,
-  round(1.0 - ({_B_RED!r} * p.n_pairs + {_B_FULL!r} * f.n_fetched)
-            / ({_B_FULL!r} * p.n_q * c.n_corpus), 6) AS save_vs_full_scan
+  round(1.0 - ({b_red!r} * p.n_pairs + {b_full!r} * f.n_fetched)
+            / ({b_full!r} * p.n_pairs), 6) AS save_vs_exact_rerank,
+  round(1.0 - ({b_red!r} * p.n_pairs + {b_full!r} * f.n_fetched)
+            / ({b_full!r} * p.n_q * c.n_corpus), 6) AS save_vs_full_scan
 FROM pair_n p CROSS JOIN fetch_n f CROSS JOIN corp_n c
 """
+
+
+for _name in CUSHION_COMPOSITIONS:
+    QUERIES[f"ann_{_name}_cushion_topk"] = partial(_composition_topk, name=_name)
+    QUERIES[f"ann_{_name}_cushion_metrics"] = partial(_composition_metrics, name=_name)
+    ORACLES[f"ann_{_name}_cushion_topk"] = _sql_cushion(
+        _name, KEEP_M_DEFAULT, _SQL_CUSHION_TOPK
+    )
+    ORACLES[f"ann_{_name}_cushion_metrics"] = _sql_cushion(
+        _name, KEEP_M_DEFAULT, _sql_cushion_metrics(KEEP_M_DEFAULT)
+    )
+
+QUERIES["ann_ivf_cushion_recall"] = q_ann_ivf_cushion_recall
+ORACLES["ann_ivf_cushion_recall"] = _sql_cushion("ivf", KEEP_M_DEFAULT, f""",
+ann AS (SELECT query_id, neighbor_id FROM final WHERE rank <= {K_DEFAULT}),
+hits AS (
+  SELECT gt.query_id, count(*) AS n_hit
+  FROM gt JOIN ann USING (query_id, neighbor_id) GROUP BY gt.query_id
+),
+per_q AS (
+  SELECT q2.query_id, CAST(coalesce(h.n_hit, 0) AS DOUBLE) / {K_DEFAULT} AS recall
+  FROM (SELECT DISTINCT query_id FROM gt) q2 LEFT JOIN hits h USING (query_id)
+)
+SELECT round(avg(recall), 6) AS recall_at_k, count(*) AS n_queries FROM per_q
+""")
+QUERIES["ann_lsh_cushion_tuned_metrics"] = partial(
+    _composition_metrics, name="lsh", keep_m=CUSHION_M_TUNED
+)
+ORACLES["ann_lsh_cushion_tuned_metrics"] = _sql_cushion(
+    "lsh", CUSHION_M_TUNED, _sql_cushion_metrics(CUSHION_M_TUNED)
+)
 
 
 # apply the correctness-window rotation LAST, after every

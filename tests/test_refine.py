@@ -14,7 +14,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spark.operators.refine import (
+    CANDIDATE_SOURCES,
     MODES,
+    _exact_score_expr,
+    cushion_topk,
+    is_cosine,
     prepare_corpus,
     prepare_queries,
     refine_metrics,
@@ -33,11 +37,6 @@ ZERO_MISS = ("cos-l1", "cos-l2", "l2-sym", "l2-tz")
 
 
 def _exact_topk_fp16(spark, sf, mode, k):
-    from bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spark.operators.refine import (
-        _exact_score_expr,
-        is_cosine,
-    )
-
     corp = prepare_corpus(load_table(spark, sf, "embeddings"), 6, mode)
     qs = prepare_queries(queries_view(spark, sf), mode)
     pairs = (
@@ -98,103 +97,33 @@ def test_hoeffding_delta_monotone(spark, sf_small):
     assert f_small_delta >= f_big_delta
 
 
-def test_cushion_composition_law(spark, sf_small):
-    """Index × cushion composition law: the cushioned refinement over
-    an index's candidate stream returns EXACTLY the exact (fp16)
-    re-rank of those candidates — zero-miss relative to the stream.
-    Pinned here for the IVF composition; the LSH/graph variants share
-    the same refine path."""
-    from pyspark.sql import functions as F
-
-    from bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spark.functions.vector import (
-        dot,
-    )
-    from bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spark.operators.refine import (
-        ivf_cushion_topk,
-        prepare_corpus,
-    )
-    from bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spark.operators.simsearch import (
-        ivf_assign,
-        ivf_centroids,
-        ivf_probes,
-    )
-    from bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spark.operators.topk import (
-        topk_per_query,
+def _composition_cases():
+    from bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spark.registry import (
+        CUSHION_COMPOSITIONS,
     )
 
+    cases = [(name, mode) for name, (mode, _) in CUSHION_COMPOSITIONS.items()]
+    return cases + [("ivf", "cos-l1")]
+
+
+@pytest.mark.parametrize("name,mode", _composition_cases())
+def test_cushion_composition_law(spark, sf_small, name, mode):
+    """Index × cushion composition law, for every candidate source at
+    its registered mode (plus IVF under a cosine cushion): the
+    cushioned refinement over the source's candidate stream returns
+    EXACTLY the exact (fp16) re-rank of those candidates — zero-miss
+    relative to the stream. The stream must also be distinct pairs,
+    which ``refine_topk`` assumes but does not check."""
     queries = queries_view(spark, sf_small)
     corpus = load_table(spark, sf_small, "embeddings")
-    mode, keep_m = "cos-l1", 4
+    source, keep_m = CANDIDATE_SOURCES[name], 4
 
-    res = ivf_cushion_topk(queries, corpus, mode, K, keep_m)
-    got = {
-        (r.query_id, r.rank, r.neighbor_id)
-        for r in res.topk.collect()
-    }
+    cand = source.candidates(queries, corpus, K, keep_m, mode, None).persist()
+    assert cand.count() == cand.distinct().count()
 
-    # exact (fp16 'full' representation) re-rank of the SAME candidates
-    cents = ivf_centroids(corpus)
-    cand = (
-        F.broadcast(ivf_probes(queries, cents).select("query_id", "cell"))
-        .join(ivf_assign(corpus, cents).select("vec_id", "cell"), "cell")
-        .select("query_id", "vec_id")
-    )
-    corp = prepare_corpus(corpus, keep_m, mode)
-    from bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spark.operators.refine import (
-        prepare_queries,
-    )
-
-    qs = prepare_queries(queries, mode)
-    rerank = topk_per_query(
-        cand.join(corp.select("vec_id", "full"), "vec_id")
-        .join(F.broadcast(qs), "query_id")
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            dot("full", "q").alias("score"),
-        ),
-        K,
-        ascending=False,
-        salted=False,
-    )
-    want = {
-        (r.query_id, r.rank, r.neighbor_id) for r in rerank.collect()
-    }
-    assert got == want
-
-
-def test_mrl_cushion_composition_law(spark, sf_small):
-    """The Matryoshka composition obeys the same law: the cushioned
-    refinement over the prefix pre-rank's R·K candidates equals the
-    exact (fp16) re-rank of those candidates."""
-    from pyspark.sql import functions as F
-
-    from bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spark.functions.vector import (
-        dot,
-    )
-    from bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spark.operators.mrl import (
-        MRL_REFINE_R,
-        mrl_topk,
-    )
-    from bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spark.operators.refine import (
-        mrl_cushion_topk,
-        prepare_corpus,
-        prepare_queries,
-    )
-    from bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spark.operators.topk import (
-        topk_per_query,
-    )
-
-    queries = queries_view(spark, sf_small)
-    corpus = load_table(spark, sf_small, "embeddings")
-    mode, keep_m = "cos-l1", 4
-
-    res = mrl_cushion_topk(queries, corpus, mode, K, keep_m)
+    res = cushion_topk(queries, corpus, source, mode, K, keep_m)
     got = {(r.query_id, r.rank, r.neighbor_id) for r in res.topk.collect()}
 
-    cand = mrl_topk(queries, corpus, MRL_REFINE_R * K).select(
-        "query_id", F.col("neighbor_id").alias("vec_id")
-    )
     corp = prepare_corpus(corpus, keep_m, mode)
     qs = prepare_queries(queries, mode)
     rerank = topk_per_query(
@@ -203,62 +132,14 @@ def test_mrl_cushion_composition_law(spark, sf_small):
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
-            dot("full", "q").alias("score"),
+            _exact_score_expr(is_cosine(mode)).alias("score"),
         ),
         K,
-        ascending=False,
+        ascending=not is_cosine(mode),
         salted=False,
     )
     want = {(r.query_id, r.rank, r.neighbor_id) for r in rerank.collect()}
-    assert got == want
-
-
-def test_cascade_cushion_composition_law(spark, sf_small):
-    """The cascade composition obeys the same law: the cushioned
-    refinement over the 1-bit→int8 cascade's R1·K candidates equals
-    the exact (fp16) re-rank of those candidates."""
-    from pyspark.sql import functions as F
-
-    from bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spark.functions.vector import (
-        dot,
-    )
-    from bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spark.operators.bq import (
-        cascade_candidates,
-    )
-    from bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spark.operators.refine import (
-        cascade_cushion_topk,
-        prepare_corpus,
-        prepare_queries,
-    )
-    from bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spark.operators.topk import (
-        topk_per_query,
-    )
-
-    queries = queries_view(spark, sf_small)
-    corpus = load_table(spark, sf_small, "embeddings")
-    mode, keep_m = "cos-l1", 4
-
-    res = cascade_cushion_topk(queries, corpus, mode, K, keep_m)
-    got = {(r.query_id, r.rank, r.neighbor_id) for r in res.topk.collect()}
-
-    cand = cascade_candidates(queries, corpus, K).select(
-        "query_id", F.col("neighbor_id").alias("vec_id")
-    )
-    corp = prepare_corpus(corpus, keep_m, mode)
-    qs = prepare_queries(queries, mode)
-    rerank = topk_per_query(
-        cand.join(corp.select("vec_id", "full"), "vec_id")
-        .join(F.broadcast(qs), "query_id")
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            dot("full", "q").alias("score"),
-        ),
-        K,
-        ascending=False,
-        salted=False,
-    )
-    want = {(r.query_id, r.rank, r.neighbor_id) for r in rerank.collect()}
+    cand.unpersist()
     assert got == want
 
 
@@ -329,11 +210,6 @@ def _corpus(draw, unit_rows: bool):
 
 
 def _check_zero_miss(spark, data, mode, keep_m):
-    from bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spark.operators.refine import (
-        _exact_score_expr,
-        is_cosine,
-    )
-
     k = 3
     corpus = spark.createDataFrame(
         [(i, [float(x) for x in row]) for i, row in enumerate(data)],
@@ -380,75 +256,20 @@ def test_cos_zero_miss_holds_on_reference_domain(spark, data, keep_m):
     _check_zero_miss(spark, data, "cos-l1", keep_m)
 
 
-def test_ivfadc_cushion_composition_law(spark, sf_small):
-    """The IVFADC composition obeys the zero-miss law too: cushioned
-    refinement over the ADC pre-rank's R·K candidates equals the exact
-    (fp16) L2 re-rank of those candidates — the code-priced stream
-    loses nothing to the cushion."""
-    from pyspark.sql import functions as F
-
-    from bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spark.functions.vector import (
-        dist2,
-    )
-    from bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spark.operators.pq import (
-        PQ_REFINE_R,
-        ivfadc_candidates,
-    )
-    from bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spark.operators.refine import (
-        ivfadc_cushion_topk,
-        prepare_corpus,
-        prepare_queries,
-    )
-    from bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spark.operators.topk import (
-        topk_per_query,
-    )
-
+@pytest.mark.parametrize(
+    "name", [name for name, s in CANDIDATE_SOURCES.items() if s.metric is not None]
+)
+def test_cushion_metric_family_guards(spark, sf_small, name):
+    """Candidate sources that pre-rank in one metric family refuse a
+    cushion of the other (r09 ADVICE): a crossed mode would silently
+    re-rank one family's candidates with the other's cushion instead
+    of failing loud."""
+    source = CANDIDATE_SOURCES[name]
+    crossed, wording = {
+        "cos": ("l2-tz", "use a cos-\\* mode"),
+        "l2": ("cos-l2", "use an l2-\\* mode"),
+    }[source.metric]
     queries = queries_view(spark, sf_small)
     corpus = load_table(spark, sf_small, "embeddings")
-    mode, keep_m = "l2-tz", 4
-
-    res = ivfadc_cushion_topk(queries, corpus, mode, K, keep_m)
-    got = {
-        (r.query_id, r.rank, r.neighbor_id) for r in res.topk.collect()
-    }
-
-    cand = ivfadc_candidates(queries, corpus, PQ_REFINE_R * K).select(
-        "query_id", F.col("neighbor_id").alias("vec_id")
-    )
-    corp = prepare_corpus(corpus, keep_m, mode)
-    qs = prepare_queries(queries, mode)
-    rerank = topk_per_query(
-        cand.join(corp.select("vec_id", "full"), "vec_id")
-        .join(F.broadcast(qs), "query_id")
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            dist2("full", "q").alias("score"),
-        ),
-        K,
-        ascending=True,
-        salted=False,
-    )
-    want = {
-        (r.query_id, r.rank, r.neighbor_id) for r in rerank.collect()
-    }
-    assert got == want
-
-
-def test_cushion_metric_family_guards(spark, sf_small):
-    """Compressed-index cushion compositions refuse metric-family
-    mismatches (r09 ADVICE): the RaBitQ pre-rank is a cosine
-    estimator, IVFADC's is L2-family ADC — a crossed mode would
-    silently re-rank one family's candidates with the other's
-    cushion instead of failing loud."""
-    from bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spark.operators.refine import (
-        ivfadc_cushion_topk,
-        rabitq_cushion_topk,
-    )
-
-    queries = queries_view(spark, sf_small)
-    corpus = load_table(spark, sf_small, "embeddings")
-    with pytest.raises(ValueError, match="cos-\\* mode"):
-        rabitq_cushion_topk(queries, corpus, "l2-tz", K, 4)
-    with pytest.raises(ValueError, match="l2-\\* mode"):
-        ivfadc_cushion_topk(queries, corpus, "cos-l2", K, 4)
+    with pytest.raises(ValueError, match=wording):
+        cushion_topk(queries, corpus, source, crossed, K, 4)

@@ -20,9 +20,12 @@ from bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spar
     get_spark,
 )
 from bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spark.operators.refine import (  # noqa: E402
-    graph_cushion_topk,
-    ivf_cushion_topk,
-    lsh_cushion_topk,
+    CANDIDATE_SOURCES,
+    cushion_topk,
+    vector_bytes,
+)
+from bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spark.operators.simsearch import (  # noqa: E402
+    embedding_dim,
 )
 from bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spark.sources.fixtures import (  # noqa: E402
     load_table,
@@ -30,14 +33,9 @@ from bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spar
 )
 
 K = 20
-DIM = 64
-B_FULL = 16.0 * DIM / 8.0
 
-FAMILIES = {
-    "ivf": lambda q, c, m: ivf_cushion_topk(q, c, "l2-tz", K, m),
-    "lsh": lambda q, c, m: lsh_cushion_topk(q, c, "cos-l1", K, m),
-    "graph": lambda q, c, m: graph_cushion_topk(q, c, "cos-l1", K, m),
-}
+#: candidate source → cushion mode
+FAMILIES = {"ivf": "l2-tz", "lsh": "cos-l1", "graph": "cos-l1"}
 
 
 def main() -> None:
@@ -48,22 +46,23 @@ def main() -> None:
     corpus = load_table(spark, sf_dir, "embeddings")
     n_corpus = corpus.count()
     n_q = queries.count()
+    dim = embedding_dim(corpus)
     rows = []
-    for fam, build in FAMILIES.items():
+    for fam, mode in FAMILIES.items():
         for m in (2, 3, 4, 6):
-            res = build(queries, corpus, m)
+            res = cushion_topk(queries, corpus, CANDIDATE_SOURCES[fam], mode, K, m)
             n_pairs = res.scored.count()
             n_fetch = res.fetched.count()
-            b_red = (1 + 5 + m) * DIM / 8.0
-            cost = b_red * n_pairs + B_FULL * n_fetch
+            b_red, b_full = vector_bytes(m, dim)
+            cost = b_red * n_pairs + b_full * n_fetch
             rows.append({
                 "family": fam,
                 "keep_m": m,
                 "cand_per_query": round(n_pairs / n_q, 1),
                 "fetch_frac": round(n_fetch / n_pairs, 4),
-                "save_vs_exact_rerank": round(1.0 - cost / (B_FULL * n_pairs), 4),
+                "save_vs_exact_rerank": round(1.0 - cost / (b_full * n_pairs), 4),
                 "save_vs_full_scan": round(
-                    1.0 - cost / (B_FULL * n_q * n_corpus), 4
+                    1.0 - cost / (b_full * n_q * n_corpus), 4
                 ),
             })
             print(rows[-1], flush=True)
