@@ -2,7 +2,10 @@
 and IVF), radius range search, the int8 scalar-quantization tier, and
 hybrid keyword+vector RRF fusion. Every query has a DuckDB twin that
 replays the identical arithmetic (same DOUBLE folds, same round-half-up
-int8 rule, same tie-breaks), so the driver check is hash-exact.
+int8 rule, same tie-breaks), so the driver check is hash-exact. The
+plain top-K / Recall@K pairs (SQ, BQ, MRL, RaBitQ families) are
+``VECTORDB_PIPELINES`` rows of the ANN pipeline table in
+``registry_simsearch``.
 """
 
 from __future__ import annotations
@@ -18,10 +21,18 @@ from .operators.simsearch import ann_recall
 from .operators.topk import exact_topk_fixture_cached
 from .registry_simsearch import (
     ANN_K,
+    SQL_IVF_BODY,
     SQL_IVF_CTES,
     SQL_Q_CTE,
+    SQL_RECALL_ROW,
+    AnnPipeline,
+    _index_store_path,
     _sql_cos,
     _sql_dist2,
+    _sql_hit_rate,
+    over_fixture,
+    register_ann_pipelines,
+    sql_rerank,
 )
 from .sources.fixtures import QUERY_STRIDE, load_table, queries_view
 
@@ -149,14 +160,6 @@ recon AS (
 )
 """
 
-_SQL_SQ_CAND = f"""
-sq_cand AS (
-  SELECT q.query_id, r.vec_id AS neighbor_id,
-         {_sql_dist2("q.qe", "r.recon")} AS score
-  FROM q CROSS JOIN recon r
-)
-"""
-
 
 def q_sq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     enc = SQ.sq_encode(load_table(spark, sf_dir, "embeddings"))
@@ -176,117 +179,19 @@ FROM enc
 """
 
 
-def q_ann_sq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = SQ.sq_topk(
-        queries_view(spark, sf_dir), load_table(spark, sf_dir, "embeddings"), ANN_K
-    )
-    return out.select(
-        "query_id", "rank", "neighbor_id", F.round("score", 6).alias("score")
-    )
-
-
-SQL_ANN_SQ_TOPK = f"""
-WITH q AS ({SQL_Q_CTE}),
+#: int8 pricing of every corpus vector (``sq_cand``)
+_SQL_SQ_CTES = f"""q AS ({SQL_Q_CTE}),
 {_SQL_SQ_RECON},
-{_SQL_SQ_CAND}
-SELECT query_id, rank, neighbor_id, round(score, 6) AS score FROM (
-  SELECT query_id, neighbor_id, score,
-    CAST(row_number() OVER (PARTITION BY query_id
-      ORDER BY score ASC, neighbor_id) AS INT) AS rank
-  FROM sq_cand
-) WHERE rank <= {ANN_K}
-"""
-
-
-def q_ann_sq_refined_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = SQ.sq_refined_topk(
-        queries_view(spark, sf_dir), load_table(spark, sf_dir, "embeddings"), ANN_K
-    )
-    return out.select(
-        "query_id", "rank", "neighbor_id", F.round("score", 6).alias("score")
-    )
-
-
-SQL_ANN_SQ_REFINED_TOPK = f"""
-WITH q AS ({SQL_Q_CTE}),
-{_SQL_SQ_RECON},
-{_SQL_SQ_CAND},
-cand AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-      row_number() OVER (PARTITION BY query_id
-        ORDER BY score ASC, neighbor_id) AS r
-    FROM sq_cand
-  ) WHERE r <= {SQ.SQ_REFINE_R * ANN_K}
+sq_cand AS (
+  SELECT q.query_id, r.vec_id AS neighbor_id,
+         {_sql_dist2("q.qe", "r.recon")} AS score
+  FROM q CROSS JOIN recon r
 )
-SELECT query_id, rank, neighbor_id, round(score, 6) AS score FROM (
-  SELECT c.query_id, c.neighbor_id,
-    {_sql_dist2("q.qe", "e.embedding")} AS score,
-    CAST(row_number() OVER (PARTITION BY c.query_id
-      ORDER BY {_sql_dist2("q.qe", "e.embedding")} ASC, c.neighbor_id) AS INT) AS rank
-  FROM cand c
-  JOIN embeddings e ON e.vec_id = c.neighbor_id
-  JOIN q ON q.query_id = c.query_id
-) WHERE rank <= {ANN_K}
 """
 
-
-def q_ann_sq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    queries = queries_view(spark, sf_dir)
-    corpus = load_table(spark, sf_dir, "embeddings")
-    ann = SQ.sq_topk(queries, corpus, ANN_K)
-    exact = exact_topk_fixture_cached(spark, sf_dir, ANN_K, "l2")
-    return ann_recall(ann, exact, ANN_K)
-
-
-SQL_ANN_SQ_RECALL = f"""
-WITH q AS ({SQL_Q_CTE}),
-{_SQL_SQ_RECON},
-{_SQL_SQ_CAND},
-ann AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-      row_number() OVER (PARTITION BY query_id ORDER BY score ASC, neighbor_id) AS rank
-    FROM sq_cand
-  ) WHERE rank <= {ANN_K}
-),
-exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.query_id, e.vec_id AS neighbor_id,
-      row_number() OVER (PARTITION BY q.query_id
-        ORDER BY {_sql_dist2("q.qe", "e.embedding")} ASC, e.vec_id) AS rank
-    FROM q CROSS JOIN embeddings e
-  ) WHERE rank <= {ANN_K}
-),
-hits AS (
-  SELECT exact.query_id, count(*) AS n_hit
-  FROM exact JOIN ann USING (query_id, neighbor_id) GROUP BY exact.query_id
-),
-per_q AS (
-  SELECT q2.query_id, CAST(coalesce(h.n_hit, 0) AS DOUBLE) / {ANN_K} AS recall
-  FROM (SELECT DISTINCT query_id FROM exact) q2 LEFT JOIN hits h USING (query_id)
-)
-SELECT round(avg(recall), 6) AS recall_at_k, count(*) AS n_queries FROM per_q
-"""
-
-
-# ---------------------------------------------------------------------------
-# IVF × SQ composition
-# ---------------------------------------------------------------------------
-
-def q_ann_ivfsq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = SQ.ivfsq_topk(
-        queries_view(spark, sf_dir), load_table(spark, sf_dir, "embeddings"), ANN_K
-    )
-    return out.select(
-        "query_id", "rank", "neighbor_id", F.round("score", 6).alias("score")
-    )
-
-
-#: same cell pruning as the IVF-PQ twin, int8 ADC pricing, exact
-#: refinement — assembled from the already-proven CTE fragments
-SQL_ANN_IVFSQ_TOPK = f"""
-WITH {SQL_IVF_CTES},
+#: IVF cell pruning × int8 pricing (``adc``): the IVF-PQ shape over the
+#: int8 reconstructions
+_SQL_IVFSQ_CTES = f"""{SQL_IVF_CTES},
 {_SQL_SQ_RECON},
 adc AS (
   SELECT p.query_id, a.vec_id AS neighbor_id,
@@ -294,81 +199,7 @@ adc AS (
   FROM probes p
   JOIN assigned a ON a.cell = p.cell
   JOIN recon r ON r.vec_id = a.vec_id
-),
-cand AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-      row_number() OVER (PARTITION BY query_id
-        ORDER BY score ASC, neighbor_id) AS rr
-    FROM adc
-  ) WHERE rr <= {SQ.SQ_REFINE_R * ANN_K}
-)
-SELECT query_id, rank, neighbor_id, round(score, 6) AS score FROM (
-  SELECT c.query_id, c.neighbor_id,
-    {_sql_dist2("q.qe", "e.embedding")} AS score,
-    CAST(row_number() OVER (PARTITION BY c.query_id
-      ORDER BY {_sql_dist2("q.qe", "e.embedding")} ASC, c.neighbor_id) AS INT) AS rank
-  FROM cand c
-  JOIN embeddings e ON e.vec_id = c.neighbor_id
-  JOIN q ON q.query_id = c.query_id
-) WHERE rank <= {ANN_K}
-"""
-
-
-def q_ann_ivfsq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    queries = queries_view(spark, sf_dir)
-    corpus = load_table(spark, sf_dir, "embeddings")
-    ann = SQ.ivfsq_topk(queries, corpus, ANN_K)
-    exact = exact_topk_fixture_cached(spark, sf_dir, ANN_K, "l2")
-    return ann_recall(ann, exact, ANN_K)
-
-
-SQL_ANN_IVFSQ_RECALL = f"""
-WITH {SQL_IVF_CTES},
-{_SQL_SQ_RECON},
-adc AS (
-  SELECT p.query_id, a.vec_id AS neighbor_id,
-         {_sql_dist2("p.qe", "r.recon")} AS score
-  FROM probes p
-  JOIN assigned a ON a.cell = p.cell
-  JOIN recon r ON r.vec_id = a.vec_id
-),
-cand AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-      row_number() OVER (PARTITION BY query_id
-        ORDER BY score ASC, neighbor_id) AS rr
-    FROM adc
-  ) WHERE rr <= {SQ.SQ_REFINE_R * ANN_K}
-),
-ann AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT c.query_id, c.neighbor_id,
-      row_number() OVER (PARTITION BY c.query_id
-        ORDER BY {_sql_dist2("q.qe", "e.embedding")} ASC, c.neighbor_id) AS rank
-    FROM cand c
-    JOIN embeddings e ON e.vec_id = c.neighbor_id
-    JOIN q ON q.query_id = c.query_id
-  ) WHERE rank <= {ANN_K}
-),
-exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.query_id, e.vec_id AS neighbor_id,
-      row_number() OVER (PARTITION BY q.query_id
-        ORDER BY {_sql_dist2("q.qe", "e.embedding")} ASC, e.vec_id) AS rank
-    FROM q CROSS JOIN embeddings e
-  ) WHERE rank <= {ANN_K}
-),
-hits AS (
-  SELECT exact.query_id, count(*) AS n_hit
-  FROM exact JOIN ann USING (query_id, neighbor_id) GROUP BY exact.query_id
-),
-per_q AS (
-  SELECT q2.query_id, CAST(coalesce(h.n_hit, 0) AS DOUBLE) / {ANN_K} AS recall
-  FROM (SELECT DISTINCT query_id FROM exact) q2 LEFT JOIN hits h USING (query_id)
-)
-SELECT round(avg(recall), 6) AS recall_at_k, count(*) AS n_queries FROM per_q
-"""
+)"""
 
 
 # ---------------------------------------------------------------------------
@@ -633,13 +464,8 @@ VECTORDB_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "ann_filtered_ivf_topk": q_ann_filtered_ivf_topk,
     "ann_range_search": q_ann_range_search,
     "sq_codes": q_sq_codes,
-    "ann_sq_topk": q_ann_sq_topk,
-    "ann_sq_refined_topk": q_ann_sq_refined_topk,
-    "ann_sq_recall": q_ann_sq_recall,
     "hybrid_rrf": q_hybrid_rrf,
     "bm25_topn": q_bm25_topn,
-    "ann_ivfsq_topk": q_ann_ivfsq_topk,
-    "ann_ivfsq_recall": q_ann_ivfsq_recall,
     "hybrid_bm25_rrf": q_hybrid_bm25_rrf,
     "ann_mmr_rerank": q_ann_mmr_rerank,
 }
@@ -649,13 +475,8 @@ VECTORDB_ORACLES: dict[str, str] = {
     "ann_filtered_ivf_topk": SQL_ANN_FILTERED_IVF_TOPK,
     "ann_range_search": SQL_ANN_RANGE_SEARCH,
     "sq_codes": SQL_SQ_CODES,
-    "ann_sq_topk": SQL_ANN_SQ_TOPK,
-    "ann_sq_refined_topk": SQL_ANN_SQ_REFINED_TOPK,
-    "ann_sq_recall": SQL_ANN_SQ_RECALL,
     "hybrid_rrf": SQL_HYBRID_RRF,
     "bm25_topn": SQL_BM25_TOPN,
-    "ann_ivfsq_topk": SQL_ANN_IVFSQ_TOPK,
-    "ann_ivfsq_recall": SQL_ANN_IVFSQ_RECALL,
     "hybrid_bm25_rrf": SQL_HYBRID_BM25_RRF,
     "ann_mmr_rerank": SQL_ANN_MMR_RERANK,
 }
@@ -733,113 +554,9 @@ SELECT query_id, rank, neighbor_id, score AS hamming FROM (
 """
 
 
-def q_ann_bq_refined_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = BQ.bq_refined_topk(
-        queries_view(spark, sf_dir), load_table(spark, sf_dir, "embeddings"), ANN_K
-    )
-    return out.select(
-        "query_id", "rank", "neighbor_id", F.round("score", 6).alias("score")
-    )
-
-
-SQL_ANN_BQ_REFINED_TOPK = f"""
-WITH {_SQL_BQ_CTES},
-cand AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-      row_number() OVER (PARTITION BY query_id
-        ORDER BY score ASC, neighbor_id) AS r
-    FROM bq_cand
-  ) WHERE r <= {BQ.BQ_REFINE_R * ANN_K}
-)
-SELECT query_id, rank, neighbor_id, round(score, 6) AS score FROM (
-  SELECT c.query_id, c.neighbor_id,
-    {_sql_cos("q.qe", "e.embedding")} AS score,
-    CAST(row_number() OVER (PARTITION BY c.query_id
-      ORDER BY {_sql_cos("q.qe", "e.embedding")} DESC, c.neighbor_id) AS INT) AS rank
-  FROM cand c
-  JOIN embeddings e ON e.vec_id = c.neighbor_id
-  JOIN q ON q.query_id = c.query_id
-) WHERE rank <= {ANN_K}
-"""
-
-
-def q_ann_bq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@K of the REFINED path vs the exact cosine top-K — the
-    number a deployment cares about (the raw Hamming rank is only the
-    pre-filter)."""
-    queries = queries_view(spark, sf_dir)
-    corpus = load_table(spark, sf_dir, "embeddings")
-    ann = BQ.bq_refined_topk(queries, corpus, ANN_K)
-    exact = exact_topk_fixture_cached(spark, sf_dir, ANN_K, "cosine")
-    return ann_recall(ann, exact, ANN_K)
-
-
-SQL_ANN_BQ_RECALL = f"""
-WITH {_SQL_BQ_CTES},
-cand AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-      row_number() OVER (PARTITION BY query_id
-        ORDER BY score ASC, neighbor_id) AS r
-    FROM bq_cand
-  ) WHERE r <= {BQ.BQ_REFINE_R * ANN_K}
-),
-ann AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT c.query_id, c.neighbor_id,
-      row_number() OVER (PARTITION BY c.query_id
-        ORDER BY {_sql_cos("q.qe", "e.embedding")} DESC, c.neighbor_id) AS rank
-    FROM cand c
-    JOIN embeddings e ON e.vec_id = c.neighbor_id
-    JOIN q ON q.query_id = c.query_id
-  ) WHERE rank <= {ANN_K}
-),
-exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.query_id, e.vec_id AS neighbor_id,
-      row_number() OVER (PARTITION BY q.query_id
-        ORDER BY {_sql_cos("q.qe", "e.embedding")} DESC, e.vec_id) AS rank
-    FROM q CROSS JOIN embeddings e
-  ) WHERE rank <= {ANN_K}
-),
-hits AS (
-  SELECT exact.query_id, count(*) AS n_hit
-  FROM exact JOIN ann USING (query_id, neighbor_id) GROUP BY exact.query_id
-),
-per_q AS (
-  SELECT q2.query_id, CAST(coalesce(h.n_hit, 0) AS DOUBLE) / {ANN_K} AS recall
-  FROM (SELECT DISTINCT query_id FROM exact) q2 LEFT JOIN hits h USING (query_id)
-)
-SELECT round(avg(recall), 6) AS recall_at_k, count(*) AS n_queries FROM per_q
-"""
-
-def q_ann_ivfbq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF × 1-bit composition (operators/bq.ivfbq_topk): cell pruning
-    × Hamming pricing on D/8-byte signatures × exact cosine
-    refinement — the memory-lean sibling of ``ann_ivfpq_topk`` that
-    needs NO trained codebook."""
-    out = BQ.ivfbq_topk(
-        queries_view(spark, sf_dir), load_table(spark, sf_dir, "embeddings"), ANN_K
-    )
-    return out.select(
-        "query_id", "rank", "neighbor_id", F.round("score", 6).alias("score")
-    )
-
-
-def q_ann_ivfbq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    queries = queries_view(spark, sf_dir)
-    corpus = load_table(spark, sf_dir, "embeddings")
-    ann = BQ.ivfbq_topk(queries, corpus, ANN_K)
-    exact = exact_topk_fixture_cached(spark, sf_dir, ANN_K, "cosine")
-    return ann_recall(ann, exact, ANN_K)
-
-
-from .registry_simsearch import SQL_IVF_BODY as _SQL_IVF_BODY  # noqa: E402
-
 _SQL_IVFBQ_CTES = f"""
 q AS ({SQL_Q_CTE}),
-{_SQL_IVF_BODY},
+{SQL_IVF_BODY},
 {_sql_bq_words("q", "query_id", "qe", "bq_qw")},
 {_sql_bq_words("embeddings", "vec_id", "embedding", "bq_cw")},
 ivfbq_ham AS (
@@ -867,57 +584,10 @@ ivfbq_cand AS (
 )
 """
 
-SQL_ANN_IVFBQ_TOPK = f"""
-WITH {_SQL_IVFBQ_CTES}
-SELECT query_id, rank, neighbor_id, round(score, 6) AS score FROM (
-  SELECT query_id, neighbor_id, score,
-    CAST(row_number() OVER (PARTITION BY query_id
-      ORDER BY score DESC, neighbor_id) AS INT) AS rank
-  FROM ivfbq_cand
-) WHERE rank <= {ANN_K}
-"""
-
-SQL_ANN_IVFBQ_RECALL = f"""
-WITH {_SQL_IVFBQ_CTES},
-ann AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-      row_number() OVER (PARTITION BY query_id
-        ORDER BY score DESC, neighbor_id) AS rank
-    FROM ivfbq_cand
-  ) WHERE rank <= {ANN_K}
-),
-exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.query_id, e.vec_id AS neighbor_id,
-      row_number() OVER (PARTITION BY q.query_id
-        ORDER BY {_sql_cos("q.qe", "e.embedding")} DESC, e.vec_id) AS rank
-    FROM q CROSS JOIN embeddings e
-  ) WHERE rank <= {ANN_K}
-),
-hits AS (
-  SELECT exact.query_id, count(*) AS n_hit
-  FROM exact JOIN ann USING (query_id, neighbor_id) GROUP BY exact.query_id
-),
-per_q AS (
-  SELECT q2.query_id, CAST(coalesce(h.n_hit, 0) AS DOUBLE) / {ANN_K} AS recall
-  FROM (SELECT DISTINCT query_id FROM exact) q2 LEFT JOIN hits h USING (query_id)
-)
-SELECT round(avg(recall), 6) AS recall_at_k, count(*) AS n_queries FROM per_q
-"""
-
 VECTORDB_QUERIES["bq_codes"] = q_bq_codes
 VECTORDB_QUERIES["ann_bq_topk"] = q_ann_bq_topk
-VECTORDB_QUERIES["ann_bq_refined_topk"] = q_ann_bq_refined_topk
-VECTORDB_QUERIES["ann_bq_recall"] = q_ann_bq_recall
-VECTORDB_QUERIES["ann_ivfbq_topk"] = q_ann_ivfbq_topk
-VECTORDB_QUERIES["ann_ivfbq_recall"] = q_ann_ivfbq_recall
 VECTORDB_ORACLES["bq_codes"] = SQL_BQ_CODES
 VECTORDB_ORACLES["ann_bq_topk"] = SQL_ANN_BQ_TOPK
-VECTORDB_ORACLES["ann_bq_refined_topk"] = SQL_ANN_BQ_REFINED_TOPK
-VECTORDB_ORACLES["ann_bq_recall"] = SQL_ANN_BQ_RECALL
-VECTORDB_ORACLES["ann_ivfbq_topk"] = SQL_ANN_IVFBQ_TOPK
-VECTORDB_ORACLES["ann_ivfbq_recall"] = SQL_ANN_IVFBQ_RECALL
 
 
 # ---------------------------------------------------------------------------
@@ -979,148 +649,8 @@ SELECT query_id, rank, neighbor_id, round(score, 6) AS prefix_score FROM (
 """
 
 
-def q_ann_mrl_refined_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = MRL.mrl_refined_topk(
-        queries_view(spark, sf_dir), load_table(spark, sf_dir, "embeddings"), ANN_K
-    )
-    return out.select(
-        "query_id", "rank", "neighbor_id", F.round("score", 6).alias("score")
-    )
-
-
-SQL_ANN_MRL_REFINED_TOPK = f"""
-WITH {_SQL_MRL_CAND},
-cand AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-      row_number() OVER (PARTITION BY query_id
-        ORDER BY score DESC, neighbor_id) AS r
-    FROM mrl_cand
-  ) WHERE r <= {MRL.MRL_REFINE_R * ANN_K}
-)
-SELECT query_id, rank, neighbor_id, round(score, 6) AS score FROM (
-  SELECT c.query_id, c.neighbor_id,
-    {_sql_cos("q.qe", "e.embedding")} AS score,
-    CAST(row_number() OVER (PARTITION BY c.query_id
-      ORDER BY {_sql_cos("q.qe", "e.embedding")} DESC, c.neighbor_id) AS INT) AS rank
-  FROM cand c
-  JOIN embeddings e ON e.vec_id = c.neighbor_id
-  JOIN q ON q.query_id = c.query_id
-) WHERE rank <= {ANN_K}
-"""
-
-
-def q_ann_mrl_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@K of the refined prefix path vs the exact cosine top-K.
-    Floor estimate by construction: the fixture is isotropic (every
-    coordinate equally informative), where trained MRL embeddings
-    front-load the prefix — see operators/mrl.py."""
-    queries = queries_view(spark, sf_dir)
-    corpus = load_table(spark, sf_dir, "embeddings")
-    ann = MRL.mrl_refined_topk(queries, corpus, ANN_K)
-    exact = exact_topk_fixture_cached(spark, sf_dir, ANN_K, "cosine")
-    return ann_recall(ann, exact, ANN_K)
-
-
-SQL_ANN_MRL_RECALL = f"""
-WITH {_SQL_MRL_CAND},
-cand AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-      row_number() OVER (PARTITION BY query_id
-        ORDER BY score DESC, neighbor_id) AS r
-    FROM mrl_cand
-  ) WHERE r <= {MRL.MRL_REFINE_R * ANN_K}
-),
-ann AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT c.query_id, c.neighbor_id,
-      row_number() OVER (PARTITION BY c.query_id
-        ORDER BY {_sql_cos("q.qe", "e.embedding")} DESC, c.neighbor_id) AS rank
-    FROM cand c
-    JOIN embeddings e ON e.vec_id = c.neighbor_id
-    JOIN q ON q.query_id = c.query_id
-  ) WHERE rank <= {ANN_K}
-),
-exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.query_id, e.vec_id AS neighbor_id,
-      row_number() OVER (PARTITION BY q.query_id
-        ORDER BY {_sql_cos("q.qe", "e.embedding")} DESC, e.vec_id) AS rank
-    FROM q CROSS JOIN embeddings e
-  ) WHERE rank <= {ANN_K}
-),
-hits AS (
-  SELECT exact.query_id, count(*) AS n_hit
-  FROM exact JOIN ann USING (query_id, neighbor_id) GROUP BY exact.query_id
-),
-per_q AS (
-  SELECT q2.query_id, CAST(coalesce(h.n_hit, 0) AS DOUBLE) / {ANN_K} AS recall
-  FROM (SELECT DISTINCT query_id FROM exact) q2 LEFT JOIN hits h USING (query_id)
-)
-SELECT round(avg(recall), 6) AS recall_at_k, count(*) AS n_queries FROM per_q
-"""
-
-def q_ann_mrl_recall_tuned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@K at the swept (d', R) optimum — the registered tuned
-    point of the dimension-truncation frontier, mirroring the
-    refine-family `*_tuned_metrics` convention."""
-    queries = queries_view(spark, sf_dir)
-    corpus = load_table(spark, sf_dir, "embeddings")
-    ann = MRL.mrl_refined_topk(
-        queries, corpus, ANN_K, r=MRL_R_TUNED, d_keep=MRL_D_TUNED
-    )
-    exact = exact_topk_fixture_cached(spark, sf_dir, ANN_K, "cosine")
-    return ann_recall(ann, exact, ANN_K)
-
-
-SQL_ANN_MRL_RECALL_TUNED = f"""
-WITH {_sql_mrl_cand(MRL_D_TUNED)},
-cand AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-      row_number() OVER (PARTITION BY query_id
-        ORDER BY score DESC, neighbor_id) AS r
-    FROM mrl_cand
-  ) WHERE r <= {MRL_R_TUNED * ANN_K}
-),
-ann AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT c.query_id, c.neighbor_id,
-      row_number() OVER (PARTITION BY c.query_id
-        ORDER BY {_sql_cos("q.qe", "e.embedding")} DESC, c.neighbor_id) AS rank
-    FROM cand c
-    JOIN embeddings e ON e.vec_id = c.neighbor_id
-    JOIN q ON q.query_id = c.query_id
-  ) WHERE rank <= {ANN_K}
-),
-exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.query_id, e.vec_id AS neighbor_id,
-      row_number() OVER (PARTITION BY q.query_id
-        ORDER BY {_sql_cos("q.qe", "e.embedding")} DESC, e.vec_id) AS rank
-    FROM q CROSS JOIN embeddings e
-  ) WHERE rank <= {ANN_K}
-),
-hits AS (
-  SELECT exact.query_id, count(*) AS n_hit
-  FROM exact JOIN ann USING (query_id, neighbor_id) GROUP BY exact.query_id
-),
-per_q AS (
-  SELECT q2.query_id, CAST(coalesce(h.n_hit, 0) AS DOUBLE) / {ANN_K} AS recall
-  FROM (SELECT DISTINCT query_id FROM exact) q2 LEFT JOIN hits h USING (query_id)
-)
-SELECT round(avg(recall), 6) AS recall_at_k, count(*) AS n_queries FROM per_q
-"""
-
 VECTORDB_QUERIES["ann_mrl_topk"] = q_ann_mrl_topk
-VECTORDB_QUERIES["ann_mrl_refined_topk"] = q_ann_mrl_refined_topk
-VECTORDB_QUERIES["ann_mrl_recall"] = q_ann_mrl_recall
-VECTORDB_QUERIES["ann_mrl_recall_tuned"] = q_ann_mrl_recall_tuned
 VECTORDB_ORACLES["ann_mrl_topk"] = SQL_ANN_MRL_TOPK
-VECTORDB_ORACLES["ann_mrl_refined_topk"] = SQL_ANN_MRL_REFINED_TOPK
-VECTORDB_ORACLES["ann_mrl_recall"] = SQL_ANN_MRL_RECALL
-VECTORDB_ORACLES["ann_mrl_recall_tuned"] = SQL_ANN_MRL_RECALL_TUNED
 
 
 # ---------------------------------------------------------------------------
@@ -1351,16 +881,8 @@ exact AS (
         ORDER BY maxsim DESC, neighbor_id) AS rank
     FROM allms
   ) WHERE rank <= {MV.MAXSIM_K}
-),
-hits AS (
-  SELECT exact.query_id, count(*) AS n_hit
-  FROM exact JOIN ann USING (query_id, neighbor_id) GROUP BY exact.query_id
-),
-per_q AS (
-  SELECT q2.query_id, CAST(coalesce(h.n_hit, 0) AS DOUBLE) / {MV.MAXSIM_K} AS recall
-  FROM (SELECT DISTINCT query_id FROM exact) q2 LEFT JOIN hits h USING (query_id)
-)
-SELECT round(avg(recall), 6) AS recall_at_k, count(*) AS n_queries FROM per_q
+),{_sql_hit_rate(MV.MAXSIM_K)}
+{SQL_RECALL_ROW}
 """
 
 VECTORDB_QUERIES["ann_maxsim_rerank"] = q_ann_maxsim_rerank
@@ -1380,7 +902,6 @@ def q_ann_maxsim_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     same float32 slices, order-independent maxes, fixed-order Σ —
     so the oracle is shared; ``tests/test_layout.py`` asserts the
     serve plan's corpus access reads only the bag columns."""
-    from .registry_simsearch import _index_store_path
     from .sources.layout import read_token_bags, write_token_bags
 
     corpus = load_table(spark, sf_dir, "embeddings")
@@ -1396,7 +917,7 @@ def q_ann_maxsim_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 VECTORDB_QUERIES["ann_maxsim_index_topk"] = q_ann_maxsim_index_topk
 #: same result as the packed-column plan by construction
-VECTORDB_ORACLES["ann_maxsim_index_topk"] = SQL_ANN_MAXSIM_RERANK
+VECTORDB_ORACLES["ann_maxsim_index_topk"] = VECTORDB_ORACLES["ann_maxsim_rerank"]
 
 
 # ---------------------------------------------------------------------------
@@ -1519,17 +1040,9 @@ exact AS (
         ORDER BY {_sql_cos("q.qe", "e.embedding")} DESC, e.vec_id) AS rank
     FROM q CROSS JOIN embeddings e
   ) WHERE rank <= {ANN_K}
-),
-hits AS (
-  SELECT exact.query_id, count(*) AS n_hit
-  FROM exact JOIN ann USING (query_id, neighbor_id) GROUP BY exact.query_id
-),
-per_q AS (
-  SELECT q2.query_id, CAST(coalesce(h.n_hit, 0) AS DOUBLE) / {ANN_K} AS recall
-  FROM (SELECT DISTINCT query_id FROM exact) q2 LEFT JOIN hits h USING (query_id)
-),
+),{_sql_hit_rate()},
 rec AS (
-  SELECT round(avg(recall), 6) AS recall_at_k, count(*) AS n_queries FROM per_q
+  {SQL_RECALL_ROW}
 ),
 stats AS (SELECT count(*) AS n FROM embeddings)
 SELECT recall_at_k, n_queries,
@@ -1618,7 +1131,6 @@ def q_ann_cascade_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical to the in-query encode, so the oracle is shared;
     ``tests/test_layout.py`` asserts neither sketch scan reads a raw
     vector column."""
-    from .registry_simsearch import _index_store_path
     from .sources.layout import read_cascade_index, write_cascade_index
 
     corpus = load_table(spark, sf_dir, "embeddings")
@@ -1636,7 +1148,7 @@ def q_ann_cascade_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 VECTORDB_QUERIES["ann_cascade_index_topk"] = q_ann_cascade_index_topk
 #: same result as the in-query encode by construction
-VECTORDB_ORACLES["ann_cascade_index_topk"] = SQL_ANN_CASCADE_TOPK
+VECTORDB_ORACLES["ann_cascade_index_topk"] = VECTORDB_ORACLES["ann_cascade_topk"]
 
 
 # ---------------------------------------------------------------------------
@@ -1741,16 +1253,8 @@ exact AS (
         ORDER BY maxsim DESC, neighbor_id) AS rank
     FROM allms
   ) WHERE rank <= {MV.MAXSIM_K}
-),
-hits AS (
-  SELECT exact.query_id, count(*) AS n_hit
-  FROM exact JOIN ann USING (query_id, neighbor_id) GROUP BY exact.query_id
-),
-per_q AS (
-  SELECT q2.query_id, CAST(coalesce(h.n_hit, 0) AS DOUBLE) / {MV.MAXSIM_K} AS recall
-  FROM (SELECT DISTINCT query_id FROM exact) q2 LEFT JOIN hits h USING (query_id)
-)
-SELECT round(avg(recall), 6) AS recall_at_k, count(*) AS n_queries FROM per_q
+),{_sql_hit_rate(MV.MAXSIM_K)}
+{SQL_RECALL_ROW}
 """
 
 VECTORDB_QUERIES["ann_ivf_maxsim_topk"] = q_ann_ivf_maxsim_topk
@@ -1784,27 +1288,6 @@ def _sql_rbt_rot_list(vec: str) -> str:
     )
 
 
-def q_ann_rabitq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = RBT.rabitq_topk(
-        queries_view(spark, sf_dir), load_table(spark, sf_dir, "embeddings"), ANN_K
-    )
-    return out.select(
-        "query_id", "rank", "neighbor_id", F.round("score", 6).alias("score")
-    )
-
-
-def q_ann_rabitq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@K of the refined RaBitQ path vs exact cosine — read next
-    to ``ann_bq_recall``: same candidate budget (R·K), same re-rank;
-    the only change is the pre-rank estimator (rotated scalar-corrected
-    signed dot vs raw Hamming)."""
-    queries = queries_view(spark, sf_dir)
-    corpus = load_table(spark, sf_dir, "embeddings")
-    ann = RBT.rabitq_topk(queries, corpus, ANN_K)
-    exact = exact_topk_fixture_cached(spark, sf_dir, ANN_K, "cosine")
-    return ann_recall(ann, exact, ANN_K)
-
-
 def _rbt_base_ctes() -> str:
     """The RaBitQ code-table replay (rbt_y → rbt_corp, rbt_q) — shared
     by the plain and IVF-composed oracles; needs ``q`` in scope."""
@@ -1832,28 +1315,7 @@ _SQL_RBT_EST = (
 )
 
 
-def _rbt_tail_ctes(est_cte: str, r: int | None = None) -> str:
-    """rank-r·K ids → exact cosine re-rank, over any estimator CTE
-    named ``{est_cte}`` with (query_id, neighbor_id, score)."""
-    r = RBT.RABITQ_REFINE_R if r is None else r
-    return f"""
-rbt_ids AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-      row_number() OVER (PARTITION BY query_id
-        ORDER BY score DESC, neighbor_id) AS r
-    FROM {est_cte}
-  ) WHERE r <= {r * ANN_K}
-),
-rbt_cand AS (
-  SELECT c.query_id, c.neighbor_id, {_sql_cos("q.qe", "e.embedding")} AS score
-  FROM rbt_ids c
-  JOIN embeddings e ON e.vec_id = c.neighbor_id
-  JOIN q ON q.query_id = c.query_id
-)"""
-
-
-def _rbt_ctes(r: int | None = None) -> str:
+def _rbt_ctes(r: int = RBT.RABITQ_REFINE_R) -> str:
     return f"""
 q AS ({SQL_Q_CTE}),
 {_rbt_base_ctes()},
@@ -1861,104 +1323,14 @@ rbt_est AS (
   SELECT q2.query_id, c.vec_id AS neighbor_id, {_SQL_RBT_EST} AS score
   FROM rbt_corp c CROSS JOIN rbt_q q2
 ),
-{_rbt_tail_ctes("rbt_est", r)}
+{sql_rerank("rbt_est", r, "cosine", prefix="rbt")}
 """
-
-
-SQL_ANN_RABITQ_TOPK = f"""
-WITH {_rbt_ctes()}
-SELECT query_id, rank, neighbor_id, round(score, 6) AS score FROM (
-  SELECT query_id, neighbor_id, score,
-    CAST(row_number() OVER (PARTITION BY query_id
-      ORDER BY score DESC, neighbor_id) AS INT) AS rank
-  FROM rbt_cand
-) WHERE rank <= {ANN_K}
-"""
-
-def _rbt_recall_sql(r: int | None = None) -> str:
-    return f"""
-WITH {_rbt_ctes(r)},
-ann AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-      row_number() OVER (PARTITION BY query_id
-        ORDER BY score DESC, neighbor_id) AS rank
-    FROM rbt_cand
-  ) WHERE rank <= {ANN_K}
-),
-exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.query_id, e.vec_id AS neighbor_id,
-      row_number() OVER (PARTITION BY q.query_id
-        ORDER BY {_sql_cos("q.qe", "e.embedding")} DESC, e.vec_id) AS rank
-    FROM q CROSS JOIN embeddings e
-  ) WHERE rank <= {ANN_K}
-),
-hits AS (
-  SELECT exact.query_id, count(*) AS n_hit
-  FROM exact JOIN ann USING (query_id, neighbor_id) GROUP BY exact.query_id
-),
-per_q AS (
-  SELECT q2.query_id, CAST(coalesce(h.n_hit, 0) AS DOUBLE) / {ANN_K} AS recall
-  FROM (SELECT DISTINCT query_id FROM exact) q2 LEFT JOIN hits h USING (query_id)
-)
-SELECT round(avg(recall), 6) AS recall_at_k, count(*) AS n_queries FROM per_q
-"""
-
-
-SQL_ANN_RABITQ_RECALL = _rbt_recall_sql()
-
-#: the swept frontier point (tools/sweep_rabitq_r.py): R=5 reaches
-#: 0.7975 at sf0.1 — above Hamming-BQ at R=12 with 2.4× fewer
-#: full-precision fetches
-RABITQ_R_TUNED = 5
-
-
-def q_ann_rabitq_recall_tuned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@K of the RaBitQ refined path at the swept operating
-    point R=5 (house style: measured optima get a registered
-    ``_tuned`` row — `reports/sweep_rabitq_r.csv`)."""
-    queries = queries_view(spark, sf_dir)
-    corpus = load_table(spark, sf_dir, "embeddings")
-    ann = RBT.rabitq_topk(queries, corpus, ANN_K, r=RABITQ_R_TUNED)
-    exact = exact_topk_fixture_cached(spark, sf_dir, ANN_K, "cosine")
-    return ann_recall(ann, exact, ANN_K)
-
-
-VECTORDB_QUERIES["ann_rabitq_recall_tuned"] = q_ann_rabitq_recall_tuned
-VECTORDB_ORACLES["ann_rabitq_recall_tuned"] = _rbt_recall_sql(RABITQ_R_TUNED)
-
-VECTORDB_QUERIES["ann_rabitq_topk"] = q_ann_rabitq_topk
-VECTORDB_ORACLES["ann_rabitq_topk"] = SQL_ANN_RABITQ_TOPK
-VECTORDB_QUERIES["ann_rabitq_recall"] = q_ann_rabitq_recall
-VECTORDB_ORACLES["ann_rabitq_recall"] = SQL_ANN_RABITQ_RECALL
-
-
-def q_ann_ivfrabitq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF × RaBitQ (operators/rabitq.ivfrabitq_topk): cell pruning ×
-    scalar-corrected 1-bit estimator × exact cosine refinement — the
-    memory-lean production pairing; compare ``ann_ivfbq_topk`` (same
-    cells, raw Hamming pricing)."""
-    out = RBT.ivfrabitq_topk(
-        queries_view(spark, sf_dir), load_table(spark, sf_dir, "embeddings"), ANN_K
-    )
-    return out.select(
-        "query_id", "rank", "neighbor_id", F.round("score", 6).alias("score")
-    )
-
-
-def q_ann_ivfrabitq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    queries = queries_view(spark, sf_dir)
-    corpus = load_table(spark, sf_dir, "embeddings")
-    ann = RBT.ivfrabitq_topk(queries, corpus, ANN_K)
-    exact = exact_topk_fixture_cached(spark, sf_dir, ANN_K, "cosine")
-    return ann_recall(ann, exact, ANN_K)
 
 
 def _ivfrbt_ctes() -> str:
     return f"""
 q AS ({SQL_Q_CTE}),
-{_SQL_IVF_BODY},
+{SQL_IVF_BODY},
 {_rbt_base_ctes()},
 ivfrbt_est AS (
   SELECT p.query_id, c.vec_id AS neighbor_id, {_SQL_RBT_EST} AS score
@@ -1967,53 +1339,96 @@ ivfrbt_est AS (
   JOIN rbt_corp c ON c.vec_id = a.vec_id
   JOIN rbt_q q2 ON q2.query_id = p.query_id
 ),
-{_rbt_tail_ctes("ivfrbt_est")}
+{sql_rerank("ivfrbt_est", RBT.RABITQ_REFINE_R, "cosine", prefix="rbt")}
 """
 
 
-SQL_ANN_IVFRABITQ_TOPK = f"""
-WITH {_ivfrbt_ctes()}
-SELECT query_id, rank, neighbor_id, round(score, 6) AS score FROM (
-  SELECT query_id, neighbor_id, score,
-    CAST(row_number() OVER (PARTITION BY query_id
-      ORDER BY score DESC, neighbor_id) AS INT) AS rank
-  FROM rbt_cand
-) WHERE rank <= {ANN_K}
-"""
+# ---------------------------------------------------------------------------
+# The vector-db rows of the ANN pipeline table (registry_simsearch)
+# ---------------------------------------------------------------------------
 
-SQL_ANN_IVFRABITQ_RECALL = f"""
-WITH {_ivfrbt_ctes()},
-ann AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-      row_number() OVER (PARTITION BY query_id
-        ORDER BY score DESC, neighbor_id) AS rank
-    FROM rbt_cand
-  ) WHERE rank <= {ANN_K}
-),
-exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.query_id, e.vec_id AS neighbor_id,
-      row_number() OVER (PARTITION BY q.query_id
-        ORDER BY {_sql_cos("q.qe", "e.embedding")} DESC, e.vec_id) AS rank
-    FROM q CROSS JOIN embeddings e
-  ) WHERE rank <= {ANN_K}
-),
-hits AS (
-  SELECT exact.query_id, count(*) AS n_hit
-  FROM exact JOIN ann USING (query_id, neighbor_id) GROUP BY exact.query_id
-),
-per_q AS (
-  SELECT q2.query_id, CAST(coalesce(h.n_hit, 0) AS DOUBLE) / {ANN_K} AS recall
-  FROM (SELECT DISTINCT query_id FROM exact) q2 LEFT JOIN hits h USING (query_id)
+#: the swept RaBitQ point (tools/sweep_rabitq_r.py,
+#: reports/sweep_rabitq_r.csv): R=5 reaches 0.7975 at sf0.1 — above
+#: Hamming-BQ at R=12 with 2.4× fewer full-precision fetches
+RABITQ_R_TUNED = 5
+
+
+def _rabitq_tuned_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return RBT.rabitq_topk(
+        queries_view(spark, sf_dir), load_table(spark, sf_dir, "embeddings"), ANN_K,
+        r=RABITQ_R_TUNED,
+    )
+
+
+def _mrl_tuned_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return MRL.mrl_refined_topk(
+        queries_view(spark, sf_dir), load_table(spark, sf_dir, "embeddings"), ANN_K,
+        r=MRL_R_TUNED, d_keep=MRL_D_TUNED,
+    )
+
+
+VECTORDB_PIPELINES = (
+    AnnPipeline(
+        over_fixture(SQ.sq_topk), "l2", _SQL_SQ_CTES, "sq_cand",
+        "ann_sq_topk", "ann_sq_recall",
+    ),
+    AnnPipeline(
+        over_fixture(SQ.sq_refined_topk), "l2",
+        f"{_SQL_SQ_CTES},{sql_rerank('sq_cand', SQ.SQ_REFINE_R, 'l2')}",
+        "rerank_cand", "ann_sq_refined_topk",
+    ),
+    AnnPipeline(
+        over_fixture(SQ.ivfsq_topk), "l2",
+        f"{_SQL_IVFSQ_CTES},{sql_rerank('adc', SQ.SQ_REFINE_R, 'l2')}",
+        "rerank_cand", "ann_ivfsq_topk", "ann_ivfsq_recall",
+    ),
+    #: recall scores the REFINED path: the Hamming rank is only the
+    #: pre-filter
+    AnnPipeline(
+        over_fixture(BQ.bq_refined_topk), "cosine",
+        f"{_SQL_BQ_CTES},{sql_rerank('bq_cand', BQ.BQ_REFINE_R, 'cosine', coarse='ASC')}",
+        "rerank_cand", "ann_bq_refined_topk", "ann_bq_recall",
+    ),
+    #: IVF cells × Hamming pricing × exact re-rank: the memory-lean
+    #: sibling of ann_ivfpq_topk, with no trained codebook
+    AnnPipeline(
+        over_fixture(BQ.ivfbq_topk), "cosine", _SQL_IVFBQ_CTES, "ivfbq_cand",
+        "ann_ivfbq_topk", "ann_ivfbq_recall",
+    ),
+    #: recall scores the refined prefix path; a floor by construction on
+    #: the isotropic fixture (every coordinate equally informative),
+    #: where trained MRL embeddings front-load the prefix
+    AnnPipeline(
+        over_fixture(MRL.mrl_refined_topk), "cosine",
+        f"{_SQL_MRL_CAND},{sql_rerank('mrl_cand', MRL.MRL_REFINE_R, 'cosine')}",
+        "rerank_cand", "ann_mrl_refined_topk", "ann_mrl_recall",
+    ),
+    AnnPipeline(
+        _mrl_tuned_ann, "cosine",
+        f"{_sql_mrl_cand(MRL_D_TUNED)},{sql_rerank('mrl_cand', MRL_R_TUNED, 'cosine')}",
+        "rerank_cand", recall="ann_mrl_recall_tuned",
+    ),
+    #: same R·K budget and exact re-rank as ann_bq_recall; only the
+    #: pre-rank estimator differs (rotated scalar-corrected signed dot
+    #: vs raw Hamming) — recall@20 0.6975 vs 0.456 at sf0.1
+    #: (reports/RABITQ.md)
+    AnnPipeline(
+        over_fixture(RBT.rabitq_topk), "cosine", _rbt_ctes(), "rbt_cand",
+        "ann_rabitq_topk", "ann_rabitq_recall",
+    ),
+    AnnPipeline(
+        _rabitq_tuned_ann, "cosine", _rbt_ctes(RABITQ_R_TUNED), "rbt_cand",
+        recall="ann_rabitq_recall_tuned",
+    ),
+    #: IVF cells × the RaBitQ estimator; compare ann_ivfbq_topk (same
+    #: cells, raw Hamming pricing)
+    AnnPipeline(
+        over_fixture(RBT.ivfrabitq_topk), "cosine", _ivfrbt_ctes(), "rbt_cand",
+        "ann_ivfrabitq_topk", "ann_ivfrabitq_recall",
+    ),
 )
-SELECT round(avg(recall), 6) AS recall_at_k, count(*) AS n_queries FROM per_q
-"""
 
-VECTORDB_QUERIES["ann_ivfrabitq_topk"] = q_ann_ivfrabitq_topk
-VECTORDB_ORACLES["ann_ivfrabitq_topk"] = SQL_ANN_IVFRABITQ_TOPK
-VECTORDB_QUERIES["ann_ivfrabitq_recall"] = q_ann_ivfrabitq_recall
-VECTORDB_ORACLES["ann_ivfrabitq_recall"] = SQL_ANN_IVFRABITQ_RECALL
+register_ann_pipelines(VECTORDB_PIPELINES, VECTORDB_QUERIES, VECTORDB_ORACLES)
 
 
 def q_rabitq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2067,7 +1482,6 @@ def q_ann_rabitq_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     touched exactly once in the r·K exact re-rank. Result-identical
     to the in-session path — shares its oracle."""
     from .operators.rabitq import rabitq_topk_from_index
-    from .registry_simsearch import _index_store_path
     from .sources.layout import write_rabitq_index
 
     corpus = load_table(spark, sf_dir, "embeddings")
@@ -2083,7 +1497,7 @@ def q_ann_rabitq_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 VECTORDB_QUERIES["ann_rabitq_index_topk"] = q_ann_rabitq_index_topk
-VECTORDB_ORACLES["ann_rabitq_index_topk"] = SQL_ANN_RABITQ_TOPK
+VECTORDB_ORACLES["ann_rabitq_index_topk"] = VECTORDB_ORACLES["ann_rabitq_topk"]
 
 
 # ---------------------------------------------------------------------------

@@ -17,6 +17,9 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
+#: the directory that holds the package (its import root)
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 #: per-session memo dicts (prepared corpora, exact top-K frames,
 #: trained quantizers, fixture scans, ...). Keyed WEAKLY by the
 #: SparkSession object: entries die with the session instead of
@@ -91,9 +94,13 @@ def get_spark(
     """Create (or fetch) the engine's SparkSession.
 
     Parameters mirror the judge/driver environment: ``cpus`` defaults to
-    ``$SPARK_GRAFT_CPUS`` (else all cores).
+    ``$SPARK_GRAFT_CPUS`` (else all cores). The package's parent
+    directory leads the Python workers' ``PYTHONPATH``, so pandas-UDF
+    stages import the package from any working directory; an
+    ``extra_conf`` entry for ``spark.executorEnv.PYTHONPATH`` wins.
     """
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or "*"
+    worker_path = os.pathsep.join(filter(None, (_PACKAGE_PARENT, os.environ.get("PYTHONPATH"))))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -114,6 +121,7 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS))
         # Timestamps in fixtures are naive; pin session TZ for determinism.
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.executorEnv.PYTHONPATH", worker_path)
     )
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)

@@ -29,9 +29,9 @@ def spark():
     # generated classes than the bench; the 240 MB default crosses the
     # flush threshold mid-suite and re-JIT churn inflates the tail
     # (same mechanism as the bench — see bench.py).
+    # Cores come from $SPARK_GRAFT_CPUS (get_spark's default).
     session = get_spark(
         app_name="bfann-tests",
-        cpus="4",
         shuffle_partitions=8,
         extra_conf={
             "spark.driver.memory": "12g",
