@@ -560,7 +560,7 @@ def semantic_dedup(
     iters = IVF_KMEANS_ITERS if iters is None else iters
     # canonical columns: pass the caller's frame THROUGH so the
     # quantizer/assignment memos key on the (memoized) source frame —
-    # a per-call .select() wrapper gets a fresh id() every invocation,
+    # a per-call .select() wrapper is a fresh frame every invocation,
     # so the memo never hit and each call pinned a new persisted
     # assignment until clear_caches (r12 ADVICE #3). With the
     # pass-through, dedup shares the one session-wide cell table with

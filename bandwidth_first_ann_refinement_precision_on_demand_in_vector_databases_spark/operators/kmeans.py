@@ -66,9 +66,6 @@ def kmeans_centroids(
     wall clock pays for at fixture scale.
 
     ``iters=0`` degrades to the stride-sampled quantizer."""
-    from ..session import session_cache
-
-    persisted = session_cache(points.sparkSession, "kmeans_persisted")
     if iters > 0 and dim is None:
         raise ValueError("dim is required when training (iters > 0)")
     if iters > 0:
@@ -89,14 +86,14 @@ def kmeans_centroids(
         # every Lloyd round re-references the points frame; without a
         # persist each assignment job re-runs the upstream scan +
         # subvector slicing (PQ: explode to M rows/vector) per
-        # iteration — persist once, release via clear_caches. The
-        # frame also inherits the fixture's single-file partitioning,
-        # which would run every argmin fold single-threaded
-        # (measured: the whole build on one core) — spread it first.
+        # iteration — persist once, release via clear_caches (its
+        # catalog clear unpersists it). The frame also inherits the
+        # fixture's single-file partitioning, which would run every
+        # argmin fold single-threaded (measured: the whole build on
+        # one core) — spread it first.
         from ..session import ensure_parallelism
 
         points = ensure_parallelism(points).persist()
-        persisted[f"pts-{len(persisted)}"] = points
     cents = points.where(F.col("pid") % stride == 0).select(
         "grp", F.col("pid").alias("cid"), F.col("pvec").alias("cvec")
     )
@@ -143,11 +140,8 @@ def kmeans_centroids(
             .select(
                 "grp", "cid", F.coalesce("new_cvec", "cvec").alias("cvec")
             )
-            .persist()
+            .persist()  # consumed twice: next assign + carryover join
         )
-        # registered so session.clear_caches releases the iteration
-        # frames (each is consumed twice: next assign + carryover join)
-        persisted[len(persisted)] = nxt
         # MATERIALIZE each round before planning the next (guide §5 /
         # §3.3 plan-truncation note): left lazy, the final consumer
         # optimizes and broadcasts the fully NESTED iteration chain —

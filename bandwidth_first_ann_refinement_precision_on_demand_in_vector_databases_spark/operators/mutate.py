@@ -128,7 +128,7 @@ def compact_cells(
     )
     # live_base/kept_ups are per-invocation derived frames with a
     # single consumer each: the plain assignment plan, NOT the
-    # memoizing+persisting ivf_assign — a fresh id() per call would
+    # memoizing+persisting ivf_assign — a fresh frame per call would
     # never hit the memo and would pin two new persisted frames per
     # invocation until clear_caches (r12 ADVICE #1)
     tagged = _ivf_assign_plan(live_base, cents).select(

@@ -43,7 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import session_cache
+from ..session import memo
 from .pq import PQ_M, PQ_REFINE_R, pq_topk
 from .topk import exact_l2_rerank
 
@@ -72,11 +72,15 @@ def opq_permutation(corpus: DataFrame, vec_col: str = "embedding") -> list[int]:
     corpus past the bound raises instead of training a garbage
     permutation (train on a bounded sample upstream, the
     ``kmeans.py`` stride idiom)."""
-    cache = session_cache(corpus.sparkSession, "opq_perm")
-    key = (id(corpus), vec_col)
-    if key in cache:
-        return cache[key][1]
+    return memo(
+        corpus.sparkSession,
+        "opq_perm",
+        (corpus, vec_col),
+        lambda: _train_permutation(corpus, vec_col),
+    )
 
+
+def _train_permutation(corpus: DataFrame, vec_col: str) -> list[int]:
     ex = corpus.select(F.posexplode(vec_col).alias("dim", "x")).select(
         "dim",
         F.floor(F.col("x").cast("double") * OPQ_SCALE).cast("bigint").alias("qx"),
@@ -119,7 +123,6 @@ def opq_permutation(corpus: DataFrame, vec_col: str = "embedding") -> list[int]:
         rnd, p = divmod(rk, PQ_M)
         sub = p if rnd % 2 == 0 else PQ_M - 1 - p
         newpos[r["dim"]] = sub * subdim + rnd
-    cache[key] = (corpus, newpos)  # pin the frame (session-cache rule)
     return newpos
 
 
@@ -138,20 +141,17 @@ def opq_permuted_corpus(
     corpus: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id"
 ) -> DataFrame:
     """The permuted corpus view (id, embedding) — memoized per session
-    so every PQ artifact keyed by ``id(corpus)`` downstream (codebook,
-    codes, reconstruction) is trained once and shared."""
-    cache = session_cache(corpus.sparkSession, "opq_corpus")
-    key = (id(corpus), vec_col, id_col)
-    if key not in cache:
-        perm = opq_permutation(corpus, vec_col)
-        cache[key] = (
-            corpus,
-            corpus.select(
-                F.col(id_col).alias("vec_id"),
-                F.expr(permute_expr(perm, vec_col)).alias("embedding"),
-            ),
-        )
-    return cache[key][1]
+    so every PQ artifact keyed by the corpus frame downstream
+    (codebook, codes, reconstruction) is trained once and shared."""
+    return memo(
+        corpus.sparkSession,
+        "opq_corpus",
+        (corpus, vec_col, id_col),
+        lambda: corpus.select(
+            F.col(id_col).alias("vec_id"),
+            F.expr(permute_expr(opq_permutation(corpus, vec_col), vec_col)).alias("embedding"),
+        ),
+    )
 
 
 def opq_topk(queries: DataFrame, corpus: DataFrame, k: int) -> DataFrame:
@@ -217,23 +217,21 @@ def opq_rot_corpus(
     corpus: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id"
 ) -> DataFrame:
     """The rotated corpus (vec_id, embedding) — memoized AND persisted
-    per session: the PQ artifacts trained over it (keyed by
-    ``id(frame)``) are built once and shared, and the persist stops
+    per session: the PQ artifacts trained over it (keyed by the
+    frame) are built once and shared, and the persist stops
     each consumer from re-evaluating the 64-fold-per-coordinate
     rotation — ``pq_codes``' 8 subvector slices alone re-ran the whole
     R·x transform 8× per vector over the lazy view (the r09 rabitq
     element_at lesson). Released by ``session.clear_caches``."""
-    cache = session_cache(corpus.sparkSession, "opq_rot_corpus")
-    key = (id(corpus), vec_col, id_col)
-    if key not in cache:
-        cache[key] = (
-            corpus,
-            corpus.select(
-                F.col(id_col).alias("vec_id"),
-                F.expr(rotate_expr(vec_col)).alias("embedding"),
-            ).persist(),
-        )
-    return cache[key][1]
+    return memo(
+        corpus.sparkSession,
+        "opq_rot_corpus",
+        (corpus, vec_col, id_col),
+        lambda: corpus.select(
+            F.col(id_col).alias("vec_id"),
+            F.expr(rotate_expr(vec_col)).alias("embedding"),
+        ).persist(),
+    )
 
 
 def opq_rot_topk(queries: DataFrame, corpus: DataFrame, k: int) -> DataFrame:

@@ -47,7 +47,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vector import dist2
-from ..session import ensure_parallelism
+from ..session import ensure_parallelism, memo
 from .kmeans import KMEANS_ITERS, kmeans_centroids
 from .topk import topk_per_query
 
@@ -105,21 +105,19 @@ def pq_codebook(
     offline index artifact every query-side consumer shares; released
     by ``session.clear_caches``. ``iters=0`` recovers the pure
     sampled codebook."""
-    from ..session import session_cache
 
-    cache = session_cache(corpus.sparkSession, "pq_codebook")
-    key = (id(corpus), stride, iters)
-    if key not in cache:
+    def build() -> DataFrame:
         subdim = pq_subdim(corpus)
         pts = _explode_m(corpus.select("vec_id", "embedding")).select(
             F.col("m").alias("grp"),
             F.col("vec_id").alias("pid"),
             _subvec("embedding", "m", subdim).alias("pvec"),
         )
-        cache[key] = kmeans_centroids(pts, stride, iters, dim=subdim).select(
+        return kmeans_centroids(pts, stride, iters, dim=subdim).select(
             F.col("grp").alias("m"), "cid", "cvec"
         )
-    return cache[key]
+
+    return memo(corpus.sparkSession, "pq_codebook", (corpus, stride, iters), build)
 
 
 def pq_codes(
@@ -153,13 +151,12 @@ def pq_reconstruct(
     session when built from the default codebook, because the ADC
     scan is consumed by every PQ query family."""
     if codebook is None:
-        from ..session import session_cache
-
-        cache = session_cache(corpus.sparkSession, "pq_recon")
-        key = id(corpus)
-        if key not in cache:
-            cache[key] = _pq_reconstruct(corpus, pq_codebook(corpus)).persist()
-        return cache[key]
+        return memo(
+            corpus.sparkSession,
+            "pq_recon",
+            corpus,
+            lambda: _pq_reconstruct(corpus, pq_codebook(corpus)).persist(),
+        )
     return _pq_reconstruct(corpus, codebook)
 
 
@@ -276,15 +273,14 @@ def ivfadc_centroids(corpus: DataFrame, iters: int = IVFADC_KMEANS_ITERS) -> Dat
     sf0.01, 12s after the cut. Centroid count is N/stride — a few KB;
     the checkpoint is the materialized quantizer artifact a production
     index stores anyway. Memoized per (session, corpus, iters)."""
-    from ..session import session_cache
     from .simsearch import IVF_STRIDE, ivf_centroids
 
-    cache = session_cache(corpus.sparkSession, "ivfadc_centroids")
-    key = (id(corpus), iters)
-    if key not in cache:
-        cents = ivf_centroids(corpus, IVF_STRIDE, iters)
-        cache[key] = (corpus, cents.localCheckpoint(eager=True))
-    return cache[key][1]
+    return memo(
+        corpus.sparkSession,
+        "ivfadc_centroids",
+        (corpus, iters),
+        lambda: ivf_centroids(corpus, IVF_STRIDE, iters).localCheckpoint(eager=True),
+    )
 
 
 def ivf_residuals(corpus: DataFrame, iters: int = IVFADC_KMEANS_ITERS) -> DataFrame:
@@ -295,18 +291,15 @@ def ivf_residuals(corpus: DataFrame, iters: int = IVFADC_KMEANS_ITERS) -> DataFr
     codebook wastes less of its range — the standard lift for PQ-family
     recall. One broadcast join + a codegen ``zip_with`` map over the
     corpus; memoized per session so the codebook / codes /
-    reconstruction trained downstream (all keyed by ``id(frame)``)
+    reconstruction trained downstream (all keyed by the frame)
     share one residual frame. Eagerly localCheckpoint'ed: its lineage
     stacks the Lloyd-trained quantizer under every downstream PQ
     training plan (plan size explodes without the cut — the PCA
     iterate rule), and at scale this frame IS the materialized index
     artifact."""
-    from ..session import session_cache
     from .simsearch import ivf_assign
 
-    cache = session_cache(corpus.sparkSession, "ivfpq_residuals")
-    key = (id(corpus), iters)
-    if key not in cache:
+    def build() -> DataFrame:
         cents = ivfadc_centroids(corpus, iters)
         assigned = ivf_assign(corpus, cents)
         res = assigned.join(
@@ -320,8 +313,9 @@ def ivf_residuals(corpus: DataFrame, iters: int = IVFADC_KMEANS_ITERS) -> DataFr
                 lambda x, c: x.cast("double") - c.cast("double"),
             ).alias("embedding"),
         )
-        cache[key] = (corpus, res.localCheckpoint(eager=True))
-    return cache[key][1]
+        return res.localCheckpoint(eager=True)
+
+    return memo(corpus.sparkSession, "ivfpq_residuals", (corpus, iters), build)
 
 
 def ivfpq_res_topk(

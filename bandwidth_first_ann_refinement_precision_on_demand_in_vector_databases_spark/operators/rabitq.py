@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vector import NORM_EPS, dot
-from ..session import ensure_parallelism, session_cache
+from ..session import ensure_parallelism, memo
 from .topk import exact_cosine_rerank, topk_per_query
 
 #: refinement fetches R·K candidates — same convention as BQ/PQ/SQ so
@@ -84,9 +84,8 @@ def rabitq_corpus(corpus: DataFrame) -> DataFrame:
     an unmaterialized transform re-runs its lambda per access —
     measured 53.8s for ``rabitq_codes`` at sf0.1, 1.3s after). At
     scale this frame IS the stored code-table artifact."""
-    cache = session_cache(corpus.sparkSession, "rabitq_corpus")
-    key = id(corpus)
-    if key not in cache:
+
+    def build() -> DataFrame:
         y = ensure_parallelism(corpus).select(
             "vec_id", F.expr(rotate_expr("embedding")).alias("y")
         )
@@ -107,8 +106,9 @@ def rabitq_corpus(corpus: DataFrame) -> DataFrame:
                 )
             ).alias("inv"),
         )
-        cache[key] = (corpus, frame.localCheckpoint(eager=True))
-    return cache[key][1]
+        return frame.localCheckpoint(eager=True)
+
+    return memo(corpus.sparkSession, "rabitq_corpus", corpus, build)
 
 
 def rabitq_queries(queries: DataFrame) -> DataFrame:

@@ -71,7 +71,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.fp16 import FP16_EXP_BITS, with_fp16_rounded, with_reduced_precision
-from ..session import ensure_parallelism
+from ..session import ensure_parallelism, memo
 from ..functions.vector import NORM_EPS, delta_from_exp_col, dot, l2_norm, unit
 from .topk import topk_per_query
 
@@ -151,17 +151,6 @@ def prepare_corpus(
     return df
 
 
-#: metrics phase-1 frames keyed per session by (source key, mode, k,
-#: keep_m, delta) via ``session.session_cache``: the (scored, fetched)
-#: scalar frames that every byte-model variant of one operating point
-#: shares (keep_e / compression overrides change only the per-vector
-#: byte constants). Released by ``session.clear_caches``.
-def _scored_cache(spark) -> dict:
-    from ..session import session_cache
-
-    return session_cache(spark, "refine_scored")
-
-
 def _ids(df: DataFrame) -> DataFrame:
     return df.select("query_id", "neighbor_id")
 
@@ -180,18 +169,15 @@ def prepare_corpus_cached(
 
     ``cache_key`` identifies the corpus source (e.g. the fixture
     dir); ``None`` just persists (caller owns the unpersist)."""
-    from ..session import session_cache
-
-    space = "cos" if is_cosine(mode) else "l2"
     if cache_key is None:
         return prepare_corpus(corpus, keep_m, mode).persist()
-    cache = session_cache(corpus.sparkSession, "refine_prepared")
-    key = (cache_key, keep_m, space)
-    df = cache.get(key)
-    if df is None:
-        df = prepare_corpus(corpus, keep_m, mode).persist()
-        cache[key] = df
-    return df
+    space = "cos" if is_cosine(mode) else "l2"
+    return memo(
+        corpus.sparkSession,
+        "refine_prepared",
+        (cache_key, keep_m, space),
+        lambda: prepare_corpus(corpus, keep_m, mode).persist(),
+    )
 
 
 def prepare_queries(queries: DataFrame, mode: str, vec_col: str = "embedding") -> DataFrame:
@@ -491,18 +477,14 @@ def _refine_metrics_with_frames(
     Phase 1 (the fused pair scan and the fetch-set decision) depends
     only on ``(mode, k, keep_m, delta)`` — ``keep_e`` and
     ``red_bytes_override`` enter the byte constants *after* the scan —
-    so for keyed callers the ``(scored, fetched)`` pair is memoized in
-    the scored-frame session cache and shared across byte-model variants of the same
+    so for keyed callers the ``(scored, fetched)`` pair is memoized
+    (``refine_scored``) and shared across byte-model variants of the same
     operating point (base vs ``--ekeep`` vs compression-override rows,
     ``ANNCode.py:827-833``). Keyed cache hits return no intermediates:
     the cached frames stay persisted for later variants."""
     cos = is_cosine(mode)
-    key = (cache_key, mode, k, keep_m, delta) if cache_key is not None else None
-    scache = _scored_cache(queries.sparkSession)
-    cached = scache.get(key) if key is not None else None
-    if cached is not None:
-        scored, fetched = cached
-    else:
+
+    def phase1() -> tuple[DataFrame, DataFrame]:
         if prepared_corpus is not None:
             corp = prepared_corpus
         elif cache_key is not None:
@@ -585,9 +567,13 @@ def _refine_metrics_with_frames(
                 ),
             )
         )
-        fetched = flagged.where("fetched").persist()
-        if key is not None:
-            scache[key] = (scored, fetched)
+        return scored, flagged.where("fetched").persist()
+
+    key = (cache_key, mode, k, keep_m, delta) if cache_key is not None else None
+    if key is None:
+        scored, fetched = phase1()
+    else:
+        scored, fetched = memo(queries.sparkSession, "refine_scored", key, phase1)
 
     # ground truth (W1/W2): exact-score rank over the cached scalars
     gt = _ids(

@@ -22,6 +22,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..session import memo
+
 
 def asof_join(
     left: DataFrame,
@@ -185,18 +187,15 @@ def _rank_splits_cached(
     rank), and exactness requires both to see identical splits —
     approx-percentile sketch merges are fetch-order sensitive, so two
     independent evaluations (exchange reuse off, an AQE replan) need
-    not agree. The memo entry pins ``df`` itself so a recycled id()
-    can never serve stale splits (the session-cache rule)."""
-    from ..session import session_cache
-
-    cache = session_cache(df.sparkSession, "rank_splits")
-    key = (id(df), key_col, n_buckets)
-    if key not in cache:
-        stats = df.agg(
+    not agree."""
+    return memo(
+        df.sparkSession,
+        "rank_splits",
+        (df, key_col, n_buckets),
+        lambda: df.agg(
             F.percentile_approx(key_col, pcts, 10_000).alias("__splits")
-        ).localCheckpoint(eager=True)
-        cache[key] = (df, stats)
-    return cache[key][1]
+        ).localCheckpoint(eager=True),
+    )
 
 
 def parallel_global_rank(

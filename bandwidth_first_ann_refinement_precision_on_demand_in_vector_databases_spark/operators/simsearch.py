@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..session import ensure_parallelism
+from ..session import ensure_parallelism, memo
 from ..functions.vector import cosine, dist2
 from .kmeans import KMEANS_ITERS, kmeans_centroids
 from .topk import topk_per_query
@@ -90,28 +90,20 @@ def embedding_dim(df: DataFrame, vec_col: str = "embedding") -> int:
     Memoized per (session, DataFrame, column) — the peek is a Spark
     JOB, and a registry run re-derives the dim of the same memoized
     fixture frame dozens of times (every LSH/graph/refine-metrics
-    consumer); the memo entry pins the DataFrame so a recycled
-    ``id()`` can never serve another frame's dim (the session-cache
-    rule). Released with the other memos by ``session.clear_caches``.
-    Callers should pass fixture/prepared (session-memoized) frames;
-    per-call derived frames create never-hit entries, so the memo is
-    hard-capped — a sweep that peeks thousands of distinct frames
-    drops the oldest pins instead of retaining every plan it ever saw
+    consumer). Released with the other memos by
+    ``session.clear_caches``. Callers should pass fixture/prepared
+    (session-memoized) frames; per-call derived frames create
+    never-hit entries, which the memo's per-kind bound drops oldest
+    first instead of retaining every plan a sweep ever peeked
     (r12 ADVICE #4)."""
-    from ..session import session_cache
 
-    cache = session_cache(df.sparkSession, "embedding_dim")
-    key = (id(df), vec_col)
-    hit = cache.get(key)
-    if hit is not None:
-        return hit[1]
-    row = df.select(F.size(F.col(vec_col)).alias("d")).limit(1).first()
-    if row is None or row["d"] is None or int(row["d"]) <= 0:
-        raise ValueError(f"cannot derive embedding dim from column {vec_col!r}")
-    if len(cache) >= 256:  # bound never-hit growth from per-call frames
-        cache.pop(next(iter(cache)))
-    cache[key] = (df, int(row["d"]))
-    return int(row["d"])
+    def peek() -> int:
+        row = df.select(F.size(F.col(vec_col)).alias("d")).limit(1).first()
+        if row is None or row["d"] is None or int(row["d"]) <= 0:
+            raise ValueError(f"cannot derive embedding dim from column {vec_col!r}")
+        return int(row["d"])
+
+    return memo(df.sparkSession, "embedding_dim", (df, vec_col), peek)
 
 
 def ivf_centroids(
@@ -127,26 +119,20 @@ def ivf_centroids(
     Memoized per (session, corpus, stride, iters) — every consumer
     (assignment, probes, IVF-PQ) shares one build, exactly as a
     production IVF index is trained once and served many times;
-    released by ``session.clear_caches``. The memo entry pins the
-    corpus DataFrame itself, so a recycled ``id()`` from a collected
-    frame can never serve stale centroids (round-4 advisor note, same
-    pattern as ``symmetric_knn_edges``)."""
-    from ..session import session_cache
+    released by ``session.clear_caches``."""
 
-    cache = session_cache(corpus.sparkSession, "ivf_centroids")
-    key = (id(corpus), stride, iters)
-    if key not in cache:
+    def build() -> DataFrame:
         pts = corpus.select(
             F.lit(0).alias("grp"),
             F.col("vec_id").alias("pid"),
             F.col("embedding").alias("pvec"),
         )
         dim = embedding_dim(corpus) if iters > 0 else None
-        cents = kmeans_centroids(pts, stride, iters, dim=dim).select(
+        return kmeans_centroids(pts, stride, iters, dim=dim).select(
             F.col("cid").alias("centroid_id"), F.col("cvec")
         )
-        cache[key] = (corpus, cents)
-    return cache[key][1]
+
+    return memo(corpus.sparkSession, "ivf_centroids", (corpus, stride, iters), build)
 
 
 def ivf_assign(corpus: DataFrame, centroids: DataFrame) -> DataFrame:
@@ -160,21 +146,16 @@ def ivf_assign(corpus: DataFrame, centroids: DataFrame) -> DataFrame:
     once, served by every probe), yet 19 call sites were each
     re-running the N-row argmin pass; with the quantizer already
     memoized, every IVF-family consumer now shares one materialized
-    assignment. Both source frames are pinned (recycled-``id()``
-    rule); released by ``session.clear_caches``. Streaming ingest
-    keeps its stateless literal-quantizer twin
+    assignment. Released by ``session.clear_caches``. Streaming
+    ingest keeps its stateless literal-quantizer twin
     (``assign_cells_stateless``) — per-batch frames never enter this
     memo."""
-    from ..session import session_cache
-
-    cache = session_cache(corpus.sparkSession, "ivf_assign")
-    key = (id(corpus), id(centroids))
-    hit = cache.get(key)
-    if hit is not None:
-        return hit[1]
-    out = _ivf_assign_plan(corpus, centroids).persist()
-    cache[key] = ((corpus, centroids), out)
-    return out
+    return memo(
+        corpus.sparkSession,
+        "ivf_assign",
+        (corpus, centroids),
+        lambda: _ivf_assign_plan(corpus, centroids).persist(),
+    )
 
 
 def _ivf_assign_plan(corpus: DataFrame, centroids: DataFrame) -> DataFrame:
@@ -393,20 +374,15 @@ def lsh_corpus_bands(
     16-projection corpus pass; they now share one materialized band
     frame per (session, corpus, column, dim). The query-side band
     frames stay un-memoized — they are q-row cheap and their source
-    frames are rebuilt per call. Pinned against ``id()`` recycling;
-    released by ``session.clear_caches``."""
-    from ..session import session_cache
-
+    frames are rebuilt per call. Released by ``session.clear_caches``."""
     if dim is None:
         dim = embedding_dim(corpus, vec_col)
-    cache = session_cache(corpus.sparkSession, "lsh_corpus_bands")
-    key = (id(corpus), vec_col, id_alias, dim)
-    hit = cache.get(key)
-    if hit is not None:
-        return hit[1]
-    out = lsh_signature_bands(corpus, vec_col, id_alias, dim=dim).persist()
-    cache[key] = (corpus, out)
-    return out
+    return memo(
+        corpus.sparkSession,
+        "lsh_corpus_bands",
+        (corpus, vec_col, id_alias, dim),
+        lambda: lsh_signature_bands(corpus, vec_col, id_alias, dim=dim).persist(),
+    )
 
 
 #: extra buckets probed per band (flipped lowest-margin bits) —
@@ -641,17 +617,12 @@ def symmetric_knn_edges(
     corpus, graph_k): every search query over the same corpus shares
     one build, exactly as the IVF centroids and PQ codebook are
     trained once and served many times; released by
-    ``session.clear_caches``. The memo key holds a reference to the
-    corpus DataFrame itself, so a recycled ``id()`` from a collected
-    frame can never serve a stale edge set (round-4 advisor note);
-    ``cache_key`` lets callers key by a stable name instead."""
-    from ..session import session_cache
+    ``session.clear_caches``. The memo key is the corpus DataFrame
+    itself; ``cache_key`` lets callers key by a stable name instead."""
 
-    cache = session_cache(corpus.sparkSession, "knn_graph_edges")
-    key = (cache_key if cache_key is not None else id(corpus), graph_k)
-    if key not in cache:
+    def build() -> DataFrame:
         g = knn_graph(corpus, graph_k)
-        edges = (
+        return (
             g.select(
                 F.col("node_id").alias("src"), F.col("neighbor_id").alias("dst")
             )
@@ -663,10 +634,9 @@ def symmetric_knn_edges(
             .distinct()
             .persist()
         )
-        # pin the corpus object in the entry: its id() stays live as
-        # long as the memoized edges do
-        cache[key] = (corpus, edges)
-    return cache[key][1]
+
+    key = (cache_key if cache_key is not None else corpus, graph_k)
+    return memo(corpus.sparkSession, "knn_graph_edges", key, build)
 
 
 #: centroid-seeded beam entries (HNSW's hierarchical-entry lever,
@@ -687,11 +657,8 @@ def cell_medoids(
     like the centroids themselves: built once per session, broadcast-
     sized (n_cells · per_cell rows). The rank window partitions by
     cell — n_cells hash partitions, never a global sort."""
-    from ..session import session_cache
 
-    cache = session_cache(corpus.sparkSession, "cell_medoids")
-    key = (id(corpus), per_cell)
-    if key not in cache:
+    def build() -> DataFrame:
         cents = ivf_centroids(corpus)
         assigned = ivf_assign(corpus, cents)
         scored = assigned.join(
@@ -700,13 +667,13 @@ def cell_medoids(
         w = Window.partitionBy("cell").orderBy(
             F.col("__d2").asc(), F.col("vec_id").asc()
         )
-        med = (
+        return (
             scored.withColumn("__r", F.row_number().over(w))
             .where(F.col("__r") <= per_cell)
             .select("cell", "vec_id", F.col("embedding").alias("cvec"))
         )
-        cache[key] = (corpus, med)
-    return cache[key][1]
+
+    return memo(corpus.sparkSession, "cell_medoids", (corpus, per_cell), build)
 
 
 def centroid_seeded_entries(

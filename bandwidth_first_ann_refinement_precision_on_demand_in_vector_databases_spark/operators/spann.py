@@ -48,7 +48,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vector import cosine, dist2
-from ..session import ensure_parallelism
+from ..session import ensure_parallelism, memo
 from .simsearch import IVF_STRIDE, ivf_centroids
 from .topk import topk_per_query
 
@@ -153,19 +153,14 @@ def spann_postings(
     posting table is THE index artifact, built once and consumed by
     every serve/recall/stats query over the same corpus (r12: the
     stats row alone aggregated it three times, and each topk/recall
-    call re-ran the closure pass). The memo pins both source frames so
-    a recycled ``id()`` can never serve stale postings; released by
+    call re-ran the closure pass). Released by
     ``session.clear_caches``."""
-    from ..session import session_cache
-
-    cache = session_cache(corpus.sparkSession, "spann_postings")
-    key = (id(corpus), id(cents), eps, max_replicas)
-    if key not in cache:
-        cache[key] = (
-            (corpus, cents),
-            closure_cells(corpus, cents, eps, max_replicas).persist(),
-        )
-    return cache[key][1]
+    return memo(
+        corpus.sparkSession,
+        "spann_postings",
+        (corpus, cents, eps, max_replicas),
+        lambda: closure_cells(corpus, cents, eps, max_replicas).persist(),
+    )
 
 
 def spann_probes(

@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.vector import cosine, dist2
-from ..session import ensure_parallelism
+from ..session import ensure_parallelism, memo
 
 TOPK_SCHEMA = "query_id bigint, rank int, neighbor_id bigint, score double"
 
@@ -209,21 +209,19 @@ def exact_topk_fixture_cached(
     ``exact_topk`` — same Column-fold score arithmetic on the survivors
     — behind the same oracle-checked interface, with the q×N fold
     evaluation replaced by a BLAS pruner."""
-    from ..session import session_cache
     from ..sources.fixtures import load_table, queries_view
 
-    cache = session_cache(spark, "exact_topk")
-    key = (sf_dir, metric, k)
-    df = cache.get(key)
-    if df is None:
-        df = exact_topk_pruned(
+    return memo(
+        spark,
+        "exact_topk",
+        (sf_dir, metric, k),
+        lambda: exact_topk_pruned(
             queries_view(spark, sf_dir),
             load_table(spark, sf_dir, "embeddings"),
             k,
             metric=metric,
-        ).persist()
-        cache[key] = df
-    return df
+        ).persist(),
+    )
 
 
 def exact_topk_fast(

@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vector import cosine
+from ..session import memo
 from .simsearch import GRAPH_DEGREE, symmetric_knn_edges
 from .topk import topk_per_query
 
@@ -424,22 +425,20 @@ def vamana_edges(
     bitmask fold → symmetrize. Memoized + persisted per (session,
     corpus) exactly like :func:`simsearch.symmetric_knn_edges` — an
     offline index artifact, built once and served many times."""
-    from ..session import session_cache
 
-    cache = session_cache(corpus.sparkSession, "vamana_edges")
-    key = (cache_key if cache_key is not None else id(corpus), degree)
-    if key not in cache:
+    def build() -> DataFrame:
         base = symmetric_knn_edges(
             corpus, GRAPH_DEGREE,
             cache_key=None if cache_key is None else f"vamana-base:{cache_key}",
         )
         kept = vamana_kept_edges(corpus, base, degree)
-        out = (
+        return (
             kept.unionByName(
                 kept.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
             )
             .distinct()
             .persist()
         )
-        cache[key] = (corpus, out)
-    return cache[key][1]
+
+    key = (cache_key if cache_key is not None else corpus, degree)
+    return memo(corpus.sparkSession, "vamana_edges", key, build)

@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.vector import cosine, dist2
-from ..session import ensure_parallelism
+from ..session import ensure_parallelism, memo
 from .topk import exact_topk, topk_per_query
 
 RRF_KAPPA = 60      #: the fusion constant from the RRF paper
@@ -144,24 +144,25 @@ def routed_filtered_topk(
     and the survivor count come from partition/footer statistics
     (row counts + predicate min/max pruning) and the cell count is
     an index-catalog property; none requires a data scan."""
-    from ..session import session_cache
     from .simsearch import IVF_NPROBE, IVF_STRIDE
 
-    cache = session_cache(corpus.sparkSession, "filter_route_stats")
-    key = (id(corpus), str(predicate))
-    if key not in cache:
-        n = corpus.count()
-        surv = corpus.where(predicate).count()
-        # Cell count is a CATALOG property of the stride policy, not a
-        # training result: kmeans seeds every vec_id % IVF_STRIDE == 0
-        # row and empty clusters keep their previous centroid
-        # (operators/kmeans.py), so |cells| == |seed rows| exactly.
-        # Counting seeds keeps quantizer training out of the router —
-        # the prefilter route must not pay a k-means build for an
-        # index it never touches (r11 ADVICE #2).
-        cells = corpus.where(F.col("vec_id") % IVF_STRIDE == 0).count()
-        cache[key] = (corpus, n, surv, cells)
-    _, n, surv, cells = cache[key]
+    # Cell count is a CATALOG property of the stride policy, not a
+    # training result: kmeans seeds every vec_id % IVF_STRIDE == 0
+    # row and empty clusters keep their previous centroid
+    # (operators/kmeans.py), so |cells| == |seed rows| exactly.
+    # Counting seeds keeps quantizer training out of the router —
+    # the prefilter route must not pay a k-means build for an
+    # index it never touches (r11 ADVICE #2).
+    n, surv, cells = memo(
+        corpus.sparkSession,
+        "filter_route_stats",
+        (corpus, str(predicate)),
+        lambda: (
+            corpus.count(),
+            corpus.where(predicate).count(),
+            corpus.where(F.col("vec_id") % IVF_STRIDE == 0).count(),
+        ),
+    )
     expected_probed_survivors = surv * IVF_NPROBE / max(cells, 1)
     if expected_probed_survivors < fill_factor * k:
         return filtered_topk(queries, corpus, k, predicate, metric="cosine"), "prefilter"
@@ -230,26 +231,22 @@ def _posting_frames_cached(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(toks, tf): the persisted posting file (one row per token
     occurrence) and the per-(doc, token) term-frequency table — the
     shared lexical-index artifacts behind bm25/tfidf, memoized per
-    (session, corpus) via ``session.cached_persist`` so repeated
-    scoring calls reuse one cached relation pair."""
-    from ..session import cached_persist
-
+    (session, corpus) via ``session.memo`` so repeated scoring calls
+    reuse one cached relation pair."""
     spark = docs.sparkSession
-    toks = cached_persist(
+    toks = memo(
         spark,
         "posting_toks",
-        id(docs),
+        docs,
         lambda: docs.select(
             "doc_id", F.explode(F.split(F.col("text"), " ")).alias("tok")
-        ),
-        pin=docs,
+        ).persist(),
     )
-    tf = cached_persist(
+    tf = memo(
         spark,
         "posting_tf",
-        id(docs),
-        lambda: toks.groupBy("doc_id", "tok").agg(F.count("*").alias("tf")),
-        pin=docs,
+        docs,
+        lambda: toks.groupBy("doc_id", "tok").agg(F.count("*").alias("tf")).persist(),
     )
     return toks, tf
 
@@ -276,7 +273,7 @@ def bm25_topn(query_docs: DataFrame, docs: DataFrame, n: int) -> DataFrame:
     # the term join — persist both or Spark re-runs the full
     # scan+explode lineage per consumer (the repo-wide ≥2-consumer
     # rule). Lifecycle: the persisted posting frames are
-    # session-memoized per source corpus (session.cached_persist),
+    # session-memoized per source corpus (session.memo),
     # so repeated invocations in a long-lived session reuse ONE pair
     # of cached relations instead of accumulating; tfidf_topn shares
     # the same tf frame. clear_caches releases them.

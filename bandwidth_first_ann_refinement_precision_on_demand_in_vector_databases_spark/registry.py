@@ -33,6 +33,7 @@ from .operators.metrics import recall_at_k
 from .operators.refine import MODES, refine_metrics, refine_topk
 from .operators.topk import exact_topk, exact_topk_fixture_cached
 from .plans import duck_oracle
+from .session import memo, memo_dir
 from .sources.fixtures import (
     FIXTURE_EMBED_DIM,
     QUERY_STRIDE,
@@ -539,20 +540,18 @@ def q_refine_l2_tz_served_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``tests/test_layout.py::test_refinement_phase1_prunes_full_column``
     — the same layout). Results are identical to the in-session
     preparation, so the oracle is shared with ``refine_l2_tz_topk``."""
-    import tempfile
-
     from .operators.refine import refine_topk
     from .operators.refine import prepare_corpus as _prep
-    from .session import session_cache
 
-    cache = session_cache(spark, "refine_layout_path")
-    if sf_dir not in cache:
-        path = tempfile.mkdtemp(prefix="bfann-refine-layout-")
-        _prep(
+    path = memo_dir(
+        spark,
+        "refine-layout",
+        sf_dir,
+        lambda p: _prep(
             load_table(spark, sf_dir, "embeddings"), KEEP_M_DEFAULT, "l2-tz"
-        ).write.mode("overwrite").parquet(path)
-        cache[sf_dir] = path
-    prepared = spark.read.parquet(cache[sf_dir])
+        ).write.mode("overwrite").parquet(p),
+    )
+    prepared = spark.read.parquet(path)
     res = refine_topk(
         queries_view(spark, sf_dir),
         load_table(spark, sf_dir, "embeddings"),
@@ -891,15 +890,16 @@ def _pca_component_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     by construction, so caching it holds no corpus lineage."""
     from .operators.pca import PCA_ROUNDS, covariance_micro, power_iteration
     from .operators.simsearch import embedding_dim
-    from .session import session_cache
 
-    cache = session_cache(spark, "pca_component")
-    if sf_dir not in cache:
-        corpus = load_table(spark, sf_dir, "embeddings")
-        cache[sf_dir] = power_iteration(
+    corpus = load_table(spark, sf_dir, "embeddings")
+    return memo(
+        spark,
+        "pca_component",
+        sf_dir,
+        lambda: power_iteration(
             covariance_micro(corpus), embedding_dim(corpus), PCA_ROUNDS
-        )
-    return cache[sf_dir]
+        ),
+    )
 
 
 def q_embedding_pca_top(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1052,7 +1052,6 @@ from .registry_vectordb import (  # noqa: E402
     _sql_bq_words,
     _sql_mrl_cos as _SQL_MRL_COS,
 )
-from .session import session_cache  # noqa: E402
 
 # IVF: the IVF CTE chain (quantizer, assignment, probes — shared
 # verbatim with the ann_ivf_* oracles) probed per query.
@@ -1311,9 +1310,8 @@ def _composition_res(spark: SparkSession, sf_dir: str, name: str, keep_m: int):
     fixture, source, keep_m): a source's topk, metrics and recall
     queries share it — the served-index pattern every other ANN family
     follows. Released by ``session.clear_caches``."""
-    cache = session_cache(spark, "cushion")
-    key = (sf_dir, name, keep_m)
-    if key not in cache:
+
+    def build():
         res = cushion_topk(
             queries_view(spark, sf_dir),
             load_table(spark, sf_dir, "embeddings"),
@@ -1324,8 +1322,9 @@ def _composition_res(spark: SparkSession, sf_dir: str, name: str, keep_m: int):
             cache_key=sf_dir,
         )
         res.topk.persist()
-        cache[key] = res
-    return cache[key]
+        return res
+
+    return memo(spark, "cushion", (sf_dir, name, keep_m), build)
 
 
 def _composition_topk(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

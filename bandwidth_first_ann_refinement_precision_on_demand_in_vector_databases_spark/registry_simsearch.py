@@ -12,7 +12,6 @@ oracle template per shape.
 
 from __future__ import annotations
 
-import tempfile
 from collections.abc import Callable, Iterable
 from functools import partial
 from typing import NamedTuple
@@ -28,7 +27,7 @@ from .operators.kmeans import kmeans_sql_ctes
 from .operators.opq import OPQ_SCALE as _OPQ_SCALE
 from .operators.topk import exact_topk_fixture_cached
 from .operators.vamana import vamana_edges
-from .session import session_cache
+from .session import memo_dir
 from .sources.fixtures import (
     FIXTURE_EMBED_DIM,
     QUERY_STRIDE,
@@ -1925,17 +1924,6 @@ register_ann_pipelines(ANN_PIPELINES, SIMSEARCH_QUERIES, SIMSEARCH_ORACLES)
 # ---------------------------------------------------------------------------
 
 
-def _index_store_path(spark: SparkSession, sf_dir: str, kind: str, build) -> str:
-    """Session-memoized offline index build: run ``build(path)`` once
-    per (session, fixture dir, kind) into a temp dir, return the path."""
-    cache = session_cache(spark, f"{kind}_store_path")
-    if sf_dir not in cache:
-        path = tempfile.mkdtemp(prefix=f"bfann-{kind}-")
-        build(path)
-        cache[sf_dir] = path
-    return cache[sf_dir]
-
-
 def q_ann_graph_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Serve-path twin of ``ann_graph_topk``: the symmetrized KNN
     edge set is WRITTEN once per (session, fixture dir) as a parquet
@@ -1947,10 +1935,10 @@ def q_ann_graph_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .sources.layout import read_graph_index, write_graph_index
 
     corpus = load_table(spark, sf_dir, "embeddings")
-    path = _index_store_path(
+    path = memo_dir(
         spark,
-        sf_dir,
         "graph-index",
+        sf_dir,
         lambda p: write_graph_index(
             corpus, p, GRAPH_BEAM_K, cache_key=f"fixture:{sf_dir}"
         ),
@@ -1974,9 +1962,7 @@ def q_ann_pq_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .sources.layout import read_pq_index, write_pq_index
 
     corpus = load_table(spark, sf_dir, "embeddings")
-    path = _index_store_path(
-        spark, sf_dir, "pq-index", lambda p: write_pq_index(corpus, p)
-    )
+    path = memo_dir(spark, "pq-index", sf_dir, lambda p: write_pq_index(corpus, p))
     cb, codes = read_pq_index(spark, path)
     out = pq_topk_from_index(queries_view(spark, sf_dir), cb, codes, ANN_K)
     return out.select(
@@ -1993,9 +1979,7 @@ def q_ann_ivf_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .sources.layout import ivf_topk_from_store, write_cell_partitioned
 
     corpus = load_table(spark, sf_dir, "embeddings")
-    path = _index_store_path(
-        spark, sf_dir, "ivf-cells", lambda p: write_cell_partitioned(corpus, p)
-    )
+    path = memo_dir(spark, "ivf-cells", sf_dir, lambda p: write_cell_partitioned(corpus, p))
     cents = S.ivf_centroids(corpus)
     out = ivf_topk_from_store(spark, path, queries_view(spark, sf_dir), cents, ANN_K)
     return out.select(
@@ -2014,9 +1998,7 @@ def q_ann_ivfadc_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .sources.layout import write_ivfadc_index
 
     corpus = load_table(spark, sf_dir, "embeddings")
-    path = _index_store_path(
-        spark, sf_dir, "ivfadc-index", lambda p: write_ivfadc_index(corpus, p)
-    )
+    path = memo_dir(spark, "ivfadc-index", sf_dir, lambda p: write_ivfadc_index(corpus, p))
     out = ivfadc_topk_from_index(
         spark, path, queries_view(spark, sf_dir), corpus, ANN_K
     )
@@ -2036,10 +2018,10 @@ def q_ann_vamana_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .sources.layout import read_graph_index, write_vamana_index
 
     corpus = load_table(spark, sf_dir, "embeddings")
-    path = _index_store_path(
+    path = memo_dir(
         spark,
-        sf_dir,
         "vamana-index",
+        sf_dir,
         lambda p: write_vamana_index(corpus, p, cache_key=f"fixture:{sf_dir}"),
     )
     edges = read_graph_index(spark, path)
@@ -2060,8 +2042,8 @@ def q_ann_spann_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .sources.layout import spann_topk_from_store, write_spann_postings
 
     corpus = load_table(spark, sf_dir, "embeddings")
-    path = _index_store_path(
-        spark, sf_dir, "spann-postings", lambda p: write_spann_postings(corpus, p)
+    path = memo_dir(
+        spark, "spann-postings", sf_dir, lambda p: write_spann_postings(corpus, p)
     )
     cents = S.ivf_centroids(corpus)
     out = spann_topk_from_store(

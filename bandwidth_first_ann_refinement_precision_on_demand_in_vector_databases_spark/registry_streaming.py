@@ -8,10 +8,12 @@ results when fed through Structured Streaming with watermarks.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .session import memo_dir
 from .sources.fixtures import QUERY_STRIDE, load_table
 from .streaming.windows import (
     click_purchase_join,
@@ -380,16 +382,16 @@ def q_ann_stream_fresh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     through a REAL Structured Streaming foreachBatch query into a
     cell-partitioned parquet delta store (stateless quantizer routing,
     one append per micro-batch), then the top-K is served merge-on-read
-    from base ⊎ delta. The ingest runs once per session (memoized store
-    path, the ``_index_store_path`` idiom); the oracle replays the
+    from base ⊎ delta. The ingest runs once per session (a
+    ``session.memo_dir`` store); the oracle replays the
     final state in SQL — valid because last-wins keys on the data's
     seq, not on batch boundaries, so the served state is independent
     of how the stream was chopped (the batch≡stream property
     ``tests/test_streaming.py`` proves directly)."""
     from pyspark.sql import functions as F
 
+    from .operators.simsearch import ivf_centroids
     from .registry_simsearch import ANN_K
-    from .session import session_cache
     from .sources.fixtures import queries_view
     from .streaming.ingest import (
         change_stream_fixture,
@@ -399,14 +401,8 @@ def q_ann_stream_fresh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     corpus = load_table(spark, sf_dir, "embeddings")
-    cache = session_cache(spark, "stream_ingest_store")
-    if sf_dir not in cache:
-        import os
-        import tempfile
 
-        from .operators.simsearch import ivf_centroids
-
-        root = tempfile.mkdtemp(prefix="bfann-stream-ingest-")
+    def ingest(root: str) -> None:
         src, delta, ckpt = (os.path.join(root, d) for d in ("src", "delta", "ckpt"))
         change_stream_fixture(corpus).repartition(4).write.parquet(src)
         rows = [(r.centroid_id, r.cvec) for r in ivf_centroids(corpus).collect()]
@@ -427,9 +423,10 @@ def q_ann_stream_fresh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "stream ingest did not drain within 300s; "
                 "delta store is incomplete and will not be served"
             )
-        cache[sf_dir] = delta
+
+    delta = os.path.join(memo_dir(spark, "stream-ingest", sf_dir, ingest), "delta")
     out = serve_fresh_topk(
-        queries_view(spark, sf_dir), corpus, delta_latest(spark, cache[sf_dir]), ANN_K
+        queries_view(spark, sf_dir), corpus, delta_latest(spark, delta), ANN_K
     )
     return out.select(
         "query_id", "rank", "neighbor_id", F.round("score", 6).alias("score")
@@ -693,7 +690,6 @@ def q_stream_dedup_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from .registry_dedup import INC_MOD, INC_REM, MINHASH_TAU, SHINGLE_N
-    from .session import session_cache
     from .streaming.neardup import (
         init_neardup_store,
         read_decisions,
@@ -702,12 +698,8 @@ def q_stream_dedup_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    cache = session_cache(spark, "stream_neardup_store")
-    if sf_dir not in cache:
-        import os
-        import tempfile
 
-        root = tempfile.mkdtemp(prefix="bfann-stream-neardup-")
+    def ingest(root: str) -> None:
         src, store, ckpt = (os.path.join(root, d) for d in ("src", "store", "ckpt"))
         inc_pred = F.col("doc_id") % INC_MOD == INC_REM
         init_neardup_store(docs.where(~inc_pred), store, n=SHINGLE_N)
@@ -732,8 +724,9 @@ def q_stream_dedup_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "near-dup stream ingest did not drain within 300s; "
                 "decision log is incomplete and will not be served"
             )
-        cache[sf_dir] = store
-    return read_decisions(spark, cache[sf_dir])
+
+    root = memo_dir(spark, "stream-neardup", sf_dir, ingest)
+    return read_decisions(spark, os.path.join(root, "store"))
 
 
 def _sql_stream_neardup() -> str:
@@ -927,7 +920,6 @@ def q_stream_dedup_neardup_reordered(spark: SparkSession, sf_dir: str) -> DataFr
     from pyspark.sql import functions as F
 
     from .registry_dedup import INC_MOD, INC_REM, MINHASH_TAU, SHINGLE_N
-    from .session import session_cache
     from .streaming.neardup import (
         NEARDUP_LATENESS,
         flush_neardup_buffer,
@@ -938,12 +930,8 @@ def q_stream_dedup_neardup_reordered(spark: SparkSession, sf_dir: str) -> DataFr
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    cache = session_cache(spark, "stream_neardup_reordered_store")
-    if sf_dir not in cache:
-        import os
-        import tempfile
 
-        root = tempfile.mkdtemp(prefix="bfann-stream-neardup-reord-")
+    def ingest(root: str) -> None:
         src, store, ckpt = (os.path.join(root, d) for d in ("src", "store", "ckpt"))
         inc_pred = F.col("doc_id") % INC_MOD == INC_REM
         init_neardup_store(docs.where(~inc_pred), store, n=SHINGLE_N)
@@ -970,8 +958,9 @@ def q_stream_dedup_neardup_reordered(spark: SparkSession, sf_dir: str) -> DataFr
             spark, store, n=SHINGLE_N, threshold=MINHASH_TAU,
             lateness=NEARDUP_LATENESS,
         )
-        cache[sf_dir] = store
-    return read_decisions(spark, cache[sf_dir])
+
+    root = memo_dir(spark, "stream-neardup-reord", sf_dir, ingest)
+    return read_decisions(spark, os.path.join(root, "store"))
 
 
 STREAMING_QUERIES["stream_dedup_neardup_reordered"] = q_stream_dedup_neardup_reordered
@@ -995,16 +984,11 @@ def q_stream_spann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from .operators.simsearch import ivf_centroids
-    from .session import session_cache
     from .streaming.ingest import change_stream_fixture, start_spann_delta_ingest
 
     corpus = load_table(spark, sf_dir, "embeddings")
-    cache = session_cache(spark, "stream_spann_ingest_store")
-    if sf_dir not in cache:
-        import os
-        import tempfile
 
-        root = tempfile.mkdtemp(prefix="bfann-spann-ingest-")
+    def ingest(root: str) -> None:
         src, delta, ckpt = (os.path.join(root, d) for d in ("src", "delta", "ckpt"))
         change_stream_fixture(corpus).repartition(4).write.parquet(src)
         rows = [(r.centroid_id, r.cvec) for r in ivf_centroids(corpus).collect()]
@@ -1021,8 +1005,9 @@ def q_stream_spann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "spann stream ingest did not drain within 300s; "
                 "delta store is incomplete and will not be reported"
             )
-        cache[sf_dir] = delta
-    store = spark.read.parquet(cache[sf_dir])
+
+    root = memo_dir(spark, "spann-ingest", sf_dir, ingest)
+    store = spark.read.parquet(os.path.join(root, "delta"))
     return (
         store.groupBy(F.col("cell").cast("long").alias("cell"))
         .agg(

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions import text as T
+from .session import memo
 from .sources.fixtures import load_table
 
 
@@ -829,12 +830,10 @@ def q_corpus_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     ln1 = F.floor(F.log(u) * _DSIR_SCALE).cast("bigint")
     inner = (-ln1).cast("double") / F.lit(float(_DSIR_SCALE))
     g_micro = -F.floor(F.log(inner) * _DSIR_SCALE).cast("bigint")
-    from .session import cached_persist
-
     # three consumers: total agg, bucket counts, final rank — persisted
-    # ONCE per (session, fixture dir): cached_persist bounds repeated
+    # ONCE per (session, fixture dir): the memo bounds repeated
     # invocations to one cached relation (r07 cache-lifecycle guard)
-    keyed = cached_persist(
+    keyed = memo(
         spark,
         "dsir_keyed",
         sf_dir,
@@ -842,7 +841,7 @@ def q_corpus_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             F.col("__s").alias("w_micro"),
             (F.col("__s") + g_micro).alias("key_micro"),
-        ),
+        ).persist(),
     )
     from .operators.relational import parallel_global_rank
 
@@ -1380,16 +1379,14 @@ def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     combine) and the exact counts; the top-N selection is a bounded-K
     ``TakeOrderedAndProject`` (never a global window); estimates join
     the broadcast-sized per-depth sketch rows."""
-    from .session import cached_persist
-
     docs = load_table(spark, sf_dir, "documents")
-    hashed = cached_persist(
+    hashed = memo(
         spark,
         "cms_hashed",
         sf_dir,
         lambda: docs.select(
             F.explode(F.split(F.col("text"), " ")).alias("tok")
-        ).select("tok", T.poly_hash(F.col("tok")).alias("h")),
+        ).select("tok", T.poly_hash(F.col("tok")).alias("h")).persist(),
     )
     bucket_rows = hashed.select(
         F.explode(
@@ -1527,14 +1524,11 @@ def hll_distinct_estimate(docs: DataFrame) -> DataFrame:
     registered fixture query and the cross-cardinality accuracy test
     (``tests/test_sketches.py``), so there is exactly ONE copy of the
     sketch arithmetic."""
-    from .session import cached_persist
-
-    toks = cached_persist(
+    toks = memo(
         docs.sparkSession,
         "hll_toks",
-        id(docs),
-        lambda: docs.select(F.explode(F.split(F.col("text"), " ")).alias("tok")),
-        pin=docs,
+        docs,
+        lambda: docs.select(F.explode(F.split(F.col("text"), " ")).alias("tok")).persist(),
     )
     regs = hll_registers(toks.select(T.poly_hash(F.col("tok")).alias("v")))
     zs = regs.agg(

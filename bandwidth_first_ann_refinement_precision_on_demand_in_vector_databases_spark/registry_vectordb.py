@@ -26,7 +26,6 @@ from .registry_simsearch import (
     SQL_Q_CTE,
     SQL_RECALL_ROW,
     AnnPipeline,
-    _index_store_path,
     _sql_cos,
     _sql_dist2,
     _sql_hit_rate,
@@ -34,6 +33,7 @@ from .registry_simsearch import (
     register_ann_pipelines,
     sql_rerank,
 )
+from .session import memo, memo_dir
 from .sources.fixtures import QUERY_STRIDE, load_table, queries_view
 
 #: attribute predicate for the filtered-search queries (≈40% of the
@@ -788,16 +788,14 @@ def _maxsim_pool_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     dir) — the rerank, recall and bench queries share one stage-1
     scan, exactly as a serving stack runs candidate generation once
     per query batch. Released by ``session.clear_caches``."""
-    from .session import session_cache
-
-    cache = session_cache(spark, "maxsim_union_pool")
-    df = cache.get(sf_dir)
-    if df is None:
-        df = MV.maxsim_union_pool(
+    return memo(
+        spark,
+        "maxsim_union_pool",
+        sf_dir,
+        lambda: MV.maxsim_union_pool(
             queries_view(spark, sf_dir), load_table(spark, sf_dir, "embeddings")
-        ).persist()
-        cache[sf_dir] = df
-    return df
+        ).persist(),
+    )
 
 
 def q_ann_maxsim_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -905,9 +903,7 @@ def q_ann_maxsim_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .sources.layout import read_token_bags, write_token_bags
 
     corpus = load_table(spark, sf_dir, "embeddings")
-    path = _index_store_path(
-        spark, sf_dir, "token-bags", lambda p: write_token_bags(corpus, p)
-    )
+    path = memo_dir(spark, "token-bags", sf_dir, lambda p: write_token_bags(corpus, p))
     bags = read_token_bags(spark, path)
     out = MV.maxsim_topk_from_store(queries_view(spark, sf_dir), bags)
     return out.select(
@@ -1134,8 +1130,8 @@ def q_ann_cascade_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .sources.layout import read_cascade_index, write_cascade_index
 
     corpus = load_table(spark, sf_dir, "embeddings")
-    path = _index_store_path(
-        spark, sf_dir, "cascade-index", lambda p: write_cascade_index(corpus, p)
+    path = memo_dir(
+        spark, "cascade-index", sf_dir, lambda p: write_cascade_index(corpus, p)
     )
     sigs, codes = read_cascade_index(spark, path)
     out = BQ.cascade_topk_from_index(
@@ -1485,9 +1481,7 @@ def q_ann_rabitq_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .sources.layout import write_rabitq_index
 
     corpus = load_table(spark, sf_dir, "embeddings")
-    path = _index_store_path(
-        spark, sf_dir, "rabitq-index", lambda p: write_rabitq_index(corpus, p)
-    )
+    path = memo_dir(spark, "rabitq-index", sf_dir, lambda p: write_rabitq_index(corpus, p))
     out = rabitq_topk_from_index(
         spark, path, queries_view(spark, sf_dir), corpus, ANN_K
     )

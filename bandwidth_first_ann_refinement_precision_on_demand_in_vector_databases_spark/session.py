@@ -11,6 +11,8 @@ to the test fixtures (32) — production deployments override
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
 import weakref
 
 from pyspark.sql import SparkSession
@@ -20,20 +22,30 @@ DEFAULT_SHUFFLE_PARTITIONS = 32
 #: the directory that holds the package (its import root)
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-#: per-session memo dicts (prepared corpora, exact top-K frames,
-#: trained quantizers, fixture scans, ...). Keyed WEAKLY by the
-#: SparkSession object: entries die with the session instead of
-#: pinning DataFrames of a stopped context forever, and no module
-#: needs an ``id(spark)`` tuple element that a recycled id could
-#: alias. Values are ``{cache_name: {key: frame(s)}}``.
+#: per-session memo store: ``{kind: {key: value}}`` for every
+#: artifact the engine reuses across queries (prepared corpora, exact
+#: top-K frames, trained quantizers, fixture scans, stored index
+#: directories). Keyed WEAKLY by the SparkSession object so no module
+#: needs an ``id(spark)`` key. The weak key does not bound the
+#: entries' life: every cached DataFrame holds its ``_session``, so a
+#: session with memoized frames stays reachable. ``clear_caches`` is
+#: the lifecycle.
 _SESSION_CACHES: "weakref.WeakKeyDictionary[SparkSession, dict[str, dict]]" = (
     weakref.WeakKeyDictionary()
 )
 
+#: entries per memo kind; past it the oldest entry is dropped, so a
+#: loop that memoizes per-call frames cannot grow a kind without bound
+MEMO_MAX_ENTRIES = 256
+
+#: the store kind that records every directory ``memo_dir`` created
+_DIRS_KIND = "memo_dirs"
+
 
 def session_cache(spark: SparkSession, name: str) -> dict:
-    """The named memo dict for this session (created on first use).
-    Modules keep their cache keys; the session scoping lives here."""
+    """The raw ``{key: value}`` dict of one memo kind for this session
+    (created on first use) — the store accessor behind :func:`memo`,
+    for inspection; engine code memoizes through :func:`memo`."""
     per = _SESSION_CACHES.get(spark)
     if per is None:
         per = {}
@@ -41,48 +53,58 @@ def session_cache(spark: SparkSession, name: str) -> dict:
     return per.setdefault(name, {})
 
 
-def cached_persist(spark: SparkSession, name: str, key, build, pin=None):
-    """A persisted frame memoized per (session, ``name``, ``key``) —
-    the lifecycle guard for OPERATOR-SCOPE persists (r07 verdict
-    "what's wrong" #1): an operator that persists a ≥2-consumer
-    internal frame (bm25/tfidf posting files, sketch token tables, the
-    DSIR key frame) would otherwise add a NEW cached relation on every
-    invocation of a long-lived session, growing storage memory without
-    bound until a catalog-wide clear. Memoizing the persisted frame
-    keeps repeated invocations on ONE cached relation; the entry count
-    is bounded by the number of distinct (name, key) pairs, and
-    ``clear_caches`` releases everything.
+def memo(spark: SparkSession, kind: str, key, build):
+    """``build()`` once per (session, ``kind``, ``key``); later calls
+    return the same value until ``clear_caches``.
 
-    ``build`` is a zero-arg callable returning the frame to persist;
-    ``pin`` optionally holds the source object alive so a recycled
-    ``id()`` key can never alias a dead frame (the session-cache
-    rule)."""
-    cache = session_cache(spark, name)
-    if key not in cache:
-        cache[key] = (pin, build().persist())
-    return cache[key][1]
+    Keys may hold DataFrames: a DataFrame hashes and compares by
+    identity, and the entry keeps it alive, so a key never aliases a
+    collected frame. A ``build`` that raises caches nothing. Each kind
+    keeps at most ``MEMO_MAX_ENTRIES`` entries, oldest dropped first."""
+    cache = session_cache(spark, kind)
+    if key in cache:
+        return cache[key]
+    value = build()
+    cache[key] = value
+    if len(cache) > MEMO_MAX_ENTRIES:
+        del cache[next(iter(cache))]
+    return value
+
+
+def memo_dir(spark: SparkSession, kind: str, key, write) -> str:
+    """A session-owned store directory: once per (session, ``kind``,
+    ``key``) create ``bfann-<kind>-*`` under the temp dir, run
+    ``write(path)`` into it and return the path. The directory is
+    recorded before ``write`` runs, so ``clear_caches`` deletes it
+    even when ``write`` raises (which caches nothing)."""
+
+    def build() -> str:
+        path = tempfile.mkdtemp(prefix=f"bfann-{kind}-")
+        session_cache(spark, _DIRS_KIND)[path] = kind
+        write(path)
+        return path
+
+    return memo(spark, kind, key, build)
 
 
 def clear_caches(spark: SparkSession | None = None) -> None:
-    """Release every memoized/persisted frame (cache lifecycle for
-    long-lived sessions: sweep loops, CLI exit, benchmarks).
+    """Release every memoized artifact (cache lifecycle for long-lived
+    sessions: sweep loops, CLI exit, benchmarks).
 
-    Drops all per-session memo dicts and clears the session's SQL
-    cache (``catalog.clearCache()`` unpersists every cached relation —
-    including per-query internal persists like the curation canonical
-    set or dedup band indexes whose frames the memo dicts never saw).
-    With no argument, clears every live session."""
+    Drops the session's memo store, deletes the directories
+    ``memo_dir`` created, and clears the session's SQL cache
+    (``catalog.clearCache()`` unpersists every cached relation —
+    including per-query internal persists the memo never saw). With
+    no argument, clears every live session."""
     sessions = [spark] if spark is not None else list(_SESSION_CACHES)
     for s in sessions:
-        per = _SESSION_CACHES.get(s)
-        if per is not None:
-            for cache in per.values():
-                cache.clear()
-            per.clear()
+        per = _SESSION_CACHES.pop(s, {})
         try:
             s.catalog.clearCache()
         except Exception:
             pass  # session already stopped — nothing left to release
+        for path in per.get(_DIRS_KIND, ()):
+            shutil.rmtree(path, ignore_errors=True)
 
 
 def get_spark(

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import session_cache
+from ..session import memo
 
 FIXTURE_TABLES = (
     "region",
@@ -53,24 +53,21 @@ NANO_TS_COLUMNS = {
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one fixture table. Filters/projections push into the scan.
 
-    Memoized per session (``session.session_cache``): spark.read.parquet
-    pays file listing + footer/schema resolution on every call
-    (~0.1-1s of driver/JVM time) and a registry run touches each table
-    dozens of times. DataFrames are immutable, so handing back the
-    same object is safe; weak session keying means entries die with
-    the session instead of pinning a stopped context."""
-    cache = session_cache(spark, "fixture_tables")
-    key = (sf_dir, name)
-    cached = cache.get(key)
-    if cached is not None:
-        return cached
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    for col in NANO_TS_COLUMNS.get(name, ()):
-        if dict(df.dtypes).get(col) == "bigint":
-            df = df.withColumn(col, F.timestamp_micros(F.expr(f"{col} div 1000")))
-    cache[key] = df
-    return df
+    Memoized per session (``session.memo``): spark.read.parquet pays
+    file listing + footer/schema resolution on every call (~0.1-1s of
+    driver/JVM time) and a registry run touches each table dozens of
+    times. DataFrames are immutable, so handing back the same object
+    is safe."""
+
+    def scan() -> DataFrame:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        for col in NANO_TS_COLUMNS.get(name, ()):
+            if dict(df.dtypes).get(col) == "bigint":
+                df = df.withColumn(col, F.timestamp_micros(F.expr(f"{col} div 1000")))
+        return df
+
+    return memo(spark, "fixture_tables", (sf_dir, name), scan)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -8,6 +8,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spark import (
+    clear_caches,
     get_spark,
 )
 
@@ -39,6 +40,8 @@ def spark():
         },
     )
     yield session
+    # deletes the store directories the session's queries wrote
+    clear_caches(session)
 
 
 @pytest.fixture(scope="session")

@@ -6,6 +6,13 @@ cached partitions without bound."""
 
 from __future__ import annotations
 
+import io
+import os
+import tokenize
+from pathlib import Path
+from urllib.parse import urlparse
+
+import bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spark as pkg
 from bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spark.operators.pq import (
     pq_codebook,
 )
@@ -16,6 +23,7 @@ from bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spar
     exact_topk_fixture_cached,
 )
 from bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spark.session import (
+    MEMO_MAX_ENTRIES,
     clear_caches,
     session_cache,
 )
@@ -85,9 +93,9 @@ def test_repeated_operator_invocation_keeps_cache_bounded(spark, sf_small):
 
 def test_embedding_dim_memo_is_hard_capped(spark, sf_small):
     """r12 ADVICE #4: per-call derived frames must not grow the
-    embedding_dim memo without bound — the cache caps at 256 entries
-    and evicts the oldest pin instead of retaining every plan it ever
-    peeked."""
+    embedding_dim memo without bound — every memo kind caps at
+    ``MEMO_MAX_ENTRIES`` and evicts the oldest entry instead of
+    retaining every plan it ever peeked."""
     from bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spark.operators.simsearch import (
         embedding_dim,
     )
@@ -99,10 +107,13 @@ def test_embedding_dim_memo_is_hard_capped(spark, sf_small):
     corpus = load_table(spark, sf_small, "embeddings")
     frames = [corpus.select("vec_id", "embedding") for _ in range(6)]
     cache = session_cache(spark, "embedding_dim")
-    cache.update({(i, "x"): (None, 64) for i in range(256)})  # fill to the cap
+    cache.update({(i, "x"): 64 for i in range(MEMO_MAX_ENTRIES)})  # fill to the cap
     for f in frames:
         assert embedding_dim(f) > 0
-    assert len(session_cache(spark, "embedding_dim")) <= 256
+    assert len(cache) <= MEMO_MAX_ENTRIES
+    # the newest entries stay, the oldest fillers went first
+    assert all((f, "embedding") in cache for f in frames)
+    assert (0, "x") not in cache and (MEMO_MAX_ENTRIES - 1, "x") in cache
     clear_caches(spark)
 
 
@@ -130,3 +141,73 @@ def test_compact_cells_does_not_grow_the_assignment_memo(spark, sf_small):
     assert len(session_cache(spark, "ivf_assign")) == n_memo
     assert _n_persistent(spark) == n_persist
     clear_caches(spark)
+
+
+def _store_dirs(df) -> set[str]:
+    """The ``bfann-*`` store directories a plan scans."""
+    dirs = set()
+    for f in df.inputFiles():
+        parts = urlparse(f).path.split("/")
+        dirs.update(
+            "/".join(parts[: i + 1]) for i, p in enumerate(parts) if p.startswith("bfann-")
+        )
+    return dirs
+
+
+def test_clear_caches_deletes_store_directories(spark, sf_small):
+    """Stored index layouts live in session-owned temp directories:
+    ``clear_caches`` deletes them, and the next call rebuilds the same
+    result into new ones."""
+    from bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spark import (
+        registry,
+    )
+
+    def run() -> dict:
+        out = {}
+        for name in ("ann_pq_index_topk", "refine_l2_tz_served_topk"):
+            df = registry.QUERIES[name](spark, sf_small)
+            dirs = _store_dirs(df)
+            assert dirs and all(os.path.isdir(d) for d in dirs), (name, dirs)
+            out[name] = (dirs, sorted(df.collect()))
+        return out
+
+    clear_caches(spark)
+    first = run()
+    clear_caches(spark)
+    for name, (dirs, _) in first.items():
+        assert not any(os.path.exists(d) for d in dirs), (name, dirs)
+    second = run()
+    for name, (dirs, rows) in second.items():
+        assert rows == first[name][1], name
+        assert dirs.isdisjoint(first[name][0]), name
+    clear_caches(spark)
+
+
+#: what only ``session.py`` may contain: the raw store accessor, the
+#: removed per-module memo helpers, and private temp-dir stores
+_FORBIDDEN = (
+    "session_cache(", "cached_persist", "tempfile.mkdtemp", "_index_store_path",
+    "kmeans_persisted",
+)
+
+
+def test_one_memo_path_in_the_package():
+    """Every memo in the package goes through ``session.memo`` /
+    ``session.memo_dir``: outside ``session.py`` no module touches the
+    raw store, creates its own temp-dir store, or keys anything by
+    ``id(...)`` (a frame is its own key)."""
+    root = Path(pkg.__file__).parent
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        if path.name == "session.py" and path.parent == root:
+            continue
+        src = path.read_text()
+        offenders += [f"{path.name}: {w}" for w in _FORBIDDEN if w in src]
+        toks = [
+            t for t in tokenize.generate_tokens(io.StringIO(src).readline)
+            if t.type not in (tokenize.COMMENT, tokenize.NL, tokenize.NEWLINE)
+        ]
+        for prev, tok, nxt in zip(toks, toks[1:], toks[2:]):
+            if tok.string == "id" and nxt.string == "(" and prev.string != ".":
+                offenders.append(f"{path.name}:{tok.start[0]}: id(")
+    assert not offenders, offenders

@@ -834,8 +834,8 @@ def test_routing_cell_count_is_catalog_derived_not_trained(spark, sf_small):
     trained = S.ivf_centroids(corpus).count()
     assert derived == trained
 
-    # a distinct frame (fresh id()) through the prefilter route: the
-    # centroid memo must not grow
+    # a distinct frame through the prefilter route: the centroid memo
+    # must not grow
     fresh = load_table(spark, sf_small, "embeddings").where(F.lit(True))
     memo = session_cache(spark, "ivf_centroids")
     before = set(memo.keys())
@@ -844,3 +844,4 @@ def test_routing_cell_count_is_catalog_derived_not_trained(spark, sf_small):
     )
     assert route == "prefilter"
     assert set(memo.keys()) == before, "router trained a quantizer"
+    assert not any(key[0] is fresh for key in memo), "router trained a quantizer"
