@@ -53,26 +53,38 @@ direction after truncation and the per-coordinate Δ bound no longer
 covers the normalization drift — a boundary of the reference's own
 math, inherited by design for parity.
 
-**Physical plan** (what Catalyst sees): broadcast queries → cross join
-against the *reduced columns only* (column pruning keeps full
-precision unread) → salted two-phase window for the seed → broadcast
-join of the tiny seed/survivor sets back to the full-precision column
-(late materialization, J2) → final window. Shuffles: the seed rank
-(on (query_id, shard)) and two joins of K-to-survivor-sized frames.
+**Physical plan** (what Catalyst sees): phase 1 is one NumPy kernel
+(``phase1_kernel``) run by ``mapInArrow`` over the *reduced columns
+only* (column pruning keeps full precision unread), scoring each
+partition's rows against the broadcast query matrix where they sit; it
+leaves each pair's reduced and admission scores, persisted. The seed rank is one
+unsalted window (Spark adds its map-side ``WindowGroupLimit`` under
+the single exchange); τ₀ and the K-th seed's place come from the
+seeds' exact scores; then ONE filter over the scalars joined to that
+broadcast row picks the fetch set — cushion survivors and seeds
+alike — and ``full`` is read once for it (late materialization, J2)
+before the final window. The kernel's folds are strict left folds
+from 0.0 in DOUBLE, the order of ``F.aggregate`` and of the DuckDB
+oracles' ``list_sum``, which is what keeps every phase-1 scalar — and
+with it every seed, τ₀, survivor and metrics row — bit-identical to
+the Column folds the oracles mirror.
 """
 
 from __future__ import annotations
 
+import functools
 import math
 from collections.abc import Callable
 from dataclasses import dataclass
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.fp16 import FP16_EXP_BITS, with_fp16_rounded, with_reduced_precision
 from ..session import ensure_parallelism, memo
-from ..functions.vector import NORM_EPS, delta_from_exp_col, dot, l2_norm, unit
+from ..functions.vector import NORM_EPS, delta_from_exp_col, dist2, dot, l2_norm, unit
 from .topk import topk_per_query
 
 MODES = ("cos-hoeff", "cos-l1", "cos-l2", "l2-sym", "l2-tz", "l2-hoeff")
@@ -190,68 +202,199 @@ def prepare_queries(queries: DataFrame, mode: str, vec_col: str = "embedding") -
 
 
 # ---------------------------------------------------------------------------
-# Cushion expressions (P8) — all Column-level, evaluated inside the join
+# Phase-1 kernel (P8): reduced score, cushion and exact score per pair
 # ---------------------------------------------------------------------------
 
-def _fold_sum(arr: Column) -> Column:
-    return F.aggregate(arr, F.lit(0.0), lambda acc, v: acc + v)
+#: kernel block: rows × queries evaluated at once, so a worker's
+#: (D, rows, queries) DOUBLE temporaries stay ~2 MB each at D=64
+KERNEL_ROWS = 512
+KERNEL_QUERIES = 8
 
 
-def cushion_expr(mode: str, delta_param: float | None) -> Column:
-    """The additive cushion (cosine) or subtractive slack (L2).
+def _left_fold(terms: np.ndarray) -> np.ndarray:
+    """Σ over the leading (dimension) axis as a strict left fold from
+    0.0 — the order of ``F.aggregate(arr, 0.0, (acc, v) -> acc + v)``
+    and of the DuckDB oracles' ``list_sum``. NumPy's ``sum`` adds
+    pairwise and would change the last bits."""
+    acc = np.zeros(terms.shape[1:])
+    for t in terms:
+        acc += t
+    return acc
 
-    Operates on columns ``q`` (query vector), ``redv``, ``delta``,
-    ``embedding`` (raw, for tz signs), ``bconst``, ``s_hat``.
+
+def phase1_kernel(
+    mode: str,
+    hconst: float,
+    q: np.ndarray,
+    redv: np.ndarray,
+    delta: np.ndarray,
+    raw: np.ndarray | None = None,
+    bconst: np.ndarray | None = None,
+    full: np.ndarray | None = None,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray | None]:
+    """``(red_score, admit_score, exact_score)`` of every pair.
+
+    Vector arguments are dimension-first and broadcast against each
+    other over the pair axes: ``q`` is the query (unit space for cos-*,
+    value space for l2-*), ``redv``/``delta``/``raw``/``full`` the
+    corpus row's reduced vector, error radii, raw float32 vector (l2-tz
+    signs) and full-precision vector; ``bconst`` (cos-l2) is per pair
+    axis. ``hconst`` is ``hoeff_const(δ)`` for the Hoeffding modes.
+    ``exact_score`` is computed only when ``full`` is given.
+
+    Every fold is ``_left_fold`` over per-element DOUBLE terms written
+    in the operand order of the reference formulas
+    (``ANNCode.py:312-632``), so every scalar is bit-identical to the
+    Column-expression folds the DuckDB oracles mirror:
+
+    * cos: ŝ = Σ redv·q; admit = ŝ + cushion (cos-hoeff
+      ``hconst·√Σ(q·Δ)²``, cos-l1 ``Σ|q|·Δ``, cos-l2 ``bconst``);
+    * l2 (a = q − redv): d̂² = Σ a·a; admit = the distance lower bound
+      (l2-sym ``Σ max(|a|−Δ,0)²``; l2-tz the sign-aware 3-case bound,
+      s = sign of the raw coordinate, b = a·s: b ≤ 0 → a², b < Δ → 0,
+      else (|a|−Δ)²; l2-hoeff ``d̂² − 2·hconst·√Σ(a·Δ)²``).
     """
-    if mode == "cos-hoeff":
-        qd = F.zip_with("q", "delta", lambda q, d: q * d.cast("double"))
-        return F.lit(hoeff_const(delta_param)) * F.sqrt(
-            _fold_sum(F.transform(qd, lambda v: v * v))
+    exact = None
+    if is_cosine(mode):
+        red = _left_fold(redv * q)
+        if mode == "cos-hoeff":
+            qd = q * delta
+            admit = red + hconst * np.sqrt(_left_fold(qd * qd))
+        elif mode == "cos-l1":
+            admit = red + _left_fold(np.abs(q) * delta)
+        else:
+            admit = red + bconst
+        if full is not None:
+            exact = _left_fold(full * q)
+    else:
+        a = q - redv
+        red = _left_fold(a * a)
+        if mode == "l2-sym":
+            lower = np.maximum(np.abs(a) - delta, 0.0)
+            admit = _left_fold(lower * lower)
+        elif mode == "l2-tz":
+            b = a * np.where(raw < 0, -1.0, 1.0)
+            over = np.abs(a) - delta
+            admit = _left_fold(np.where(b <= 0, a * a, np.where(b < delta, 0.0, over * over)))
+        else:
+            ad = a * delta
+            admit = red - 2.0 * hconst * np.sqrt(_left_fold(ad * ad))
+        if full is not None:
+            e = q - full
+            exact = _left_fold(e * e)
+    return red, admit, exact
+
+
+def _matrix(batch: pa.RecordBatch, name: str, dtype) -> np.ndarray:
+    """An ``array<…>`` column as an (n, D) matrix."""
+    col = batch.column(name)
+    values = np.asarray(col.flatten().to_numpy(zero_copy_only=False), dtype=dtype)
+    n = len(col)
+    if n and values.size % n == 0:
+        mat = values.reshape(n, values.size // n)
+        if np.all(np.diff(col.offsets.to_numpy()) == mat.shape[1]):
+            return mat
+    raise ValueError(f"phase 1 needs every {name} vector to have one dimension")
+
+
+def _phase1_arrow(batches, bc, mode: str, hconst: float, exact: bool):
+    """The ``mapInArrow`` body of :func:`phase1_scores`: a batch without
+    ``query_id`` pairs every row with every broadcast query, in blocks
+    of ``KERNEL_ROWS`` × ``KERNEL_QUERIES``; a batch with ``query_id``
+    looks each row's query up (rows whose query is not broadcast drop,
+    as in an inner join)."""
+    q_ids, q_mat = bc.value
+    q_dims = q_mat.T
+    by_id = np.argsort(q_ids, kind="stable")
+    for batch in batches:
+        n = batch.num_rows
+        if n == 0 or len(q_ids) == 0:
+            continue
+        names = batch.schema.names
+        vec_id = batch.column("vec_id").to_numpy(zero_copy_only=False)
+        # dimension-first views of the row-major vectors
+        vecs = {"redv": _matrix(batch, "redv", np.float64).T,
+                "delta": _matrix(batch, "delta", np.float64).T}
+        if "embedding" in names:
+            vecs["raw"] = _matrix(batch, "embedding", np.float32).T
+        if exact:
+            vecs["full"] = _matrix(batch, "full", np.float64).T
+        bconst = (
+            batch.column("bconst").to_numpy(zero_copy_only=False).astype(np.float64)
+            if "bconst" in names else None
         )
-    if mode == "cos-l1":
-        return _fold_sum(
-            F.zip_with("q", "delta", lambda q, d: F.abs(q) * d.cast("double"))
-        )
-    if mode == "cos-l2":
-        return F.col("bconst")
-    raise ValueError(f"no additive cushion for mode {mode!r}")
+        if "query_id" in names:
+            row_q = batch.column("query_id").to_numpy(zero_copy_only=False)
+            pos = by_id[np.minimum(np.searchsorted(q_ids, row_q, sorter=by_id), len(q_ids) - 1)]
+            known = np.flatnonzero(q_ids[pos] == row_q)
+            step = KERNEL_ROWS * KERNEL_QUERIES
+            for r in (known[i:i + step] for i in range(0, len(known), step)):
+                scores = phase1_kernel(
+                    mode, hconst, q_dims[:, pos[r]],
+                    bconst=None if bconst is None else bconst[r],
+                    **{name: v[:, r] for name, v in vecs.items()},
+                )
+                yield _pairs_batch(row_q[r], vec_id[r], *scores)
+            continue
+        for q0 in range(0, len(q_ids), KERNEL_QUERIES):
+            qs = slice(q0, q0 + KERNEL_QUERIES)
+            for r0 in range(0, n, KERNEL_ROWS):
+                r = slice(r0, r0 + KERNEL_ROWS)
+                red, admit, ex = phase1_kernel(
+                    mode, hconst, q_dims[:, None, qs],
+                    bconst=None if bconst is None else bconst[r, None],
+                    **{name: v[:, r, None] for name, v in vecs.items()},
+                )
+                rows, cols = red.shape
+                yield _pairs_batch(
+                    np.tile(q_ids[qs], rows), np.repeat(vec_id[r], cols),
+                    red.ravel(), admit.ravel(), None if ex is None else ex.ravel(),
+                )
 
 
-def l2_lower_bound_expr(mode: str, delta_param: float | None) -> Column:
-    """Lower bound on the exact squared distance (L2 modes).
+def _pairs_batch(query_id, vec_id, red, admit, exact) -> pa.RecordBatch:
+    arrays = [pa.array(query_id, pa.int64()), pa.array(vec_id, pa.int64()),
+              pa.array(red, pa.float64()), pa.array(admit, pa.float64())]
+    names = ["query_id", "vec_id", "red_score", "admit_score"]
+    if exact is not None:
+        arrays.append(pa.array(exact, pa.float64()))
+        names.append("exact_score")
+    return pa.RecordBatch.from_arrays(arrays, names=names)
 
-    ``a = q − redv`` is the reduced residual (``ANNCode.py:546``).
-    """
-    a = F.zip_with("q", "redv", lambda q, r: q - r)
-    if mode == "l2-sym":
-        # Σ max(|a|−Δ, 0)²   (``_lb_sym``, ANNCode.py:500-505)
-        def sym_term(x, d):
-            lower = F.greatest(F.abs(x) - d.cast("double"), F.lit(0.0))
-            return lower * lower
 
-        return _fold_sum(F.zip_with(a, "delta", sym_term))
-    if mode == "l2-tz":
-        # sign-aware 3-case bound (``_lb_tz``, ANNCode.py:508-522):
-        # s = sign of the truncated coordinate; b = a·s;
-        # b ≤ 0 → a², 0 < b < Δ → 0, b ≥ Δ → (|a|−Δ)²
-        z = F.arrays_zip(a.alias("a"), F.col("delta").alias("d"), F.col("embedding").alias("raw"))
-        def term(p):
-            s = F.when(p["raw"].cast("double") < 0, F.lit(-1.0)).otherwise(F.lit(1.0))
-            b = p["a"] * s
-            d = p["d"].cast("double")
-            return (
-                F.when(b <= 0, p["a"] * p["a"])
-                .when(b < d, F.lit(0.0))
-                .otherwise((F.abs(p["a"]) - d) * (F.abs(p["a"]) - d))
-            )
-        return _fold_sum(F.transform(z, term))
-    if mode == "l2-hoeff":
-        # ‖a‖² − 2·√(2 ln(1/δ))·‖a∘Δ‖₂   (ANNCode.py:630-632)
-        ad = F.zip_with(a, "delta", lambda x, d: x * d.cast("double"))
-        return F.col("d2_hat") - F.lit(2.0 * hoeff_const(delta_param)) * F.sqrt(
-            _fold_sum(F.transform(ad, lambda v: v * v))
-        )
-    raise ValueError(f"no l2 lower bound for mode {mode!r}")
+def phase1_scores(
+    rows: DataFrame,
+    qs: DataFrame,
+    mode: str,
+    delta: float | None,
+    exact: bool = False,
+) -> DataFrame:
+    """``(query_id, vec_id, red_score, admit_score[, exact_score])`` per
+    pair: :func:`phase1_kernel` run by ``mapInArrow`` over ``rows``
+    where they sit, against the prepared queries ``qs`` (collected once
+    and broadcast, the ``exact_topk_pruned`` idiom). ``rows`` carries
+    ``vec_id``, ``redv``, ``delta`` and the mode's extra columns
+    (``embedding`` for l2-tz, ``bconst`` for cos-l2, ``full`` when
+    ``exact``); with a ``query_id`` column it is a candidate stream,
+    otherwise it is crossed with every query. Ids keep their input
+    types."""
+    spark = rows.sparkSession
+    q_rows = qs.collect()
+    q_ids = np.array([r["query_id"] for r in q_rows], dtype=np.int64)
+    q_mat = np.array([r["q"] for r in q_rows], dtype=np.float64).reshape(len(q_rows), -1)
+    bc = spark.sparkContext.broadcast((q_ids, q_mat))
+    hconst = hoeff_const(delta) if "hoeff" in mode else 0.0
+    scalars = ["red_score", "admit_score"] + (["exact_score"] if exact else [])
+    out = rows.mapInArrow(
+        functools.partial(_phase1_arrow, bc=bc, mode=mode, hconst=hconst, exact=exact),
+        "query_id bigint, vec_id bigint, " + ", ".join(f"{c} double" for c in scalars),
+    )
+    q_type = (rows if "query_id" in rows.columns else qs).schema["query_id"].dataType
+    return out.select(
+        F.col("query_id").cast(q_type).alias("query_id"),
+        F.col("vec_id").cast(rows.schema["vec_id"].dataType).alias("vec_id"),
+        *scalars,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -303,9 +446,10 @@ def refine_topk(
     if prepared_corpus is not None:
         corp = prepared_corpus
     else:
-        # the prepared corpus feeds three plan branches (phase-1 scan,
-        # seed fetch, survivor fetch) and — via the cache — every other
-        # refine query over the same (source, keep_m)
+        # the prepared corpus feeds two plan branches (phase-1 scan,
+        # the one full-precision read for seeds and fetch set) and —
+        # via the cache — every other refine query over the same
+        # (source, keep_m)
         corp = prepare_corpus_cached(corpus, keep_m, mode, cache_key)
     qs = prepare_queries(queries, mode)
 
@@ -318,97 +462,85 @@ def refine_topk(
         + (["embedding"] if mode == "l2-tz" else [])
         + (["bconst"] if mode == "cos-l2" else [])
     )
-    if candidate_ids is None:
-        pairs = corp.select(*reduced_cols).crossJoin(F.broadcast(qs))
-    else:
+    rows = corp.select(*reduced_cols)
+    if candidate_ids is not None:
         # candidate stream: equi-join on vec_id prunes the cheap pass
         # to the index's candidates (at scale: a partition-pruned scan
-        # of the probed cells), queries still broadcast
-        pairs = candidate_ids.join(corp.select(*reduced_cols), "vec_id").join(
-            F.broadcast(qs), "query_id"
-        )
-    if cos:
-        pairs = pairs.withColumn("s_hat", dot("redv", "q"))
-        phase1_score, ascending = "s_hat", False
-        # admit when s_hat + cushion >= tau0 ⇔ admit_score >= tau0
-        admit = F.col("s_hat") + cushion_expr(mode, delta)
-    else:
-        d2_hat = _fold_sum(
-            F.transform(F.zip_with("q", "redv", lambda q, r: q - r), lambda v: v * v)
-        )
-        pairs = pairs.withColumn("d2_hat", d2_hat)
-        phase1_score, ascending = "d2_hat", True
-        # admit when the distance lower bound <= tau0
-        admit = l2_lower_bound_expr(mode, delta)
+        # of the probed cells); the kernel looks each row's query up
+        rows = candidate_ids.join(rows, "vec_id")
 
-    # The phase-1 scan feeds two consumers (seed rank, cushion filter).
-    # Reduce each pair to three scalars and cache that, so the array
-    # arithmetic (scores + cushions, the expensive folds) runs exactly
-    # once per pair. At production scale this frame is q·N scalars —
-    # MEMORY_AND_DISK-spillable and far smaller than re-reading the
-    # reduced vector pages for a second scoring pass.
-    scored = pairs.select(
-        "query_id",
-        "vec_id",
-        F.col(phase1_score).alias("red_score"),
-        admit.alias("admit_score"),
-    ).persist()
+    # The phase-1 scan feeds two consumers (seed rank, fetch filter).
+    # Each pair is reduced to two scalars where its row sits, and that
+    # is cached, so the folds run exactly once per pair. At production
+    # scale this frame is q·N scalars — MEMORY_AND_DISK-spillable and
+    # far smaller than re-reading the reduced vector pages.
+    scored = phase1_scores(rows, qs, mode, delta).persist()
 
     # ---- seed: best K under the reduced score (W5) ----
-    seed_ids = topk_per_query(
+    # unsalted: Spark plans a map-side WindowGroupLimit under the one
+    # exchange, which is what the salted phase would add
+    seeds = topk_per_query(
         scored.select("query_id", F.col("vec_id").alias("neighbor_id"),
                       F.col("red_score").alias("score")),
         k,
-        ascending=ascending,
-    ).select("query_id", "neighbor_id")
+        ascending=not cos,
+        salted=False,
+    )
 
     exact_score = _exact_score_expr(cos)
     full_side = corp.select(F.col("vec_id").alias("neighbor_id"), "full")
-    seed_exact = (
-        seed_ids.join(full_side, "neighbor_id")
-        .join(F.broadcast(qs), "query_id")
-        .select("query_id", "neighbor_id", exact_score.alias("score"))
+    q_side = F.broadcast(qs)
+
+    # τ₀ = K-th best exact seed score: the fixed admission threshold;
+    # (cut_score, cut_id) = the K-th seed's place in the seed order
+    bounds = (
+        seeds.join(full_side, "neighbor_id")
+        .join(q_side, "query_id")
+        .groupBy("query_id")
+        .agg(
+            (F.min if cos else F.max)(exact_score).alias("tau0"),
+            F.max_by("score", "rank").alias("cut_score"),
+            F.max_by("neighbor_id", "rank").alias("cut_id"),
+        )
     )
 
-    # τ₀ = K-th best exact seed score: the fixed admission threshold.
-    tau0 = seed_exact.groupBy("query_id").agg(
-        (F.min("score") if cos else F.max("score")).alias("tau0")
-    )
-
-    # ---- cushion filter over non-seed candidates (P8) ----
-    rest = scored.join(
-        F.broadcast(seed_ids.withColumnRenamed("neighbor_id", "vec_id")),
-        ["query_id", "vec_id"],
-        "left_anti",
-    ).join(F.broadcast(tau0), "query_id")
+    # ---- one fetch set: cushion survivors (P8) plus the seeds ----
+    # A pair is a seed iff it sorts at or before the K-th seed in the
+    # seed rank's (red_score, vec_id) order, so the seeds join the
+    # fetch set by the same filter in every mode — no union, no
+    # distinct, and no reliance on a seed passing its own cushion test
+    # (the Hoeffding cushions do not guarantee it).
+    red, cut = F.col("red_score"), F.col("cut_score")
     if cos:
-        admitted = rest.where(F.col("admit_score") >= F.col("tau0"))
+        admitted = F.col("admit_score") >= F.col("tau0")
+        in_seeds = (red > cut) | ((red == cut) & (F.col("vec_id") <= F.col("cut_id")))
     else:
-        admitted = rest.where(F.col("admit_score") <= F.col("tau0"))
+        admitted = F.col("admit_score") <= F.col("tau0")
+        in_seeds = (red < cut) | ((red == cut) & (F.col("vec_id") <= F.col("cut_id")))
+    fetch = (
+        scored.join(F.broadcast(bounds), "query_id")
+        .where(admitted | in_seeds)
+        .select("query_id", F.col("vec_id").alias("neighbor_id"))
+    )
 
     # ---- phase 2: late materialization of full precision (J2) ----
-    surv_exact = (
-        admitted.select("query_id", F.col("vec_id").alias("neighbor_id"))
-        .join(full_side, "neighbor_id")
-        .join(F.broadcast(qs), "query_id")
+    candidates = (
+        fetch.join(full_side, "neighbor_id")
+        .join(q_side, "query_id")
         .select("query_id", "neighbor_id", exact_score.alias("score"))
     )
-
-    candidates = seed_exact.unionByName(surv_exact)
     final = topk_per_query(candidates, k, ascending=not cos, salted=False)
     fetched = candidates.select("query_id", "neighbor_id")
     # diagnostics expose the persisted scalar frame (one row per pair),
-    # not the wide pre-projection plan, so downstream consumers reuse
-    # the cached partitions instead of re-running the array folds
+    # so downstream consumers reuse the cached partitions instead of
+    # re-running phase 1
     return RefineResult(topk=final, fetched=fetched, scored=scored)
 
 
 def _exact_score_expr(cos: bool) -> Column:
-    if cos:
-        return dot("full", "q")
-    return _fold_sum(
-        F.transform(F.zip_with("q", "full", lambda q, v: q - v), lambda v: v * v)
-    )
+    """Phase 2's exact score over ``full`` and ``q``: the Column folds
+    the DuckDB oracles mirror."""
+    return dot("full", "q") if cos else dist2("q", "full")
 
 
 def vector_bytes(keep_m: int, dim: int, keep_e: int = FP16_EXP_BITS) -> tuple[float, float]:
@@ -509,29 +641,11 @@ def _refine_metrics_with_frames(
             + (["embedding"] if mode == "l2-tz" else [])
             + (["bconst"] if mode == "cos-l2" else [])
         )
-        pairs = corp.select(*pair_cols).crossJoin(F.broadcast(qs))
-        if cos:
-            pairs = pairs.withColumn("s_hat", dot("redv", "q"))
-            red_score = F.col("s_hat")
-            # admit when s_hat + cushion >= tau0 ⇔ admit_score >= tau0
-            admit = F.col("s_hat") + cushion_expr(mode, delta)
-        else:
-            pairs = pairs.withColumn(
-                "d2_hat",
-                _fold_sum(
-                    F.transform(F.zip_with("q", "redv", lambda q, r: q - r), lambda v: v * v)
-                ),
-            )
-            red_score = F.col("d2_hat")
-            # admit when lower bound <= tau0
-            admit = l2_lower_bound_expr(mode, delta)
-        scored = pairs.select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            red_score.alias("red_score"),
-            _exact_score_expr(cos).alias("exact_score"),
-            admit.alias("admit_score"),
-        ).persist()
+        scored = (
+            phase1_scores(corp.select(*pair_cols), qs, mode, delta, exact=True)
+            .withColumnRenamed("vec_id", "neighbor_id")
+            .persist()
+        )
 
         # seed (W5): salted two-phase rank over the cached scalar frame
         seed = _ids(

@@ -80,7 +80,10 @@ def topk_per_query(
 
     ``salted=True`` runs the two-phase plan (local rank within
     ``(query_id, shard)`` → global rank): identical output, no
-    single-reducer-per-query skew at scale.
+    single-reducer-per-query skew at scale. Spark 4.1 already plans the
+    unsalted form as a map-side ``WindowGroupLimit … Partial`` under
+    the one exchange, so the salted phase duplicates that limit and
+    adds an exchange, a sort and a window.
     """
     direction = F.col("score").asc() if ascending else F.col("score").desc()
     ordering = [direction, F.col("neighbor_id").asc()]

@@ -25,6 +25,12 @@ from bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spar
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+#: driver heap: half of physical memory, at most the 16 GiB the suite
+#: was sized with on a 128 GiB box
+DRIVER_MEMORY_MB = min(
+    16 * 1024, os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2**20 // 2
+)
+
 #: benchmark suite: name -> callable(spark, sf_dir) -> DataFrame
 def _suite():
     names = [
@@ -271,9 +277,10 @@ def main() -> None:
     # the 70% release threshold 3 times — each release forces the next
     # consumer of a dropped artifact to REBUILD it (re-paying k-means /
     # graph construction mid-bench) and the near-full heap keeps the
-    # collector busy for the whole tail of the run. 16g is still a
-    # rounding error on the 128 GiB box; the guard below stays as the
-    # backstop. On a real cluster this is executor storage memory,
+    # collector busy for the whole tail of the run. DRIVER_MEMORY_MB
+    # keeps 16g on the 128 GiB box and takes at most half of a smaller
+    # machine; the guard below stays as the backstop. On a real
+    # cluster this is executor storage memory,
     # sized to the index artifacts exactly the same way (guide §5).
     # -XX:ReservedCodeCacheSize=512m (r13): the default 240 MB JIT
     # code cache splits into ~120 MB profiled + ~120 MB non-profiled
@@ -291,7 +298,7 @@ def main() -> None:
             "spark.driver.extraJavaOptions": (
                 "-Xlog:disable -XX:ReservedCodeCacheSize=512m"
             ),
-            "spark.driver.memory": "16g",
+            "spark.driver.memory": f"{DRIVER_MEMORY_MB}m",
         },
     )
     spark.sparkContext.setLogLevel("ERROR")

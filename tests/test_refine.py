@@ -6,18 +6,28 @@ guarantees, which must hold by construction):
   truncation level (paper §3.1.3-§3.1.4, §3.2.1-§3.2.2);
 * saving ≤ 1, fpr ≥ 0;
 * the tz bound admits no more candidates than sym (paper Eq.(36)).
+* phase 1's NumPy kernel equals the Column-expression folds it
+  replaced bit for bit (the folds are kept below as the reference).
 """
 
 from __future__ import annotations
 
+import math
+
+import numpy as np
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spark.operators.refine import (
     CANDIDATE_SOURCES,
     MODES,
     _exact_score_expr,
+    _refine_metrics_with_frames,
     cushion_topk,
+    hoeff_const,
     is_cosine,
     prepare_corpus,
     prepare_queries,
@@ -168,11 +178,6 @@ def test_cushion_composition_law(spark, sf_small, name, mode):
 # parity, and the cos generator therefore normalizes its rows exactly
 # as the reference CLI normalizes every cosine input (ANNCode.py:826).
 
-import math
-
-from hypothesis import HealthCheck, given, settings
-from hypothesis import strategies as st
-
 _coord = st.one_of(
     st.floats(min_value=-1e4, max_value=1e4, allow_nan=False, width=32),
     st.floats(
@@ -200,8 +205,6 @@ def _corpus(draw, unit_rows: bool):
             # normalization itself is well-posed.
             if not any(abs(x) > 1e-6 for x in row):
                 row[draw(st.integers(min_value=0, max_value=_PROP_D - 1))] = 1.0
-            import numpy as np
-
             arr = np.asarray(row, dtype=np.float32)
             arr = arr / np.float32(math.sqrt(float(np.dot(arr, arr))))
             row = [float(x) for x in arr]
@@ -273,3 +276,302 @@ def test_cushion_metric_family_guards(spark, sf_small, name):
     corpus = load_table(spark, sf_small, "embeddings")
     with pytest.raises(ValueError, match=wording):
         cushion_topk(queries, corpus, source, crossed, K, 4)
+
+
+# ---------------------------------------------------------------------------
+# Phase-1 kernel ≡ the Column-expression folds, bit for bit
+# ---------------------------------------------------------------------------
+# The reference below is the phase 1 the engine ran before its NumPy
+# kernel: strict left folds (``F.aggregate``) over DOUBLE element terms,
+# evaluated inside the broadcast join. The DuckDB oracles mirror the same
+# folds, so the kernel must reproduce every scalar exactly.
+
+_HOEFF_DELTA = 0.7
+
+
+def _fold_sum(arr: Column) -> Column:
+    return F.aggregate(arr, F.lit(0.0), lambda acc, v: acc + v)
+
+
+def cushion_expr(mode: str, delta_param: float | None) -> Column:
+    """The additive cushion (cosine) over ``q``, ``delta``, ``bconst``."""
+    if mode == "cos-hoeff":
+        qd = F.zip_with("q", "delta", lambda q, d: q * d.cast("double"))
+        return F.lit(hoeff_const(delta_param)) * F.sqrt(
+            _fold_sum(F.transform(qd, lambda v: v * v))
+        )
+    if mode == "cos-l1":
+        return _fold_sum(
+            F.zip_with("q", "delta", lambda q, d: F.abs(q) * d.cast("double"))
+        )
+    if mode == "cos-l2":
+        return F.col("bconst")
+    raise ValueError(f"no additive cushion for mode {mode!r}")
+
+
+def l2_lower_bound_expr(mode: str, delta_param: float | None) -> Column:
+    """Lower bound on the exact squared distance (L2 modes), with
+    ``a = q − redv`` the reduced residual (``ANNCode.py:546``)."""
+    a = F.zip_with("q", "redv", lambda q, r: q - r)
+    if mode == "l2-sym":
+        def sym_term(x, d):
+            lower = F.greatest(F.abs(x) - d.cast("double"), F.lit(0.0))
+            return lower * lower
+
+        return _fold_sum(F.zip_with(a, "delta", sym_term))
+    if mode == "l2-tz":
+        z = F.arrays_zip(a.alias("a"), F.col("delta").alias("d"), F.col("embedding").alias("raw"))
+
+        def term(p):
+            s = F.when(p["raw"].cast("double") < 0, F.lit(-1.0)).otherwise(F.lit(1.0))
+            b = p["a"] * s
+            d = p["d"].cast("double")
+            return (
+                F.when(b <= 0, p["a"] * p["a"])
+                .when(b < d, F.lit(0.0))
+                .otherwise((F.abs(p["a"]) - d) * (F.abs(p["a"]) - d))
+            )
+
+        return _fold_sum(F.transform(z, term))
+    if mode == "l2-hoeff":
+        ad = F.zip_with(a, "delta", lambda x, d: x * d.cast("double"))
+        return F.col("d2_hat") - F.lit(2.0 * hoeff_const(delta_param)) * F.sqrt(
+            _fold_sum(F.transform(ad, lambda v: v * v))
+        )
+    raise ValueError(f"no l2 lower bound for mode {mode!r}")
+
+
+def _reference_scored(pairs, mode: str, delta: float | None):
+    """(query_id, vec_id, red_score, admit_score, exact_score) from the
+    Column folds over joined (query, row) pairs."""
+    if is_cosine(mode):
+        pairs = pairs.withColumn(
+            "s_hat",
+            _fold_sum(F.zip_with("redv", "q", lambda x, y: x.cast("double") * y.cast("double"))),
+        )
+        red, admit = F.col("s_hat"), F.col("s_hat") + cushion_expr(mode, delta)
+    else:
+        pairs = pairs.withColumn(
+            "d2_hat",
+            _fold_sum(F.transform(F.zip_with("q", "redv", lambda q, r: q - r), lambda v: v * v)),
+        )
+        red, admit = F.col("d2_hat"), l2_lower_bound_expr(mode, delta)
+    return pairs.select(
+        "query_id",
+        "vec_id",
+        red.alias("red_score"),
+        admit.alias("admit_score"),
+        _exact_score_expr(is_cosine(mode)).alias("exact_score"),
+    )
+
+
+def _bits(frame, cols) -> dict:
+    """{(query_id, vec_id): exact bit patterns of ``cols``} — ``hex``
+    also tells -0.0 from 0.0, which ``==`` does not."""
+    return {
+        (r["query_id"], r["vec_id"]): tuple(float(r[c]).hex() for c in cols)
+        for r in frame.collect()
+    }
+
+
+def _candidate_stream(queries, corpus):
+    """A deterministic per-query candidate stream (about a third of the
+    pairs) plus pairs of a query id that is not in the batch."""
+    ids = corpus.select("vec_id")
+    cand = (
+        queries.select("query_id").crossJoin(ids)
+        .where((F.col("query_id") + F.col("vec_id")) % 3 == 0)
+    )
+    stray = ids.where(F.col("vec_id") % 7 == 0).select(
+        F.lit(-1).cast("long").alias("query_id"), "vec_id"
+    )
+    return cand.unionByName(stray)
+
+
+def _check_kernel_bits(queries, corpus, mode: str, keep_m: int) -> None:
+    delta = _HOEFF_DELTA if "hoeff" in mode else None
+    corp = prepare_corpus(corpus, keep_m, mode).persist()
+    qs = prepare_queries(queries, mode)
+    cand = _candidate_stream(queries, corpus).persist()
+    ref_cross = _reference_scored(corp.crossJoin(F.broadcast(qs)), mode, delta)
+    ref_cand = _reference_scored(
+        cand.join(corp, "vec_id").join(F.broadcast(qs), "query_id"), mode, delta
+    )
+    two = ["red_score", "admit_score"]
+    three = ["red_score", "exact_score", "admit_score"]
+
+    cross = refine_topk(queries, corpus, mode, K, keep_m, delta, prepared_corpus=corp).scored
+    assert _bits(cross, two) == _bits(ref_cross, two)
+
+    by_cand = refine_topk(
+        queries, corpus, mode, K, keep_m, delta, prepared_corpus=corp, candidate_ids=cand
+    ).scored
+    want = _bits(ref_cand, two)
+    assert want and _bits(by_cand, two) == want
+
+    _, (scored, fetched) = _refine_metrics_with_frames(
+        queries, corpus, mode, K, keep_m, delta, keep_e=5, red_bytes_override=None,
+        dim=64, cache_key=None, prepared_corpus=corp,
+    )
+    got = scored.withColumnRenamed("neighbor_id", "vec_id")
+    assert _bits(got, three) == _bits(ref_cross, three)
+    # dependents first, so no cached frame is rebuilt over a dropped one
+    for frame in (cross, by_cand, fetched, scored, cand, corp):
+        frame.unpersist()
+
+
+@pytest.mark.parametrize("mode", MODES)
+def test_phase1_kernel_is_bit_identical_to_column_folds(spark, sf_small, mode):
+    """Every phase-1 scalar of ``refine_topk`` (cross path and a
+    candidate stream) and of the metrics path equals the Column folds
+    exactly, so seeds, τ₀, survivors, metrics rows and oracles are
+    unchanged by the kernel."""
+    _check_kernel_bits(
+        queries_view(spark, sf_small), load_table(spark, sf_small, "embeddings"), mode, 4
+    )
+
+
+@settings(max_examples=3, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+@given(data=_corpus(unit_rows=False), keep_m=st.sampled_from([1, 4]))
+def test_phase1_kernel_bits_on_adversarial_floats(spark, data, keep_m):
+    """The same identity on subnormals, ±0.0, negatives and values
+    across many binades, in all six modes."""
+    corpus = spark.createDataFrame(
+        [(i, [float(x) for x in row]) for i, row in enumerate(data)],
+        "vec_id long, embedding array<float>",
+    )
+    queries = corpus.where(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    for mode in MODES:
+        _check_kernel_bits(queries, corpus, mode, keep_m)
+
+
+# ---------------------------------------------------------------------------
+# The fetch set always holds the seeds
+# ---------------------------------------------------------------------------
+
+def _away_from_query_corpus(spark):
+    """l2 vectors just below their queries in one binade: truncation
+    moves every reduced coordinate away from the query, so the reduced
+    distance — and with a small cushion the lower bound — overshoots
+    the exact one. The sf_small fixture never does this in l2."""
+    rng = np.random.default_rng(7)
+    corpus = spark.createDataFrame(
+        [(i, [float(x) for x in rng.uniform(2.0, 3.9, 16).astype(np.float32)]) for i in range(60)],
+        "vec_id long, embedding array<float>",
+    )
+    queries = spark.createDataFrame(
+        [(i, [float(x) for x in rng.uniform(3.85, 3.95, 16).astype(np.float32)]) for i in range(4)],
+        "query_id long, embedding array<float>",
+    )
+    return queries, corpus
+
+
+@pytest.mark.parametrize("mode", ["cos-hoeff", "l2-hoeff"])
+def test_seeds_always_reach_the_fetch_set(spark, sf_small, mode):
+    """The Hoeffding cushions do not guarantee that a seed passes its
+    own admission test; at δ near 1 (the smallest cushion) some seeds
+    fail it. Every seed must still be fetched, once, and the top-K must
+    equal the exact re-rank of seeds ∪ cushion survivors."""
+    cos, delta = is_cosine(mode), 0.999
+    if cos:
+        keep_m = 2
+        queries = queries_view(spark, sf_small)
+        corpus = load_table(spark, sf_small, "embeddings")
+    else:
+        keep_m = 1
+        queries, corpus = _away_from_query_corpus(spark)
+    res = refine_topk(queries, corpus, mode, K, keep_m, delta)
+    scored = res.scored
+
+    seeds = topk_per_query(
+        scored.select("query_id", F.col("vec_id").alias("neighbor_id"),
+                      F.col("red_score").alias("score")),
+        K,
+        ascending=not cos,
+    ).select("query_id", "neighbor_id")
+    corp = prepare_corpus(corpus, keep_m, mode)
+    qs = prepare_queries(queries, mode)
+
+    def rescore(ids):
+        return (
+            ids.join(corp.select(F.col("vec_id").alias("neighbor_id"), "full"), "neighbor_id")
+            .join(F.broadcast(qs), "query_id")
+            .select("query_id", "neighbor_id", _exact_score_expr(cos).alias("score"))
+        )
+
+    tau0 = rescore(seeds).groupBy("query_id").agg(
+        (F.min if cos else F.max)("score").alias("tau0")
+    )
+    passes = (F.col("admit_score") >= F.col("tau0")) if cos else (F.col("admit_score") <= F.col("tau0"))
+    survivors = (
+        scored.join(tau0, "query_id")
+        .where(passes)
+        .select("query_id", F.col("vec_id").alias("neighbor_id"))
+    )
+
+    seed_pairs = {tuple(r) for r in seeds.collect()}
+    survivor_pairs = {tuple(r) for r in survivors.collect()}
+    fetched = [tuple(r) for r in res.fetched.collect()]
+    # the operating point is meaningful: a τ₀-filter-only plan would
+    # drop seeds here
+    assert seed_pairs - survivor_pairs
+    assert len(seed_pairs) == K * queries.count()
+    assert seed_pairs <= set(fetched)
+    assert len(fetched) == len(set(fetched))
+    assert set(fetched) == seed_pairs | survivor_pairs
+
+    want = topk_per_query(
+        rescore(seeds.unionByName(survivors).distinct()), K, ascending=not cos, salted=False
+    )
+    got = {tuple(r) for r in res.topk.collect()}
+    assert got == {tuple(r) for r in want.collect()}
+    scored.unpersist()
+
+
+# ---------------------------------------------------------------------------
+# Job-count guard for the served path
+# ---------------------------------------------------------------------------
+
+#: warm ``refine_topk`` jobs per 16-query batch from a stored layout,
+#: as this test counts them before the phase-1 kernel and the single
+#: fetch; the guard allows half of that
+JOBS_BEFORE_KERNEL = 18
+
+
+def test_served_refine_job_count(spark, sf_small, tmp_path):
+    """Served from a stored layout (the ``serve_refine`` benchmark's
+    path: local 16-query batch, l2-tz, K=20, keep_m=6), a warm
+    ``refine_topk`` call plus its collect runs at most half the Spark
+    jobs it ran before phase 1 became one kernel and seeds and
+    survivors one fetch."""
+    corpus = load_table(spark, sf_small, "embeddings")
+    layout = str(tmp_path / "layout")
+    prepare_corpus(corpus, 6, "l2-tz").write.parquet(layout)
+    batch = (
+        corpus.where(F.col("vec_id") % 31 == 0).limit(16)
+        .select(F.col("vec_id").alias("query_id"), "embedding").toPandas()
+    )
+    sc = spark.sparkContext
+
+    def serve(group: str | None) -> int:
+        queries = spark.createDataFrame(batch, "query_id bigint, embedding array<float>")
+        if group:
+            sc.setJobGroup(group, "served refine_topk")
+        try:
+            res = refine_topk(
+                queries, corpus, "l2-tz", 20, 6, prepared_corpus=spark.read.parquet(layout)
+            )
+            rows = res.topk.collect()
+            res.scored.unpersist()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert len(rows) == 20 * len(batch)
+        return len(sc.statusTracker().getJobIdsForGroup(group)) if group else 0
+
+    serve(None)
+    serve(None)
+    jobs = serve("served-refine-job-count")
+    assert jobs <= JOBS_BEFORE_KERNEL // 2, jobs
