@@ -220,7 +220,7 @@ def cascade_candidates(
         .join(qv, "query_id")
         .select("query_id", "neighbor_id", cosine("qv", "recon").alias("score"))
     )
-    return topk_per_query(scored, r1 * k, ascending=False, salted=False).select(
+    return topk_per_query(scored, r1 * k, ascending=False).select(
         "query_id", "neighbor_id"
     )
 
@@ -275,7 +275,7 @@ def cascade_topk_from_index(
         .join(qv, "query_id")
         .select("query_id", "neighbor_id", cosine("qv", "recon").alias("score"))
     )
-    cand1 = topk_per_query(scored, r1 * k, ascending=False, salted=False).select(
+    cand1 = topk_per_query(scored, r1 * k, ascending=False).select(
         "query_id", "neighbor_id"
     )
     return exact_cosine_rerank(cand1, corpus, queries, k)
@@ -334,7 +334,7 @@ def ivfbq_topk(
     )
     from .topk import exact_cosine_rerank
 
-    cand_ids = topk_per_query(ham, r * k, ascending=True, salted=False).select(
+    cand_ids = topk_per_query(ham, r * k, ascending=True).select(
         "query_id", "neighbor_id"
     )
     return exact_cosine_rerank(cand_ids, corpus, queries, k)

@@ -181,7 +181,7 @@ def maxsim_rerank(
             maxsim_expr("qv", "embedding", dim, m).alias("score"),
         )
     )
-    out = topk_per_query(scored, k, ascending=False, salted=False)
+    out = topk_per_query(scored, k, ascending=False)
     return out.withColumnRenamed("score", "maxsim")
 
 
@@ -327,7 +327,7 @@ def maxsim_topk_from_store(
     for i in range(m):  # fixed fold order == maxsim_expr's + chain
         total = F.col("__s0") if i == 0 else total + F.col(f"__s{i}")
     scored = pivoted.select("query_id", "neighbor_id", total.alias("score"))
-    out = topk_per_query(scored, k, ascending=False, salted=False)
+    out = topk_per_query(scored, k, ascending=False)
     return out.withColumnRenamed("score", "maxsim")
 
 

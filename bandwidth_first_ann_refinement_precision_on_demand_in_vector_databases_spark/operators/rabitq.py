@@ -138,7 +138,7 @@ def rabitq_candidates(queries: DataFrame, corpus: DataFrame, n: int) -> DataFram
         F.col("vec_id").alias("neighbor_id"),
         (dot("s", "yq") * F.col("inv") / F.col("qn")).alias("score"),
     )
-    return topk_per_query(est, n, ascending=False, salted=False).select(
+    return topk_per_query(est, n, ascending=False).select(
         "query_id", "neighbor_id"
     )
 
@@ -180,7 +180,7 @@ def ivfrabitq_topk(
             (dot("s", "yq") * F.col("inv") / F.col("qn")).alias("score"),
         )
     )
-    ids = topk_per_query(est, r * k, ascending=False, salted=False).select(
+    ids = topk_per_query(est, r * k, ascending=False).select(
         "query_id", "neighbor_id"
     )
     return exact_cosine_rerank(ids, corpus, queries, k)
@@ -230,7 +230,7 @@ def rabitq_topk_from_index(
         F.col("vec_id").alias("neighbor_id"),
         (dot("s", "yq") * F.col("inv") / F.col("qn")).alias("score"),
     )
-    ids = topk_per_query(est, r * k, ascending=False, salted=False).select(
+    ids = topk_per_query(est, r * k, ascending=False).select(
         "query_id", "neighbor_id"
     )
     return exact_cosine_rerank(ids, corpus, queries, k)

@@ -58,7 +58,7 @@ math, inherited by design for parity.
 only* (column pruning keeps full precision unread), scoring each
 partition's rows against the broadcast query matrix where they sit; it
 leaves each pair's reduced and admission scores, persisted. The seed rank is one
-unsalted window (Spark adds its map-side ``WindowGroupLimit`` under
+per-query window (Spark adds its map-side ``WindowGroupLimit`` under
 the single exchange); τ₀ and the K-th seed's place come from the
 seeds' exact scores; then ONE filter over the scalars joined to that
 broadcast row picks the fetch set — cushion survivors and seeds
@@ -477,14 +477,11 @@ def refine_topk(
     scored = phase1_scores(rows, qs, mode, delta).persist()
 
     # ---- seed: best K under the reduced score (W5) ----
-    # unsalted: Spark plans a map-side WindowGroupLimit under the one
-    # exchange, which is what the salted phase would add
     seeds = topk_per_query(
         scored.select("query_id", F.col("vec_id").alias("neighbor_id"),
                       F.col("red_score").alias("score")),
         k,
         ascending=not cos,
-        salted=False,
     )
 
     exact_score = _exact_score_expr(cos)
@@ -529,7 +526,7 @@ def refine_topk(
         .join(q_side, "query_id")
         .select("query_id", "neighbor_id", exact_score.alias("score"))
     )
-    final = topk_per_query(candidates, k, ascending=not cos, salted=False)
+    final = topk_per_query(candidates, k, ascending=not cos)
     fetched = candidates.select("query_id", "neighbor_id")
     # diagnostics expose the persisted scalar frame (one row per pair),
     # so downstream consumers reuse the cached partitions instead of
@@ -647,7 +644,7 @@ def _refine_metrics_with_frames(
             .persist()
         )
 
-        # seed (W5): salted two-phase rank over the cached scalar frame
+        # seed (W5): per-query rank over the cached scalar frame
         seed = _ids(
             topk_per_query(
                 scored.select("query_id", "neighbor_id", F.col("red_score").alias("score")),
@@ -921,14 +918,11 @@ def _graph_candidates(queries, corpus, k, keep_m, mode, cache_key) -> DataFrame:
 
 
 def _vamana_candidates(queries, corpus, k, keep_m, mode, cache_key) -> DataFrame:
-    """The same walk over the α-pruned Vamana graph (better edges). A
-    keyed build shares the ``fixture:``-keyed graph memo of the
-    registry's ``ann_vamana_*`` queries."""
+    """The same walk over the α-pruned Vamana graph (better edges),
+    sharing the corpus-keyed edge memo of the ``ann_vamana_*`` queries."""
     from .vamana import vamana_edges
 
-    edges = vamana_edges(
-        corpus, cache_key=None if cache_key is None else f"fixture:{cache_key}"
-    )
+    edges = vamana_edges(corpus)
     return _graph_walk(queries, corpus, keep_m, mode, cache_key, edges)
 
 

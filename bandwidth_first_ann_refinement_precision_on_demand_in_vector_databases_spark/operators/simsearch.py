@@ -222,7 +222,7 @@ def ivf_topk(
         F.col("vec_id").alias("neighbor_id"),
         cosine("qvec", "embedding").alias("score"),
     )
-    return topk_per_query(cand, k, ascending=False, salted=False)
+    return topk_per_query(cand, k, ascending=False)
 
 
 #: candidate budget for adaptive probing — matched to the fixed
@@ -293,7 +293,7 @@ def ivf_adaptive_topk(
         F.col("vec_id").alias("neighbor_id"),
         cosine("qvec", "embedding").alias("score"),
     )
-    return topk_per_query(cand, k, ascending=False, salted=False)
+    return topk_per_query(cand, k, ascending=False)
 
 
 def _planes_array_sql(dim: int) -> str:
@@ -465,7 +465,7 @@ def lsh_multiprobe_topk(
         .join(cv, "neighbor_id")
         .select("query_id", "neighbor_id", cosine("qvec", "cvec").alias("score"))
     )
-    return topk_per_query(cand, k, ascending=False, salted=False)
+    return topk_per_query(cand, k, ascending=False)
 
 
 def lsh_topk(queries: DataFrame, corpus: DataFrame, k: int) -> DataFrame:
@@ -493,7 +493,7 @@ def lsh_topk(queries: DataFrame, corpus: DataFrame, k: int) -> DataFrame:
         .join(cv, "neighbor_id")
         .select("query_id", "neighbor_id", cosine("qvec", "cvec").alias("score"))
     )
-    return topk_per_query(cand, k, ascending=False, salted=False)
+    return topk_per_query(cand, k, ascending=False)
 
 
 def knn_graph(corpus: DataFrame, k: int) -> DataFrame:
@@ -504,7 +504,7 @@ def knn_graph(corpus: DataFrame, k: int) -> DataFrame:
     replaces the N² pair space with bucket-local candidates, the pair
     set is deduped on bare ids (vectors re-attach afterwards via
     shuffle joins — at N = corpus size there is no broadcastable
-    side), and the per-node rank is the salted two-phase top-K."""
+    side), and the per-node rank is ``topk_per_query``."""
     # both self-join sides read the band frame: the memoized persisted
     # corpus band table (one build per session — shared with every LSH
     # serve query) keeps the 16 hyperplane projections to one pass
@@ -755,7 +755,6 @@ def graph_centroid_topk(
         cand.select("query_id", F.col("vec_id").alias("neighbor_id"), "score"),
         k,
         ascending=False,
-        salted=False,
     )
 
 
@@ -804,7 +803,6 @@ def graph_beam_search(
         cand.select("query_id", F.col("vec_id").alias("neighbor_id"), "score"),
         k,
         ascending=False,
-        salted=False,
     )
     return out
 
@@ -830,7 +828,6 @@ def graph_topk_from_index(
         cand.select("query_id", F.col("vec_id").alias("neighbor_id"), "score"),
         k,
         ascending=False,
-        salted=False,
     )
 
 
@@ -976,7 +973,6 @@ def graph_delta_edges(
         cand.select("query_id", F.col("vec_id").alias("neighbor_id"), "score"),
         graph_k,
         ascending=False,
-        salted=False,
     ).select("query_id", "neighbor_id")
     fwd = nn.select(
         F.col("query_id").alias("src"), F.col("neighbor_id").alias("dst")

@@ -210,7 +210,7 @@ def spann_topk(
         .groupBy("query_id", "neighbor_id")
         .agg(F.max("score").alias("score"))
     )
-    return topk_per_query(cand, k, ascending=False, salted=False)
+    return topk_per_query(cand, k, ascending=False)
 
 
 def closure_cells_stateless(

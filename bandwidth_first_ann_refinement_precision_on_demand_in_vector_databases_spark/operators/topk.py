@@ -8,12 +8,10 @@ top-K corpus neighbors under cosine similarity (unit space,
 Two physical realizations with identical results:
 
 * ``exact_topk`` — pure DataFrame: broadcast the (small) query side
-  into a cross join, score with Column expressions, then a *salted*
-  two-phase top-K. Phase 1 ranks within ``(query_id, shard)`` so the
-  q×N score set shuffles across q×P balanced keys instead of q skewed
-  ones; phase 2 ranks the surviving q×P×k rows. This is the
-  oracle-checkable plan and survives a 100× scale-up (per-query
-  reducer skew is the classic failure mode it avoids).
+  into a cross join, score with Column expressions, then one per-query
+  window top-K. Spark plans a map-side ``WindowGroupLimit … Partial``
+  under the one exchange, so only q×P×k rows shuffle. This is the
+  oracle-checkable plan.
 * ``exact_topk_fast`` — ``mapInPandas`` over corpus partitions with
   the query matrix broadcast as NumPy: one BLAS matvec per partition,
   local top-K, then the tiny phase-2 merge. Same results, ~10-50×
@@ -70,32 +68,15 @@ def score_crossjoin(
     return c.crossJoin(q).select("query_id", "neighbor_id", score.alias("score"))
 
 
-def topk_per_query(
-    scores: DataFrame,
-    k: int,
-    ascending: bool = False,
-    salted: bool = True,
-) -> DataFrame:
-    """W1/W2: per-query top-K over a (query_id, neighbor_id, score) set.
-
-    ``salted=True`` runs the two-phase plan (local rank within
-    ``(query_id, shard)`` → global rank): identical output, no
-    single-reducer-per-query skew at scale. Spark 4.1 already plans the
-    unsalted form as a map-side ``WindowGroupLimit … Partial`` under
-    the one exchange, so the salted phase duplicates that limit and
-    adds an exchange, a sort and a window.
+def topk_per_query(scores: DataFrame, k: int, ascending: bool = False) -> DataFrame:
+    """W1/W2: per-query top-K over a (query_id, neighbor_id, score) set,
+    ranked by ``(score, neighbor_id)`` — a total order, so the rows are
+    deterministic. Spark 4.1 plans the window as a map-side
+    ``WindowGroupLimit … Partial`` under the one exchange: each
+    partition ships at most k rows per query.
     """
     direction = F.col("score").asc() if ascending else F.col("score").desc()
     ordering = [direction, F.col("neighbor_id").asc()]
-
-    if salted:
-        local = Window.partitionBy("query_id", F.spark_partition_id()).orderBy(*ordering)
-        scores = (
-            scores.withColumn("__lr", F.row_number().over(local))
-            .where(F.col("__lr") <= k)
-            .drop("__lr")
-        )
-
     final = Window.partitionBy("query_id").orderBy(*ordering)
     return (
         scores.withColumn("rank", F.row_number().over(final))
@@ -195,7 +176,7 @@ def exact_topk_pruned(
     )
     score = cosine("__q", "__c") if metric == "cosine" else dist2("__q", "__c")
     scored = pairs.select("query_id", "neighbor_id", score.alias("score"))
-    return topk_per_query(scored, k, ascending=ascending, salted=False)
+    return topk_per_query(scored, k, ascending=ascending)
 
 
 def exact_topk_fixture_cached(
@@ -297,7 +278,7 @@ def exact_topk_fast(
     candidates = corpus.select("vec_id", "embedding").mapInPandas(
         local_topk, schema="query_id bigint, neighbor_id bigint, score double"
     )
-    return topk_per_query(candidates, k, ascending=ascending, salted=False)
+    return topk_per_query(candidates, k, ascending=ascending)
 
 
 def exact_cosine_rerank(
@@ -318,7 +299,7 @@ def exact_cosine_rerank(
         .join(q, "query_id")
         .select("query_id", "neighbor_id", cosine("qv", "embedding").alias("score"))
     )
-    return topk_per_query(exact, k, ascending=False, salted=False)
+    return topk_per_query(exact, k, ascending=False)
 
 
 def exact_l2_rerank(
@@ -338,4 +319,4 @@ def exact_l2_rerank(
         .join(q, "query_id")
         .select("query_id", "neighbor_id", dist2("qv", "embedding").alias("score"))
     )
-    return topk_per_query(exact, k, ascending=True, salted=False)
+    return topk_per_query(exact, k, ascending=True)

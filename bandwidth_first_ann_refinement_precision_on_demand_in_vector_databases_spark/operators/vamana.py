@@ -25,7 +25,7 @@ loop over rows:
 * 2-hop expansion = one self-join of the edge frame on ``dst = src``
   (shuffle keyed by node id, never all-pairs);
 * exact scoring re-attaches vectors by id join;
-* per-node top-L pool = the salted two-phase rank;
+* per-node top-L pool = one per-node window rank (``topk_per_query``);
 * the sequential prune folds over the ≤L-element pool with a single
   BIGINT accumulator: candidates are encoded ``bit·2²⁵ + occ`` where
   ``occ`` is the precomputed occlusion bitmask of closer candidates
@@ -217,7 +217,7 @@ def vamana_kept_edges(
     ``tests/test_vamana.py``)."""
     # the pool frame feeds three consumers (occlusion pairs ×2,
     # encode, kept-edge extraction) — checkpoint it so the 16
-    # hyperplane projections and the salted rank run once, and the
+    # hyperplane projections and the per-node rank run once, and the
     # self-join below stays shallow
     pool = vamana_candidate_pool(corpus, base).localCheckpoint(eager=False)
     return robust_prune_pool(pool, corpus, degree)

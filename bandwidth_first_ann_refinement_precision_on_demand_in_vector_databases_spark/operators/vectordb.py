@@ -89,7 +89,7 @@ def filtered_ivf_topk(
             cosine("qvec", "embedding").alias("score"),
         )
     )
-    return topk_per_query(cand, k, ascending=False, salted=False)
+    return topk_per_query(cand, k, ascending=False)
 
 
 #: safety factor on the derived routing crossover: the post-filter

@@ -21,19 +21,26 @@ weaker rows-only check, as SURVEY §2 prescribes.
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 from functools import partial
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions.fp16 import with_reduced_precision
 from .functions.vector import delta_from_exp_col, l2_norm, unit
+from .operators import bq as BQ
+from .operators import multivec as MV
+from .operators import simsearch as S
 from .operators.metrics import recall_at_k
-from .operators.refine import MODES, refine_metrics, refine_topk
+from .operators.pq import ivfadc_topk_from_index, pq_topk_from_index
+from .operators.rabitq import rabitq_topk_from_index
+from .operators.refine import MODES, prepare_corpus, refine_metrics, refine_topk
 from .operators.topk import exact_topk, exact_topk_fixture_cached
 from .plans import duck_oracle
 from .session import memo, memo_dir
+from .sources import layout as L
 from .sources.fixtures import (
     FIXTURE_EMBED_DIM,
     QUERY_STRIDE,
@@ -528,45 +535,6 @@ def q_refine_l2_tz_compressed_metrics(spark: SparkSession, sf_dir: str) -> DataF
 QUERIES["refine_l2_tz_compressed_metrics"] = q_refine_l2_tz_compressed_metrics
 
 
-def q_refine_l2_tz_served_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The flagship refinement SERVED from the stored disaggregated
-    layout (paper §3.3): the prepared corpus — (redv, delta) cheap-pass
-    columns next to the ``full`` fetch column — is WRITTEN once per
-    (session, fixture dir) as parquet and the query plan scans the
-    STORED table, exactly as the PQ codes and graph edges serve from
-    their index artifacts. Parquet's columnar chunking makes the
-    disaggregation physical: the phase-1 scan reads only the
-    (redv, delta) pages (`ReadSchema`-checked in
-    ``tests/test_layout.py::test_refinement_phase1_prunes_full_column``
-    — the same layout). Results are identical to the in-session
-    preparation, so the oracle is shared with ``refine_l2_tz_topk``."""
-    from .operators.refine import refine_topk
-    from .operators.refine import prepare_corpus as _prep
-
-    path = memo_dir(
-        spark,
-        "refine-layout",
-        sf_dir,
-        lambda p: _prep(
-            load_table(spark, sf_dir, "embeddings"), KEEP_M_DEFAULT, "l2-tz"
-        ).write.mode("overwrite").parquet(p),
-    )
-    prepared = spark.read.parquet(path)
-    res = refine_topk(
-        queries_view(spark, sf_dir),
-        load_table(spark, sf_dir, "embeddings"),
-        "l2-tz",
-        K_DEFAULT,
-        KEEP_M_DEFAULT,
-        None,
-        prepared_corpus=prepared,
-    )
-    return _rounded_topk(res.topk)
-
-
-QUERIES["refine_l2_tz_served_topk"] = q_refine_l2_tz_served_topk
-
-
 def q_refine_l2_tz_exact_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reference-exact (order-sensitive) metrics at the tuned
     operating point via the corpus-partitioned evolving-threshold
@@ -599,7 +567,7 @@ from .registry_dedup import DEDUP_ORACLES, DEDUP_QUERIES  # noqa: E402
 from .registry_curation import CURATION_ORACLES, CURATION_QUERIES  # noqa: E402
 from .registry_multimodal import MULTIMODAL_ORACLES, MULTIMODAL_QUERIES  # noqa: E402
 from .registry_relational import RELATIONAL_ORACLES, RELATIONAL_QUERIES  # noqa: E402
-from .registry_simsearch import SIMSEARCH_ORACLES, SIMSEARCH_QUERIES  # noqa: E402
+from .registry_simsearch import ANN_K, SIMSEARCH_ORACLES, SIMSEARCH_QUERIES  # noqa: E402
 from .registry_streaming import STREAMING_ORACLES, STREAMING_QUERIES  # noqa: E402
 from .registry_text import TEXT_ORACLES, TEXT_QUERIES  # noqa: E402
 from .registry_vectordb import VECTORDB_ORACLES, VECTORDB_QUERIES  # noqa: E402
@@ -746,11 +714,6 @@ for _mode in MODES:
     ORACLES[f"refine_{_slug}_metrics"] = duck_oracle.refine_metrics_sql(
         _mode, K_DEFAULT, KEEP_M_DEFAULT, _delta, QUERY_STRIDE
     )
-#: the served plan reads the stored layout but computes the identical
-#: result — one oracle, two execution strategies
-ORACLES["refine_l2_tz_served_topk"] = duck_oracle.refine_topk_sql(
-    "l2-tz", K_DEFAULT, KEEP_M_DEFAULT, None, QUERY_STRIDE
-)
 ORACLES["refine_l2_tz_tuned_metrics"] = duck_oracle.refine_metrics_sql(
     "l2-tz", K_DEFAULT, KEEP_M_TUNED, None, QUERY_STRIDE
 )
@@ -774,6 +737,136 @@ ORACLES.update(STREAMING_ORACLES)
 ORACLES.update(MULTIMODAL_ORACLES)
 ORACLES.update(CURATION_ORACLES)
 ORACLES.update(VECTORDB_ORACLES)
+
+
+# ---------------------------------------------------------------------------
+# Stored index artifacts (offline build / online serve, paper §3.3): each
+# row's artifact is written once per (session, fixture dir) into a
+# ``memo_dir`` store and its query plan reads the stored tables. The
+# served result equals the in-session sibling's, so the row shares the
+# sibling's oracle.
+# ---------------------------------------------------------------------------
+
+
+class StoredIndex(NamedTuple):
+    """``write(corpus, path)`` lays the artifact out in a ``memo_dir``
+    store of ``kind``; ``serve(spark, path, queries, corpus)`` answers
+    the queries from it as (query_id, rank, neighbor_id, ``score``).
+    ``name`` is the registered query, ``sibling`` the in-session query
+    whose result it reproduces."""
+
+    name: str
+    sibling: str
+    kind: str
+    write: Callable[[DataFrame, str], None]
+    serve: Callable[[SparkSession, str, DataFrame, DataFrame], DataFrame]
+    score: str = "score"
+
+
+def _write_refine_layout(corpus: DataFrame, path: str) -> None:
+    prepare_corpus(corpus, KEEP_M_DEFAULT, "l2-tz").write.mode("overwrite").parquet(path)
+
+
+def _serve_graph(spark: SparkSession, path: str, q: DataFrame, corpus: DataFrame) -> DataFrame:
+    return S.graph_topk_from_index(q, corpus, L.read_graph_index(spark, path), ANN_K)
+
+
+STORED_INDEXES = (
+    #: the walk scans only the stored (src, dst) columns; no band
+    #: construction in the serve plan (tests/test_layout.py)
+    StoredIndex(
+        "ann_graph_index_topk", "ann_graph_topk", "graph-index",
+        partial(L.write_graph_index, graph_k=S.GRAPH_DEGREE), _serve_graph,
+    ),
+    #: ADC reads only the stored codebook and 8-byte codes: no corpus
+    #: column, no retraining (ReadSchema, tests/test_layout.py)
+    StoredIndex(
+        "ann_pq_index_topk", "ann_pq_topk", "pq-index", L.write_pq_index,
+        lambda spark, path, q, corpus: pq_topk_from_index(q, *L.read_pq_index(spark, path), ANN_K),
+    ),
+    #: the corpus is stored partitioned by cell and the probe list
+    #: prunes directories (PartitionFilters, tests/test_layout.py)
+    StoredIndex(
+        "ann_ivf_index_topk", "ann_ivf_topk", "ivf-cells", L.write_cell_partitioned,
+        lambda spark, path, q, corpus: L.ivf_topk_from_store(
+            spark, path, q, S.ivf_centroids(corpus), ANN_K
+        ),
+    ),
+    #: quantizer, residual codebook and cell-partitioned codes; only the
+    #: stored tables are read until the r·K exact re-rank
+    #: (PartitionFilters + thin ReadSchema, tests/test_layout.py)
+    StoredIndex(
+        "ann_ivfadc_index_topk", "ann_ivfpq_res_topk", "ivfadc-index", L.write_ivfadc_index,
+        lambda spark, path, q, corpus: ivfadc_topk_from_index(spark, path, q, corpus, ANN_K),
+    ),
+    #: the α-pruned edges are stored; no banding and no prune fold in
+    #: the serve plan (tests/test_layout.py)
+    StoredIndex(
+        "ann_vamana_index_topk", "ann_vamana_topk", "vamana-index", L.write_vamana_index,
+        _serve_graph,
+    ),
+    #: replicated posting lists stored partitioned by cell; the pruned
+    #: probe list opens one directory for most queries (reports/SPANN.md)
+    StoredIndex(
+        "ann_spann_index_topk", "ann_spann_topk", "spann-postings", L.write_spann_postings,
+        lambda spark, path, q, corpus: L.spann_topk_from_store(
+            spark, path, q, S.ivf_centroids(corpus), ANN_K
+        ),
+    ),
+    #: one row per sub-vector (the ColBERT/PLAID token-bag store); the
+    #: serve plan reads only the bag columns (tests/test_layout.py)
+    StoredIndex(
+        "ann_maxsim_index_topk", "ann_maxsim_rerank", "token-bags", L.write_token_bags,
+        lambda spark, path, q, corpus: MV.maxsim_topk_from_store(q, L.read_token_bags(spark, path)),
+        score="maxsim",
+    ),
+    #: stored 1-bit signatures and int8 codes; neither sketch scan reads
+    #: a raw vector column (tests/test_layout.py)
+    StoredIndex(
+        "ann_cascade_index_topk", "ann_cascade_topk", "cascade-index", L.write_cascade_index,
+        lambda spark, path, q, corpus: BQ.cascade_topk_from_index(
+            q, corpus, *L.read_cascade_index(spark, path), ANN_K
+        ),
+    ),
+    #: packed sign words + one DOUBLE scalar, 16 B/vector stored; the
+    #: words scan carries no vector column (tests/test_layout.py)
+    StoredIndex(
+        "ann_rabitq_index_topk", "ann_rabitq_topk", "rabitq-index", L.write_rabitq_index,
+        lambda spark, path, q, corpus: rabitq_topk_from_index(spark, path, q, corpus, ANN_K),
+    ),
+    #: the prepared corpus, (redv, delta) next to ``full``; phase 1 reads
+    #: only the (redv, delta) pages (ReadSchema, tests/test_layout.py)
+    StoredIndex(
+        "refine_l2_tz_served_topk", "refine_l2_tz_topk", "refine-layout", _write_refine_layout,
+        lambda spark, path, q, corpus: refine_topk(
+            q, corpus, "l2-tz", K_DEFAULT, KEEP_M_DEFAULT, None,
+            prepared_corpus=spark.read.parquet(path),
+        ).topk,
+    ),
+)
+
+
+def _serve_stored(row: StoredIndex, spark: SparkSession, sf_dir: str) -> DataFrame:
+    corpus = load_table(spark, sf_dir, "embeddings")
+    path = memo_dir(spark, row.kind, sf_dir, lambda p: row.write(corpus, p))
+    out = row.serve(spark, path, queries_view(spark, sf_dir), corpus)
+    return out.select(
+        "query_id", "rank", "neighbor_id", F.round(row.score, 6).alias(row.score)
+    )
+
+
+def register_stored_indexes(
+    rows: Iterable[StoredIndex],
+    queries: dict[str, Callable[[SparkSession, str], DataFrame]],
+    oracles: dict[str, str],
+) -> None:
+    """Register each row's serve query with its sibling's oracle."""
+    for row in rows:
+        queries[row.name] = partial(_serve_stored, row)
+        oracles[row.name] = oracles[row.sibling]
+
+
+register_stored_indexes(STORED_INDEXES, QUERIES, ORACLES)
 
 # Embedding covariance: the d×d second-moment diagnostic feeding
 # whitening / OPQ-style rotation decisions and embedding-drift

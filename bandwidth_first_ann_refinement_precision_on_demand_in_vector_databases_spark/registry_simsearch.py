@@ -4,10 +4,11 @@ Recall@K of each against the brute-force oracle. The DuckDB twins
 replay the identical pipelines — same sampled centroids, same literal
 hyperplanes — so every query is hash-exact, not statistically close.
 
-Every plain top-K / Recall@K pair is one ``AnnPipeline`` row
-(``ANN_PIPELINES`` here, ``VECTORDB_PIPELINES`` in ``registry_vectordb``)
-registered by ``register_ann_pipelines``: one Spark body and one
-oracle template per shape.
+Every plain top-K / Recall@K / ranking-metrics query is one
+``AnnPipeline`` row (``ANN_PIPELINES`` here, ``VECTORDB_PIPELINES`` in
+``registry_vectordb``) registered by ``register_ann_pipelines``: one
+Spark body and one oracle template per shape. The stored-index serve
+paths are rows of ``registry.STORED_INDEXES``.
 """
 
 from __future__ import annotations
@@ -24,10 +25,10 @@ from .operators import pq as P
 from .operators import simsearch as S
 from .operators import spann as SP
 from .operators.kmeans import kmeans_sql_ctes
+from .operators.metrics import _dcg_discount_micro, ranking_metrics
 from .operators.opq import OPQ_SCALE as _OPQ_SCALE
 from .operators.topk import exact_topk_fixture_cached
 from .operators.vamana import vamana_edges
-from .session import memo_dir
 from .sources.fixtures import (
     FIXTURE_EMBED_DIM,
     QUERY_STRIDE,
@@ -118,6 +119,19 @@ per_q AS (
 SQL_RECALL_ROW = "SELECT round(avg(recall), 6) AS recall_at_k, count(*) AS n_queries FROM per_q"
 
 
+def _sql_exact(metric: str) -> str:
+    """``exact`` CTE: the brute-force top-ANN_K (query_id, neighbor_id)
+    per query in ``metric``."""
+    return f"""exact AS (
+  SELECT query_id, neighbor_id FROM (
+    SELECT q.query_id, e.vec_id AS neighbor_id,
+      row_number() OVER (PARTITION BY q.query_id
+        ORDER BY {_sql_exact_score(metric)} {_ORDER[metric]}, e.vec_id) AS rank
+    FROM q CROSS JOIN embeddings e
+  ) WHERE rank <= {ANN_K}
+)"""
+
+
 def _sql_recall(ctes: str, cand: str, metric: str) -> str:
     """Recall@ANN_K of ``cand``'s top-K against the brute-force top-K
     in the same metric."""
@@ -130,15 +144,49 @@ ann AS (
     FROM {cand}
   ) WHERE rank <= {ANN_K}
 ),
-exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.query_id, e.vec_id AS neighbor_id,
-      row_number() OVER (PARTITION BY q.query_id
-        ORDER BY {_sql_exact_score(metric)} {_ORDER[metric]}, e.vec_id) AS rank
-    FROM q CROSS JOIN embeddings e
-  ) WHERE rank <= {ANN_K}
-),{_sql_hit_rate()}
+{_sql_exact(metric)},{_sql_hit_rate()}
 {SQL_RECALL_ROW}
+"""
+
+
+def _sql_ranking_metrics(ctes: str, cand: str, metric: str) -> str:
+    """MRR@ANN_K and nDCG@ANN_K of ``cand``'s top-K against the
+    brute-force top-K in the same metric (``operators/metrics.
+    ranking_metrics``: micro-unit discounts, BIGINT sums)."""
+    disc = _dcg_discount_micro(ANN_K)
+    idcg = sum(disc)
+    disc_list = "[" + ", ".join(str(d) for d in disc) + "]"
+    return f"""
+WITH {ctes},
+ann AS (
+  SELECT query_id, neighbor_id, rank FROM (
+    SELECT query_id, neighbor_id,
+      row_number() OVER (PARTITION BY query_id ORDER BY score {_ORDER[metric]}, neighbor_id) AS rank
+    FROM {cand}
+  ) WHERE rank <= {ANN_K}
+),
+{_sql_exact(metric)},
+rel AS (
+  SELECT ann.query_id, ann.rank FROM ann JOIN exact USING (query_id, neighbor_id)
+),
+per_q AS (
+  SELECT query_id,
+    CAST(sum({disc_list}[rank]) AS BIGINT) AS dcg_micro,
+    min(rank) AS first_rel
+  FROM rel GROUP BY query_id
+),
+scored AS (
+  SELECT q2.query_id,
+    coalesce(CAST(floor((p.dcg_micro * 1000000) / {idcg}) AS BIGINT), 0) AS ndcg_micro,
+    coalesce(CAST(floor(1000000 / p.first_rel) AS BIGINT), 0) AS rr_micro
+  FROM (SELECT DISTINCT query_id FROM exact) q2
+  LEFT JOIN per_q p USING (query_id)
+)
+SELECT
+  round(CAST(sum(rr_micro) AS DOUBLE) / (count(*) * 1000000.0), 6) AS mrr,
+  round(CAST(sum(ndcg_micro) AS DOUBLE) / (count(*) * 1000000.0), 6) AS ndcg_at_k,
+  count(*) AS n_queries
+FROM scored
 """
 
 
@@ -173,8 +221,8 @@ class AnnPipeline(NamedTuple):
     """One ANN pipeline: ``ann(spark, sf_dir)`` returns (query_id, rank,
     neighbor_id, score) ranked by ``metric``; its DuckDB twin is the
     CTE chain ``ctes`` ending in the candidate CTE ``cand`` (query_id,
-    neighbor_id, score). ``topk`` / ``recall`` name the registered
-    queries."""
+    neighbor_id, score). ``topk`` / ``recall`` / ``ranking`` name the
+    registered queries."""
 
     ann: AnnFn
     metric: str
@@ -182,6 +230,7 @@ class AnnPipeline(NamedTuple):
     cand: str
     topk: str | None = None
     recall: str | None = None
+    ranking: str | None = None
 
 
 def over_fixture(op: Callable[..., DataFrame]) -> AnnFn:
@@ -203,12 +252,19 @@ def _ann_recall(ann: AnnFn, metric: str, spark: SparkSession, sf_dir: str) -> Da
     return S.ann_recall(found, exact, ANN_K)
 
 
+def _ann_ranking(ann: AnnFn, metric: str, spark: SparkSession, sf_dir: str) -> DataFrame:
+    ranked = ann(spark, sf_dir).select("query_id", "rank", "neighbor_id")
+    exact = exact_topk_fixture_cached(spark, sf_dir, ANN_K, metric)
+    return ranking_metrics(ranked, exact, ANN_K)
+
+
 def register_ann_pipelines(
     rows: Iterable[AnnPipeline],
     queries: dict[str, AnnFn],
     oracles: dict[str, str],
 ) -> None:
-    """Register each row's top-K and Recall@K queries with their oracles."""
+    """Register each row's top-K, Recall@K and ranking-metrics queries
+    with their oracles."""
     for row in rows:
         if row.topk:
             queries[row.topk] = partial(_ann_topk, row.ann)
@@ -216,6 +272,9 @@ def register_ann_pipelines(
         if row.recall:
             queries[row.recall] = partial(_ann_recall, row.ann, row.metric)
             oracles[row.recall] = _sql_recall(row.ctes, row.cand, row.metric)
+        if row.ranking:
+            queries[row.ranking] = partial(_ann_ranking, row.ann, row.metric)
+            oracles[row.ranking] = _sql_ranking_metrics(row.ctes, row.cand, row.metric)
 
 
 # ---------------------------------------------------------------------------
@@ -783,101 +842,6 @@ SIMSEARCH_QUERIES["ivf_ingest_assign"] = q_ivf_ingest_assign
 SIMSEARCH_ORACLES["ivf_ingest_assign"] = SQL_IVF_INGEST_ASSIGN
 
 
-def q_ann_ivf_ranking_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(mrr, ndcg_at_k, n_queries): graded retrieval quality of the
-    IVF index against exact cosine top-K — MRR@K and binary-gain
-    nDCG@K (``operators/metrics.ranking_metrics``), the evaluation
-    pair a retrieval pipeline reports beside Recall@K (position
-    matters: an index that finds all K neighbors but ranks them last
-    has recall 1.0 and low nDCG). Integer-exact cross-engine: rank
-    discounts are precomputed micro-unit literals, per-query sums are
-    BIGINT, floor() before every integer cast (Spark truncates,
-    DuckDB rounds)."""
-    queries = queries_view(spark, sf_dir)
-    corpus = load_table(spark, sf_dir, "embeddings")
-    ann = S.ivf_topk(queries, corpus, ANN_K)
-    ranked = ann.select("query_id", "rank", "neighbor_id")
-    exact = exact_topk_fixture_cached(spark, sf_dir, ANN_K, "cosine")
-    from .operators.metrics import ranking_metrics
-
-    return ranking_metrics(ranked, exact, ANN_K)
-
-
-def _sql_ranking_metrics(cand_cte: str, cand_name: str) -> str:
-    from .operators.metrics import _dcg_discount_micro
-
-    disc = _dcg_discount_micro(ANN_K)
-    idcg = sum(disc)
-    disc_list = "[" + ", ".join(str(d) for d in disc) + "]"
-    return f"""
-WITH {cand_cte},
-ann AS (
-  SELECT query_id, neighbor_id, rank FROM (
-    SELECT query_id, neighbor_id,
-      row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS rank
-    FROM {cand_name}
-  ) WHERE rank <= {ANN_K}
-),
-exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.query_id, e.vec_id AS neighbor_id,
-      row_number() OVER (PARTITION BY q.query_id
-        ORDER BY {_sql_cos("q.qe", "e.embedding")} DESC, e.vec_id) AS rank
-    FROM q CROSS JOIN embeddings e
-  ) WHERE rank <= {ANN_K}
-),
-rel AS (
-  SELECT ann.query_id, ann.rank FROM ann JOIN exact USING (query_id, neighbor_id)
-),
-per_q AS (
-  SELECT query_id,
-    CAST(sum({disc_list}[rank]) AS BIGINT) AS dcg_micro,
-    min(rank) AS first_rel
-  FROM rel GROUP BY query_id
-),
-scored AS (
-  SELECT q2.query_id,
-    coalesce(CAST(floor((p.dcg_micro * 1000000) / {idcg}) AS BIGINT), 0) AS ndcg_micro,
-    coalesce(CAST(floor(1000000 / p.first_rel) AS BIGINT), 0) AS rr_micro
-  FROM (SELECT DISTINCT query_id FROM exact) q2
-  LEFT JOIN per_q p USING (query_id)
-)
-SELECT
-  round(CAST(sum(rr_micro) AS DOUBLE) / (count(*) * 1000000.0), 6) AS mrr,
-  round(CAST(sum(ndcg_micro) AS DOUBLE) / (count(*) * 1000000.0), 6) AS ndcg_at_k,
-  count(*) AS n_queries
-FROM scored
-"""
-
-
-SIMSEARCH_QUERIES["ann_ivf_ranking_metrics"] = q_ann_ivf_ranking_metrics
-SIMSEARCH_ORACLES["ann_ivf_ranking_metrics"] = _sql_ranking_metrics(
-    SQL_IVF_CTES, "ivf_cand"
-)
-
-
-def q_ann_lsh_ranking_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MRR@K / nDCG@K for the hyperplane-LSH index — the second
-    instance of ``ranking_metrics``, showing position-aware quality on
-    a RECALL-LIMITED index (LSH recall ≈ 0.48 on the isotropic
-    fixture): nDCG degrades with the misses while MRR stays high if
-    the bucket containing the query still surfaces its top neighbor
-    first."""
-    queries = queries_view(spark, sf_dir)
-    corpus = load_table(spark, sf_dir, "embeddings")
-    ann = S.lsh_topk(queries, corpus, ANN_K)
-    exact = exact_topk_fixture_cached(spark, sf_dir, ANN_K, "cosine")
-    from .operators.metrics import ranking_metrics
-
-    return ranking_metrics(ann.select("query_id", "rank", "neighbor_id"), exact, ANN_K)
-
-
-SIMSEARCH_QUERIES["ann_lsh_ranking_metrics"] = q_ann_lsh_ranking_metrics
-SIMSEARCH_ORACLES["ann_lsh_ranking_metrics"] = _sql_ranking_metrics(
-    SQL_LSH_CTES, "lsh_cand"
-)
-
-
 # ---------------------------------------------------------------------------
 # OPQ — PQ behind a variance-balanced dimension permutation
 # (operators/opq.py; VERDICT r07 #2: PQ recall is quantization-limited
@@ -1279,7 +1243,7 @@ def q_ann_vamana_delta_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     corpus = load_table(spark, sf_dir, "embeddings")
     upserts, _ = fixture_mutation(corpus)
-    edges = vamana_edges(corpus, cache_key=f"fixture:{sf_dir}")
+    edges = vamana_edges(corpus)
     return vamana_delta_edges(upserts, corpus, edges)
 
 
@@ -1560,7 +1524,7 @@ def q_vamana_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.vamana import VAMANA_DEGREE
 
     corpus = load_table(spark, sf_dir, "embeddings")
-    edges = vamana_edges(corpus, cache_key=f"fixture:{sf_dir}")
+    edges = vamana_edges(corpus)
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     stats = deg.agg(
         F.count(F.lit(1)).cast("long").alias("n_nodes"),
@@ -1627,7 +1591,7 @@ def q_vamana_reachability_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     production graph index monitors (BFS core + the entry-repair
     lever: :func:`operators.simsearch.walk_reachability`)."""
     corpus = load_table(spark, sf_dir, "embeddings")
-    edges = vamana_edges(corpus, cache_key=f"fixture:{sf_dir}")
+    edges = vamana_edges(corpus)
     entries = corpus.where(
         F.col("vec_id") % S.BEAM_ENTRY_STRIDE == 0
     ).select(F.col("vec_id").alias("node"))
@@ -1837,20 +1801,20 @@ SIMSEARCH_ORACLES["spann_posting_stats"] = _sql_spann_posting_stats()
 
 
 def _vamana_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Beam walk over the α-pruned graph, edges memoized per fixture."""
+    """Beam walk over the α-pruned graph, edges memoized per corpus."""
     corpus = load_table(spark, sf_dir, "embeddings")
-    edges = vamana_edges(corpus, cache_key=f"fixture:{sf_dir}")
+    edges = vamana_edges(corpus)
     return S.graph_topk_from_index(queries_view(spark, sf_dir), corpus, edges, ANN_K)
 
 
 ANN_PIPELINES = (
     AnnPipeline(
         over_fixture(S.ivf_topk), "cosine", SQL_IVF_CTES, "ivf_cand",
-        "ann_ivf_topk", "ann_ivf_recall",
+        "ann_ivf_topk", "ann_ivf_recall", "ann_ivf_ranking_metrics",
     ),
     AnnPipeline(
         over_fixture(S.lsh_topk), "cosine", SQL_LSH_CTES, "lsh_cand",
-        "ann_lsh_topk", "ann_lsh_recall",
+        "ann_lsh_topk", "ann_lsh_recall", "ann_lsh_ranking_metrics",
     ),
     AnnPipeline(
         over_fixture(P.pq_topk), "l2", SQL_PQ_CTES, "pq_cand",
@@ -1917,150 +1881,3 @@ ANN_PIPELINES = (
 
 register_ann_pipelines(ANN_PIPELINES, SIMSEARCH_QUERIES, SIMSEARCH_ORACLES)
 
-
-# ---------------------------------------------------------------------------
-# Serve-path twins: each reads a stored index artifact and returns its
-# in-session sibling's exact result, so it shares the sibling's oracle
-# ---------------------------------------------------------------------------
-
-
-def q_ann_graph_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Serve-path twin of ``ann_graph_topk``: the symmetrized KNN
-    edge set is WRITTEN once per (session, fixture dir) as a parquet
-    index artifact (``sources/layout.write_graph_index``) and the
-    query plan walks the STORED (src, dst) table — the offline-build/
-    online-serve split of a production graph-ANN deployment.
-    ``tests/test_layout.py`` asserts the serve plan reads only the
-    two id columns and contains no band construction."""
-    from .sources.layout import read_graph_index, write_graph_index
-
-    corpus = load_table(spark, sf_dir, "embeddings")
-    path = memo_dir(
-        spark,
-        "graph-index",
-        sf_dir,
-        lambda p: write_graph_index(
-            corpus, p, GRAPH_BEAM_K, cache_key=f"fixture:{sf_dir}"
-        ),
-    )
-    edges = read_graph_index(spark, path)
-    out = S.graph_topk_from_index(
-        queries_view(spark, sf_dir), corpus, edges, ANN_K
-    )
-    return out.select(
-        "query_id", "rank", "neighbor_id", F.round("score", 6).alias("score")
-    )
-
-
-def q_ann_pq_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Serve-path twin of ``ann_pq_topk``: the trained codebook and
-    the 8-byte code table are WRITTEN once as parquet index artifacts
-    (``sources/layout.write_pq_index``) and the ADC plan reads ONLY
-    the stored tables — no corpus column, no retraining (ReadSchema
-    asserted in ``tests/test_layout.py``)."""
-    from .operators.pq import pq_topk_from_index
-    from .sources.layout import read_pq_index, write_pq_index
-
-    corpus = load_table(spark, sf_dir, "embeddings")
-    path = memo_dir(spark, "pq-index", sf_dir, lambda p: write_pq_index(corpus, p))
-    cb, codes = read_pq_index(spark, path)
-    out = pq_topk_from_index(queries_view(spark, sf_dir), cb, codes, ANN_K)
-    return out.select(
-        "query_id", "rank", "neighbor_id", F.round("score", 6).alias("score")
-    )
-
-
-def q_ann_ivf_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Serve-path twin of ``ann_ivf_topk``: the assigned corpus is
-    WRITTEN once partitioned by cell (``layout.write_cell_partitioned``)
-    and the query's probe list drives a partition-pruned scan — only
-    the probed directories are opened (`PartitionFilters`), which is
-    the IVF bandwidth win made physical."""
-    from .sources.layout import ivf_topk_from_store, write_cell_partitioned
-
-    corpus = load_table(spark, sf_dir, "embeddings")
-    path = memo_dir(spark, "ivf-cells", sf_dir, lambda p: write_cell_partitioned(corpus, p))
-    cents = S.ivf_centroids(corpus)
-    out = ivf_topk_from_store(spark, path, queries_view(spark, sf_dir), cents, ANN_K)
-    return out.select(
-        "query_id", "rank", "neighbor_id", F.round("score", 6).alias("score")
-    )
-
-
-def q_ann_ivfadc_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Serve-path twin of ``ann_ivfpq_res_topk``: quantizer, residual
-    codebook and cell-partitioned codes are WRITTEN once
-    (``layout.write_ivfadc_index``) — partition pruning × 32× column
-    shrink in one table — and the serve plan reads ONLY the stored
-    tables until the r·K exact re-rank fetch (PartitionFilters + thin
-    ReadSchema asserted in ``tests/test_layout.py``)."""
-    from .operators.pq import ivfadc_topk_from_index
-    from .sources.layout import write_ivfadc_index
-
-    corpus = load_table(spark, sf_dir, "embeddings")
-    path = memo_dir(spark, "ivfadc-index", sf_dir, lambda p: write_ivfadc_index(corpus, p))
-    out = ivfadc_topk_from_index(
-        spark, path, queries_view(spark, sf_dir), corpus, ANN_K
-    )
-    return out.select(
-        "query_id", "rank", "neighbor_id", F.round("score", 6).alias("score")
-    )
-
-
-def q_ann_vamana_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Serve-path twin of ``ann_vamana_topk``: the α-pruned edge set
-    is WRITTEN once per (session, fixture dir) as a stored (src, dst)
-    parquet artifact (``layout.write_vamana_index``) and the query
-    walks the STORED table — identical offline-build/online-serve
-    split as ``ann_graph_index_topk``, so the α-pruned build's cost
-    (the dominant wall of the in-session query) never appears in this
-    plan."""
-    from .sources.layout import read_graph_index, write_vamana_index
-
-    corpus = load_table(spark, sf_dir, "embeddings")
-    path = memo_dir(
-        spark,
-        "vamana-index",
-        sf_dir,
-        lambda p: write_vamana_index(corpus, p, cache_key=f"fixture:{sf_dir}"),
-    )
-    edges = read_graph_index(spark, path)
-    out = S.graph_topk_from_index(
-        queries_view(spark, sf_dir), corpus, edges, ANN_K
-    )
-    return out.select(
-        "query_id", "rank", "neighbor_id", F.round("score", 6).alias("score")
-    )
-
-
-def q_ann_spann_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Serve-path twin of ``ann_spann_topk``: the replicated posting
-    lists are WRITTEN once partitioned by cell
-    (``layout.write_spann_postings``) and the dynamically pruned probe
-    list drives a partition-pruned scan — most queries open ONE
-    directory thanks to boundary replication (`reports/SPANN.md`)."""
-    from .sources.layout import spann_topk_from_store, write_spann_postings
-
-    corpus = load_table(spark, sf_dir, "embeddings")
-    path = memo_dir(
-        spark, "spann-postings", sf_dir, lambda p: write_spann_postings(corpus, p)
-    )
-    cents = S.ivf_centroids(corpus)
-    out = spann_topk_from_store(
-        spark, path, queries_view(spark, sf_dir), cents, ANN_K
-    )
-    return out.select(
-        "query_id", "rank", "neighbor_id", F.round("score", 6).alias("score")
-    )
-
-
-for _twin, _fn, _sibling in (
-    ("ann_graph_index_topk", q_ann_graph_index_topk, "ann_graph_topk"),
-    ("ann_pq_index_topk", q_ann_pq_index_topk, "ann_pq_topk"),
-    ("ann_ivf_index_topk", q_ann_ivf_index_topk, "ann_ivf_topk"),
-    ("ann_ivfadc_index_topk", q_ann_ivfadc_index_topk, "ann_ivfpq_res_topk"),
-    ("ann_vamana_index_topk", q_ann_vamana_index_topk, "ann_vamana_topk"),
-    ("ann_spann_index_topk", q_ann_spann_index_topk, "ann_spann_topk"),
-):
-    SIMSEARCH_QUERIES[_twin] = _fn
-    SIMSEARCH_ORACLES[_twin] = SIMSEARCH_ORACLES[_sibling]

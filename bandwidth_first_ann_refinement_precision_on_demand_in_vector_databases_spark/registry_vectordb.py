@@ -33,7 +33,7 @@ from .registry_simsearch import (
     register_ann_pipelines,
     sql_rerank,
 )
-from .session import memo, memo_dir
+from .session import memo
 from .sources.fixtures import QUERY_STRIDE, load_table, queries_view
 
 #: attribute predicate for the filtered-search queries (≈40% of the
@@ -889,33 +889,6 @@ VECTORDB_ORACLES["ann_maxsim_rerank"] = SQL_ANN_MAXSIM_RERANK
 VECTORDB_ORACLES["ann_maxsim_recall"] = SQL_ANN_MAXSIM_RECALL
 
 
-def q_ann_maxsim_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Serve-path twin of ``ann_maxsim_rerank``: the multi-vector
-    TOKEN-BAG table is written once per (session, fixture dir) as a
-    parquet artifact (``sources/layout.write_token_bags`` — the
-    ColBERT/PLAID store shape, one row per sub-vector) and the whole
-    two-stage plan (per-slice union pool + fixed-order MaxSim fold)
-    runs over the STORED bags, never touching the packed ``embedding``
-    column. Results are bit-identical to the packed-expression plan —
-    same float32 slices, order-independent maxes, fixed-order Σ —
-    so the oracle is shared; ``tests/test_layout.py`` asserts the
-    serve plan's corpus access reads only the bag columns."""
-    from .sources.layout import read_token_bags, write_token_bags
-
-    corpus = load_table(spark, sf_dir, "embeddings")
-    path = memo_dir(spark, "token-bags", sf_dir, lambda p: write_token_bags(corpus, p))
-    bags = read_token_bags(spark, path)
-    out = MV.maxsim_topk_from_store(queries_view(spark, sf_dir), bags)
-    return out.select(
-        "query_id", "rank", "neighbor_id", F.round("maxsim", 6).alias("maxsim")
-    )
-
-
-VECTORDB_QUERIES["ann_maxsim_index_topk"] = q_ann_maxsim_index_topk
-#: same result as the packed-column plan by construction
-VECTORDB_ORACLES["ann_maxsim_index_topk"] = VECTORDB_ORACLES["ann_maxsim_rerank"]
-
-
 # ---------------------------------------------------------------------------
 # Three-stage cascade: 1-bit Hamming -> int8 cosine -> exact re-rank
 # (operators/bq.cascade_topk — the precision ladder composed end-to-end)
@@ -1111,40 +1084,6 @@ SELECT query_id, rank, doc_id, score_micro FROM (
 
 VECTORDB_QUERIES["tfidf_topn"] = q_tfidf_topn
 VECTORDB_ORACLES["tfidf_topn"] = SQL_TFIDF_TOPN
-
-
-# ---------------------------------------------------------------------------
-# Cascade serve path from stored sketch tables
-# ---------------------------------------------------------------------------
-
-def q_ann_cascade_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Serve-path twin of ``ann_cascade_topk``: the 1-bit signature
-    table and the int8 code table are WRITTEN once per (session,
-    fixture dir) as parquet index artifacts (``sources/layout.
-    write_cascade_index``) and the query plan scans the STORED
-    sketches — the offline-encode/online-serve split of a production
-    deployment, with zero training in the offline half. Results are
-    identical to the in-query encode, so the oracle is shared;
-    ``tests/test_layout.py`` asserts neither sketch scan reads a raw
-    vector column."""
-    from .sources.layout import read_cascade_index, write_cascade_index
-
-    corpus = load_table(spark, sf_dir, "embeddings")
-    path = memo_dir(
-        spark, "cascade-index", sf_dir, lambda p: write_cascade_index(corpus, p)
-    )
-    sigs, codes = read_cascade_index(spark, path)
-    out = BQ.cascade_topk_from_index(
-        queries_view(spark, sf_dir), corpus, sigs, codes, ANN_K
-    )
-    return out.select(
-        "query_id", "rank", "neighbor_id", F.round("score", 6).alias("score")
-    )
-
-
-VECTORDB_QUERIES["ann_cascade_index_topk"] = q_ann_cascade_index_topk
-#: same result as the in-query encode by construction
-VECTORDB_ORACLES["ann_cascade_index_topk"] = VECTORDB_ORACLES["ann_cascade_topk"]
 
 
 # ---------------------------------------------------------------------------
@@ -1467,31 +1406,6 @@ FROM rbt_cw w JOIN rbt_inv i ON i.vec_id = w.id
 
 VECTORDB_QUERIES["rabitq_codes"] = q_rabitq_codes
 VECTORDB_ORACLES["rabitq_codes"] = SQL_RABITQ_CODES
-
-
-def q_ann_rabitq_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Serve-path twin of ``ann_rabitq_topk``: the compact code
-    table (packed sign words + per-vector DOUBLE scalar — 16 B/vector
-    stored; 12 B is the conceptual bits+float32 figure) is WRITTEN
-    once (``layout.write_rabitq_index``) and the estimator scan reads
-    ONLY the stored table, unpacking signs in codegen; raw vectors are
-    touched exactly once in the r·K exact re-rank. Result-identical
-    to the in-session path — shares its oracle."""
-    from .operators.rabitq import rabitq_topk_from_index
-    from .sources.layout import write_rabitq_index
-
-    corpus = load_table(spark, sf_dir, "embeddings")
-    path = memo_dir(spark, "rabitq-index", sf_dir, lambda p: write_rabitq_index(corpus, p))
-    out = rabitq_topk_from_index(
-        spark, path, queries_view(spark, sf_dir), corpus, ANN_K
-    )
-    return out.select(
-        "query_id", "rank", "neighbor_id", F.round("score", 6).alias("score")
-    )
-
-
-VECTORDB_QUERIES["ann_rabitq_index_topk"] = q_ann_rabitq_index_topk
-VECTORDB_ORACLES["ann_rabitq_index_topk"] = VECTORDB_ORACLES["ann_rabitq_topk"]
 
 
 # ---------------------------------------------------------------------------

@@ -92,15 +92,19 @@ def clear_caches(spark: SparkSession | None = None) -> None:
     sessions: sweep loops, CLI exit, benchmarks).
 
     Drops the session's memo store, deletes the directories
-    ``memo_dir`` created, and clears the session's SQL cache
+    ``memo_dir`` created, clears the session's SQL cache
     (``catalog.clearCache()`` unpersists every cached relation —
-    including per-query internal persists the memo never saw). With
-    no argument, clears every live session."""
+    including per-query internal persists the memo never saw), then
+    unpersists every RDD the context still holds (``localCheckpoint``
+    blocks, which the SQL cache never saw). With no argument, clears
+    every live session."""
     sessions = [spark] if spark is not None else list(_SESSION_CACHES)
     for s in sessions:
         per = _SESSION_CACHES.pop(s, {})
         try:
             s.catalog.clearCache()
+            for rdd in s.sparkContext._jsc.getPersistentRDDs().values():
+                rdd.unpersist(False)
         except Exception:
             pass  # session already stopped — nothing left to release
         for path in per.get(_DIRS_KIND, ()):

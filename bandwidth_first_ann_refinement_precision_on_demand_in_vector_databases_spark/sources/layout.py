@@ -179,7 +179,7 @@ def ivf_topk_from_store(
         F.col("vec_id").alias("neighbor_id"),
         cosine("qvec", "embedding").alias("score"),
     )
-    return topk_per_query(cand, k, ascending=False, salted=False)
+    return topk_per_query(cand, k, ascending=False)
 
 
 def write_ivfadc_index(corpus: DataFrame, out_path: str) -> None:
@@ -433,4 +433,4 @@ def spann_topk_from_store(
         .groupBy("query_id", "neighbor_id")
         .agg(F.max("score").alias("score"))
     )
-    return topk_per_query(cand, k, ascending=False, salted=False)
+    return topk_per_query(cand, k, ascending=False)

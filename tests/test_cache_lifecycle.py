@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import io
 import os
+import re
 import tokenize
 from pathlib import Path
 from urllib.parse import urlparse
@@ -53,6 +54,20 @@ def test_clear_caches_releases_all_persisted_frames(spark, sf_small):
     assert session_cache(spark, "pq_codebook") == {}
 
 
+def test_clear_caches_releases_rdd_level_persists(spark, sf_small):
+    """A graph-walk serve leaves ``localCheckpoint`` blocks that the SQL
+    cache never saw; ``clear_caches`` releases those too."""
+    from bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spark import (
+        registry,
+    )
+
+    clear_caches(spark)
+    registry.QUERIES["ann_graph_index_topk"](spark, sf_small).collect()
+    assert _n_persistent(spark) > 0
+    clear_caches(spark)
+    assert _n_persistent(spark) == 0
+
+
 def test_cached_artifacts_are_memoized_per_session(spark, sf_small):
     corpus = load_table(spark, sf_small, "embeddings")
     a = prepare_corpus_cached(corpus, 6, "l2-tz", cache_key=sf_small)
@@ -84,11 +99,7 @@ def test_repeated_operator_invocation_keeps_cache_bounded(spark, sf_small):
             registry.QUERIES[name](spark, sf_small).count()
     assert _n_persistent(spark) == baseline
     clear_caches(spark)
-    # catalog-cached relations drop synchronously; the one possible
-    # residue is the rank-splits localCheckpoint block, whose RDD is
-    # released by the ContextCleaner only after py4j GC (async) — the
-    # memo reference is gone either way, so it cannot grow.
-    assert _n_persistent(spark) <= 1
+    assert _n_persistent(spark) == 0
 
 
 def test_embedding_dim_memo_is_hard_capped(spark, sf_small):
@@ -211,3 +222,34 @@ def test_one_memo_path_in_the_package():
             if tok.string == "id" and nxt.string == "(" and prev.string != ".":
                 offenders.append(f"{path.name}:{tok.start[0]}: id(")
     assert not offenders, offenders
+
+
+#: ``memo_dir`` kinds the streaming ingest queries write; every other
+#: store directory belongs to a ``registry.STORED_INDEXES`` row
+_STREAMING_STORES = {"stream-ingest", "stream-neardup", "stream-neardup-reord", "spann-ingest"}
+
+
+def test_every_stored_index_is_a_table_row():
+    """Stored index artifacts are served only through the
+    ``STORED_INDEXES`` table: besides the four streaming stores the one
+    ``memo_dir`` call is the table body's, each row shares its
+    sibling's oracle, and no hand-written serve twin remains."""
+    from bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spark import (
+        registry,
+    )
+
+    rows = registry.STORED_INDEXES
+    root = Path(pkg.__file__).parent
+    kinds = []
+    for path in sorted(root.rglob("*.py")):
+        src = path.read_text()
+        kinds += re.findall(r"memo_dir\(\s*\w+,\s*([^,]+),", src)
+        assert not re.search(
+            r"def q_(ann_\w+_index_topk|refine_l2_tz_served_topk|ann_\w+_ranking_metrics)\b", src
+        ), path.name
+    assert sorted(kinds) == sorted(["row.kind"] + [f'"{k}"' for k in _STREAMING_STORES])
+    assert len({r.kind for r in rows}) == len(rows) == 10
+    assert not {r.kind for r in rows} & _STREAMING_STORES
+    for r in rows:
+        assert r.name in registry.QUERIES
+        assert registry.ORACLES[r.name] == registry.ORACLES[r.sibling], r.name

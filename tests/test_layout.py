@@ -216,10 +216,10 @@ def test_served_refinement_scans_stored_layout(spark, sf_small):
     must contain a parquet scan of the layout directory, not an
     in-session preparation of the raw corpus."""
     from bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spark.registry import (
-        q_refine_l2_tz_served_topk,
+        QUERIES,
     )
 
-    df = q_refine_l2_tz_served_topk(spark, sf_small)
+    df = QUERIES["refine_l2_tz_served_topk"](spark, sf_small)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "bfann-refine-layout-" in plan, plan[:2000]
     assert df.count() > 0
@@ -233,15 +233,17 @@ def test_ivf_serve_path_prunes_partitions(spark, sf_small):
     from bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spark.operators.simsearch import (
         ivf_topk,
     )
+    from bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spark.registry import (
+        QUERIES,
+    )
     from bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spark.registry_simsearch import (
         ANN_K,
-        q_ann_ivf_index_topk,
     )
     from bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spark.sources.fixtures import (
         queries_view,
     )
 
-    df = q_ann_ivf_index_topk(spark, sf_small)
+    df = QUERIES["ann_ivf_index_topk"](spark, sf_small)
     plan = _phys(df)
     assert "PartitionFilters" in plan
     assert "bfann-ivf-cells-" in plan, plan[:2000]

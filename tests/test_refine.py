@@ -146,7 +146,6 @@ def test_cushion_composition_law(spark, sf_small, name, mode):
         ),
         K,
         ascending=not is_cosine(mode),
-        salted=False,
     )
     want = {(r.query_id, r.rank, r.neighbor_id) for r in rerank.collect()}
     cand.unpersist()
@@ -523,7 +522,7 @@ def test_seeds_always_reach_the_fetch_set(spark, sf_small, mode):
     assert set(fetched) == seed_pairs | survivor_pairs
 
     want = topk_per_query(
-        rescore(seeds.unionByName(survivors).distinct()), K, ascending=not cos, salted=False
+        rescore(seeds.unionByName(survivors).distinct()), K, ascending=not cos
     )
     got = {tuple(r) for r in res.topk.collect()}
     assert got == {tuple(r) for r in want.collect()}

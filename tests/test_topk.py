@@ -90,20 +90,6 @@ def test_pruned_path_bit_identical_to_sql_path(spark, sf_small, metric):
     assert slow.equals(pruned)
 
 
-def test_salted_equals_unsalted(spark, sf_small):
-    queries = queries_view(spark, sf_small)
-    corpus = load_table(spark, sf_small, "embeddings")
-    from bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spark.operators.topk import (
-        score_crossjoin,
-        topk_per_query,
-    )
-
-    scores = score_crossjoin(queries, corpus, metric="cosine")
-    a = topk_per_query(scores, K, salted=True).toPandas().sort_values(["query_id", "rank"], ignore_index=True)
-    b = topk_per_query(scores, K, salted=False).toPandas().sort_values(["query_id", "rank"], ignore_index=True)
-    assert a.equals(b)
-
-
 def test_multiprobe_lsh_candidates_superset_and_recall_geq(spark, sf_small):
     """Multi-probe probes the base bucket PLUS flipped-margin buckets,
     so its candidate set is a superset of plain LSH's and recall@K

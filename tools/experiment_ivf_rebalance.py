@@ -141,7 +141,7 @@ def main() -> None:
             F.col("vec_id").alias("neighbor_id"),
             cosine("qe", "embedding").alias("score"),
         )
-        ann = topk_per_query(scored, K, ascending=False, salted=False)
+        ann = topk_per_query(scored, K, ascending=False)
         if queryset not in exact:
             exact[queryset] = exact_topk(queries, corpus, K, "cosine").persist()
             exact[queryset].count()

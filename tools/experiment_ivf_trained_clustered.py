@@ -57,7 +57,7 @@ def ivf_recall_at_iters(spark, sf_dir: str, iters: int):
         F.col("vec_id").alias("neighbor_id"),
         cosine("qvec", "embedding").alias("score"),
     )
-    ann = topk_per_query(cand, K, ascending=False, salted=False)
+    ann = topk_per_query(cand, K, ascending=False)
     exact = exact_topk(queries, corpus, K, "cosine")
     return S.ann_recall(ann, exact, K).collect()[0][0]
 

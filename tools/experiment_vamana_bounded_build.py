@@ -162,7 +162,7 @@ def main() -> None:
             visited = cand.count()
             ann = topk_per_query(
                 cand.select("query_id", F.col("vec_id").alias("neighbor_id"), "score"),
-                K, ascending=False, salted=False,
+                K, ascending=False,
             )
             rec = ann_recall(ann, exact, K).collect()[0]
             row = {

@@ -84,7 +84,6 @@ def main() -> None:
             ),
             K,
             ascending=False,
-            salted=False,
         )
         rec = ann_recall(ann, exact, K).collect()[0]
         wall = round(time.perf_counter() - t0, 2)

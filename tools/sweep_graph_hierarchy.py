@@ -143,7 +143,7 @@ def run_fixture(spark, name, sf_dir, rows):
         visited = cand.count()
         ann = topk_per_query(
             cand.select("query_id", F.col("vec_id").alias("neighbor_id"), "score"),
-            K, ascending=False, salted=False,
+            K, ascending=False,
         )
         rec = ann_recall(ann, exact, K).collect()[0]["recall_at_k"]
         row = {

@@ -101,7 +101,6 @@ def main() -> None:
                 ),
                 K,
                 ascending=False,
-                salted=False,
             )
             rec = ann_recall(ann, exact, K).collect()[0]
             row = {
