@@ -163,7 +163,6 @@ def kmeans_sql_ctes(
     prefix: str,
     stride: int,
     iters: int = KMEANS_ITERS,
-    dist2_sql=None,
 ) -> tuple[str, str]:
     """Emit DuckDB CTEs replaying ``kmeans_centroids`` over a points
     CTE named ``points_cte`` with columns ``(grp, pid, pvec)``.
@@ -172,13 +171,7 @@ def kmeans_sql_ctes(
     (row_number ties → smaller cid), same floor-scaled BIGINT means,
     same empty-cluster carryover — the Spark and SQL quantizers are
     the same function."""
-    if dist2_sql is None:
-        def dist2_sql(a: str, b: str) -> str:
-            return (
-                f"list_sum(list_transform(list_zip({a}, {b}), "
-                f"p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE)) * "
-                f"(CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))))"
-            )
+    from ..plans.duck_oracle import sql_dist2
 
     parts = [
         f"{prefix}_c0 AS (SELECT grp, pid AS cid, pvec AS cvec "
@@ -190,7 +183,7 @@ def kmeans_sql_ctes(
   SELECT grp, pid, cid, pvec FROM (
     SELECT p.grp, p.pid, c.cid, p.pvec,
       row_number() OVER (PARTITION BY p.grp, p.pid
-        ORDER BY {dist2_sql("p.pvec", "c.cvec")} ASC, c.cid ASC) AS r
+        ORDER BY {sql_dist2("p.pvec", "c.cvec")} ASC, c.cid ASC) AS r
     FROM {points_cte} p JOIN {prev} c ON c.grp = p.grp
   ) WHERE r = 1
 )""")

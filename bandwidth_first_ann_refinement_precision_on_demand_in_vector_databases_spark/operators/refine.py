@@ -860,70 +860,34 @@ def _lsh_multiprobe_candidates(queries, corpus, k, keep_m, mode, cache_key) -> D
     return _band_candidates(qb, corpus, dim)
 
 
-def _graph_walk(queries, corpus, keep_m, mode, cache_key, edges) -> DataFrame:
-    """Every vector a quantization-guided beam search over ``edges``
-    visits: the walk ranks its frontier on the REDUCED representation
-    only (in HNSW-with-PQ deployments the adjacency and the codes are
-    the only hot data), with the ``BEAM_*`` operating point of
-    ``ann_graph_topk``."""
-    from pyspark.sql.window import Window
-
-    from .simsearch import BEAM_ENTRY_STRIDE, BEAM_ROUNDS, BEAM_WIDTH
+def _graph_candidates(queries, corpus, k, keep_m, mode, cache_key) -> DataFrame:
+    """Every vector the beam walk over the banded KNN graph visits,
+    ranking its frontier on the REDUCED representation only (in
+    HNSW-with-PQ deployments the adjacency and the codes are the only
+    hot data): ``simsearch.beam_candidates`` scores ``dot(redv, q)``
+    of the prepared corpus against the unit query, at the ``BEAM_*``
+    operating point of ``ann_graph_topk``."""
+    from .simsearch import GRAPH_DEGREE, beam_candidates, symmetric_knn_edges
 
     corp = prepare_corpus_cached(corpus, keep_m, mode, cache_key)
-    qs = F.broadcast(prepare_queries(queries, mode))
-    red_side = corp.select("vec_id", "redv")
-    seeds = F.broadcast(red_side.where(F.col("vec_id") % BEAM_ENTRY_STRIDE == 0))
-    cand = (
-        qs.crossJoin(seeds)
-        .select("query_id", "vec_id", dot("redv", "q").alias("red_score"))
-    ).localCheckpoint(eager=False)
-    for _ in range(BEAM_ROUNDS):
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("red_score").desc(), F.col("vec_id").asc()
-        )
-        frontier = (
-            cand.withColumn("__r", F.row_number().over(w))
-            .where(F.col("__r") <= BEAM_WIDTH)
-            .select("query_id", "vec_id")
-        )
-        new_ids = (
-            frontier.join(edges, frontier.vec_id == edges.src)
-            .select("query_id", F.col("dst").alias("vec_id"))
-            .distinct()
-        )
-        scored = (
-            new_ids.join(red_side, "vec_id")
-            .join(qs, "query_id")
-            .select("query_id", "vec_id", dot("redv", "q").alias("red_score"))
-        )
-        # dedup on the id pair alone (max — the pair's red_score is
-        # bit-identical across rounds); distinct() over the float
-        # column would rely on that bit-identity forever (r04 advisor)
-        cand = (
-            cand.unionByName(scored)
-            .groupBy("query_id", "vec_id")
-            .agg(F.max("red_score").alias("red_score"))
-            .localCheckpoint(eager=False)
-        )
-    return cand.select("query_id", "vec_id")
-
-
-def _graph_candidates(queries, corpus, k, keep_m, mode, cache_key) -> DataFrame:
-    """The reduced-page walk over the banded KNN graph."""
-    from .simsearch import GRAPH_DEGREE, symmetric_knn_edges
-
+    qs = prepare_queries(queries, mode).withColumnRenamed("q", "redv")
     edges = symmetric_knn_edges(corpus, GRAPH_DEGREE)
-    return _graph_walk(queries, corpus, keep_m, mode, cache_key, edges)
+    walk = beam_candidates(qs, corp, edges, vec="redv", score=dot)
+    return walk.select("query_id", "vec_id")
 
 
 def _vamana_candidates(queries, corpus, k, keep_m, mode, cache_key) -> DataFrame:
-    """The same walk over the α-pruned Vamana graph (better edges),
-    sharing the corpus-keyed edge memo of the ``ann_vamana_*`` queries."""
+    """The same reduced-page walk over the α-pruned Vamana graph
+    (better edges), sharing the corpus-keyed edge memo of the
+    ``ann_vamana_*`` queries."""
+    from .simsearch import beam_candidates
     from .vamana import vamana_edges
 
+    corp = prepare_corpus_cached(corpus, keep_m, mode, cache_key)
+    qs = prepare_queries(queries, mode).withColumnRenamed("q", "redv")
     edges = vamana_edges(corpus)
-    return _graph_walk(queries, corpus, keep_m, mode, cache_key, edges)
+    walk = beam_candidates(qs, corp, edges, vec="redv", score=dot)
+    return walk.select("query_id", "vec_id")
 
 
 def _ivfadc_candidates(queries, corpus, k, keep_m, mode, cache_key) -> DataFrame:

@@ -28,8 +28,10 @@ path (reference metric, ``ANNCode.py:651-660``).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -839,6 +841,8 @@ def beam_candidates(
     rounds: int = BEAM_ROUNDS,
     entry_stride: int = BEAM_ENTRY_STRIDE,
     entries: DataFrame | None = None,
+    vec: str = "embedding",
+    score: Callable[[str, str], Column] = cosine,
 ) -> DataFrame:
     """The visited set ``(query_id, vec_id, score)`` of the beam walk
     over an explicit ``(src, dst)`` edge frame — the serve-path core:
@@ -847,10 +851,13 @@ def beam_candidates(
     and the walk itself never touches how the graph was built.
     ``entries`` overrides the stride seeds with an explicit scored
     entry frame (query_id, vec_id, score) —
-    :func:`centroid_seeded_entries` is the trained variant."""
-    qv = F.broadcast(
-        queries.select("query_id", F.col("embedding").alias("qvec"))
-    )
+    :func:`centroid_seeded_entries` is the trained variant.
+
+    The walk ranks ``score(query.vec, corpus.vec)``: exact cosine over
+    ``embedding`` by default; the cushioned graph sources
+    (``refine.CANDIDATE_SOURCES``) walk the reduced page instead —
+    ``dot`` over ``redv`` against the unit query."""
+    qv = F.broadcast(queries.select("query_id", F.col(vec).alias("qvec")))
     # lazy checkpoints throughout the walk (see walk_reachability):
     # identical plan truncation; only the result-stage job is
     # deferred (AQE still runs the shuffle stages at call time).
@@ -858,13 +865,13 @@ def beam_candidates(
         cand = entries.localCheckpoint(eager=False)
     else:
         seeds = corpus.where(F.col("vec_id") % entry_stride == 0).select(
-            "vec_id", F.col("embedding").alias("cvec")
+            "vec_id", F.col(vec).alias("cvec")
         )
         cand = (
             qv.crossJoin(F.broadcast(seeds))
-            .select("query_id", "vec_id", cosine("qvec", "cvec").alias("score"))
+            .select("query_id", "vec_id", score("qvec", "cvec").alias("score"))
         ).localCheckpoint(eager=False)
-    cv = corpus.select("vec_id", F.col("embedding").alias("cvec"))
+    cv = corpus.select("vec_id", F.col(vec).alias("cvec"))
     for _ in range(rounds):
         w = Window.partitionBy("query_id").orderBy(
             F.col("score").desc(), F.col("vec_id").asc()
@@ -882,7 +889,7 @@ def beam_candidates(
         scored = (
             new_ids.join(cv, "vec_id")
             .join(qv, "query_id")
-            .select("query_id", "vec_id", cosine("qvec", "cvec").alias("score"))
+            .select("query_id", "vec_id", score("qvec", "cvec").alias("score"))
         )
         # dedup on the id pair alone (max(score) — scores for a pair
         # are bit-identical across rounds, so max is the value

@@ -99,7 +99,7 @@ red_tbl AS (
 
 
 # ---------------------------------------------------------------------------
-# fold helpers (same shapes as registry's basic ones, DOUBLE left folds)
+# fold helpers: the one set every oracle uses (DOUBLE left folds)
 # ---------------------------------------------------------------------------
 
 def sql_dot(a: str, b: str) -> str:
@@ -111,6 +111,15 @@ def sql_dot(a: str, b: str) -> str:
 
 def sql_sq_norm(a: str) -> str:
     return f"list_sum(list_transform({a}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
+
+
+def sql_cos(a: str, b: str) -> str:
+    """Cosine as ``operators/simsearch.cosine`` folds it: ⟨a,b⟩ over the
+    ε-floored norms."""
+    return (
+        f"({sql_dot(a, b)} / (greatest(sqrt({sql_sq_norm(a)}), 1e-12) * "
+        f"greatest(sqrt({sql_sq_norm(b)}), 1e-12)))"
+    )
 
 
 def sql_unit(a: str) -> str:

@@ -39,6 +39,7 @@ from .operators.rabitq import rabitq_topk_from_index
 from .operators.refine import MODES, prepare_corpus, refine_metrics, refine_topk
 from .operators.topk import exact_topk, exact_topk_fixture_cached
 from .plans import duck_oracle
+from .plans.duck_oracle import sql_cos, sql_dist2, sql_dot, sql_sq_norm
 from .session import memo, memo_dir
 from .sources import layout as L
 from .sources.fixtures import (
@@ -54,39 +55,9 @@ DELTA_DEFAULT = 0.7  # reference CLI default, ANNCode.py:801
 
 
 # ---------------------------------------------------------------------------
-# DuckDB SQL building blocks (kept as python f-string helpers so every
-# oracle uses the exact same fold shapes).
+# DuckDB SQL building blocks (the fold helpers every oracle shares live
+# in plans/duck_oracle.py).
 # ---------------------------------------------------------------------------
-
-def _sql_dot(a: str, b: str) -> str:
-    return (
-        f"list_sum(list_transform(list_zip({a}, {b}), "
-        f"p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))"
-    )
-
-
-def _sql_sq_norm(a: str) -> str:
-    return f"list_sum(list_transform({a}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
-
-
-def _sql_norm(a: str) -> str:
-    return f"sqrt({_sql_sq_norm(a)})"
-
-
-def _sql_cosine(a: str, b: str) -> str:
-    return (
-        f"({_sql_dot(a, b)} / "
-        f"(greatest({_sql_norm(a)}, 1e-12) * greatest({_sql_norm(b)}, 1e-12)))"
-    )
-
-
-def _sql_dist2(a: str, b: str) -> str:
-    return (
-        f"list_sum(list_transform(list_zip({a}, {b}), "
-        f"p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE)) * "
-        f"(CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))))"
-    )
-
 
 SQL_QUERIES_CTE = (
     f"SELECT vec_id AS query_id, embedding AS qe FROM embeddings "
@@ -660,13 +631,13 @@ _FRONT = [
 # every late registration block has run)
 
 ORACLES: dict[str, str] = {
-    "topk_cosine_exact": _sql_topk(_sql_cosine("q.qe", "e.embedding"), "DESC", K_DEFAULT),
-    "topk_l2_exact": _sql_topk(_sql_dist2("q.qe", "e.embedding"), "ASC", K_DEFAULT),
+    "topk_cosine_exact": _sql_topk(sql_cos("q.qe", "e.embedding"), "DESC", K_DEFAULT),
+    "topk_l2_exact": _sql_topk(sql_dist2("q.qe", "e.embedding"), "ASC", K_DEFAULT),
     "rownorm_unit": f"""
 SELECT vec_id,
        CAST(generate_subscripts(embedding, 1) - 1 AS INT) AS pos,
-       round(CAST(unnest(embedding) AS DOUBLE) / greatest({_sql_norm('embedding')}, 1e-12), 6) + 0.0 AS u,
-       round({_sql_norm('embedding')}, 6) AS norm
+       round(CAST(unnest(embedding) AS DOUBLE) / greatest(sqrt({sql_sq_norm('embedding')}), 1e-12), 6) + 0.0 AS u,
+       round(sqrt({sql_sq_norm('embedding')}), 6) AS norm
 FROM embeddings
 """,
     "embedding_dim_stats": SQL_EMBEDDING_DIM_STATS,
@@ -676,8 +647,8 @@ FROM embeddings
 WITH q AS ({SQL_QUERIES_CTE}),
 s AS (
   SELECT q.query_id, e.vec_id AS neighbor_id,
-         {_sql_cosine('q.qe', 'e.embedding')} AS cos_score,
-         {_sql_dist2('q.qe', 'e.embedding')} AS d2
+         {sql_cos('q.qe', 'e.embedding')} AS cos_score,
+         {sql_dist2('q.qe', 'e.embedding')} AS d2
   FROM q CROSS JOIN embeddings e
 ),
 gt AS (
@@ -1132,7 +1103,8 @@ from .registry_simsearch import (  # noqa: E402
     _SQL_RES_EMB as _SQL_ADC_RES_EMB,
     _sql_band_dots as _sql_lsh_band_dots,
     _sql_bands as _sql_lsh_bands,
-    _sql_dist2 as _sql_adc_dist2,
+    _sql_beam_rounds,
+    _sql_graph_edges,
     sql_ivf_body as _sql_adc_ivf_body,
     sql_pq_body as _sql_adc_pq_body,
 )
@@ -1188,101 +1160,17 @@ cand_ids AS (
 ),
 """
 
-# Graph: the quantization-guided walk. Graph construction
-# CTEs are shared shapes with the ann_graph_* oracles; the walk ranks
-# on corp.redv (the reduced representation refine_body already
-# defines), and the visited set feeds the candidate-restricted
-# refinement. Every per-round CTE is MATERIALIZED — the round chain
-# references its predecessor three times per level (frontier, union,
-# dedup), which is exponential under DuckDB's default inlining.
-
-
-def _sql_graph_cushion_extra() -> str:
-    from .operators import simsearch as _S
-    from .registry_simsearch import GRAPH_BEAM_K, _sql_cos
-
-    parts = [
-        f"""gcb AS ({_sql_lsh_bands("embeddings", "vec_id", "embedding")}),
-ggraph AS (
-  SELECT node_id, neighbor_id FROM (
-    SELECT node_id, neighbor_id,
-      row_number() OVER (PARTITION BY node_id
-        ORDER BY score DESC, neighbor_id) AS rank
-    FROM (
-      SELECT node_id, neighbor_id, {_sql_cos("qvec", "cvec")} AS score FROM (
-        SELECT DISTINCT a.id AS node_id, b.id AS neighbor_id,
-               a.vec AS qvec, b.vec AS cvec
-        FROM gcb a JOIN gcb b
-          ON a.band = b.band AND a.bkey = b.bkey AND a.id != b.id
-      )
+def _sql_walk_cushion_extra(vamana: bool) -> str:
+    """The graph sources' candidate CTEs: the edges and round chain of
+    the ann_graph_* / ann_vamana_* oracles, walked on the reduced page —
+    ``dot(q.qn, c.redv)`` over the ``corp`` CTE refine_body defines,
+    as ``refine._graph_candidates`` ranks it. The ``w`` prefix keeps the
+    round names clear of the fp16 chain's ``s1``…``s7``."""
+    edge_ctes, edges = _sql_graph_edges(vamana)
+    rounds, last = _sql_beam_rounds(
+        edges, table="corp", col="redv", qcol="qn", score=sql_dot, prefix="w"
     )
-  ) WHERE rank <= {GRAPH_BEAM_K}
-),
-gedges AS MATERIALIZED (
-  SELECT node_id AS src, neighbor_id AS dst FROM ggraph
-  UNION
-  SELECT neighbor_id AS src, node_id AS dst FROM ggraph
-),
-w0 AS MATERIALIZED (
-  SELECT q.query_id, s.vec_id, {duck_oracle.sql_dot("s.redv", "q.qn")} AS red_score
-  FROM q CROSS JOIN
-    (SELECT vec_id, redv FROM corp WHERE vec_id % {_S.BEAM_ENTRY_STRIDE} = 0) s
-)"""
-    ]
-    for i in range(1, _S.BEAM_ROUNDS + 1):
-        prev, cur = f"w{i - 1}", f"w{i}"
-        parts.append(f"""wf{i} AS (
-  SELECT query_id, vec_id FROM (
-    SELECT query_id, vec_id,
-      row_number() OVER (PARTITION BY query_id
-        ORDER BY red_score DESC, vec_id ASC) AS r
-    FROM {prev}
-  ) WHERE r <= {_S.BEAM_WIDTH}
-)""")
-        parts.append(f"""wn{i} AS (
-  SELECT DISTINCT f.query_id, e.dst AS vec_id
-  FROM wf{i} f JOIN gedges e ON e.src = f.vec_id
-)""")
-        parts.append(f"""ws{i} AS (
-  SELECT n.query_id, n.vec_id, {duck_oracle.sql_dot("c.redv", "q.qn")} AS red_score
-  FROM wn{i} n
-  JOIN corp c ON c.vec_id = n.vec_id
-  JOIN q ON q.query_id = n.query_id
-)""")
-        parts.append(f"""{cur} AS MATERIALIZED (
-  SELECT query_id, vec_id, max(red_score) AS red_score FROM (
-    SELECT * FROM {prev} UNION ALL SELECT * FROM ws{i}
-  ) GROUP BY query_id, vec_id
-)""")
-    parts.append(
-        f"cand_ids AS (SELECT query_id, vec_id FROM w{_S.BEAM_ROUNDS})"
-    )
-    return ",\n".join(parts) + ",\n"
-
-
-def _sql_vamana_cushion_extra() -> str:
-    """The graph-cushion walk chain with the α-prune inserted between
-    the banded ``gedges`` and the walk rounds: vamana CTEs come from
-    ``registry_simsearch._sql_vamana_ctes`` parameterized on the
-    in-body edge name, and the rounds walk ``vedges``."""
-    from .registry_simsearch import _sql_vamana_ctes
-
-    base = _sql_graph_cushion_extra()
-    vam = ",\n".join(_sql_vamana_ctes(edges_src="gedges")) + ",\n"
-    # inject the prune chain right after gedges, and point every walk
-    # round's expansion at the pruned vedges. The anchors are literal
-    # text from _sql_graph_cushion_extra — assert they matched so a
-    # drift there fails loudly at import instead of surfacing later
-    # as a SQL error or a silent oracle mismatch (r10 ADVICE).
-    w0_anchor = "w0 AS MATERIALIZED ("
-    walk_anchor = "JOIN gedges e ON e.src = f.vec_id"
-    assert w0_anchor in base and walk_anchor in base, (
-        "graph-cushion SQL anchors drifted; update _sql_vamana_cushion_extra"
-    )
-    out = base.replace(w0_anchor, vam + w0_anchor, 1)
-    out = out.replace(walk_anchor, "JOIN vedges e ON e.src = f.vec_id")
-    assert "vedges" in out and out != base
-    return out
+    return f"{edge_ctes},\n{rounds},\ncand_ids AS (SELECT query_id, vec_id FROM {last}),\n"
 
 
 # MRL: replays operators/mrl.mrl_topk (prefix cosine, top R·K, ties →
@@ -1323,7 +1211,7 @@ cand_ids AS MATERIALIZED (
   SELECT query_id, neighbor_id AS vec_id FROM (
     SELECT c.query_id, c.neighbor_id,
       row_number() OVER (PARTITION BY c.query_id
-        ORDER BY {_sql_cosine("q.qe", "r.recon")} DESC, c.neighbor_id) AS r
+        ORDER BY {sql_cos("q.qe", "r.recon")} DESC, c.neighbor_id) AS r
     FROM casc2 c
     JOIN recon r ON r.vec_id = c.neighbor_id
     JOIN q ON q.query_id = c.query_id
@@ -1346,7 +1234,7 @@ ivfres_q AS (
 ),
 ivfres_adc AS (
   SELECT qr.query_id, a.vec_id AS neighbor_id,
-         {_sql_adc_dist2("qr.qres", "r.recon")} AS score
+         {sql_dist2("qr.qres", "r.recon")} AS score
   FROM ivfres_q qr
   JOIN res_emb a ON a.cell = qr.cell
   JOIN pq_recon r ON r.vec_id = a.vec_id
@@ -1382,13 +1270,13 @@ cand_ids AS (
 CUSHION_COMPOSITIONS: dict[str, tuple[str, str]] = {
     "ivf": ("l2-tz", _IVF_CUSHION_EXTRA),
     "lsh": ("cos-l1", _LSH_CUSHION_EXTRA),
-    "graph": ("cos-l1", _sql_graph_cushion_extra()),
+    "graph": ("cos-l1", _sql_walk_cushion_extra(vamana=False)),
     "mrl": ("cos-l1", _MRL_CUSHION_EXTRA),
     "cascade": ("cos-l1", _CASCADE_CUSHION_EXTRA),
     "lsh_multiprobe": ("cos-l1", _LSH_MP_CUSHION_EXTRA),
     "ivfadc": ("l2-tz", _IVFADC_CUSHION_EXTRA),
     "rabitq": ("cos-l1", _RBT_CUSHION_EXTRA),
-    "vamana": ("cos-l1", _sql_vamana_cushion_extra()),
+    "vamana": ("cos-l1", _sql_walk_cushion_extra(vamana=True)),
 }
 
 # tuned composition operating point: the sweep

@@ -253,13 +253,6 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_COS_AB = (
-    "list_sum(list_transform(list_zip(a.embedding, b.embedding), "
-    "p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))) / "
-    "(greatest(sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))), 1e-12) * "
-    "greatest(sqrt(list_sum(list_transform(b.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))), 1e-12))"
-)
-
 #: second registered operating point on the banding s-curve: a tighter
 #: near-dup radius over the same blocked plan (0.45 vs the primary
 #: 0.35; fixture max pairwise cosine ≈ 0.513 keeps both non-trivial)
@@ -275,6 +268,7 @@ def q_dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # replicate the hyperplane banding of registry_simsearch over the
 # corpus-vs-corpus pair space, then exact-cosine verify
 def _sql_dedup_lsh(tau: float) -> str:
+    from .plans.duck_oracle import sql_dot, sql_sq_norm
     from .registry_simsearch import _sql_bands
 
     return f"""
@@ -284,7 +278,7 @@ cand AS (
   FROM cb x JOIN cb y ON x.band = y.band AND x.bkey = y.bkey AND x.id < y.id
 ),
 pairs AS (
-  SELECT id_a, id_b, round({_SQL_COS_AB.replace("a.embedding", "va").replace("b.embedding", "vb")}, 6) AS cos_sim
+  SELECT id_a, id_b, round({sql_dot("va", "vb")} / (greatest(sqrt({sql_sq_norm("va")}), 1e-12) * greatest(sqrt({sql_sq_norm("vb")}), 1e-12)), 6) AS cos_sim
   FROM cand
 )
 SELECT id_a, id_b, cos_sim FROM pairs WHERE cos_sim >= {tau}
@@ -333,12 +327,8 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_dedup_semantic(tau: float) -> str:
-    from .registry_simsearch import (
-        _IVF_KM_CTES,
-        _IVF_KM_FINAL,
-        _sql_cos,
-        _sql_dist2,
-    )
+    from .plans.duck_oracle import sql_cos, sql_dist2
+    from .registry_simsearch import _IVF_KM_CTES, _IVF_KM_FINAL
 
     n = D.CC_ITERS
     return f"""
@@ -350,14 +340,14 @@ assigned AS MATERIALIZED (
   SELECT vec_id, embedding, centroid_id AS cell FROM (
     SELECT e.vec_id, e.embedding, c.centroid_id,
       row_number() OVER (PARTITION BY e.vec_id
-        ORDER BY {_sql_dist2("e.embedding", "c.cvec")} ASC, c.centroid_id ASC) AS r
+        ORDER BY {sql_dist2("e.embedding", "c.cvec")} ASC, c.centroid_id ASC) AS r
     FROM embeddings e CROSS JOIN cents c
   ) WHERE r = 1
 ),
 dup AS MATERIALIZED (
   SELECT a.vec_id AS id_a, b.vec_id AS id_b
   FROM assigned a JOIN assigned b ON a.cell = b.cell AND a.vec_id < b.vec_id
-  WHERE round({_sql_cos("a.embedding", "b.embedding")}, 6) >= {tau}
+  WHERE round({sql_cos("a.embedding", "b.embedding")}, 6) >= {tau}
 ),
 -- MATERIALIZED: the unrolled label-propagation chain below references
 -- edges once per round PER LEVEL, and DuckDB's default CTE inlining

@@ -29,6 +29,7 @@ from .operators.metrics import _dcg_discount_micro, ranking_metrics
 from .operators.opq import OPQ_SCALE as _OPQ_SCALE
 from .operators.topk import exact_topk_fixture_cached
 from .operators.vamana import vamana_edges
+from .plans.duck_oracle import sql_cos, sql_dist2, sql_dot
 from .sources.fixtures import (
     FIXTURE_EMBED_DIM,
     QUERY_STRIDE,
@@ -48,32 +49,6 @@ SQL_Q_CTE = (
 )
 
 
-def _sql_dot(a: str, b: str) -> str:
-    return (
-        f"list_sum(list_transform(list_zip({a}, {b}), "
-        f"p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))"
-    )
-
-
-def _sql_norm(a: str) -> str:
-    return f"sqrt(list_sum(list_transform({a}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
-
-
-def _sql_cos(a: str, b: str) -> str:
-    return (
-        f"({_sql_dot(a, b)} / "
-        f"(greatest({_sql_norm(a)}, 1e-12) * greatest({_sql_norm(b)}, 1e-12)))"
-    )
-
-
-def _sql_dist2(a: str, b: str) -> str:
-    return (
-        f"list_sum(list_transform(list_zip({a}, {b}), "
-        f"p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE)) * "
-        f"(CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))))"
-    )
-
-
 # ---------------------------------------------------------------------------
 # Shared top-K / Recall@K templates and the ANN pipeline table
 # ---------------------------------------------------------------------------
@@ -85,7 +60,7 @@ _ORDER = {"cosine": "DESC", "l2": "ASC"}
 
 def _sql_exact_score(metric: str) -> str:
     """Full-precision score of corpus row ``e`` for query row ``q``."""
-    return (_sql_cos if metric == "cosine" else _sql_dist2)("q.qe", "e.embedding")
+    return (sql_cos if metric == "cosine" else sql_dist2)("q.qe", "e.embedding")
 
 
 def _sql_topk(ctes: str, cand: str, metric: str) -> str:
@@ -287,8 +262,7 @@ def register_ann_pipelines(
 #: Kept module-level: registry_dedup / the ivf_cell_sizes oracle
 #: compose these pieces directly.
 _IVF_KM_CTES, _IVF_KM_FINAL = kmeans_sql_ctes(
-    "ivfkm_pts", "ivfkm", S.IVF_STRIDE, iters=S.IVF_KMEANS_ITERS,
-    dist2_sql=_sql_dist2,
+    "ivfkm_pts", "ivfkm", S.IVF_STRIDE, iters=S.IVF_KMEANS_ITERS
 )
 
 def sql_ivf_body(
@@ -306,8 +280,7 @@ def sql_ivf_body(
     the seed CTE). ``cents``/``assigned``/``probes`` names are fixed;
     a statement never contains two instances."""
     km_ctes, km_final = kmeans_sql_ctes(
-        f"{km_prefix}_pts", km_prefix, S.IVF_STRIDE, iters=iters,
-        dist2_sql=_sql_dist2,
+        f"{km_prefix}_pts", km_prefix, S.IVF_STRIDE, iters=iters
     )
     return f"""
 {km_prefix}_pts AS (SELECT 0 AS grp, vec_id AS pid, embedding AS pvec FROM {emb}),
@@ -317,7 +290,7 @@ assigned AS (
   SELECT vec_id, embedding, centroid_id AS cell FROM (
     SELECT e.vec_id, e.embedding, c.centroid_id,
       row_number() OVER (PARTITION BY e.vec_id
-        ORDER BY {_sql_dist2("e.embedding", "c.cvec")} ASC, c.centroid_id ASC) AS r
+        ORDER BY {sql_dist2("e.embedding", "c.cvec")} ASC, c.centroid_id ASC) AS r
     FROM {emb} e CROSS JOIN cents c
   ) WHERE r = 1
 ),
@@ -325,12 +298,12 @@ probes AS (
   SELECT query_id, qe, centroid_id AS cell FROM (
     SELECT q.query_id, q.qe, c.centroid_id,
       row_number() OVER (PARTITION BY q.query_id
-        ORDER BY {_sql_dist2("q.qe", "c.cvec")} ASC, c.centroid_id ASC) AS r
+        ORDER BY {sql_dist2("q.qe", "c.cvec")} ASC, c.centroid_id ASC) AS r
     FROM {qsrc} AS q CROSS JOIN cents c
   ) WHERE r <= {S.IVF_NPROBE}
 ),
 ivf_cand AS (
-  SELECT p.query_id, a.vec_id AS neighbor_id, {_sql_cos("p.qe", "a.embedding")} AS score
+  SELECT p.query_id, a.vec_id AS neighbor_id, {sql_cos("p.qe", "a.embedding")} AS score
   FROM probes p JOIN assigned a ON a.cell = p.cell
 )
 """
@@ -355,7 +328,7 @@ def _sql_band_key(vec: str, band: int) -> str:
     terms = []
     for j in range(S.LSH_ROWS):
         plane = S.lsh_planes(FIXTURE_EMBED_DIM)[band * S.LSH_ROWS + j]
-        d = _sql_dot(vec, _sql_plane_lit(plane))
+        d = sql_dot(vec, _sql_plane_lit(plane))
         terms.append(f"(CASE WHEN {d} >= 0 THEN {1 << j} ELSE 0 END)")
     return " + ".join(terms)
 
@@ -375,7 +348,7 @@ q AS ({SQL_Q_CTE}),
 qb AS ({_sql_bands("q", "query_id", "qe")}),
 cb AS ({_sql_bands("embeddings", "vec_id", "embedding")}),
 lsh_cand AS (
-  SELECT query_id, neighbor_id, {_sql_cos("qvec", "cvec")} AS score FROM (
+  SELECT query_id, neighbor_id, {sql_cos("qvec", "cvec")} AS score FROM (
     SELECT DISTINCT qb.id AS query_id, cb.id AS neighbor_id,
            qb.vec AS qvec, cb.vec AS cvec
     FROM qb JOIN cb ON qb.band = cb.band AND qb.bkey = cb.bkey
@@ -395,9 +368,7 @@ def q_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: codebook/codes/reconstruction — the SQL replay of operators/pq.py
 #: (same trained per-subspace k-means, same argmin tie-break, same
 #: m-ordered concatenation, same strict DOUBLE folds).
-_PQ_KM_CTES, _PQ_KM_FINAL = kmeans_sql_ctes(
-    "pqkm_pts", "pqkm", P.PQ_STRIDE, dist2_sql=_sql_dist2
-)
+_PQ_KM_CTES, _PQ_KM_FINAL = kmeans_sql_ctes("pqkm_pts", "pqkm", P.PQ_STRIDE)
 
 def sql_pq_body(emb: str = "embeddings", qsrc: str = "q") -> str:
     """The PQ pipeline CTE chain over a parameterized corpus CTE
@@ -423,7 +394,7 @@ pq_code AS (
   SELECT vec_id, m, cid AS code FROM (
     SELECT s.vec_id, s.m, c.cid,
       row_number() OVER (PARTITION BY s.vec_id, s.m
-        ORDER BY {_sql_dist2("s.subv", "c.cvec")} ASC, c.cid ASC) AS r
+        ORDER BY {sql_dist2("s.subv", "c.cvec")} ASC, c.cid ASC) AS r
     FROM pq_sub s JOIN pq_cb c USING (m)
   ) WHERE r = 1
 ),
@@ -434,7 +405,7 @@ pq_recon AS (
 ),
 pq_cand AS (
   SELECT q.query_id, r.vec_id AS neighbor_id,
-         {_sql_dist2("q.qe", "r.recon")} AS score
+         {sql_dist2("q.qe", "r.recon")} AS score
   FROM pq_recon r CROSS JOIN {qsrc} AS q
 )
 """
@@ -463,7 +434,7 @@ refine_cand AS (
   ) WHERE rank <= {P.PQ_REFINE_R * ANN_K}
 ),
 refine_exact AS (
-  SELECT c.query_id, c.neighbor_id, {_sql_dist2("q.qe", "e.embedding")} AS score
+  SELECT c.query_id, c.neighbor_id, {sql_dist2("q.qe", "e.embedding")} AS score
   FROM refine_cand c
   JOIN embeddings e ON e.vec_id = c.neighbor_id
   JOIN q ON q.query_id = c.query_id
@@ -480,7 +451,7 @@ q AS ({SQL_Q_CTE}),
 {SQL_PQ_BODY},
 ivfpq_adc AS (
   SELECT p.query_id, a.vec_id AS neighbor_id,
-         {_sql_dist2("p.qe", "r.recon")} AS score
+         {sql_dist2("p.qe", "r.recon")} AS score
   FROM probes p
   JOIN assigned a ON a.cell = p.cell
   JOIN pq_recon r ON r.vec_id = a.vec_id
@@ -493,7 +464,7 @@ ivfpq_ids AS (
   ) WHERE rank <= {P.PQ_REFINE_R * ANN_K}
 ),
 ivfpq_cand AS (
-  SELECT c.query_id, c.neighbor_id, {_sql_dist2("q.qe", "e.embedding")} AS score
+  SELECT c.query_id, c.neighbor_id, {sql_dist2("q.qe", "e.embedding")} AS score
   FROM ivfpq_ids c
   JOIN embeddings e ON e.vec_id = c.neighbor_id
   JOIN q ON q.query_id = c.query_id
@@ -573,23 +544,36 @@ def q_ann_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_ANN_KNN_GRAPH = f"""
-WITH cb AS ({_sql_bands("embeddings", "vec_id", "embedding")}),
-cand AS (
-  SELECT DISTINCT a.id AS node_id, b.id AS neighbor_id,
-         a.vec AS qvec, b.vec AS cvec
-  FROM cb a JOIN cb b
-    ON a.band = b.band AND a.bkey = b.bkey AND a.id != b.id
-),
-scored AS (
-  SELECT node_id, neighbor_id, {_sql_cos("qvec", "cvec")} AS score FROM cand
-)
-SELECT node_id, rank, neighbor_id, round(score, 6) AS score FROM (
+#: the banded KNN-graph pair space of ``operators/simsearch.knn_graph``:
+#: every distinct pair sharing an LSH band bucket, self excluded, scored
+#: by exact cosine. Shared by the KNN-graph oracles and every graph
+#: walk's edge CTEs (:func:`_sql_graph_edges`).
+_SQL_GRAPH_PAIRS = f"""cb AS ({_sql_bands("embeddings", "vec_id", "embedding")}),
+gscored AS (
+  SELECT node_id, neighbor_id, {sql_cos("qvec", "cvec")} AS score FROM (
+    SELECT DISTINCT a.id AS node_id, b.id AS neighbor_id,
+           a.vec AS qvec, b.vec AS cvec
+    FROM cb a JOIN cb b
+      ON a.band = b.band AND a.bkey = b.bkey AND a.id != b.id
+  )
+)"""
+
+
+def _sql_graph_ranked(k: int) -> str:
+    """(node_id, neighbor_id, score, rank) of each node's top-``k``
+    banded pairs (ties → smaller neighbor_id)."""
+    return f"""SELECT * FROM (
   SELECT node_id, neighbor_id, score,
     CAST(row_number() OVER (PARTITION BY node_id
       ORDER BY score DESC, neighbor_id) AS INT) AS rank
-  FROM scored
-) WHERE rank <= {KNN_GRAPH_K}
+  FROM gscored
+) WHERE rank <= {k}"""
+
+
+SQL_ANN_KNN_GRAPH = f"""
+WITH {_SQL_GRAPH_PAIRS}
+SELECT node_id, rank, neighbor_id, round(score, 6) AS score
+FROM ({_sql_graph_ranked(KNN_GRAPH_K)})
 """
 
 
@@ -607,26 +591,15 @@ def q_ann_knn_graph_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_ANN_KNN_GRAPH_RECALL = f"""
-WITH cb AS ({_sql_bands("embeddings", "vec_id", "embedding")}),
-cand AS (
-  SELECT DISTINCT a.id AS node_id, b.id AS neighbor_id,
-         a.vec AS qvec, b.vec AS cvec
-  FROM cb a JOIN cb b
-    ON a.band = b.band AND a.bkey = b.bkey AND a.id != b.id
-),
+WITH {_SQL_GRAPH_PAIRS},
 ann AS (
-  SELECT node_id AS query_id, neighbor_id FROM (
-    SELECT node_id, neighbor_id,
-      row_number() OVER (PARTITION BY node_id
-        ORDER BY {_sql_cos("qvec", "cvec")} DESC, neighbor_id) AS rank
-    FROM cand
-  ) WHERE rank <= {KNN_GRAPH_K}
+  SELECT node_id AS query_id, neighbor_id FROM ({_sql_graph_ranked(KNN_GRAPH_K)})
 ),
 exact AS (
   SELECT query_id, neighbor_id FROM (
     SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
       row_number() OVER (PARTITION BY a.vec_id
-        ORDER BY {_sql_cos("a.embedding", "b.embedding")} DESC, b.vec_id) AS rank
+        ORDER BY {sql_cos("a.embedding", "b.embedding")} DESC, b.vec_id) AS rank
     FROM embeddings a JOIN embeddings b ON a.vec_id != b.vec_id
   ) WHERE rank <= {KNN_GRAPH_K}
 ),{_sql_hit_rate(KNN_GRAPH_K)}
@@ -665,94 +638,99 @@ SIMSEARCH_ORACLES: dict[str, str] = {
 GRAPH_BEAM_K = S.GRAPH_DEGREE
 
 
-def _sql_graph_beam_ctes(
-    q_cte: str = SQL_Q_CTE,
-    pre_ctes: tuple[str, ...] = (),
-    c0_ctes: tuple[str, ...] = (),
-    post_edges_ctes: tuple[str, ...] = (),
-    edges_name: str = "edges",
-) -> tuple[str, str]:
-    """CTE chain replaying ``graph_beam_search``; returns
-    ``(ctes, final_candidate_cte)`` where the final CTE has columns
-    (query_id, neighbor_id, score). Heavy CTEs are MATERIALIZED —
-    the round chain references them once per level and DuckDB's
-    default inlining re-evaluates exponentially otherwise (same
-    lesson as the semantic-dedup oracle). ``q_cte`` parameterizes the
-    walker set — the fixture queries by default, the incoming upsert
-    batch for the delta-insert oracle. ``pre_ctes`` are injected after
-    ``q`` (e.g. the IVF body for centroid seeding); ``c0_ctes``, when
-    given, REPLACE the default stride-seed ``c0`` entry CTE.
-    ``post_edges_ctes`` are injected after the banded ``edges`` CTE
-    (e.g. the Vamana α-prune chain), and ``edges_name`` names the edge
-    table the expansion rounds walk (``edges`` by default, the pruned
-    ``vedges`` for the Vamana twin)."""
+def _sql_graph_edges(vamana: bool = False) -> tuple[str, str]:
+    """``(ctes, edge CTE name)``: the walked graph — each node's
+    top-``GRAPH_BEAM_K`` banded pairs, symmetrized into ``edges``
+    (``symmetric_knn_edges``); ``vamana`` appends the α-prune chain and
+    names its ``vedges`` (``vamana_edges``)."""
     parts = [
-        f"q AS ({q_cte})",
-        *pre_ctes,
-        f"cb AS ({_sql_bands('embeddings', 'vec_id', 'embedding')})",
-        f"""gscored AS (
-  SELECT node_id, neighbor_id, {_sql_cos("qvec", "cvec")} AS score FROM (
-    SELECT DISTINCT a.id AS node_id, b.id AS neighbor_id,
-           a.vec AS qvec, b.vec AS cvec
-    FROM cb a JOIN cb b
-      ON a.band = b.band AND a.bkey = b.bkey AND a.id != b.id
-  )
-)""",
-        f"""graph AS (
-  SELECT node_id, neighbor_id FROM (
-    SELECT node_id, neighbor_id,
-      row_number() OVER (PARTITION BY node_id
-        ORDER BY score DESC, neighbor_id) AS rank
-    FROM gscored
-  ) WHERE rank <= {GRAPH_BEAM_K}
-)""",
+        _SQL_GRAPH_PAIRS,
+        f"graph AS ({_sql_graph_ranked(GRAPH_BEAM_K)})",
         """edges AS MATERIALIZED (
   SELECT node_id AS src, neighbor_id AS dst FROM graph
   UNION
   SELECT neighbor_id AS src, node_id AS dst FROM graph
 )""",
-        *post_edges_ctes,
-        *(
-            c0_ctes
-            or (
-                f"""c0 AS MATERIALIZED (
-  SELECT q.query_id, s.vec_id, {_sql_cos("q.qe", "s.embedding")} AS score
-  FROM q CROSS JOIN
-    (SELECT vec_id, embedding FROM embeddings
-     WHERE vec_id % {S.BEAM_ENTRY_STRIDE} = 0) s
-)""",
-            )
-        ),
     ]
+    if not vamana:
+        return ",\n".join(parts), "edges"
+    return ",\n".join([*parts, *_sql_vamana_ctes()]), "vedges"
+
+
+def _sql_beam_rounds(
+    edges: str,
+    seed: str | None = None,
+    table: str = "embeddings",
+    col: str = "embedding",
+    qcol: str = "qe",
+    score: Callable[[str, str], str] = sql_cos,
+    prefix: str = "",
+) -> tuple[str, str]:
+    """``(ctes, last CTE name)``: the rounds of
+    ``operators/simsearch.beam_candidates`` over the ``edges`` CTE. The
+    entry CTE ``{prefix}c0`` is ``seed`` (a SELECT of query_id, vec_id,
+    score) or the stride seeds of ``table``; each round takes the
+    top-``BEAM_WIDTH`` frontier, expands it, scores the new ids by
+    ``score(q.{qcol}, c.{col})`` and dedups on the id pair. Every
+    round's visited set is MATERIALIZED — the next round references it
+    three times, which DuckDB's default inlining re-evaluates
+    exponentially (the semantic-dedup lesson)."""
+    c = f"{prefix}c"
+    seed = seed or f"""SELECT q.query_id, s.vec_id, {score(f"q.{qcol}", f"s.{col}")} AS score
+  FROM q CROSS JOIN
+    (SELECT vec_id, {col} FROM {table}
+     WHERE vec_id % {S.BEAM_ENTRY_STRIDE} = 0) s"""
+    parts = [f"{c}0 AS MATERIALIZED (\n  {seed}\n)"]
     for i in range(1, S.BEAM_ROUNDS + 1):
-        prev, cur = f"c{i - 1}", f"c{i}"
-        parts.append(f"""f{i} AS (
+        front, expand, scored = f"{prefix}f{i}", f"{prefix}n{i}", f"{prefix}s{i}"
+        parts.append(f"""{front} AS (
   SELECT query_id, vec_id FROM (
     SELECT query_id, vec_id,
       row_number() OVER (PARTITION BY query_id
         ORDER BY score DESC, vec_id ASC) AS r
-    FROM {prev}
+    FROM {c}{i - 1}
   ) WHERE r <= {S.BEAM_WIDTH}
 )""")
-        parts.append(f"""n{i} AS (
+        parts.append(f"""{expand} AS (
   SELECT DISTINCT f.query_id, e.dst AS vec_id
-  FROM f{i} f JOIN {edges_name} e ON e.src = f.vec_id
+  FROM {front} f JOIN {edges} e ON e.src = f.vec_id
 )""")
-        parts.append(f"""s{i} AS (
-  SELECT n.query_id, n.vec_id, {_sql_cos("q.qe", "c.embedding")} AS score
-  FROM n{i} n
-  JOIN embeddings c ON c.vec_id = n.vec_id
+        parts.append(f"""{scored} AS (
+  SELECT n.query_id, n.vec_id, {score(f"q.{qcol}", f"c.{col}")} AS score
+  FROM {expand} n
+  JOIN {table} c ON c.vec_id = n.vec_id
   JOIN q ON q.query_id = n.query_id
 )""")
-        parts.append(f"""{cur} AS MATERIALIZED (
+        parts.append(f"""{c}{i} AS MATERIALIZED (
   SELECT query_id, vec_id, max(score) AS score FROM (
-    SELECT * FROM {prev} UNION ALL SELECT * FROM s{i}
+    SELECT * FROM {c}{i - 1} UNION ALL SELECT * FROM {scored}
   ) GROUP BY query_id, vec_id
 )""")
-    parts.append(
-        f"beam_cand AS (SELECT query_id, vec_id AS neighbor_id, score "
-        f"FROM c{S.BEAM_ROUNDS})"
-    )
+    return ",\n".join(parts), f"{c}{S.BEAM_ROUNDS}"
+
+
+def _sql_graph_beam_ctes(
+    q_cte: str = SQL_Q_CTE,
+    pre_ctes: tuple[str, ...] = (),
+    seed: str | None = None,
+    vamana: bool = False,
+) -> tuple[str, str]:
+    """CTE chain replaying ``graph_beam_search``; returns
+    ``(ctes, final_candidate_cte)`` where the final CTE has columns
+    (query_id, neighbor_id, score). ``q_cte`` is the walker set — the
+    fixture queries by default, the incoming upsert batch for the
+    delta-insert oracles. ``pre_ctes`` follow ``q`` (e.g. the IVF body
+    for centroid seeding), ``seed`` replaces the stride entries, and
+    ``vamana`` walks the α-pruned graph."""
+    edge_ctes, edges = _sql_graph_edges(vamana)
+    rounds, last = _sql_beam_rounds(edges, seed)
+    parts = [
+        f"q AS ({q_cte})",
+        *pre_ctes,
+        edge_ctes,
+        rounds,
+        f"beam_cand AS (SELECT query_id, vec_id AS neighbor_id, score FROM {last})",
+    ]
     return ",\n".join(parts), "beam_cand"
 
 
@@ -833,7 +811,7 @@ b AS (SELECT vec_id, embedding FROM embeddings
 SELECT vec_id, cell FROM (
   SELECT b.vec_id, c.centroid_id AS cell,
     row_number() OVER (PARTITION BY b.vec_id
-      ORDER BY {_sql_dist2("b.embedding", "c.cvec")} ASC, c.centroid_id ASC) AS r
+      ORDER BY {sql_dist2("b.embedding", "c.cvec")} ASC, c.centroid_id ASC) AS r
   FROM b CROSS JOIN cents c
 ) WHERE r = 1
 """
@@ -911,7 +889,7 @@ def _sql_band_dots(src: str, id_expr: str, vec: str) -> str:
     for band in range(S.LSH_BANDS):
         for j in range(S.LSH_ROWS):
             plane = S.lsh_planes(FIXTURE_EMBED_DIM)[band * S.LSH_ROWS + j]
-            d = _sql_dot(vec, _sql_plane_lit(plane))
+            d = sql_dot(vec, _sql_plane_lit(plane))
             rows.append(
                 f"SELECT {id_expr} AS id, {vec} AS vec, {band} AS band, "
                 f"{j} AS j, {d} AS dot FROM {src}"
@@ -938,7 +916,7 @@ qmb AS (
   FROM q_flip f JOIN qb ON qb.id = f.id AND qb.band = f.band
 ),
 lsh_mp_cand AS (
-  SELECT query_id, neighbor_id, {_sql_cos("qvec", "cvec")} AS score FROM (
+  SELECT query_id, neighbor_id, {sql_cos("qvec", "cvec")} AS score FROM (
     SELECT DISTINCT qmb.id AS query_id, cb.id AS neighbor_id,
            qmb.vec AS qvec, cb.vec AS cvec
     FROM qmb JOIN cb ON qmb.band = cb.band AND qmb.bkey = cb.bkey
@@ -952,26 +930,23 @@ lsh_mp_cand AS (
 # IVF cells' medoids instead of blind stride seeds)
 # ---------------------------------------------------------------------------
 
-_GRAPH_CENTROID_C0 = (
-    f"""med AS (
+#: SQL_IVF_BODY supplies cents/assigned/probes (probe depth
+#: IVF_NPROBE == BEAM_ENTRY_CELLS — one constant, one replay); its
+#: trailing ivf_cand CTE is unreferenced and never evaluated. ``med``
+#: holds each cell's BEAM_ENTRY_PER_CELL medoids; the walk enters at
+#: the medoids of the query's probed cells.
+_GRAPH_CENTROID_MED = f"""med AS (
   SELECT cell, vec_id, embedding FROM (
     SELECT a.cell, a.vec_id, a.embedding,
       row_number() OVER (PARTITION BY a.cell
-        ORDER BY {_sql_dist2("a.embedding", "c.cvec")} ASC, a.vec_id ASC) AS r
+        ORDER BY {sql_dist2("a.embedding", "c.cvec")} ASC, a.vec_id ASC) AS r
     FROM assigned a JOIN cents c ON c.centroid_id = a.cell
   ) WHERE r <= {S.BEAM_ENTRY_PER_CELL}
-)""",
-    f"""c0 AS MATERIALIZED (
-  SELECT p.query_id, m.vec_id, {_sql_cos("p.qe", "m.embedding")} AS score
-  FROM probes p JOIN med m ON m.cell = p.cell
-)""",
-)
-
-#: SQL_IVF_BODY supplies cents/assigned/probes (probe depth
-#: IVF_NPROBE == BEAM_ENTRY_CELLS — one constant, one replay); its
-#: trailing ivf_cand CTE is unreferenced and never evaluated.
+)"""
 _GRAPH_CENT_CTES, _GRAPH_CENT_FINAL = _sql_graph_beam_ctes(
-    pre_ctes=(SQL_IVF_BODY,), c0_ctes=_GRAPH_CENTROID_C0
+    pre_ctes=(SQL_IVF_BODY, _GRAPH_CENTROID_MED),
+    seed=f"""SELECT p.query_id, m.vec_id, {sql_cos("p.qe", "m.embedding")} AS score
+  FROM probes p JOIN med m ON m.cell = p.cell""",
 )
 
 # ---------------------------------------------------------------------------
@@ -988,7 +963,7 @@ def sql_ivfpq_cand(emb: str = "embeddings", qsrc: str = "q") -> str:
     return f"""
 ivfpq_adc AS (
   SELECT p.query_id, a.vec_id AS neighbor_id,
-         {_sql_dist2("p.qe", "r.recon")} AS score
+         {sql_dist2("p.qe", "r.recon")} AS score
   FROM probes p
   JOIN assigned a ON a.cell = p.cell
   JOIN pq_recon r ON r.vec_id = a.vec_id
@@ -1001,7 +976,7 @@ ivfpq_ids AS (
   ) WHERE rank <= {P.PQ_REFINE_R * ANN_K}
 ),
 ivfpq_cand AS (
-  SELECT c.query_id, c.neighbor_id, {_sql_dist2("q.qe", "e.embedding")} AS score
+  SELECT c.query_id, c.neighbor_id, {sql_dist2("q.qe", "e.embedding")} AS score
   FROM ivfpq_ids c
   JOIN {emb} e ON e.vec_id = c.neighbor_id
   JOIN {qsrc} AS q ON q.query_id = c.query_id
@@ -1054,7 +1029,7 @@ ivfres_q AS (
 ),
 ivfres_adc AS (
   SELECT qr.query_id, a.vec_id AS neighbor_id,
-         {_sql_dist2("qr.qres", "r.recon")} AS score
+         {sql_dist2("qr.qres", "r.recon")} AS score
   FROM ivfres_q qr
   JOIN res_emb a ON a.cell = qr.cell
   JOIN pq_recon r ON r.vec_id = a.vec_id
@@ -1067,7 +1042,7 @@ ivfres_ids AS (
   ) WHERE rank <= {P.PQ_REFINE_R * ANN_K}
 ),
 ivfres_cand AS (
-  SELECT c.query_id, c.neighbor_id, {_sql_dist2("q.qe", "e.embedding")} AS score
+  SELECT c.query_id, c.neighbor_id, {sql_dist2("q.qe", "e.embedding")} AS score
   FROM ivfres_ids c
   JOIN embeddings e ON e.vec_id = c.neighbor_id
   JOIN q ON q.query_id = c.query_id
@@ -1091,7 +1066,7 @@ def _sql_rot_list(vec: str) -> str:
 
     return (
         "["
-        + ", ".join(_sql_dot(vec, _sql_plane_lit(row)) for row in OPQ_ROTATION)
+        + ", ".join(sql_dot(vec, _sql_plane_lit(row)) for row in OPQ_ROTATION)
         + "]"
     )
 
@@ -1126,7 +1101,7 @@ cell_sizes AS (SELECT cell, count(*) AS csz FROM assigned GROUP BY cell),
 aranked AS (
   SELECT q.query_id, q.qe, c.centroid_id AS cell,
     row_number() OVER (PARTITION BY q.query_id
-      ORDER BY {_sql_dist2("q.qe", "c.cvec")} ASC, c.centroid_id ASC) AS r
+      ORDER BY {sql_dist2("q.qe", "c.cvec")} ASC, c.centroid_id ASC) AS r
   FROM q CROSS JOIN cents c
 ),
 acum AS (
@@ -1138,7 +1113,7 @@ acum AS (
 aprobes AS (SELECT query_id, qe, cell FROM acum WHERE prev < {S.IVF_ADAPTIVE_BUDGET}),
 ivfa_cand AS (
   SELECT p.query_id, a.vec_id AS neighbor_id,
-         {_sql_cos("p.qe", "a.embedding")} AS score
+         {sql_cos("p.qe", "a.embedding")} AS score
   FROM aprobes p JOIN assigned a ON a.cell = p.cell
 )
 """
@@ -1147,11 +1122,10 @@ ivfa_cand AS (
 # Vamana/DiskANN-style α-pruned graph (Subramanya et al. NeurIPS 2019)
 # ---------------------------------------------------------------------------
 
-def _sql_vamana_ctes(edges_src: str = "edges") -> tuple[str, ...]:
-    """The α-prune chain, replayed after the banded base-edge CTE
-    (named ``edges_src`` — ``edges`` in the ann_vamana_* oracles,
-    ``gedges`` inside the graph-cushion body). Constants are shared
-    literally with ``operators/vamana.py``: L=VAMANA_L candidates,
+def _sql_vamana_ctes() -> tuple[str, ...]:
+    """The α-prune chain over the banded ``edges`` CTE, ending in the
+    symmetric ``vedges``. Constants are shared literally with
+    ``operators/vamana.py``: L=VAMANA_L candidates,
     α²=VAMANA_ALPHA2 in d²=2−2·cos space, elem = bit·2²⁵ + occ,
     acc = cnt·2³⁰ + kept_mask — the whole prune is integer arithmetic
     over bit-identical cosine comparisons, so the DuckDB fold
@@ -1161,10 +1135,10 @@ def _sql_vamana_ctes(edges_src: str = "edges") -> tuple[str, ...]:
     return (
         f"""vcand AS MATERIALIZED (
   SELECT e1.src AS node_id, e2.dst AS cand_id
-  FROM {edges_src} e1 JOIN {edges_src} e2 ON e2.src = e1.dst
+  FROM edges e1 JOIN edges e2 ON e2.src = e1.dst
   WHERE e2.dst != e1.src
   UNION
-  SELECT src AS node_id, dst AS cand_id FROM {edges_src}
+  SELECT src AS node_id, dst AS cand_id FROM edges
 )""",
         f"""vpool AS MATERIALIZED (
   SELECT node_id, cand_id, score,
@@ -1176,7 +1150,7 @@ def _sql_vamana_ctes(edges_src: str = "edges") -> tuple[str, ...]:
         ORDER BY score DESC, cand_id) AS r
     FROM (
       SELECT v.node_id, v.cand_id,
-             {_sql_cos("a.embedding", "b.embedding")} AS score
+             {sql_cos("a.embedding", "b.embedding")} AS score
       FROM vcand v
       JOIN embeddings a ON a.vec_id = v.node_id
       JOIN embeddings b ON b.vec_id = v.cand_id
@@ -1190,7 +1164,7 @@ def _sql_vamana_ctes(edges_src: str = "edges") -> tuple[str, ...]:
   JOIN embeddings iv ON iv.vec_id = i.cand_id
   JOIN embeddings jv ON jv.vec_id = j.cand_id
   WHERE CAST({VAMANA_ALPHA2} AS DOUBLE)
-          * (2.0 - 2.0 * ({_sql_cos("iv.embedding", "jv.embedding")}))
+          * (2.0 - 2.0 * ({sql_cos("iv.embedding", "jv.embedding")}))
         <= (2.0 - 2.0 * j.score)
   GROUP BY i.node_id, j.j
 )""",
@@ -1221,9 +1195,7 @@ def _sql_vamana_ctes(edges_src: str = "edges") -> tuple[str, ...]:
     )
 
 
-_VAMANA_BEAM_CTES, _VAMANA_BEAM_FINAL = _sql_graph_beam_ctes(
-    post_edges_ctes=_sql_vamana_ctes(), edges_name="vedges"
-)
+_VAMANA_BEAM_CTES, _VAMANA_BEAM_FINAL = _sql_graph_beam_ctes(vamana=True)
 
 
 def q_ann_vamana_delta_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1250,11 +1222,7 @@ def q_ann_vamana_delta_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_vamana_delta() -> str:
     from .operators.vamana import VAMANA_ALPHA2, VAMANA_DEGREE, VAMANA_L, _CNT, _ENC
 
-    ctes, final = _sql_graph_beam_ctes(
-        _DELTA_Q_CTE,
-        post_edges_ctes=_sql_vamana_ctes(),
-        edges_name="vedges",
-    )
+    ctes, final = _sql_graph_beam_ctes(_DELTA_Q_CTE, vamana=True)
     # the unrolled resident-prune fold: one row per node with the
     # VAMANA_L encoded elems as COLUMNS (order-independent conditional
     # MAX pivot), then one MATERIALIZED pure-projection level per rank
@@ -1304,7 +1272,7 @@ docc AS MATERIALIZED (
   JOIN embeddings iv ON iv.vec_id = i.cand_id
   JOIN embeddings jv ON jv.vec_id = j.cand_id
   WHERE CAST({VAMANA_ALPHA2} AS DOUBLE)
-          * (2.0 - 2.0 * ({_sql_cos("iv.embedding", "jv.embedding")}))
+          * (2.0 - 2.0 * ({sql_cos("iv.embedding", "jv.embedding")}))
         <= (2.0 - 2.0 * j.score)
   GROUP BY i.node_id, j.j
 ),
@@ -1362,7 +1330,7 @@ rmerged AS MATERIALIZED (
 ),
 rscored AS MATERIALIZED (
   SELECT m.node_id, m.cand_id,
-         ({_sql_cos("nv.embedding", "cv.embedding")}) AS score
+         ({sql_cos("nv.embedding", "cv.embedding")}) AS score
   FROM rmerged m
   JOIN (SELECT vec_id, CASE WHEN vec_id % 11 = 5 THEN list_reverse(embedding)
                             ELSE embedding END AS embedding
@@ -1399,7 +1367,7 @@ rocc AS MATERIALIZED (
                             ELSE embedding END AS embedding
         FROM embeddings) jv ON jv.vec_id = j.cand_id
   WHERE CAST({VAMANA_ALPHA2} AS DOUBLE)
-          * (2.0 - 2.0 * ({_sql_cos("iv.embedding", "jv.embedding")}))
+          * (2.0 - 2.0 * ({sql_cos("iv.embedding", "jv.embedding")}))
         <= (2.0 - 2.0 * j.score)
   GROUP BY i.node_id, j.j
 ),
@@ -1481,8 +1449,7 @@ def q_ivf_cell_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_ivf_cell_stats() -> str:
     km_ctes, km_final = kmeans_sql_ctes(
-        "ckm_pts", "ckm", S.IVF_STRIDE, iters=S.IVF_KMEANS_ITERS,
-        dist2_sql=_sql_dist2,
+        "ckm_pts", "ckm", S.IVF_STRIDE, iters=S.IVF_KMEANS_ITERS
     )
     return f"""
 WITH ckm_pts AS (SELECT 0 AS grp, vec_id AS pid, embedding AS pvec FROM embeddings),
@@ -1492,7 +1459,7 @@ assigned AS (
   SELECT vec_id, centroid_id AS cell FROM (
     SELECT e.vec_id, c.centroid_id,
       row_number() OVER (PARTITION BY e.vec_id
-        ORDER BY {_sql_dist2("e.embedding", "c.cvec")} ASC, c.centroid_id ASC) AS r
+        ORDER BY {sql_dist2("e.embedding", "c.cvec")} ASC, c.centroid_id ASC) AS r
     FROM embeddings e CROSS JOIN cents c
   ) WHERE r = 1
 ),
@@ -1552,19 +1519,10 @@ def q_vamana_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_vamana_degree_stats() -> str:
     from .operators.vamana import VAMANA_DEGREE
 
-    ctes, _final = _sql_graph_beam_ctes(
-        post_edges_ctes=_sql_vamana_ctes(), edges_name="vedges"
-    )
-    anchor = """vedges AS MATERIALIZED (
-  SELECT src, dst FROM vkept
-  UNION
-  SELECT dst AS src, src AS dst FROM vkept
-)"""
-    assert anchor in ctes, "vamana edge CTE text drifted; update the stats oracle"
-    prefix = ctes[: ctes.index(anchor) + len(anchor)]
+    edge_ctes, edges = _sql_graph_edges(vamana=True)
     return f"""
-WITH {prefix},
-vdeg AS (SELECT src, CAST(count(*) AS BIGINT) AS deg FROM vedges GROUP BY src)
+WITH {edge_ctes},
+vdeg AS (SELECT src, CAST(count(*) AS BIGINT) AS deg FROM {edges} GROUP BY src)
 SELECT CAST(count(*) AS BIGINT) AS n_nodes,
        (SELECT CAST(count(*) AS BIGINT) FROM embeddings)
          - CAST(count(*) AS BIGINT) AS n_isolated,
@@ -1614,16 +1572,7 @@ def q_vamana_reachability_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_vamana_reachability_stats() -> str:
-    ctes, _final = _sql_graph_beam_ctes(
-        post_edges_ctes=_sql_vamana_ctes(), edges_name="vedges"
-    )
-    anchor = """vedges AS MATERIALIZED (
-  SELECT src, dst FROM vkept
-  UNION
-  SELECT dst AS src, src AS dst FROM vkept
-)"""
-    assert anchor in ctes, "vamana edge CTE text drifted; update the stats oracle"
-    prefix = ctes[: ctes.index(anchor) + len(anchor)]
+    edge_ctes, edges = _sql_graph_edges(vamana=True)
     rounds = [
         f"rb0 AS (SELECT vec_id AS node FROM embeddings "
         f"WHERE vec_id % {S.BEAM_ENTRY_STRIDE} = 0)"
@@ -1633,13 +1582,13 @@ def _sql_vamana_reachability_stats() -> str:
             f"""rb{r} AS MATERIALIZED (
   SELECT node FROM rb{r - 1}
   UNION
-  SELECT e.dst AS node FROM rb{r - 1} v JOIN vedges e ON e.src = v.node
+  SELECT e.dst AS node FROM rb{r - 1} v JOIN {edges} e ON e.src = v.node
 )"""
         )
     chain = ",\n".join(rounds)
     last = f"rb{S.BEAM_ROUNDS}"
     return f"""
-WITH {prefix},
+WITH {edge_ctes},
 {chain}
 SELECT (SELECT CAST(count(*) AS BIGINT) FROM rb0) AS n_entries,
        CAST(count(*) AS BIGINT) AS n_reachable,
@@ -1667,13 +1616,12 @@ def _sql_spann_ctes() -> str:
     closure factors are the same Python double literals the Spark side
     folds in, so the boundary comparisons are bit-identical."""
     km_ctes, km_final = kmeans_sql_ctes(
-        "spkm_pts", "spkm", S.IVF_STRIDE, iters=S.IVF_KMEANS_ITERS,
-        dist2_sql=_sql_dist2,
+        "spkm_pts", "spkm", S.IVF_STRIDE, iters=S.IVF_KMEANS_ITERS
     )
     f_assign = repr(SP._factor2(SP.SPANN_EPS))
     f_probe = repr(SP._factor2(SP.SPANN_QEPS))
-    d2_post = _sql_dist2("e.embedding", "c.cvec")
-    d2_probe = _sql_dist2("q.qe", "c.cvec")
+    d2_post = sql_dist2("e.embedding", "c.cvec")
+    d2_probe = sql_dist2("q.qe", "c.cvec")
     return f"""
 q AS ({SQL_Q_CTE}),
 spkm_pts AS (SELECT 0 AS grp, vec_id AS pid, embedding AS pvec FROM embeddings),
@@ -1701,7 +1649,7 @@ spprobes AS (
 ),
 spann_cand AS (
   SELECT p.query_id, a.vec_id AS neighbor_id,
-         max({_sql_cos("p.qe", "a.embedding")}) AS score
+         max({sql_cos("p.qe", "a.embedding")}) AS score
   FROM spprobes p JOIN spposted a ON a.cell = p.cell
   GROUP BY p.query_id, a.vec_id
 )

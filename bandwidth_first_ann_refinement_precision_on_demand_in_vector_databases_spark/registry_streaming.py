@@ -13,6 +13,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .plans.duck_oracle import sql_cos, sql_dist2
 from .session import memo_dir
 from .sources.fixtures import QUERY_STRIDE, load_table
 from .streaming.windows import (
@@ -130,27 +131,14 @@ def q_stream_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_cos(a: str, b: str) -> str:
-    dot = (
-        f"list_sum(list_transform(list_zip({a}, {b}), "
-        f"p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))"
-    )
-    def norm(x: str) -> str:
-        return (
-            f"sqrt(list_sum(list_transform({x}, "
-            f"x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
-        )
-    return f"({dot} / (greatest({norm(a)}, 1e-12) * greatest({norm(b)}, 1e-12)))"
-
-
 SQL_STREAM_ANN_TOPK = f"""
 WITH q AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings
            WHERE vec_id % {QUERY_STRIDE} = 0)
 SELECT query_id, rank, neighbor_id, round(score, 6) AS score FROM (
   SELECT q.query_id, e.vec_id AS neighbor_id,
-    {_sql_cos("q.qe", "e.embedding")} AS score,
+    {sql_cos("q.qe", "e.embedding")} AS score,
     CAST(row_number() OVER (PARTITION BY q.query_id
-      ORDER BY {_sql_cos("q.qe", "e.embedding")} DESC, e.vec_id) AS INT) AS rank
+      ORDER BY {sql_cos("q.qe", "e.embedding")} DESC, e.vec_id) AS INT) AS rank
   FROM q CROSS JOIN embeddings e
 ) WHERE rank <= 10
 """
@@ -434,7 +422,7 @@ def q_ann_stream_fresh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_ann_stream_fresh_topk() -> str:
-    from .registry_simsearch import ANN_K, SQL_Q_CTE, _sql_cos
+    from .registry_simsearch import ANN_K, SQL_Q_CTE
     from .streaming import ingest as I
 
     return f"""
@@ -464,9 +452,9 @@ live AS (
 )
 SELECT query_id, rank, neighbor_id, round(score, 6) AS score FROM (
   SELECT q.query_id, l.vec_id AS neighbor_id,
-    {_sql_cos("q.qe", "l.embedding")} AS score,
+    {sql_cos("q.qe", "l.embedding")} AS score,
     CAST(row_number() OVER (PARTITION BY q.query_id
-      ORDER BY {_sql_cos("q.qe", "l.embedding")} DESC, l.vec_id) AS INT) AS rank
+      ORDER BY {sql_cos("q.qe", "l.embedding")} DESC, l.vec_id) AS INT) AS rank
   FROM q CROSS JOIN live l
 ) WHERE rank <= {ANN_K}
 """
@@ -1022,14 +1010,12 @@ def _sql_stream_spann_ingest() -> str:
     from .operators import spann as SP
     from .operators.simsearch import IVF_KMEANS_ITERS, IVF_STRIDE
     from .operators.kmeans import kmeans_sql_ctes
-    from .registry_simsearch import _sql_dist2
     from .streaming import ingest as I
 
     km_ctes, km_final = kmeans_sql_ctes(
-        "sskm_pts", "sskm", IVF_STRIDE, iters=IVF_KMEANS_ITERS,
-        dist2_sql=_sql_dist2,
+        "sskm_pts", "sskm", IVF_STRIDE, iters=IVF_KMEANS_ITERS
     )
-    d2 = _sql_dist2("u.embedding", "c.cvec")
+    d2 = sql_dist2("u.embedding", "c.cvec")
     return f"""
 WITH changes AS (
   SELECT vec_id, list_reverse(embedding) AS embedding, 'upsert' AS op, 1 AS seq

@@ -968,16 +968,17 @@ aggregate(split(syms, ' '), '', (acc, s) -> CASE
 """
 
 
-def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(merge_round, left_sym, right_sym, merged_sym, pair_count):
-    the first ``BPE_ROUNDS`` learned merges. Per round: adjacent
-    symbol pairs explode from the vocab (weighted by word frequency),
-    one TakeOrdered picks the argmax (count desc, pair asc — the
-    deterministic tie-break), and the winning pair broadcast-joins
-    back into the fold that rewrites every word's symbol sequence.
-    Each round's 31-row vocab frame is eagerly checkpointed (the
-    k-means / beam-walk iterative idiom) so lineage stays flat."""
-    d = load_table(spark, sf_dir, "documents")
+def _bpe_train(d: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """``(merges, vocab)``: the first ``BPE_ROUNDS`` merges learned from
+    the documents frame ``d`` — rows (merge_round, left_sym, right_sym,
+    pair_count) — and the final vocabulary (w, cnt, syms), every word's
+    symbol sequence after all merges. Per round: adjacent symbol pairs
+    explode from the vocab (weighted by word frequency), one
+    TakeOrdered picks the argmax (count desc, pair asc — the
+    deterministic tie-break), and the winning pair broadcast-joins back
+    into the fold that rewrites every word's symbol sequence. Each
+    round's 31-row vocab frame is lazily checkpointed (the k-means /
+    beam-walk iterative idiom) so lineage stays flat."""
     words = (
         d.select(F.explode(T.tokens(F.col("text"))).alias("w"))
         .where(F.col("w") != "")
@@ -1027,10 +1028,17 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("w", "cnt", F.expr(_BPE_MERGE_EXPR).alias("syms"))
             .localCheckpoint(eager=False)
         )
-    res = bests[0]
+    merges = bests[0]
     for b in bests[1:]:
-        res = res.unionByName(b)
-    return res.select(
+        merges = merges.unionByName(b)
+    return merges, vocab
+
+
+def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(merge_round, left_sym, right_sym, merged_sym, pair_count):
+    the first ``BPE_ROUNDS`` learned merges (:func:`_bpe_train`)."""
+    merges, _ = _bpe_train(load_table(spark, sf_dir, "documents"))
+    return merges.select(
         "merge_round",
         "left_sym",
         "right_sym",
@@ -1039,11 +1047,12 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_bpe_merges() -> str:
-    """Unrolled DuckDB twin: v{r}/b{r} CTE per round, MATERIALIZED
-    (round r is referenced by both round r+1's pair counts and its
-    merge — default inlining is exponential in R, the SemDeDup
-    lesson)."""
+def _sql_bpe_ctes() -> str:
+    """The trainer's unrolled DuckDB CTE chain: v{r}/b{r} CTE per round,
+    MATERIALIZED (round r is referenced by both round r+1's pair counts
+    and its merge — default inlining is exponential in R, the SemDeDup
+    lesson). ``b{r}`` holds round r's merge, ``v{BPE_ROUNDS}`` the final
+    vocabulary."""
     parts = [f"""
 WITH tok AS (SELECT unnest({SQL_TOKS}) AS w FROM documents),
 wc AS (SELECT w, count(*) AS cnt FROM tok WHERE w <> '' GROUP BY w),
@@ -1076,16 +1085,16 @@ v{rnd + 1} AS MATERIALIZED (
       ELSE acc || ' ' || s END) AS syms
   FROM v{rnd} v CROSS JOIN b{rnd} b
 )""")
-    union = "\nUNION ALL\n".join(
-        f"SELECT merge_round, lsym AS left_sym, rsym AS right_sym, "
-        f"lsym || rsym AS merged_sym, pair_count FROM b{rnd}"
-        for rnd in range(BPE_ROUNDS)
-    )
-    parts.append(f"\n{union}\n")
     return "".join(parts)
 
 
-SQL_BPE_MERGES = _sql_bpe_merges()
+_SQL_BPE_CTES = _sql_bpe_ctes()
+
+SQL_BPE_MERGES = _SQL_BPE_CTES + "\n" + "\nUNION ALL\n".join(
+    f"SELECT merge_round, lsym AS left_sym, rsym AS right_sym, "
+    f"lsym || rsym AS merged_sym, pair_count FROM b{rnd}"
+    for rnd in range(BPE_ROUNDS)
+) + "\n"
 
 TEXT_QUERIES["bpe_merges"] = q_bpe_merges
 TEXT_ORACLES["bpe_merges"] = SQL_BPE_MERGES
@@ -1100,44 +1109,7 @@ def q_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the segmenter never re-runs the merge loop per document, exactly
     as production tokenizers apply a frozen merge table."""
     d = load_table(spark, sf_dir, "documents")
-    words = (
-        d.select(F.explode(T.tokens(F.col("text"))).alias("w"))
-        .where(F.col("w") != "")
-        .groupBy("w")
-        .agg(F.count("*").alias("cnt"))
-    )
-    vocab = words.select(
-        "w",
-        "cnt",
-        F.expr(f"concat_ws(' ', split(w, '')) || ' {BPE_END}'").alias("syms"),
-    ).localCheckpoint(eager=False)
-    for rnd in range(BPE_ROUNDS):
-        sy = F.split("syms", " ")
-        pairs = vocab.select(
-            "cnt",
-            F.explode(
-                F.zip_with(
-                    F.slice(sy, 1, F.size(sy) - 1),
-                    F.slice(sy, 2, F.size(sy) - 1),
-                    lambda a, b: F.concat(a, F.lit(" "), b),
-                )
-            ).alias("pair"),
-        )
-        counts = pairs.groupBy("pair").agg(F.sum("cnt").alias("c"))
-        best = (
-            counts.orderBy(F.col("c").desc(), F.col("pair").asc())
-            .limit(1)
-            .select(
-                F.split("pair", " ").getItem(0).alias("lsym"),
-                F.split("pair", " ").getItem(1).alias("rsym"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        vocab = (
-            vocab.crossJoin(F.broadcast(best))
-            .select("w", "cnt", F.expr(_BPE_MERGE_EXPR).alias("syms"))
-            .localCheckpoint(eager=False)
-        )
+    _, vocab = _bpe_train(d)
     per_word = vocab.select(
         "w", F.size(F.split("syms", " ")).alias("n_syms")
     )
@@ -1154,16 +1126,7 @@ def q_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_bpe_token_counts() -> str:
-    """Reuses the trainer's unrolled CTE chain up to the final vocab,
-    then joins symbol counts back onto the exploded document words."""
-    body = SQL_BPE_MERGES
-    # the trainer SQL ends with the merge-table UNION; keep only its
-    # CTE chain (everything up to the first top-level SELECT) and
-    # project from the final vocab instead
-    cut = body.index("SELECT merge_round,")
-    ctes = body[:cut].rstrip().rstrip("\n")
-    return f"""{ctes}
+SQL_BPE_TOKEN_COUNTS = f"""{_SQL_BPE_CTES}
 , per_word AS (
   SELECT w, len(string_split(syms, ' ')) AS n_syms FROM v{BPE_ROUNDS}
 ),
@@ -1176,9 +1139,6 @@ FROM doc_words d JOIN per_word p ON p.w = d.w
 WHERE d.w <> ''
 GROUP BY d.doc_id
 """
-
-
-SQL_BPE_TOKEN_COUNTS = _sql_bpe_token_counts()
 
 TEXT_QUERIES["bpe_token_counts"] = q_bpe_token_counts
 TEXT_ORACLES["bpe_token_counts"] = SQL_BPE_TOKEN_COUNTS

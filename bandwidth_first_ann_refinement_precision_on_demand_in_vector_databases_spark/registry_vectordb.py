@@ -19,6 +19,7 @@ from .operators import sq as SQ
 from .operators import vectordb as V
 from .operators.simsearch import ann_recall
 from .operators.topk import exact_topk_fixture_cached
+from .plans.duck_oracle import sql_cos, sql_dist2, sql_dot
 from .registry_simsearch import (
     ANN_K,
     SQL_IVF_BODY,
@@ -26,8 +27,6 @@ from .registry_simsearch import (
     SQL_Q_CTE,
     SQL_RECALL_ROW,
     AnnPipeline,
-    _sql_cos,
-    _sql_dist2,
     _sql_hit_rate,
     over_fixture,
     register_ann_pipelines,
@@ -73,9 +72,9 @@ SQL_ANN_FILTERED_TOPK = f"""
 WITH q AS ({SQL_Q_CTE})
 SELECT query_id, rank, neighbor_id, round(score, 6) AS score FROM (
   SELECT q.query_id, e.vec_id AS neighbor_id,
-    {_sql_cos("q.qe", "e.embedding")} AS score,
+    {sql_cos("q.qe", "e.embedding")} AS score,
     CAST(row_number() OVER (PARTITION BY q.query_id
-      ORDER BY {_sql_cos("q.qe", "e.embedding")} DESC, e.vec_id) AS INT) AS rank
+      ORDER BY {sql_cos("q.qe", "e.embedding")} DESC, e.vec_id) AS INT) AS rank
   FROM q CROSS JOIN embeddings e WHERE e.{_SQL_FILTER}
 ) WHERE rank <= {ANN_K}
 """
@@ -125,9 +124,9 @@ def q_ann_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_ANN_RANGE_SEARCH = f"""
 WITH q AS ({SQL_Q_CTE})
 SELECT q.query_id, e.vec_id AS neighbor_id,
-       round({_sql_dist2("q.qe", "e.embedding")}, 6) AS d2
+       round({sql_dist2("q.qe", "e.embedding")}, 6) AS d2
 FROM q CROSS JOIN embeddings e
-WHERE {_sql_dist2("q.qe", "e.embedding")} <= {RANGE_RADIUS2}
+WHERE {sql_dist2("q.qe", "e.embedding")} <= {RANGE_RADIUS2}
 """
 
 
@@ -184,7 +183,7 @@ _SQL_SQ_CTES = f"""q AS ({SQL_Q_CTE}),
 {_SQL_SQ_RECON},
 sq_cand AS (
   SELECT q.query_id, r.vec_id AS neighbor_id,
-         {_sql_dist2("q.qe", "r.recon")} AS score
+         {sql_dist2("q.qe", "r.recon")} AS score
   FROM q CROSS JOIN recon r
 )
 """
@@ -195,7 +194,7 @@ _SQL_IVFSQ_CTES = f"""{SQL_IVF_CTES},
 {_SQL_SQ_RECON},
 adc AS (
   SELECT p.query_id, a.vec_id AS neighbor_id,
-         {_sql_dist2("p.qe", "r.recon")} AS score
+         {sql_dist2("p.qe", "r.recon")} AS score
   FROM probes p
   JOIN assigned a ON a.cell = p.cell
   JOIN recon r ON r.vec_id = a.vec_id
@@ -243,7 +242,7 @@ vec AS (
   SELECT query_id, neighbor_id AS doc_id, vec_rank FROM (
     SELECT q.query_id, e.vec_id AS neighbor_id,
       row_number() OVER (PARTITION BY q.query_id
-        ORDER BY {_sql_cos("q.qe", "e.embedding")} DESC, e.vec_id) AS vec_rank
+        ORDER BY {sql_cos("q.qe", "e.embedding")} DESC, e.vec_id) AS vec_rank
     FROM q CROSS JOIN embeddings e
   ) WHERE vec_rank <= {V.HYBRID_TOPN}
 ),
@@ -354,15 +353,15 @@ WITH q AS ({SQL_Q_CTE}),
 cand AS MATERIALIZED (
   SELECT query_id, doc_id, rel, embedding FROM (
     SELECT q.query_id, e.vec_id AS doc_id,
-      {_sql_cos("q.qe", "e.embedding")} AS rel, e.embedding,
+      {sql_cos("q.qe", "e.embedding")} AS rel, e.embedding,
       row_number() OVER (PARTITION BY q.query_id
-        ORDER BY {_sql_cos("q.qe", "e.embedding")} DESC, e.vec_id) AS rn
+        ORDER BY {sql_cos("q.qe", "e.embedding")} DESC, e.vec_id) AS rn
     FROM q CROSS JOIN embeddings e
   ) WHERE rn <= {V.MMR_TOPN}
 ),
 pairs AS MATERIALIZED (
   SELECT a.query_id, a.doc_id AS id_a, b.doc_id AS id_b,
-         {_sql_cos("a.embedding", "b.embedding")} AS sim
+         {sql_cos("a.embedding", "b.embedding")} AS sim
   FROM cand a JOIN cand b
     ON a.query_id = b.query_id AND a.doc_id != b.doc_id
 ),
@@ -438,7 +437,7 @@ vec AS (
   SELECT query_id, neighbor_id AS doc_id, vec_rank FROM (
     SELECT q.query_id, e.vec_id AS neighbor_id,
       row_number() OVER (PARTITION BY q.query_id
-        ORDER BY {_sql_cos("q.qe", "e.embedding")} DESC, e.vec_id) AS vec_rank
+        ORDER BY {sql_cos("q.qe", "e.embedding")} DESC, e.vec_id) AS vec_rank
     FROM q CROSS JOIN embeddings e
   ) WHERE vec_rank <= {V.HYBRID_TOPN}
 ),
@@ -577,7 +576,7 @@ ivfbq_ids AS (
   ) WHERE r <= {BQ.BQ_REFINE_R * ANN_K}
 ),
 ivfbq_cand AS (
-  SELECT c.query_id, c.neighbor_id, {_sql_cos("q.qe", "e.embedding")} AS score
+  SELECT c.query_id, c.neighbor_id, {sql_cos("q.qe", "e.embedding")} AS score
   FROM ivfbq_ids c
   JOIN embeddings e ON e.vec_id = c.neighbor_id
   JOIN q ON q.query_id = c.query_id
@@ -610,8 +609,8 @@ MRL_D_TUNED, MRL_R_TUNED = 32, 5
 
 
 def _sql_mrl_cos(a: str, b: str, d: int = _MRL_D) -> str:
-    """Prefix cosine: _sql_cos over list_slice(·, 1, d') both sides."""
-    return _sql_cos(f"list_slice({a}, 1, {d})", f"list_slice({b}, 1, {d})")
+    """Prefix cosine: sql_cos over list_slice(·, 1, d') both sides."""
+    return sql_cos(f"list_slice({a}, 1, {d})", f"list_slice({b}, 1, {d})")
 
 
 def _sql_mrl_cand(d: int = _MRL_D) -> str:
@@ -692,9 +691,9 @@ WITH q AS ({SQL_Q_CTE}),
 {_SQL_MUT_LIVE}
 SELECT query_id, rank, neighbor_id, round(score, 6) AS score FROM (
   SELECT q.query_id, l.vec_id AS neighbor_id,
-    {_sql_cos("q.qe", "l.embedding")} AS score,
+    {sql_cos("q.qe", "l.embedding")} AS score,
     CAST(row_number() OVER (PARTITION BY q.query_id
-      ORDER BY {_sql_cos("q.qe", "l.embedding")} DESC, l.vec_id) AS INT) AS rank
+      ORDER BY {sql_cos("q.qe", "l.embedding")} DESC, l.vec_id) AS INT) AS rank
   FROM q CROSS JOIN mut_live l
 ) WHERE rank <= {ANN_K}
 """
@@ -713,7 +712,7 @@ massigned AS (
   SELECT vec_id, is_up, centroid_id AS cell FROM (
     SELECT l.vec_id, l.is_up, c.centroid_id,
       row_number() OVER (PARTITION BY l.vec_id
-        ORDER BY {_sql_dist2("l.embedding", "c.cvec")} ASC, c.centroid_id ASC) AS r
+        ORDER BY {sql_dist2("l.embedding", "c.cvec")} ASC, c.centroid_id ASC) AS r
     FROM mut_live l CROSS JOIN cents c
   ) WHERE r = 1
 )
@@ -747,7 +746,7 @@ def _sql_maxsim(qe: str, de: str) -> str:
     for i in range(MV.MV_M):
         qi = f"list_slice({qe}, {i * _MV_SUB + 1}, {(i + 1) * _MV_SUB})"
         coss = [
-            _sql_cos(qi, f"list_slice({de}, {j * _MV_SUB + 1}, {(j + 1) * _MV_SUB})")
+            sql_cos(qi, f"list_slice({de}, {j * _MV_SUB + 1}, {(j + 1) * _MV_SUB})")
             for j in range(MV.MV_M)
         ]
         terms.append("greatest(" + ", ".join(coss) + ")")
@@ -759,7 +758,7 @@ def _sql_slice_term(qe: str, de: str, i: int) -> str:
     the M cosines between query slice i and every doc slice."""
     qi = f"list_slice({qe}, {i * _MV_SUB + 1}, {(i + 1) * _MV_SUB})"
     coss = [
-        _sql_cos(qi, f"list_slice({de}, {j * _MV_SUB + 1}, {(j + 1) * _MV_SUB})")
+        sql_cos(qi, f"list_slice({de}, {j * _MV_SUB + 1}, {(j + 1) * _MV_SUB})")
         for j in range(MV.MV_M)
     ]
     return "greatest(" + ", ".join(coss) + ")"
@@ -932,7 +931,7 @@ casc1 AS (
   SELECT query_id, neighbor_id FROM (
     SELECT c.query_id, c.neighbor_id,
       row_number() OVER (PARTITION BY c.query_id
-        ORDER BY {_sql_cos("q.qe", "r.recon")} DESC, c.neighbor_id) AS r
+        ORDER BY {sql_cos("q.qe", "r.recon")} DESC, c.neighbor_id) AS r
     FROM casc2 c
     JOIN recon r ON r.vec_id = c.neighbor_id
     JOIN q ON q.query_id = c.query_id
@@ -946,9 +945,9 @@ WITH {_SQL_BQ_CTES},
 {_SQL_CASCADE_CAND}
 SELECT query_id, rank, neighbor_id, round(score, 6) AS score FROM (
   SELECT c.query_id, c.neighbor_id,
-    {_sql_cos("q.qe", "e.embedding")} AS score,
+    {sql_cos("q.qe", "e.embedding")} AS score,
     CAST(row_number() OVER (PARTITION BY c.query_id
-      ORDER BY {_sql_cos("q.qe", "e.embedding")} DESC, c.neighbor_id) AS INT) AS rank
+      ORDER BY {sql_cos("q.qe", "e.embedding")} DESC, c.neighbor_id) AS INT) AS rank
   FROM casc1 c
   JOIN embeddings e ON e.vec_id = c.neighbor_id
   JOIN q ON q.query_id = c.query_id
@@ -996,7 +995,7 @@ ann AS (
   SELECT query_id, neighbor_id FROM (
     SELECT c.query_id, c.neighbor_id,
       row_number() OVER (PARTITION BY c.query_id
-        ORDER BY {_sql_cos("q.qe", "e.embedding")} DESC, c.neighbor_id) AS rank
+        ORDER BY {sql_cos("q.qe", "e.embedding")} DESC, c.neighbor_id) AS rank
     FROM casc1 c
     JOIN embeddings e ON e.vec_id = c.neighbor_id
     JOIN q ON q.query_id = c.query_id
@@ -1006,7 +1005,7 @@ exact AS (
   SELECT query_id, neighbor_id FROM (
     SELECT q.query_id, e.vec_id AS neighbor_id,
       row_number() OVER (PARTITION BY q.query_id
-        ORDER BY {_sql_cos("q.qe", "e.embedding")} DESC, e.vec_id) AS rank
+        ORDER BY {sql_cos("q.qe", "e.embedding")} DESC, e.vec_id) AS rank
     FROM q CROSS JOIN embeddings e
   ) WHERE rank <= {ANN_K}
 ),{_sql_hit_rate()},
@@ -1207,7 +1206,6 @@ VECTORDB_ORACLES["ann_ivf_maxsim_recall"] = SQL_ANN_IVF_MAXSIM_RECALL
 # ---------------------------------------------------------------------------
 
 from .operators import rabitq as RBT  # noqa: E402
-from .registry_simsearch import _sql_dot as _sql_rbt_dot  # noqa: E402
 from .registry_simsearch import _sql_plane_lit as _sql_rbt_plane  # noqa: E402
 
 
@@ -1218,7 +1216,7 @@ def _sql_rbt_rot_list(vec: str) -> str:
 
     return (
         "["
-        + ", ".join(_sql_rbt_dot(vec, _sql_rbt_plane(row)) for row in RABITQ_ROTATION)
+        + ", ".join(sql_dot(vec, _sql_rbt_plane(row)) for row in RABITQ_ROTATION)
         + "]"
     )
 
@@ -1451,9 +1449,9 @@ SQL_ANN_FILTERED_ROUTED_TOPK = f"""
 WITH q AS ({SQL_Q_CTE})
 SELECT query_id, rank, neighbor_id, round(score, 6) AS score FROM (
   SELECT q.query_id, e.vec_id AS neighbor_id,
-    {_sql_cos("q.qe", "e.embedding")} AS score,
+    {sql_cos("q.qe", "e.embedding")} AS score,
     CAST(row_number() OVER (PARTITION BY q.query_id
-      ORDER BY {_sql_cos("q.qe", "e.embedding")} DESC, e.vec_id) AS INT) AS rank
+      ORDER BY {sql_cos("q.qe", "e.embedding")} DESC, e.vec_id) AS INT) AS rank
   FROM q CROSS JOIN embeddings e WHERE e.{_SQL_ROUTED_FILTER}
 ) WHERE rank <= {ANN_K}
 """
@@ -1521,7 +1519,7 @@ def _sql_ivf_rebalance() -> str:
     from .operators.simsearch import IVF_STRIDE
 
     rb_km_ctes, rb_km_final = kmeans_sql_ctes(
-        "rbkm_pts", "rbkm", IVF_STRIDE, iters=KMEANS_ITERS, dist2_sql=_sql_dist2
+        "rbkm_pts", "rbkm", IVF_STRIDE, iters=KMEANS_ITERS
     )
     return f"""
 WITH {SQL_IVF_CTES},
@@ -1539,7 +1537,7 @@ rb_assigned AS (
   SELECT vec_id, embedding, centroid_id AS cell FROM (
     SELECT f.vec_id, f.embedding, c.centroid_id,
       row_number() OVER (PARTITION BY f.vec_id
-        ORDER BY {_sql_dist2("f.embedding", "c.cvec")} ASC, c.centroid_id ASC) AS r
+        ORDER BY {sql_dist2("f.embedding", "c.cvec")} ASC, c.centroid_id ASC) AS r
     FROM rb_corpus f CROSS JOIN cents c
   ) WHERE r = 1),
 rb_pops AS (SELECT cell, count(*) AS pop FROM rb_assigned GROUP BY cell),
@@ -1556,7 +1554,7 @@ rb_reassigned AS (
   SELECT vec_id, cell, CAST(cid AS INT) AS subcell FROM (
     SELECT r.vec_id, r.cell, s.cid,
       row_number() OVER (PARTITION BY r.vec_id
-        ORDER BY {_sql_dist2("r.embedding", "s.cvec")} ASC, s.cid ASC) AS rn
+        ORDER BY {sql_dist2("r.embedding", "s.cvec")} ASC, s.cid ASC) AS rn
     FROM rb_ranked r JOIN rb_sub s ON s.grp = r.cell
   ) WHERE rn = 1),
 rb_all AS (
